@@ -232,6 +232,22 @@ object Bench {
       } else None
     } catch { case _: Throwable => None }
 
+  /** Times one run of `body` into `samples(name)`. A throw lands the
+    * name in `failed` instead: a failing query is never a (fast) sample. */
+  def sample(name: String,
+      samples: scala.collection.mutable.Map[String, Vector[Double]],
+      failed: scala.collection.mutable.Set[String])(body: => Unit): Unit = {
+    val t0 = System.nanoTime()
+    try {
+      body
+      samples(name) = samples.getOrElse(name, Vector.empty) :+
+        (System.nanoTime() - t0) / 1e9
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: $e")
+      failed += name
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -288,13 +304,6 @@ object Bench {
     val loadStart = loadavg
     def medianD(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
 
-    def time(name: String)(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try body
-      catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-      (System.nanoTime() - t0) / 1e9
-    }
-
     // ---- ingest workload setup (unmeasured): lineitem re-materialized as
     // headered CSV once; row count read from the parquet source
     val ingestBase = "/tmp/graft-bench-ingest"
@@ -350,15 +359,17 @@ object Bench {
     val wallStart = System.nanoTime()
     val cpuStart = procCpuSec
 
-    // round-robin over the query set
+    // round-robin over the query set; a query that throws is dropped
+    // from every later round and reported in `failed`
     val samples = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     val active = scala.collection.mutable.LinkedHashSet(querySelected: _*)
     var round = 0
     while (round < fastIters && active.nonEmpty) {
-      for (name <- querySelected if active.contains(name)) {
-        samples(name) = samples(name) :+ time(name)(runOnce(name))
-      }
+      for (name <- querySelected if active.contains(name))
+        sample(name, samples, failed)(runOnce(name))
+      active --= failed
       round += 1
       if (round >= iters)
         // slow queries keep their first `iters` samples; fast ones continue
@@ -372,14 +383,14 @@ object Bench {
       val _ = ingestRows // materialize the CSV before the first timed run
       var r2 = 0
       while (r2 < iters) {
-        for (name <- ingestSelected)
-          samples(name) = samples(name) :+ time(name)(ingestBody(name))
+        for (name <- ingestSelected if !failed.contains(name))
+          sample(name, samples, failed)(ingestBody(name))
         r2 += 1
       }
     }
 
     def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
-    val orderedNames = querySelected ++ ingestSelected
+    val orderedNames = (querySelected ++ ingestSelected).filterNot(failed)
 
     // normalization factor is known as soon as calibration ran — the
     // band check below compares normalized medians against the
@@ -402,13 +413,14 @@ object Bench {
     val offenders = orderedNames.filter(n =>
       isBandOut(n) || isSpreadPolluted(n))
     offenders.foreach { n =>
-      (1 to 3).foreach { _ => samples(n) = samples(n) :+ time(n)(runBody(n)) }
+      (1 to 3).foreach { _ => sample(n, samples, failed)(runBody(n)) }
     }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val resampledJson = offenders.map("\"" + _ + "\"").mkString("[", ",", "]")
     val bandOut = orderedNames.filter(isBandOut)
     val bandOutJson = bandOut.map("\"" + _ + "\"").mkString("[", ",", "]")
 
-    val results = orderedNames.map { name =>
+    val results = orderedNames.filterNot(failed).map { name =>
       val xs = samples(name)
       (name, median(xs), xs.min, xs.length)
     }
@@ -499,9 +511,9 @@ object Bench {
     // full diagnostics ship as a second element, written to the sidecar
     // file and stderr by the emitter below — nothing is dropped, it
     // just no longer rides the parsed line.
-    (contended || polluted != "[]" || bandOut.nonEmpty,
+    (contended || polluted != "[]" || bandOut.nonEmpty || failed.nonEmpty,
       inbandEntry,
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","stat":"round-robin median (rounds: $fastIters%d, slow>=${fastCutoffSec}%.0fs stop at $iters%d)","attempt":$attempt,"queries":$qs,"total_legacy16":$legacyTotal%.3f,"total_norm":$totalNorm%.3f,"calib_cpu_sec":$calibCpuStart%.3f,"calib_spark_sec":$calibSparkSec%.3f,"polluted":$polluted,"band_out":$bandOutJson,"contended":$contended,"sf":"$sfDir"}""",
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","stat":"round-robin median (rounds: $fastIters%d, slow>=${fastCutoffSec}%.0fs stop at $iters%d)","attempt":$attempt,"queries":$qs,"total_legacy16":$legacyTotal%.3f,"total_norm":$totalNorm%.3f,"calib_cpu_sec":$calibCpuStart%.3f,"calib_spark_sec":$calibSparkSec%.3f,"polluted":$polluted,"band_out":$bandOutJson,"failed":$failedJson,"contended":$contended,"sf":"$sfDir"}""",
       f"""{"attempt":$attempt,"queries_min":$mins,"queries_norm":$qsNorm,"iters":$ns,"spread":$spreadJson,"resampled":$resampledJson,"band_hi_factor":$BandHiFactor%.2f,"ingest":$ingestRates,"calib_cpu_end_sec":$calibCpuEnd%.3f,"calib_cpu_band":[${CalibCpuRefBand._1}%.2f,${CalibCpuRefBand._2}%.2f],"calib_spark_band":[${CalibSparkRefBand._1}%.2f,${CalibSparkRefBand._2}%.2f],"calib_out_of_band":$outOfBand,"calib_dev":$calibDev%.3f,"wall_sec":$wallSec%.1f,"proc_cpu_sec":$cpuSec%.1f,"cpu_wall_ratio":$ratio%.2f,"loadavg_start":"$loadStart","loadavg_end":"$loadavg","sf":"$sfDir"}"""
     )
     }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.expressions.LangIdOop
+
 /** Character-n-gram language identification — Cavnar & Trenkle 1994
   * ("N-Gram-Based Text Categorization"): each language is a RANK-ORDERED
   * profile of its most frequent character n-grams; a document is scored
@@ -23,23 +25,17 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the FIT aggregates per-language gram counts (map-side
   * combinable; output bounded by k·|langs| after the rank filter — only
-  * THAT is collected). CLASSIFICATION is linear in corpus grams: one
-  * doc-keyed groupBy for gram counts, one doc-keyed window for the
-  * document profile, a broadcast join against the (k·|langs|)-row
-  * profile table, and one doc-keyed aggregation — no pairwise work, no
-  * corpus-scale collect.
+  * THAT is collected). CLASSIFICATION is a per-row map: one compiled
+  * kernel ([[LangIdOop]]) counts, ranks and scores each document's own
+  * grams against the k·|langs|-entry profile held as a constant — no
+  * shuffle, no join, no corpus-scale collect.
   */
 object LangIdNgram {
 
   /** Sliding character n-grams of `text` (character-based positions, so
-    * multi-byte code points count as one). Empty array below n chars.
-    * Compiled single-pass kernel ([[graft.functions.expressions.TextGrams
-    * .char_ngrams]]) since r18: the old `transform(sequence(...), i =>
-    * text.substr(i, n))` evaluated interpreted AND each substr seeks to
-    * char i from the string start — O(len²) per row; the kernel computes
-    * the char-offset table once and slices byte ranges, O(len). NULL
-    * text → the old `when` fell through to the empty branch, restored by
-    * the coalesce (guide §4). */
+    * multi-byte code points count as one). Empty array below n chars or
+    * for NULL text. One compiled pass
+    * ([[graft.functions.expressions.TextGrams.char_ngrams]]). */
   def charGrams(text: Column, n: Int): Column =
     coalesce(
       graft.functions.expressions.TextGrams.char_ngrams(text, n),
@@ -66,89 +62,17 @@ object LangIdNgram {
       .toSeq
   }
 
-  /** Classify each document against the fitted profiles.
-    *
-    * oop(doc, lang) = Σ over the doc's top-k grams of
+  /** Classify each document against the fitted profiles, one row out
+    * per row in: oop(doc, lang) = Σ over the doc's top-k grams of
     * |doc_rank − lang_rank|, or k when the gram is absent from the
-    * language profile — computed as k·|doc profile| minus the matched
-    * bonus Σ(k − |Δrank|), so absent (gram, lang) combinations never
-    * materialize as rows. Prediction = argmin score, ties to the
-    * lexically smallest language. Documents with no grams (shorter than
-    * n chars) predict NULL with score NULL.
+    * language profile. Prediction = argmin score, ties to the lexically
+    * smallest language. Documents with no grams (NULL or shorter than n
+    * chars) predict NULL with score NULL.
     * Output: (idCol, pred_lang, oop_score).
     */
   def classify(df: DataFrame, idCol: String, textCol: String,
-      profiles: Seq[ProfileEntry], n: Int = 3, k: Int = 40): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    require(profiles.nonEmpty, "empty profile set")
-    val profDf = broadcast(
-      profiles.map(p => (p.lang, p.gram, p.rank)).toDF("__lang", "__g", "__lr"))
-    val langsDf = broadcast(
-      profiles.map(_.lang).distinct.toDF("__lang"))
-    // per-doc top-k gram profile as ONE compiled per-row pass
-    // ([[graft.functions.expressions.TopKCharGrams]]) — the r17 shape
-    // exploded every gram occurrence through a groupBy(doc, gram) and a
-    // per-doc ranking window, i.e. two corpus-gram Exchanges for a
-    // quantity that depends only on the document's own text; the kernel
-    // removes both (guide §2.4) with the identical (count desc, gram
-    // binary asc) ranking. Docs shorter than n chars yield an empty
-    // profile array, which inline() drops like the old explode did.
-    //
-    // r19 evaluation-count fix: the kernel used to run FOUR times per
-    // document — the r18 after-plans show it in the Filter condition AND
-    // the Project output of BOTH the docProf subtree (the inline()
-    // Generate's inferred `size > 0` guard was pushed through the
-    // projection) and the separate nDoc subtree. Opaque blocks the
-    // guard substitution (guide §4.4), and __ng is recovered from the
-    // exploded profile itself — inline() emits exactly size(__prof)
-    // rows per doc and only for docs with a non-empty profile, so
-    // groupBy(count) is the old `filter(size > 0).select(size)` row for
-    // row. Combined with the shared exchange below, ONE kernel
-    // evaluation per document.
-    val prof = df.select(col(idCol).as("__id"),
-      graft.functions.expressions.Opaque.opaque(
-        graft.functions.expressions.TopKCharGrams
-          .top_k_char_grams(col(textCol), n, k)).as("__prof"))
-    // ONE explicit __id exchange under both consumers: nDoc's count and
-    // bonus's (id, lang) aggregation each only require clustering on a
-    // key set CONTAINING __id, so hashpartitioning(__id) satisfies both
-    // and neither plans its own Exchange — and the two identical
-    // repartition subtrees collapse into one via exchange reuse, so the
-    // profile kernel + explode physically run ONCE per corpus pass
-    // (without this, each consumer re-derived docProf from the scan:
-    // two kernel evaluations). Shuffled rows are the exploded profiles,
-    // ≤ k small rows per doc (guide §2.4).
-    val docProf = prof.select(col("__id"), inline(col("__prof")))
-      .repartition(col("__id"))
-    // prune-anchor: the two coalesce(… * 0) terms are constant 0 — they
-    // exist only to REFERENCE first(__g)/first(__dr) inside __ng in a
-    // form no optimizer rule can remove (x * 0 is not foldable under
-    // nulls; equal-branch when() and count(non-nullable) both got
-    // simplified away when tried). Without them ColumnPruning inserts a
-    // narrower Project under this side's exchange, the two exchange
-    // subtrees stop canonicalizing equal, and exchange reuse — the
-    // thing that makes the profile kernel + explode physically run
-    // ONCE — never fires.
-    val nDoc = docProf.groupBy("__id")
-      .agg((count(lit(1)) +
-        coalesce(length(first(col("__g"))).cast("long") * 0L, lit(0L)) +
-        coalesce(first(col("__dr")).cast("long") * 0L, lit(0L))).as("__ng"))
-    val bonus = docProf.join(profDf, "__g")
-      .groupBy("__id", "__lang")
-      .agg(sum(lit(k.toLong) - abs(col("__dr") - col("__lr"))).as("__bonus"))
-    val scored = nDoc.crossJoin(langsDf)
-      .join(bonus, Seq("__id", "__lang"), "left")
-      .select(col("__id"), col("__lang"),
-        (lit(k.toLong) * col("__ng") - coalesce(col("__bonus"), lit(0L)))
-          .as("__score"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy("__id").orderBy(col("__score"), col("__lang"))))
-      .filter(col("__rk") === 1)
-    df.select(col(idCol))
-      .join(scored.select(col("__id").as(idCol), col("__lang"), col("__score")),
-        Seq(idCol), "left")
-      .select(col(idCol), col("__lang").as("pred_lang"),
-        col("__score").as("oop_score"))
-  }
+      profiles: Seq[ProfileEntry], n: Int = 3, k: Int = 40): DataFrame =
+    df.select(col(idCol),
+        LangIdOop.lang_id_oop(col(textCol), profiles, n, k).as("__lid"))
+      .select(col(idCol), col("__lid.pred_lang"), col("__lid.oop_score"))
 }

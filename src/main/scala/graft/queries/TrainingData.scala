@@ -1893,8 +1893,8 @@ object TrainingData {
         val docs = Tables(s, dir, "documents")
         val profiles = LangIdNgram.fitProfiles(docs, "lang", "text",
           n = 3, k = 40)
-        val lid = LangIdNgram.classify(docs.select("doc_id", "text"),
-            "doc_id", "text", profiles, n = 3, k = 40)
+        val lid = LangIdNgram.classify(docs, "doc_id", "text", profiles,
+            n = 3, k = 40)
           .select("doc_id", "pred_lang")
         val lm = NgramLm.fit(
           docs.filter(col("lang") === "en").select("text"), "text")
@@ -1909,8 +1909,7 @@ object TrainingData {
           "text", nBuckets = 1024)
         val qm = QualityModel.score(docs.select("doc_id", "text"),
             "doc_id", "text", w, nBuckets = 1024).select("doc_id", "keep")
-        docs.select("doc_id").join(lid, Seq("doc_id"), "left")
-          .join(ppl, Seq("doc_id"), "left")
+        lid.join(ppl, Seq("doc_id"), "left")
           .join(qm, Seq("doc_id"), "left")
           .withColumn("keep_final",
             coalesce(col("pred_lang") === "en", lit(false)) &&

@@ -277,28 +277,74 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     assertSame(df, oldSorted, VectorCells.sorted_cells(col("v"), centsCol))
   }
 
-  test("top_k_char_grams == explode + groupBy + ranking window profile") {
+  /** The r19 distributed [[graft.functions.LangIdNgram.classify]], kept
+    * verbatim as the reference for the per-row kernel — except the
+    * per-doc profile: its deleted kernel (`top_k_char_grams`) is replaced
+    * by the explode + groupBy + ranking-window form it was pinned to. */
+  private def r19Classify(df: DataFrame, idCol: String, textCol: String,
+      profiles: Seq[graft.functions.LangIdNgram.ProfileEntry], n: Int,
+      k: Int): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.expressions.TopKCharGrams
-    val (n, k) = (3, 5)
-    val df = texts.filter(col("text").isNotNull)
-      .withColumn("id", monotonically_increasing_id())
-    val grams = coalesce(TextGrams.char_ngrams(col("text"), n),
-      array().cast("array<string>"))
-    val old = df.select(col("id"), explode(grams).as("__g"))
-      .groupBy("id", "__g").agg(count(lit(1)).as("__c"))
+    import graft.functions.LangIdNgram
+    require(profiles.nonEmpty, "empty profile set")
+    val profDf = broadcast(
+      profiles.map(p => (p.lang, p.gram, p.rank)).toDF("__lang", "__g", "__lr"))
+    val langsDf = broadcast(
+      profiles.map(_.lang).distinct.toDF("__lang"))
+    val docProf = df.select(col(idCol).as("__id"),
+        explode(LangIdNgram.charGrams(col(textCol), n)).as("__g"))
+      .groupBy("__id", "__g").agg(count(lit(1)).as("__c"))
       .withColumn("__dr", row_number().over(
-        Window.partitionBy("id").orderBy(col("__c").desc, col("__g"))))
+        Window.partitionBy("__id").orderBy(col("__c").desc, col("__g"))))
       .filter(col("__dr") <= k)
-      .select(col("id"), col("__g"), col("__dr"))
-      .orderBy("id", "__dr").collect()
-    val neu = df.select(col("id"),
-        inline(TopKCharGrams.top_k_char_grams(col("text"), n, k)))
-      .orderBy("id", "__dr").collect()
-    assert(old.length == neu.length, s"${old.length} vs ${neu.length}")
-    old.zip(neu).foreach { case (o, nn) =>
-      assert(o.toSeq == nn.toSeq, s"$o vs $nn") }
+      .select(col("__id"), col("__g"), col("__dr"))
+      .repartition(col("__id"))
+    val nDoc = docProf.groupBy("__id")
+      .agg((count(lit(1)) +
+        coalesce(length(first(col("__g"))).cast("long") * 0L, lit(0L)) +
+        coalesce(first(col("__dr")).cast("long") * 0L, lit(0L))).as("__ng"))
+    val bonus = docProf.join(profDf, "__g")
+      .groupBy("__id", "__lang")
+      .agg(sum(lit(k.toLong) - abs(col("__dr") - col("__lr"))).as("__bonus"))
+    val scored = nDoc.crossJoin(langsDf)
+      .join(bonus, Seq("__id", "__lang"), "left")
+      .select(col("__id"), col("__lang"),
+        (lit(k.toLong) * col("__ng") - coalesce(col("__bonus"), lit(0L)))
+          .as("__score"))
+      .withColumn("__rk", row_number().over(
+        Window.partitionBy("__id").orderBy(col("__score"), col("__lang"))))
+      .filter(col("__rk") === 1)
+    df.select(col(idCol))
+      .join(scored.select(col("__id").as(idCol), col("__lang"), col("__score")),
+        Seq(idCol), "left")
+      .select(col(idCol), col("__lang").as("pred_lang"),
+        col("__score").as("oop_score"))
+  }
+
+  test("classify == r19 distributed classify") {
+    import spark.implicits._
+    import graft.functions.LangIdNgram
+    // adversarial texts with ids and three round-robin labels attached
+    val adversarial = texts.collect().map(r => Option(r.getString(0)))
+      .zipWithIndex.map { case (t, i) => (i.toLong, s"l${i % 3}", t) }
+      .toSeq.toDF("doc_id", "lang", "text")
+    val documents = graft.sources.Tables(spark, "/root/testdata/sf0.001",
+      "documents").select("doc_id", "lang", "text")
+    def rows(df: DataFrame): Seq[(Long, String, Option[Long])] =
+      df.collect().toSeq.map(r => (r.getLong(0), r.getString(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)))).sortBy(_._1)
+    for ((name, df) <- Seq("adversarial" -> adversarial,
+        "documents" -> documents); n <- Seq(1, 3); k <- Seq(5, 40)) {
+      val profiles = LangIdNgram.fitProfiles(df, "lang", "text", n, k)
+      val docs = df.select("doc_id", "text")
+      val old = rows(r19Classify(docs, "doc_id", "text", profiles, n, k))
+      val neu = rows(LangIdNgram.classify(docs, "doc_id", "text", profiles,
+        n, k))
+      assert(old.nonEmpty && old.exists(_._2 != null), s"$name n=$n k=$k")
+      assert(old == neu, s"$name n=$n k=$k (${old.size} vs ${neu.size} rows):\n" +
+        old.zip(neu).filter { case (o, nn) => o != nn }.take(5).mkString("\n"))
+    }
   }
 
   test("normalize_url / url_host == the r17 pure-Column regex chains") {

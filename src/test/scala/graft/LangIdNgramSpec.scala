@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.LangIdNgram
 
 /** Cavnar–Trenkle character-n-gram language ID: planted multilingual
-  * recovery, short-doc null, deterministic tie-break.
+  * recovery, short-doc and NULL-text null, deterministic tie-break, one
+  * output row per input row.
   */
 class LangIdNgramSpec extends AnyFunSuite {
 
@@ -67,5 +68,40 @@ class LangIdNgramSpec extends AnyFunSuite {
     val (pred2, score2) = out(2L)
     assert(pred2.contains("de"))
     assert(score2 % 30 == 0 && score2 > 0)
+  }
+
+  test("NULL text predicts (id, null, null)") {
+    import spark.implicits._
+    val profiles = LangIdNgram.fitProfiles(labeled, "lang", "text",
+      n = 3, k = 30)
+    val docs = Seq((1L, Option.empty[String]), (2L, Some("the dog")))
+      .toDF("doc_id", "text")
+    val out = LangIdNgram.classify(docs, "doc_id", "text", profiles,
+        n = 3, k = 30)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(out(1L).isNullAt(1) && out(1L).isNullAt(2))
+    assert(!out(2L).isNullAt(1) && !out(2L).isNullAt(2))
+  }
+
+  test("one output row per input row, schema (doc_id bigint, pred_lang string, oop_score bigint)") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val profiles = LangIdNgram.fitProfiles(labeled, "lang", "text",
+      n = 3, k = 30)
+    // a repeated id is scored row by row, never merged
+    val docs = Seq(
+      (1L, "the bird sat with the dog"),
+      (1L, "le chien est avec les enfants"),
+      (2L, "ab"),
+      (3L, "die katze und der vogel spielen"))
+      .toDF("doc_id", "text")
+    val out = LangIdNgram.classify(docs, "doc_id", "text", profiles,
+      n = 3, k = 30)
+    assert(out.schema.map(f => f.name -> f.dataType) ==
+      Seq("doc_id" -> LongType, "pred_lang" -> StringType,
+        "oop_score" -> LongType))
+    val got = out.collect().map(r => (r.getLong(0), Option(r.getString(1))))
+    assert(got.sorted.toSeq == Seq((1L, Some("en")), (1L, Some("fr")),
+      (2L, None), (3L, Some("de"))))
   }
 }
