@@ -1,7 +1,8 @@
 package graft.model
 
 import java.time.format.DateTimeFormatter
-import java.time.{LocalDate, LocalDateTime}
+import java.time.{LocalDate, LocalDateTime, OffsetDateTime}
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -86,6 +87,18 @@ object TypeInference {
   case object KJson extends Kind
   case object KString extends Kind
 
+  private val IntPattern = Pattern.compile("[+-]?\\d{1,19}")
+  private val DecPatterns = Seq(
+    Pattern.compile("[+-]?\\d*\\.\\d+([eE][+-]?\\d+)?"),
+    Pattern.compile("[+-]?\\d+\\.\\d*"))
+
+  /** `parse(s, f)` succeeds, tried only when `f` consumes all of `s`:
+    * a layout that cannot match costs no exception. */
+  private def parses(fs: Seq[DateTimeFormatter], s: String)(
+      parse: (String, DateTimeFormatter) => Any): Boolean =
+    fs.exists(f => LayoutCascade.consumes(f, s) &&
+      (try { parse(s, f); true } catch { case _: Exception => false }))
+
   /** Best-effort string classification — `ParseString` port. */
   def parseKind(raw: String): Kind = {
     if (raw == null) return KNull
@@ -93,32 +106,27 @@ object TypeInference {
     if (s.isEmpty) return KNull
     val lower = s.toLowerCase
     if (lower == "true" || lower == "false") return KBool
-    if (s.matches("[+-]?\\d{1,19}")) {
+    if (IntPattern.matcher(s).matches()) {
       // digit-count bound, not raw length: a sign must not push a valid
       // long into the string bucket
       return try { s.toLong; KInt } catch { case _: NumberFormatException => KDec }
     }
-    if (s.matches("[+-]?\\d*\\.\\d+([eE][+-]?\\d+)?") || s.matches("[+-]?\\d+\\.\\d*")) return KDec
+    if (DecPatterns.exists(_.matcher(s).matches())) return KDec
     if ((s.startsWith("{") && s.endsWith("}")) || (s.startsWith("[") && s.endsWith("]"))) return KJson
     if (s.length >= 6 && s.length <= 11 &&
         s.exists(c => c == '-' || c == '/' || c == ' ')) {
-      if (dFormatters.exists(f => try { LocalDate.parse(s, f); true } catch { case _: Exception => false }))
-        return KDate
+      if (parses(dFormatters, s)(LocalDate.parse)) return KDate
       // date-only layouts living in the datetime cascade (dd-MMM-yy, M/d/yy,
       // dd MMM yyyy) classify as date, like the reference's zero-time check
-      if (dtFormatters.exists(f => try { LocalDate.parse(s, f); true } catch { case _: Exception => false }))
-        return KDate
+      if (parses(dtFormatters, s)(LocalDate.parse)) return KDate
     }
     if (s.length >= 14 && s.length <= 40 && Character.isDigit(s.charAt(0))) {
-      if (dtFormatters.exists(f => try { LocalDateTime.parse(s, f); true } catch { case _: Exception => false }))
-        return KDateTime
-      if (zFormatters.exists(f => try { java.time.OffsetDateTime.parse(s, f); true } catch { case _: Exception => false }))
-        return KDateTime
+      if (parses(dtFormatters, s)(LocalDateTime.parse)) return KDateTime
+      if (parses(zFormatters, s)(OffsetDateTime.parse)) return KDateTime
     }
     // zone-carrying layouts that open with a weekday name (RFC1123/822)
     if (s.length >= 20 && s.length <= 40 && Character.isLetter(s.charAt(0))) {
-      if (zFormatters.exists(f => try { java.time.OffsetDateTime.parse(s, f); true } catch { case _: Exception => false }))
-        return KDateTime
+      if (parses(zFormatters, s)(OffsetDateTime.parse)) return KDateTime
     }
     KString
   }
@@ -231,31 +239,39 @@ object TypeInference {
     })
   }
 
-  /** Cast an all-string frame to the target schema; timestamps go through the
-    * layout cascade (`try_to_timestamp` chain — codegen'd, no UDF).
+  /** Zoned layouts Spark's datetime patterns reject at compile time:
+    * week-day (EEE), zone-name (zzz) and lowercase-x tokens. */
+  private def sparkRejects(l: String): Boolean =
+    l.contains("EEE") || l.contains("zzz") || l.contains("x")
+
+  /** Cast an all-string frame to the target schema.
+    *
+    * Timestamps go through the layout cascade as one compiled kernel
+    * ([[LayoutCascade]]): a declared `datetime_format` first, so ambiguous
+    * values (03/04/2024) resolve under the declared layout, then
+    * `dateTimeLayouts ++ zonedLayouts` in order, each parsed exactly as
+    * `try_to_timestamp(c, lit(layout))` would. Misses fall back to Spark's
+    * default parser (`try_to_timestamp(c)`), then to the zoned layouts
+    * Spark cannot compile (RFC1123/822 week-day and zone-name forms, `x`
+    * offsets), read with the same java.time formatters `parseKind`
+    * classifies them with. Dates run the declared format then
+    * `dateLayouts` through the same kernel and truncate to the session
+    * day.
     */
   def castTo(df: DataFrame, schema: StructType,
       datetimeFormat: Option[String] = None): DataFrame = {
-    val forcedPattern = datetimeFormat.map(sqlishToSparkPattern)
+    val declared = datetimeFormat.map(sqlishToSparkPattern).toSeq
+    val tsLayouts = declared ++
+      (dateTimeLayouts ++ zonedLayouts).filterNot(sparkRejects)
+    val javaLayouts = zonedLayouts.filter(sparkRejects)
     val cols: Seq[Column] = schema.fields.toSeq.map { f =>
       val c = col(f.name)
       val cast = f.dataType match {
         case TimestampType =>
-          // Spark datetime patterns reject week-day (EEE), zone-name (zzz)
-          // and lowercase-x tokens at compile time — those layouts classify
-          // via java.time in parseKind but cast through the default parser
-          val sparkSafe = (dateTimeLayouts ++ zonedLayouts)
-            .filterNot(l => l.contains("EEE") || l.contains("zzz") || l.contains("x"))
-          // a declared datetime_format parses FIRST, so ambiguous values
-          // (03/04/2024) resolve under the declared layout, not the cascade
-          val chain = forcedPattern.map(p => try_to_timestamp(c, lit(p))).toSeq ++
-            sparkSafe.map(l => try_to_timestamp(c, lit(l))) :+ try_to_timestamp(c)
-          coalesce(chain: _*)
+          coalesce(LayoutCascade.layout_cascade(c, tsLayouts),
+            try_to_timestamp(c), LayoutCascade.offset_layouts(c, javaLayouts))
         case DateType =>
-          val chain = forcedPattern
-            .map(p => try_to_timestamp(c, lit(p)).cast(DateType)).toSeq ++
-            dateLayouts.map(l => try_to_timestamp(c, lit(l)).cast(DateType))
-          coalesce(chain: _*)
+          LayoutCascade.layout_cascade(c, declared ++ dateLayouts).cast(DateType)
         case BooleanType => lower(trim(c, " \t\r\n")) === "true"
         case dt => c.cast(dt)
       }

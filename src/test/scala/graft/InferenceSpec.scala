@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +12,28 @@ import graft.model.TypeInference._
   * (reference InferFromStats, datatype.go:923-1008).
   */
 class InferenceSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private def withUtc[T](body: => T): T = {
+    val key = "spark.sql.session.timeZone"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "UTC")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  private def stringFrame(cols: Seq[String], rows: Seq[Seq[String]]) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(Row.fromSeq), 2),
+      StructType(cols.map(StructField(_, StringType))))
 
   test("parseKind classifies scalars like the reference ParseString") {
     assert(parseKind(null) == KNull)
@@ -97,5 +121,66 @@ class InferenceSpec extends AnyFunSuite {
     // blind replacement would corrupt SSS to ssS
     assert(sqlishToSparkPattern("yyyy-MM-dd HH:mm:ss.SSS")
       == "yyyy-MM-dd HH:mm:ss.SSS")
+  }
+
+  test("castTo: every value parseKind classifies as datetime casts to its exact instant") {
+    // each value asserted KDateTime above, with its instant in UTC
+    val expected = Seq(
+      "2024-01-31 10:20:30" -> "2024-01-31T10:20:30Z",
+      "2024-01-31T10:20:30.123" -> "2024-01-31T10:20:30.123Z",
+      "2024-01-31T10:20:30.123Z" -> "2024-01-31T10:20:30.123Z",
+      "01/02/2006 03:04:05 PM" -> "2006-01-02T15:04:05Z",
+      "2006-01-02 15:04" -> "2006-01-02T15:04:00Z",
+      "02-Jan-06 15:04:05" -> "2006-01-02T15:04:05Z",
+      "Mon, 02 Jan 2006 15:04:05 -0700" -> "2006-01-02T22:04:05Z",
+      "2006-01-02 15:04:05-07" -> "2006-01-02T22:04:05Z",
+      "2006-01-02 15:04:05.999999-07" -> "2006-01-02T22:04:05.999999Z")
+    expected.foreach { case (v, _) => assert(parseKind(v) == KDateTime, v) }
+    val got = withUtc {
+      val df = stringFrame(Seq("v"), expected.map(e => Seq(e._1)))
+      castTo(df, StructType(Seq(StructField("v", TimestampType))))
+        .select(unix_micros(col("v"))).collect().map(r =>
+          if (r.isNullAt(0)) null else r.getLong(0))
+    }
+    expected.zip(got).foreach { case ((v, instant), micros) =>
+      val want = java.time.Instant.parse(instant)
+      assert(micros == want.getEpochSecond * 1000000L + want.getNano / 1000,
+        s"'$v' cast to $micros, want $instant")
+    }
+  }
+
+  test("FileSources.csv: RFC1123 timestamps infer as timestamp and land non-NULL") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rfc1123")
+    val f = dir.resolve("rfc.csv")
+    java.nio.file.Files.writeString(f, "id,ts\n" +
+      "1,\"Mon, 02 Jan 2006 15:04:05 -0700\"\n" +
+      "2,\"Tue, 03 Jan 2006 01:00:00 +0000\"\n")
+    try {
+      val rows = withUtc {
+        val df = graft.sources.FileSources.csv(spark, f.toString)
+        assert(df.schema("ts").dataType == TimestampType)
+        df.orderBy("id").select(unix_micros(col("ts"))).collect().map(_.get(0))
+      }
+      assert(rows.toSeq == Seq(1136239445000000L, 1136250000000000L))
+    } finally {
+      java.nio.file.Files.deleteIfExists(f)
+      java.nio.file.Files.deleteIfExists(dir)
+    }
+  }
+
+  test("castTo plan: one cascade kernel per timestamp column, no per-layout chain") {
+    val df = stringFrame(Seq("a", "b", "n"), Seq(Seq("2024-01-31 10:20:30",
+      "2024-01-31T10:20:30Z", "1")))
+    val plan = castTo(df, StructType(Seq(StructField("a", TimestampType),
+      StructField("b", TimestampType), StructField("n", IntegerType))))
+      .queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions)
+    def count(pf: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, Unit]) =
+      exprs.map(_.collect(pf).size).sum
+    assert(count { case _: graft.model.LayoutCascadeExpr => } == 2, plan)
+    // no to_timestamp/gettimestamp that takes a layout literal survives
+    val planText = plan.toString.toLowerCase
+    assert(!planText.contains("gettimestamp") && !planText.contains("to_timestamp"),
+      plan)
   }
 }

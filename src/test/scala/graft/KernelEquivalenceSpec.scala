@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, StringType, StructField, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.expressions.{ArrayFold, GramBuckets, TextGrams}
@@ -616,6 +617,155 @@ class KernelEquivalenceSpec extends AnyFunSuite {
         .select(col("__id"), posexplode(col("__bands")))
         .collect().map(_.toString).sorted.toSeq
     assert(pipeline(identity) == pipeline(Opaque.opaque))
+  }
+
+  /** castTo's timestamp and date branches before the layout-cascade
+    * kernel, verbatim: the reference the kernel must reproduce. */
+  private def chainCast(c: Column, dt: DataType,
+      datetimeFormat: Option[String]): Column = {
+    import graft.model.TypeInference._
+    val forcedPattern = datetimeFormat.map(sqlishToSparkPattern)
+    val cast = dt match {
+      case TimestampType =>
+        // Spark datetime patterns reject week-day (EEE), zone-name (zzz)
+        // and lowercase-x tokens at compile time — those layouts classify
+        // via java.time in parseKind but cast through the default parser
+        val sparkSafe = (dateTimeLayouts ++ zonedLayouts)
+          .filterNot(l => l.contains("EEE") || l.contains("zzz") || l.contains("x"))
+        // a declared datetime_format parses FIRST, so ambiguous values
+        // (03/04/2024) resolve under the declared layout, not the cascade
+        val chain = forcedPattern.map(p => try_to_timestamp(c, lit(p))).toSeq ++
+          sparkSafe.map(l => try_to_timestamp(c, lit(l))) :+ try_to_timestamp(c)
+        coalesce(chain: _*)
+      case DateType =>
+        val chain = forcedPattern
+          .map(p => try_to_timestamp(c, lit(p)).cast(DateType)).toSeq ++
+          dateLayouts.map(l => try_to_timestamp(c, lit(l)).cast(DateType))
+        coalesce(chain: _*)
+    }
+    when(c.isNull || trim(c, " \t\r\n") === "", lit(null).cast(dt))
+      .otherwise(cast)
+  }
+
+  /** One value per cascade layout, plus fraction widths, resolution
+    * failures, blanks and DST edges. */
+  private val cascadeValues: Seq[String] = Seq(
+    // dateTimeLayouts, in order
+    "2024-01-31 10:20:30.123456789", "2024-01-31 10:20:30.123456",
+    "2024-01-31 10:20:30.123", "2024-01-31 10:20:30",
+    "2024-01-31T10:20:30.123456789", "2024-01-31T10:20:30.123456",
+    "2024-01-31T10:20:30.123", "2024-01-31T10:20:30",
+    "2024/01/31 10:20:30", "01/31/2024 10:20:30", "31-01-2024 10:20:30",
+    "02-Jan-06", "02-Jan-06 15:04:05", "02-Jan-06 03:04:05 PM",
+    "02-Jan-06 03.04.05.123456 PM", "02 Jan 2006",
+    "1/2/06", "01/02/06", "1/2/2006", "01/02/2006",
+    "01/02/2006 15:04", "01/02/2006 03:04:05 PM",
+    "2006-01-02 15:04", "2006-01-02T15:04", "02-01-2006",
+    // dateLayouts not covered above
+    "2024-01-31", "2024/01/31", "20240131",
+    // zonedLayouts, in order
+    "2024-01-31T10:20:30.123+05:30", "2024-01-31T10:20:30.123Z",
+    "2024-01-31T10:20:30Z", "2024-01-31T10:20:30-07:00",
+    "2024-01-31 10:20:30.123+01:00", "2024-01-31 10:20:30+01:00",
+    "2024-01-31T10:20:30+0100", "2024-01-31T10:20:30.123456+0100",
+    "2006-01-02 15:04:05-07", "2006-01-02 15:04:05.999-07",
+    "2006-01-02 15:04:05.999999-07",
+    "2024-01-31 10:20:30 +0100", "2024-01-31 10:20:30 +01:00",
+    "Mon, 02 Jan 2006 15:04:05 -0700", "Mon, 02 Jan 2006 15:04:05 MST",
+    "02 Jan 06 15:04 -0700", "02 Jan 06 15:04 MST",
+    // fractions of 1 to 9 (and 10) digits
+    "2024-01-31 10:20:30.1", "2024-01-31 10:20:30.12",
+    "2024-01-31 10:20:30.1234", "2024-01-31 10:20:30.12345",
+    "2024-01-31 10:20:30.1234567", "2024-01-31 10:20:30.12345678",
+    "2024-01-31T10:20:30.1", "2024-01-31T10:20:30.1234567",
+    "2024-01-31 10:20:30.1234567890",
+    // resolution failures: Feb 30, month 13, 24:00
+    "2024-02-30 10:20:30", "2024-02-30", "02/30/2024",
+    "2024-13-01 10:20:30", "2024-13-01", "13/01/2024",
+    "2024-01-31 24:00:00", "2024-01-31 24:00", "2024-01-31T24:00:00Z",
+    "2024-02-29", "2023-02-29",
+    // blanks, junk, shapes only the default parser or nothing reads
+    " 2024-01-31 10:20:30", "2024-01-31 10:20:30 ", " 2024-01-31 ",
+    "", "   ", "\t\n", "hello", "2024-1-5 10:20:30", "2024-1-5",
+    "10:20:30", "2024", "03/04/2024",
+    // DST gap and overlap in America/Los_Angeles
+    "2024-03-10 02:30:00", "2024-03-10T02:30:00", "2024-11-03 01:30:00")
+
+  /** First SparkThrowable condition (else exception class) in the cause
+    * chain: how "the same error" is compared when a cast throws. */
+  private def errorClass(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+      case st: org.apache.spark.SparkThrowable if st.getCondition != null =>
+        st.getCondition
+    }.getOrElse(Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .toSeq.last.getClass.getName)
+
+  test("layout_cascade == try_to_timestamp chain (castTo, all parser policies)") {
+    import graft.model.TypeInference
+    val schema = StructType(Seq(StructField("v", StringType)))
+    // an RDD-backed frame: a local relation would be folded by the
+    // optimizer and evaluated interpreted, never reaching codegen
+    def frame(vs: Seq[String]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(vs.map(Row(_)), 2), schema)
+    val values = cascadeValues :+ null
+    // zone-carrying layouts only the java.time fallback reads: the one
+    // place castTo may differ, and only where the chain gives NULL
+    val javaOnly = TypeInference.zonedLayouts
+      .filter(l => l.contains("EEE") || l.contains("zzz") || l.contains("x"))
+      .map(java.time.format.DateTimeFormatter.ofPattern(_, java.util.Locale.US))
+    def javaMicros(v: String): Option[Long] = Option(v).flatMap(s =>
+      javaOnly.iterator.flatMap(f => scala.util.Try(
+        java.time.OffsetDateTime.parse(s.trim, f).toInstant).toOption)
+        .nextOption()).map(org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros)
+    def out(dt: DataType, c: Column): Column = dt match {
+      case TimestampType => unix_micros(c)
+      case _ => unix_date(c)
+    }
+    def run(df: DataFrame, c: Column): Either[String, Seq[Any]] =
+      try Right(df.select(c).collect().map(_.get(0)).toSeq)
+      catch { case t: Throwable => Left(errorClass(t)) }
+    val keys = Seq("spark.sql.session.timeZone", "spark.sql.legacy.timeParserPolicy")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    var compared = 0
+    var threw = 0
+    try {
+      for (policy <- Seq("CORRECTED", "LEGACY", "EXCEPTION");
+           zone <- Seq("UTC", "America/Los_Angeles");
+           dt <- Seq[DataType](TimestampType, DateType);
+           fmt <- Seq(None, Some("DD/MM/YYYY"))) {
+        spark.conf.set("spark.sql.legacy.timeParserPolicy", policy)
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        val ctx = s"$policy $zone $dt $fmt"
+        def pair(vs: Seq[String]) = {
+          val df = frame(vs)
+          (run(df, out(dt, chainCast(col("v"), dt, fmt))),
+            run(TypeInference.castTo(df, StructType(Seq(StructField("v", dt))), fmt),
+              out(dt, col("v"))))
+        }
+        // whole set in one job; where either side throws, value by value
+        val perValue = pair(values) match {
+          case (Right(o), Right(n)) => values.zip(o.zip(n).map { case (a, b) =>
+            (Right(Seq(a)), Right(Seq(b))) })
+          case _ => values.map(v => v -> pair(Seq(v)))
+        }
+        perValue.foreach {
+          case (v, (Right(Seq(o)), Right(Seq(n)))) =>
+            val javaFallback = dt == TimestampType && o == null &&
+              javaMicros(v).contains(n)
+            assert(o == n || javaFallback, s"$ctx value '$v': chain=$o kernel=$n")
+            compared += 1
+          case (v, (Left(o), Left(n))) =>
+            assert(o == n, s"$ctx value '$v': chain threw $o, kernel threw $n")
+            threw += 1
+          case (v, (o, n)) => fail(s"$ctx value '$v': chain=$o kernel=$n")
+        }
+      }
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(compared + threw == 24 * values.size)
+    assert(threw > 0, "no value exercised the EXCEPTION policy's upgrade error")
   }
 
   test("any_nonzero == exists(vec, x =!= 0.0f)") {
