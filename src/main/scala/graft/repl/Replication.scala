@@ -232,7 +232,7 @@ object Replication {
                 org.apache.spark.sql.functions.lit(e0).cast(kt))
             case other => throw new IllegalArgumentException(s"mode $other")
           }
-          (st, tgt.read.count())
+          (st, tgt.rowCount)
         }
       }
       // state publication stays on the driver thread, after the level barrier

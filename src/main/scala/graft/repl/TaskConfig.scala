@@ -513,7 +513,11 @@ object TaskConfig {
     }
   }
 
-  /** Execute the task; returns rows now present in the target. */
+  /** Execute the task; returns the rows the target holds after the load,
+    * like the reference's row counter. A parquet target counts them from
+    * its data files' footers on the driver ([[ParquetTarget.rowCount]]),
+    * so a CSV→parquet run costs one Spark job to open its source plus the
+    * write's own jobs. */
   def run(spark: SparkSession, yamlText: String, sfDir: String): Long = {
     val task0 = parse(yamlText)
     task0.timeout match {
@@ -745,7 +749,7 @@ object TaskConfig {
           "a {part_*} target mask needs update_key"))
         graft.write.PartitionedWriter.write(df, base, key, fields,
           maxRecordsPerFile = tgt.options.fileMaxRows.map(_.toLong).getOrElse(0L))
-        spark.read.parquet(base).count()
+        ParquetTarget(spark, base).rowCount
       case "parquet" | "delta" =>
         val writeDelta = tgt.format == "delta"
         val pt = ParquetTarget(spark, tgt.obj)
@@ -814,7 +818,7 @@ object TaskConfig {
           case other => throw new IllegalArgumentException(s"mode $other")
         }
         if (writeDelta) DeltaLite.read(spark, tgt.obj).count()
-        else pt.read.count()
+        else pt.rowCount
       case "stdout" =>
         // data stream to the console (task_run_write.go:71-148)
         graft.write.StdoutWriter.csv(df)
@@ -864,7 +868,7 @@ object TaskConfig {
 
   private def countTarget(spark: SparkSession, tgt: Target): Long =
     tgt.format match {
-      case "parquet" => ParquetTarget(spark, tgt.obj).read.count()
+      case "parquet" => ParquetTarget(spark, tgt.obj).rowCount
       case "delta" => DeltaLite.read(spark, tgt.obj).count()
       case "csv" => FileSources.csv(spark, tgt.obj).count()
       case "jsonl" => FileSources.jsonl(spark, tgt.obj).count()

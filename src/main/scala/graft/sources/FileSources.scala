@@ -1,7 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.util.FailureSafeParser
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.TypeInference
 
@@ -11,7 +18,10 @@ import graft.model.TypeInference
   * rows with [[TypeInference]], apply user `columns:` overrides (the
   * reference's `Columns.Coerce`, dataset.go:604-606), and cast the full
   * lazy scan — so only the sample is collected to the driver; the data path
-  * stays distributed and codegen'd.
+  * stays distributed and codegen'd. A line-splittable CSV source opens in
+  * one Spark job that yields its parser mode, header and sample together,
+  * as the reference's `Datastream` fills its inference buffer while it
+  * streams (datastream.go:43-73).
   */
 object FileSources {
 
@@ -30,10 +40,10 @@ object FileSources {
       escape: Option[String] = None, nullIf: Seq[String] = Nil,
       emptyAsNull: Boolean = false, skipLines: Int = 0,
       skipBlankLines: Boolean = false, datetimeFormat: Option[String] = None,
-      // None = sniff (one splittable quote-parity pass decides whether any
-      // record spans physical lines); Some(b) pins the parser mode and
-      // skips the sniff — declare false on huge known-clean inputs to
-      // avoid the extra read, true for known embedded-newline data
+      // None = the open pass also checks quote parity, which decides
+      // whether any record spans physical lines; Some(b) pins the parser
+      // mode — false skips the parity check (the open pass still takes the
+      // header and sample), true for known embedded-newline data
       multiLine: Option[Boolean] = None)
 
   def csv(spark: SparkSession, path: String,
@@ -42,68 +52,209 @@ object FileSources {
       sampleSize: Int = TypeInference.SampleSize,
       encoding: Option[String] = None,
       opts: CsvOpts = CsvOpts()): DataFrame = {
-    val reader = spark.read
-      .option("header", header.toString)
-      .option("sep", delimiter)
-      .option("inferSchema", "false")
-    opts.quote.foreach(q => reader.option("quote", q))
-    // RFC-4180 doubled-quote escaping is the default (the reference's Go
+    val o = open(spark, path, header, delimiter, sampleSize, encoding, opts)
+    if (o.raw.columns.isEmpty) o.raw
+    else TypeInference.castTo(o.raw, TypeInference.infer(o.sample,
+      o.raw.columns.toSeq, overrides, opts.datetimeFormat), opts.datetimeFormat)
+  }
+
+  /** An opened CSV source: the parser mode it reads with, its all-string
+    * frame with null_if/empty_as_null applied, and the inference sample —
+    * the rows `raw.limit(sampleSize).collect()` returns. */
+  private[graft] final case class Opened(multiLine: Boolean, raw: DataFrame,
+      sample: Seq[Row])
+
+  private[graft] def open(spark: SparkSession, path: String, header: Boolean,
+      delimiter: String, sampleSize: Int, encoding: Option[String],
+      opts: CsvOpts): Opened = {
+    // one options map for Spark's reader and the driver-side parser, so the
+    // sample parses exactly as the distributed read does. RFC-4180
+    // doubled-quote escaping is the default (the reference's Go
     // encoding/csv dialect); Spark's own default is backslash — override
     // unless the task declares one
-    reader.option("escape", opts.escape.getOrElse("\""))
-    encoding.foreach(e => reader.option("encoding", e))
+    val options = Map("header" -> header.toString, "sep" -> delimiter,
+      "inferSchema" -> "false", "escape" -> opts.escape.getOrElse("\"")) ++
+      opts.quote.map("quote" -> _) ++ encoding.map("encoding" -> _)
+    val reader = spark.read.options(options)
+    def collected(raw: DataFrame, multiLine: Boolean): Opened = {
+      val nulled = applyNullIf(raw, opts)
+      Opened(multiLine, nulled, nulled.limit(sampleSize).collect().toSeq)
+    }
     // gzip/snappy/lz4/bzip2 go through Hadoop codecs natively; .zst routes
     // through the zstd-jni line reader (compression.go extension sniffing),
     // which must apply the charset itself — csv(Dataset[String]) never
     // sees the raw bytes, so the reader's encoding option can't
     val skipping = opts.skipLines > 0 || opts.skipBlankLines
-    val raw =
-      if (hasZstd(spark, path)) {
-        var lines = Compression.readZstdLines(spark, path, encoding)
-        if (skipping) lines = applyLineSkips(spark, lines, opts)
-        reader.csv(lines)
-      } else if (Compression.isZip(path)) {
-        // .zip routes through the archive line reader (compression.go
-        // extension dispatch); same line-fed CSV parse as .zst
-        var lines = Compression.readZipLines(spark, path, encoding)
-        if (skipping) lines = applyLineSkips(spark, lines, opts)
-        reader.csv(lines)
-      } else if (skipping) {
-        require(encoding.forall(e =>
-          e.equalsIgnoreCase("utf-8") || e.equalsIgnoreCase("utf8")),
-          "skip_lines/skip_blank_lines need UTF-8 input (the line pre-pass " +
-            "reads through the text source)")
-        reader.csv(readLinesSkipping(spark, path, opts))
-      } else {
-        // Quoted fields may embed newlines (the reference's Go csv reader
-        // always handles them), which forces Spark's multiLine parser —
-        // but multiLine makes every file ONE unsplittable task, the
-        // difference between 2-way and 32-way parallelism on a 2-file
-        // input, and between file-count and split-count parallelism at
-        // 100 TB. A record spanning physical lines must leave some line
-        // with an ODD number of quote chars (the "" in-field escape is two
-        // chars), so one splittable, codegen'd validation pass over the
-        // text proves newline-free inputs safe for the line-splittable
-        // parser. Only sniffable under the default "-quote/escape dialect
-        // and a byte-compatible charset; otherwise conservative multiLine.
-        val multi = opts.multiLine.getOrElse {
-          val sniffable = opts.quote.forall(_ == "\"") &&
-            opts.escape.forall(_ == "\"") &&
-            encoding.forall(e => e.equalsIgnoreCase("utf-8") ||
-              e.equalsIgnoreCase("utf8"))
-          if (!sniffable) true
-          else {
-            import org.apache.spark.sql.functions.{col, length, translate}
-            !spark.read.text(path)
-              .filter(((length(col("value")) -
-                length(translate(col("value"), "\"", ""))) % 2) === 1)
-              .isEmpty
-          }
-        }
-        reader.option("multiLine", multi.toString).csv(path)
+    if (hasZstd(spark, path)) {
+      var lines = Compression.readZstdLines(spark, path, encoding)
+      if (skipping) lines = applyLineSkips(spark, lines, opts)
+      collected(reader.csv(lines), multiLine = false)
+    } else if (Compression.isZip(path)) {
+      // .zip routes through the archive line reader (compression.go
+      // extension dispatch); same line-fed CSV parse as .zst
+      var lines = Compression.readZipLines(spark, path, encoding)
+      if (skipping) lines = applyLineSkips(spark, lines, opts)
+      collected(reader.csv(lines), multiLine = false)
+    } else if (skipping) {
+      require(encoding.forall(isUtf8),
+        "skip_lines/skip_blank_lines need UTF-8 input (the line pre-pass " +
+          "reads through the text source)")
+      collected(reader.csv(readLinesSkipping(spark, path, opts)),
+        multiLine = false)
+    } else {
+      // Quoted fields may embed newlines (the reference's Go csv reader
+      // always handles them), which forces Spark's multiLine parser — but
+      // multiLine makes every file ONE unsplittable task, the difference
+      // between 2-way and 32-way parallelism on a 2-file input, and
+      // between file-count and split-count parallelism at 100 TB. A record
+      // spanning physical lines must leave some line with an ODD number of
+      // quote chars (the "" in-field escape is two chars), so one pass over
+      // the raw lines that finds no odd line proves the input safe for the
+      // line-splittable parser. The same pass ([[openLines]]) also returns
+      // the header line and the inference sample, so a clean input opens
+      // in one Spark job and the reader gets its schema instead of running
+      // its own header job. Parity is only meaningful under the default
+      // "-quote/escape dialect and a byte-compatible charset; otherwise the
+      // input is read conservatively as multiLine, and a non-UTF-8 input
+      // pinned to the line parser keeps the reader's own sample collect.
+      val utf8 = encoding.forall(isUtf8)
+      val sniffable = opts.quote.forall(_ == "\"") &&
+        opts.escape.forall(_ == "\"") && utf8
+      val pinned = opts.multiLine.orElse(Option.when(!sniffable)(true))
+      val lineOptions = options + ("multiLine" -> "false")
+      val lineOpen =
+        if (pinned.contains(true) || !utf8) None
+        else openLines(spark, path, lineOptions, sampleSize,
+          parity = pinned.isEmpty)
+      lineOpen match {
+        case Some((schema, sample)) =>
+          val raw = spark.read.options(lineOptions).schema(schema).csv(path)
+          Opened(multiLine = false, applyNullIf(raw, opts),
+            sample.map(nullIfRow(_, opts)))
+        case None =>
+          val multi = pinned.getOrElse(true)
+          collected(reader.option("multiLine", multi.toString).csv(path), multi)
       }
-    val nulled = applyNullIf(raw, opts)
-    inferAndCast(nulled, overrides, sampleSize, opts.datetimeFormat)
+    }
+  }
+
+  private def isUtf8(e: String): Boolean =
+    e.equalsIgnoreCase("utf-8") || e.equalsIgnoreCase("utf8")
+
+  /** One partition's share of the open pass: whether a line holds an odd
+    * number of quote chars, the header candidate, the number of data lines,
+    * and the first `keep` of them. */
+  private final case class LinePart(odd: Boolean, first: Option[String],
+      rows: Long, kept: Array[String])
+
+  /** Scan one partition of the raw lines (`value`, `file_path`,
+    * `file_block_start`) the way Spark's line-mode CSV reader sees them:
+    * blank lines (all chars <= ' ', String.trim's rule) are dropped, and
+    * with a header the first non-blank line of every split that starts a
+    * file is the header, not data. The header candidate is the first line
+    * holding a char other than ' ', because Spark's header job filters
+    * with SQL `trim`, which strips only spaces. Works on the UTF-8 bytes:
+    * quote and blank chars are single bytes that never occur inside a
+    * multi-byte sequence. Stops at the first odd line when `parity` is
+    * set. */
+  private def scanLines(rows: Iterator[InternalRow], header: Boolean,
+      keep: Int, parity: Boolean): LinePart = {
+    var first: Option[String] = None
+    var n = 0L
+    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
+    var file: UTF8String = null
+    var start = -1L
+    var atHeader = false
+    while (rows.hasNext) {
+      val r = rows.next()
+      val line = r.getUTF8String(0)
+      if (r.getLong(2) != start || !r.getUTF8String(1).equals(file)) {
+        file = r.getUTF8String(1).copy()
+        start = r.getLong(2)
+        atHeader = header && start == 0
+      }
+      var quotes = 0
+      var blank = true
+      var spaces = true
+      var i = 0
+      val len = line.numBytes
+      while (i < len) {
+        val b = line.getByte(i)
+        if (b == '"') quotes += 1
+        if ((b & 0xff) > ' ') blank = false
+        if (b != ' ') spaces = false
+        i += 1
+      }
+      if (parity && (quotes & 1) == 1)
+        return LinePart(odd = true, first, n, kept.toArray)
+      if (first.isEmpty && !spaces) first = Some(line.toString)
+      if (!blank) {
+        if (atHeader) atHeader = false
+        else {
+          if (kept.size < keep) kept += line.toString
+          n += 1
+        }
+      }
+    }
+    LinePart(odd = false, first, n, kept.toArray)
+  }
+
+  /** Open a line-splittable CSV source in one Spark job over its raw
+    * lines. Every partition reports its quote parity and its count of data
+    * lines; partition 0 also returns its first `sampleSize` data lines and
+    * its header line. When partition 0 holds fewer than `sampleSize`, one
+    * more job over only the following partitions that hold the shortfall
+    * fetches it in partition order — together exactly the rows
+    * `limit(sampleSize)` takes from the reader, which scans the same file
+    * splits in the same order. On the driver the header becomes Spark's
+    * all-string schema (`_c<i>` for blanks, an index suffix for
+    * duplicates) and the sample lines go through Spark's own
+    * `UnivocityParser` built from the reader's options. None when
+    * `parity` is set and some line holds an odd number of quote chars. */
+  private def openLines(spark: SparkSession, path: String,
+      options: Map[String, String], sampleSize: Int,
+      parity: Boolean): Option[(StructType, Seq[Row])] = {
+    import org.apache.spark.sql.functions.col
+    val text = spark.read.text(path)
+    // a directory without data files: let the reader raise its own error
+    if (text.inputFiles.isEmpty) return Some((
+      spark.read.options(options).csv(path).schema, Nil))
+    val conf = spark.sessionState.conf
+    val csvOpts = new CSVOptions(options, conf.csvColumnPruning,
+      conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val header = csvOpts.headerFlag
+    val rdd = text.select(col("value"), col("_metadata.file_path"),
+      col("_metadata.file_block_start")).queryExecution.toRdd
+    val sc = spark.sparkContext
+    val parts = sc.runJob(rdd, (ctx: TaskContext, it: Iterator[InternalRow]) =>
+      scanLines(it, header, if (ctx.partitionId == 0) sampleSize else 0, parity))
+    if (parts.exists(_.odd)) return None
+    val schema = parts.iterator.flatMap(_.first).nextOption()
+      .flatMap(l => Option(new CsvParser(csvOpts.asParserSettings).parseLine(l)))
+      .fold(new StructType())(tokens => StructType(CSVUtils.makeSafeHeader(
+        tokens, conf.caseSensitiveAnalysis, csvOpts).map(StructField(_, StringType))))
+    // the shortfall, taken from each following partition in order
+    var left = sampleSize - parts.headOption.fold(0)(_.kept.length)
+    val takes = parts.indices.drop(1).flatMap { p =>
+      val take = math.min(left.toLong, parts(p).rows).toInt
+      left -= take
+      Option.when(take > 0)(p -> take)
+    }.toMap
+    val rest =
+      if (takes.isEmpty) Array.empty[Array[String]]
+      else sc.runJob(rdd, (ctx: TaskContext, it: Iterator[InternalRow]) =>
+        scanLines(it, header, takes(ctx.partitionId), parity = false).kept,
+        takes.keys.toSeq.sorted)
+    val lines = parts.headOption.fold(Array.empty[String])(_.kept) ++ rest.flatten
+    // what the reader's line parse does with a data line, parse mode
+    // (PERMISSIVE pads or truncates a ragged row) included
+    val parser = new UnivocityParser(schema, schema, csvOpts)
+    val safe = new FailureSafeParser[String](parser.parse(_), csvOpts.parseMode,
+      schema, csvOpts.columnNameOfCorruptRecord)
+    val sample = lines.toVector.flatMap(l => safe.parse(l).map(r =>
+      Row.fromSeq(schema.indices.map(i =>
+        if (r.isNullAt(i)) null else r.getUTF8String(i).toString))))
+    Some((schema, sample))
   }
 
   /** Drop the first `skipLines` physical lines of each file without a
@@ -165,6 +316,16 @@ object FileSources {
       when(anyMatch, lit(null)).otherwise(base).as(c)
     }.toSeq: _*)
   }
+
+  /** null_if / empty_as_null on one sampled row, as [[applyNullIf]] does on
+    * the frame. */
+  private def nullIfRow(r: Row, opts: CsvOpts): Row =
+    if (opts.nullIf.isEmpty && !opts.emptyAsNull) r
+    else Row.fromSeq(r.toSeq.map {
+      case v: String if opts.nullIf.contains(v) ||
+          (opts.emptyAsNull && v.isEmpty) => null
+      case v => v
+    })
 
   def jsonl(spark: SparkSession, path: String,
       overrides: Map[String, DataType] = Map.empty,

@@ -1,7 +1,13 @@
 package graft.write
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A file-backed target table (parquet directory).
   *
@@ -12,16 +18,72 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * implement the merge strategies as set algebra + full rewrite — at cluster
   * scale the natural upgrade is Delta/Iceberg `MERGE INTO` (file-pruned),
   * which shares the exact logical semantics implemented in [[Modes]].
+  *
+  * The table's state is read from its data files' footers on the driver,
+  * without a Spark job: whether it holds any data file ([[exists]]), its
+  * row count ([[rowCount]], the reference's row counter after a load), and
+  * the Spark schema Spark's own writer stores in every footer, which
+  * [[read]] hands the reader so it skips its schema-inference job.
   */
 final case class ParquetTarget(spark: SparkSession, path: String) {
 
-  def exists: Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  /** The data files under the target, as Spark's file index lists them
+    * (hidden `.`/`_` names skipped, partition directories descended), and
+    * whether any lies in a subdirectory (a Hive-partitioned layout). */
+  private def dataFiles: (Seq[FileStatus], Boolean) = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(s: FileStatus): Boolean = {
+      val n = s.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+    }
+    def walk(dir: Path, nested: Boolean): Seq[(FileStatus, Boolean)] =
+      fs.listStatus(dir).toSeq.filterNot(hidden).sortBy(_.getPath.getName)
+        .flatMap(s => if (s.isDirectory) walk(s.getPath, nested = true)
+          else Seq(s -> nested))
+    if (!fs.exists(root)) (Nil, false)
+    else {
+      val top = fs.getFileStatus(root)
+      val files = (if (top.isDirectory) walk(root, nested = false)
+        else Seq(top -> false)).filter(_._1.getLen > 0)
+      (files.map(_._1), files.exists(_._2))
+    }
   }
 
-  def read: DataFrame = spark.read.parquet(path)
+  private def footer(f: FileStatus): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    try r.getFooter finally r.close()
+  }
+
+  /** Holds at least one data file. A directory a failed overwrite left
+    * empty does not count, so the next run creates the table afresh. */
+  def exists: Boolean = dataFiles._1.nonEmpty
+
+  /** Rows in the target: the sum of the row counts in its data files'
+    * footers, read on the driver — no Spark job. */
+  def rowCount: Long = dataFiles._1.iterator
+    .map(f => footer(f).getBlocks.asScala.iterator.map(_.getRowCount).sum).sum
+
+  /** The target as a DataFrame. A flat directory whose first data file's
+    * footer carries Spark's row schema is read with that schema, which is
+    * the schema Spark would infer from the same footer; a Hive-partitioned
+    * directory, a footer without the key or a session that merges parquet
+    * schemas takes Spark's own inference. */
+  def read: DataFrame = footerSchema.fold(spark.read.parquet(path))(
+    spark.read.schema(_).parquet(path))
+
+  private def footerSchema: Option[StructType] = {
+    val (files, nested) = dataFiles
+    if (nested || files.isEmpty || spark.conf.get(
+        "spark.sql.parquet.mergeSchema", "false").toBoolean) None
+    else Option(footer(files.head).getFileMetaData.getKeyValueMetaData
+      .get(ParquetTarget.SparkRowMetadata))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+  }
 
   def overwrite(df: DataFrame): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
@@ -53,4 +115,9 @@ final case class ParquetTarget(spark: SparkSession, path: String) {
     if (!fs.rename(s, p))
       throw new java.io.IOException(s"failed to rename $s to $p — data left in staging")
   }
+}
+
+object ParquetTarget {
+  /** The footer key Spark's parquet writer stores its row schema under. */
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
 }
