@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** DSIR-style data selection (Xie et al. 2023, "Data Selection for
@@ -25,10 +25,11 @@ import org.apache.spark.sql.functions._
   *     inject the computed tables when bit-exact replay on another
   *     engine matters.
   *
-  * Scale shape: two fit aggregates (groupBy bucket, map-side combinable,
-  * output bounded by `nBuckets` rows — THAT is what gets collected, never
-  * the corpus), a driver-computed log-ratio table broadcast as one row,
-  * and a ZERO-SHUFFLE scoring pass: each document folds its own gram
+  * Scale shape: one fit aggregate over both corpora's tagged bucket rows
+  * ([[TaggedCounts]]: groupBy (corpus, bucket), map-side combinable,
+  * output bounded by 2·`nBuckets` rows — THAT is what gets collected,
+  * never the corpus), a driver-computed log-ratio table broadcast as one
+  * row, and a ZERO-SHUFFLE scoring pass: each document folds its own gram
   * array against the broadcast table inside one projection.
   */
 object Dsir {
@@ -92,18 +93,21 @@ object Dsir {
     // the cross-engine contract (guide §4)
     graft.functions.expressions.GramBuckets.gram_bucket(gram, nBuckets)
 
-  /** Per-bucket gram-OCCURRENCE counts over `df`'s text column. The
-    * aggregate output is bounded by `nBuckets` (never by the corpus);
-    * only that bounded table is collected. Index = bucket id.
-    */
-  def bucketCounts(df: DataFrame, textCol: String,
+  /** Count rows of a bucket fit under `tag`: one per gram OCCURRENCE in
+    * `df`'s text column, `a` = its bucket id. The aggregate over them is
+    * bounded by `nBuckets` per tag (never by the corpus). */
+  private[functions] def bucketRows(df: DataFrame, textCol: String,
+      nBuckets: Int, tag: String): DataFrame =
+    TaggedCounts.rows(df.select(explode(grams(col(textCol))).as("__g")),
+      tag, gramBucket(col("__g"), nBuckets), lit(null))
+
+  /** The per-bucket counts under `tag` in a collected count state, as an
+    * array indexed by bucket id. */
+  private[functions] def bucketArray(state: Seq[Row], tag: String,
       nBuckets: Int): Array[Long] = {
-    val rows = df.select(explode(grams(col(textCol))).as("__g"))
-      .select(gramBucket(col("__g"), nBuckets).as("__b"))
-      .groupBy("__b").agg(count(lit(1)).as("__c"))
-      .collect()
     val arr = new Array[Long](nBuckets)
-    rows.foreach(r => arr(r.getInt(0)) = r.getLong(1))
+    TaggedCounts.tagged(state, tag)
+      .foreach(r => arr(r.getString(1).toInt) = r.getLong(3))
     arr
   }
 
@@ -175,9 +179,13 @@ object Dsir {
       textCol: String, nBuckets: Int = 8192): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
-    val lrm = logRatioMicro(
-      bucketCounts(target, textCol, nBuckets),
-      bucketCounts(raw, textCol, nBuckets))
+    // both distributions from one aggregate and one collect
+    val state = TaggedCounts.collect(TaggedCounts.count(Seq(
+      bucketRows(target, textCol, nBuckets, "target"),
+      bucketRows(raw, textCol, nBuckets, "raw"))),
+      None, Seq("target", "raw"))
+    val lrm = logRatioMicro(bucketArray(state, "target", nBuckets),
+      bucketArray(state, "raw", nBuckets))
     val lrRow = broadcast(Seq(Tuple1(lrm.toSeq)).toDF("__lrm"))
     // grams materialize once per row (two projections; CollapseProject
     // keeps them apart rather than duplicate a non-cheap expression)

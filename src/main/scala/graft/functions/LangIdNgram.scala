@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.expressions.LangIdOop
@@ -44,23 +43,33 @@ object LangIdNgram {
   /** One language profile row: gram + its 1-based frequency rank. */
   final case class ProfileEntry(lang: String, gram: String, rank: Int)
 
+  private[functions] val ProfileTag = "lid"
+
+  /** Count rows of the profile fit (tag [[ProfileTag]]): one per
+    * character n-gram occurrence, `a` = language, `b` = gram. Unlabeled
+    * (NULL-language) rows build no profile. */
+  private[functions] def profileRows(df: DataFrame, langCol: String,
+      textCol: String, n: Int): DataFrame =
+    TaggedCounts.rows(df.filter(col(langCol).isNotNull)
+        .select(col(langCol).as("__l"),
+          explode(charGrams(col(textCol), n)).as("__g")),
+      ProfileTag, col("__l"), col("__g"))
+
+  /** The profiles in a [[TaggedCounts.collect]] result ranked on
+    * [[ProfileTag]]. */
+  private[functions] def profiles(state: Seq[Row]): Seq[ProfileEntry] =
+    TaggedCounts.tagged(state, ProfileTag)
+      .map(r => ProfileEntry(r.getString(1), r.getString(2), r.getInt(4)))
+
   /** Fit rank-order profiles from a labeled corpus: per language, the
     * top-`k` character n-grams by count, ranked (count desc, gram asc).
-    * Only the bounded k·|langs| profile is collected. */
+    * Rows with a NULL language are skipped. Only the bounded k·|langs|
+    * profile is collected. */
   def fitProfiles(df: DataFrame, langCol: String, textCol: String,
-      n: Int = 3, k: Int = 40): Seq[ProfileEntry] = {
-    val counts = df
-      .select(col(langCol).as("__lang"),
-        explode(charGrams(col(textCol), n)).as("__g"))
-      .groupBy("__lang", "__g").agg(count(lit(1)).as("__c"))
-    counts
-      .withColumn("__r", row_number().over(
-        Window.partitionBy("__lang").orderBy(col("__c").desc, col("__g"))))
-      .filter(col("__r") <= k)
-      .collect()
-      .map(r => ProfileEntry(r.getString(0), r.getString(1), r.getInt(3)))
-      .toSeq
-  }
+      n: Int = 3, k: Int = 40): Seq[ProfileEntry] =
+    profiles(TaggedCounts.collect(
+      TaggedCounts.count(Seq(profileRows(df, langCol, textCol, n))),
+      Some(ProfileTag -> k), Nil))
 
   /** Classify each document against the fitted profiles, one row out
     * per row in: oop(doc, lang) = Σ over the doc's top-k grams of

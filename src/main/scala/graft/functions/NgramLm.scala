@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** N-gram language-model perplexity scoring — the CCNet-style quality
@@ -24,8 +24,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape — deliberately DIFFERENT from [[QualityModel]]: an LM
   * vocabulary is corpus-sized, so the count tables are NOT collected
-  * or broadcast. The fit is two map-side-combinable groupBy counts
-  * that STAY distributed; scoring explodes the corpus into token
+  * or broadcast. The fit is ONE map-side-combinable groupBy over tagged
+  * unigram, bigram and token-total rows ([[TaggedCounts]]), materialized
+  * once; `uni` and `bi` STAY distributed as tag-filtered views of that
+  * table, and only the one-row token total reaches the driver. The same
+  * rows go through [[CcNet.fit]]'s count pass with the language-ID and
+  * quality-model rows. Scoring explodes the corpus into token
   * transitions and attaches c(w1 w2), c(w1), c(w2) via three keyed
   * equi-joins (AQE picks broadcast automatically when a fitted table
   * is actually small), then one per-doc aggregation. Everything is
@@ -43,37 +47,66 @@ object NgramLm {
   // CCNet-recipe tokenization: `\s+` split, empty fragments dropped)
   private def tokens(text: Column): Column = Dsir.tokens(text)
 
-  /** Fit the LM on a target corpus (the curated side — e.g. the same
-    * labeled sample the [[QualityModel]] fit uses). The two aggregates
-    * are map-side combinable; their outputs remain DataFrames. */
-  def fit(target: DataFrame, textCol: String): Model = {
-    val toks = target.select(tokens(col(textCol)).as("__tk"))
-    // materialize both tables: uni feeds the totalTokens action here
-    // plus TWO joins per score() call and bi one more — without this
-    // each consumer re-tokenizes and re-aggregates the target corpus
-    // (exchange reuse only kicks in when physical subplans match
-    // exactly). For cross-job reuse at scale, persist them bucketed
-    // by gram instead (see [[Model]]).
+  private[functions] val UniTag = "uni"
+  private[functions] val BiTag = "bi"
+  private[functions] val TokTag = "tok"
+
+  /** Count rows of the LM fit: one [[UniTag]] row per token (`a` = w),
+    * one [[BiTag]] row per token transition (`a` = w1, `b` = w2) and one
+    * [[TokTag]] row per document that has tokens, weighted by its token
+    * count, so the summed [[TokTag]] row is the total token count. */
+  private[functions] def countRows(target: DataFrame,
+      textCol: String): Seq[DataFrame] = {
+    // Opaque: the explode's inferred guard and the token-count filter
+    // read the attribute instead of re-running the tokenizer
+    val toks = target.select(graft.functions.expressions.Opaque.opaque(
+      tokens(col(textCol))).as("__tk"))
     val uni = toks.select(explode(col("__tk")).as("__w"))
-      .groupBy("__w").agg(count(lit(1)).as("__c1"))
-      .localCheckpoint()
-    // compiled transition kernel ([[expressions.TextGrams.bigram_pairs]])
-    // since r19 — the old interpreted `transform(sequence(...),
-    // element_at...)` built each pair through a per-transition lambda;
-    // the kernel emits the identical (w1, w2) structs in one pass, and
-    // its empty-array result for < 2 tokens subsumes the old
-    // `filter(size >= 2)` row for row. Opaque keeps the Generate's
-    // inferred size-guard on the attribute (guide §4.4).
+    // compiled transition kernel ([[expressions.TextGrams.bigram_pairs]]):
+    // its empty-array result for < 2 tokens subsumes a size filter row for
+    // row. Opaque keeps the Generate's inferred size-guard on the
+    // attribute (guide §4.4), so the kernel runs once per row.
     val bi = toks
       .select(graft.functions.expressions.Opaque.opaque(
         graft.functions.expressions.TextGrams.bigram_pairs(col("__tk")))
         .as("__bp"))
       .select(explode(col("__bp")).as("__b"))
-      .select(col("__b.__w1").as("__w1"), col("__b.__w2").as("__w2"))
-      .groupBy("__w1", "__w2").agg(count(lit(1)).as("__c12"))
-      .localCheckpoint()
-    val n = uni.agg(sum("__c1")).head.getLong(0)
-    Model(uni, bi, n)
+    val nTok = toks.select(size(col("__tk")).as("__n"))
+      .filter(col("__n") > 0)
+    Seq(
+      TaggedCounts.rows(uni, UniTag, col("__w"), lit(null)),
+      TaggedCounts.rows(bi, BiTag, col("__b.__w1"), col("__b.__w2")),
+      TaggedCounts.rows(nTok, TokTag, lit(null), lit(null), col("__n")))
+  }
+
+  /** The model over a (checkpointed) count table that holds [[countRows]]'s
+    * rows, with the [[TokTag]] rows of its bounded state. The count tables
+    * stay distributed, as tag-filtered views of `counts`. A target with no
+    * tokens has no [[TokTag]] row: totalTokens is 0 and every transition
+    * scores at the OOV floor. */
+  private[functions] def model(counts: DataFrame, state: Seq[Row]): Model =
+    Model(
+      counts.filter(col(TaggedCounts.Tag) === UniTag)
+        .select(col(TaggedCounts.A).as("__w"), col(TaggedCounts.N).as("__c1")),
+      counts.filter(col(TaggedCounts.Tag) === BiTag)
+        .select(col(TaggedCounts.A).as("__w1"), col(TaggedCounts.B).as("__w2"),
+          col(TaggedCounts.N).as("__c12")),
+      TaggedCounts.tagged(state, TokTag).map(_.getLong(3)).sum)
+
+  /** The fit's count pass over `target`, before it is materialized. */
+  private[graft] def counts(target: DataFrame, textCol: String): DataFrame =
+    TaggedCounts.count(countRows(target, textCol))
+
+  /** Fit the LM on a target corpus (the curated side — e.g. the same
+    * labeled sample the [[QualityModel]] fit uses). One aggregate counts
+    * unigrams, bigrams and tokens together; it is materialized once
+    * (`localCheckpoint`), because every [[score]] call joins it three
+    * times, and the total is read from it by one more job. For cross-job
+    * reuse at scale, persist the tables bucketed by gram instead (see
+    * [[Model]]). */
+  def fit(target: DataFrame, textCol: String): Model = {
+    val ck = counts(target, textCol).localCheckpoint()
+    model(ck, ck.filter(col(TaggedCounts.Tag) === TokTag).collect().toSeq)
   }
 
   /** Per-token integer-micro log-prob under Stupid Backoff. Split out
@@ -98,7 +131,21 @@ object NgramLm {
     * thresholds on this column ([[pplBucket]]).
     */
   def score(df: DataFrame, idCol: String, textCol: String,
-      model: Model): DataFrame = {
+      model: Model): DataFrame =
+    df.select(col(idCol))
+      .join(transitionScores(df, idCol, textCol, model), Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("n_scored"), lit(0L)).as("n_scored"),
+        coalesce(col("logprob_micro"), lit(0L)).as("logprob_micro"),
+        avgLogProbMicro(col("n_scored"), col("logprob_micro"))
+          .as("avg_logprob_micro"))
+
+  /** [[score]]'s (idCol, n_scored, logprob_micro) for the documents that
+    * have at least one token transition, one row per distinct id. A
+    * caller that already holds one row per document joins this directly
+    * instead of [[score]]'s join back onto `df`. */
+  private[graft] def transitionScores(df: DataFrame, idCol: String,
+      textCol: String, model: Model): DataFrame = {
     // compiled transition kernel — identical pair stream to the old
     // `when(size >= 2, transform(...)).otherwise(empty)` (the kernel's
     // empty-array result covers both the < 2-token and NULL-token-array
@@ -112,7 +159,7 @@ object NgramLm {
       .select(col("__id"), explode(col("__bp")).as("__b"))
       .select(col("__id"), col("__b.__w1").as("__w1"),
         col("__b.__w2").as("__w2"))
-    val scored = trans
+    trans
       .join(model.bi, Seq("__w1", "__w2"), "left")
       .join(model.uni.select(col("__w").as("__w1"), col("__c1")),
         Seq("__w1"), "left")
@@ -123,16 +170,15 @@ object NgramLm {
           model.totalTokens).as("__lp"))
       .groupBy("__id")
       .agg(count(lit(1)).as("n_scored"), sum("__lp").as("logprob_micro"))
-    df.select(col(idCol))
-      .join(scored.withColumnRenamed("__id", idCol), Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_scored"), lit(0L)).as("n_scored"),
-        coalesce(col("logprob_micro"), lit(0L)).as("logprob_micro"),
-        when(col("n_scored") > 0,
-          floor(col("logprob_micro").cast("double") /
-            col("n_scored").cast("double")).cast("long"))
-          .as("avg_logprob_micro"))
+      .withColumnRenamed("__id", idCol)
   }
+
+  /** avg_logprob_micro from [[transitionScores]]' columns: floor(sum/n),
+    * NULL without transitions (n 0 or NULL). */
+  private[graft] def avgLogProbMicro(nScored: Column,
+      logProbMicro: Column): Column =
+    when(nScored > 0,
+      floor(logProbMicro.cast("double") / nScored.cast("double")).cast("long"))
 
   /** CCNet's head/middle/tail bucket from the per-token average
     * log-prob (micro-units; HIGHER = more target-like = lower

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Hashed bag-of-grams linear quality classifier — the fastText-shaped
@@ -20,11 +20,14 @@ import org.apache.spark.sql.functions._
   * scores (sums of 64-bit micro-units, so partial-aggregation order and
   * engine cannot change a keep/drop decision).
   *
-  * Scale shape: the FIT runs two bounded aggregates over the labeled
-  * sample (output ≤ nBuckets rows each — the sample is small by
-  * contract, the 100 TB corpus never enters the fit); SCORING is a
-  * zero-shuffle fold of each document's own gram array against the
-  * broadcast weight table, linear in corpus bytes.
+  * Scale shape: the FIT is ONE bounded aggregate over both classes'
+  * tagged bucket rows ([[TaggedCounts]]: groupBy (class, bucket), output
+  * ≤ 2·nBuckets rows, one collect — the sample is small by contract, the
+  * 100 TB corpus never enters the fit; in [[CcNet.fit]] the same rows
+  * share the language-ID and LM count pass). SCORING is a zero-shuffle
+  * fold of each document's own gram array against the broadcast weight
+  * table, linear in corpus bytes, in one projection that other per-row
+  * columns can ride ([[withScore]]).
   */
 object QualityModel {
 
@@ -34,9 +37,26 @@ object QualityModel {
     * classes get the smoothing-only prior (≈ ln(negTotal/posTotal)). */
   def fitLogOddsMicro(pos: DataFrame, neg: DataFrame, textCol: String,
       nBuckets: Int = 8192): Array[Long] =
-    Dsir.logRatioMicro(
-      Dsir.bucketCounts(pos, textCol, nBuckets),
-      Dsir.bucketCounts(neg, textCol, nBuckets))
+    weights(TaggedCounts.collect(
+      TaggedCounts.count(countRows(pos, neg, textCol, nBuckets)),
+      None, Tags), nBuckets)
+
+  private[functions] val PosTag = "pos"
+  private[functions] val NegTag = "neg"
+  private[functions] val Tags = Seq(PosTag, NegTag)
+
+  /** Count rows of the fit: the bucket of every gram occurrence, tagged
+    * by class. */
+  private[functions] def countRows(pos: DataFrame, neg: DataFrame,
+      textCol: String, nBuckets: Int): Seq[DataFrame] =
+    Seq(Dsir.bucketRows(pos, textCol, nBuckets, PosTag),
+      Dsir.bucketRows(neg, textCol, nBuckets, NegTag))
+
+  /** The weights from a collected count state holding the [[Tags]] rows. */
+  private[functions] def weights(state: Seq[Row],
+      nBuckets: Int): Array[Long] =
+    Dsir.logRatioMicro(Dsir.bucketArray(state, PosTag, nBuckets),
+      Dsir.bucketArray(state, NegTag, nBuckets))
 
   /** Score every document: score_micro = Σ over the doc's grams of
     * their bucket weights; keep ⟺ score_micro >= thresholdMicroPerGram
@@ -57,15 +77,26 @@ object QualityModel {
     */
   def score(df: DataFrame, idCol: String, textCol: String,
       weightsMicro: Array[Long], nBuckets: Int,
+      thresholdMicroPerGram: Long = 0L): DataFrame =
+    withScore(df.select(col(idCol), col(textCol)), textCol, weightsMicro,
+        nBuckets, thresholdMicroPerGram)
+      .select(idCol, "n_grams", "score_micro", "keep")
+
+  /** [[score]]'s (n_grams, score_micro, keep) appended to every column of
+    * `df`, in the same projection pass, so other per-row columns computed
+    * over `df` share it instead of a join by id. */
+  private[graft] def withScore(df: DataFrame, textCol: String,
+      weightsMicro: Array[Long], nBuckets: Int,
       thresholdMicroPerGram: Long = 0L): DataFrame = {
     require(weightsMicro.length == nBuckets,
       s"weight table size ${weightsMicro.length} != nBuckets $nBuckets")
     val spark = df.sparkSession
     import spark.implicits._
     val wRow = broadcast(Seq(Tuple1(weightsMicro.toSeq)).toDF("__w"))
+    val cols = df.columns.toSeq.map(c => col(s"`$c`"))
     df.crossJoin(wRow)
-      .select(col(idCol), Dsir.grams(col(textCol)).as("__gs"), col("__w"))
-      .select(col(idCol),
+      .select(cols :+ Dsir.grams(col(textCol)).as("__gs") :+ col("__w"): _*)
+      .select(cols ++ Seq(
         coalesce(size(col("__gs")).cast("long"), lit(0L)).as("n_grams"),
         // compiled md5-bucket weight fold (same kernel as
         // [[Dsir.importanceWeights]]'s scoring pass) — identical buckets,
@@ -73,7 +104,7 @@ object QualityModel {
         // aggregate(transform(...)) chain (guide §4)
         coalesce(graft.functions.expressions.GramBuckets
           .bucket_weight_sum(col("__gs"), col("__w"), nBuckets),
-          lit(0L)).as("score_micro"))
+          lit(0L)).as("score_micro")): _*)
       .withColumn("keep",
         col("score_micro") >= col("n_grams") * lit(thresholdMicroPerGram))
   }

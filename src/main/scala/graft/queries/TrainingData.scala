@@ -1889,31 +1889,31 @@ object TrainingData {
     // composition hash-mismatches even if each stage row stays green.
     Q("td_pipeline_ccnet",
       (s, dir) => {
-        import graft.functions.{LangIdNgram, NgramLm, QualityModel}
+        import graft.functions.{CcNet, NgramLm, QualityModel}
+        import graft.functions.expressions.LangIdOop
         val docs = Tables(s, dir, "documents")
-        val profiles = LangIdNgram.fitProfiles(docs, "lang", "text",
-          n = 3, k = 40)
-        val lid = LangIdNgram.classify(docs, "doc_id", "text", profiles,
-            n = 3, k = 40)
-          .select("doc_id", "pred_lang")
-        val lm = NgramLm.fit(
-          docs.filter(col("lang") === "en").select("text"), "text")
-        val ppl = NgramLm.score(docs.select("doc_id", "text"),
-            "doc_id", "text", lm)
+        // the three fits share one count pass and one collect
+        val fit = CcNet.fit(docs, "lang", "text", keepLang = "en",
+          n = 3, k = 40, nBuckets = 1024)
+        // language ID and the quality keep are per-row maps over the same
+        // documents: one projection pass, one row per document, so only
+        // the LM's per-document transition scores join onto it
+        val lidQm = QualityModel.withScore(
+            docs.select(col("doc_id"), col("text"),
+              LangIdOop.lang_id_oop(col("text"), fit.profiles, 3, 40)
+                .getField("pred_lang").as("pred_lang")),
+            "text", fit.weightsMicro, nBuckets = 1024)
+          .select("doc_id", "pred_lang", "keep")
+        val lm = NgramLm.transitionScores(docs.select("doc_id", "text"),
+          "doc_id", "text", fit.lm)
+        lidQm.join(lm, Seq("doc_id"), "left")
           .withColumn("ppl_bucket", NgramLm.pplBucket(
-            col("avg_logprob_micro"), -3400000L, -3600000L))
-          .select("doc_id", "ppl_bucket")
-        val w = QualityModel.fitLogOddsMicro(
-          docs.filter(col("lang") === "en").select("text"),
-          docs.filter(col("lang") =!= "en").select("text"),
-          "text", nBuckets = 1024)
-        val qm = QualityModel.score(docs.select("doc_id", "text"),
-            "doc_id", "text", w, nBuckets = 1024).select("doc_id", "keep")
-        lid.join(ppl, Seq("doc_id"), "left")
-          .join(qm, Seq("doc_id"), "left")
-          .withColumn("keep_final",
-            coalesce(col("pred_lang") === "en", lit(false)) &&
-              col("ppl_bucket") =!= "tail" && col("keep"))
+            NgramLm.avgLogProbMicro(col("n_scored"), col("logprob_micro")),
+            -3400000L, -3600000L))
+          .select(col("doc_id"), col("pred_lang"), col("ppl_bucket"),
+            col("keep"),
+            (coalesce(col("pred_lang") === "en", lit(false)) &&
+              col("ppl_bucket") =!= "tail" && col("keep")).as("keep_final"))
           .orderBy("doc_id")
       },
       Some("""WITH l_g0 AS (SELECT doc_id, lang, unnest(

@@ -1,0 +1,88 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.{Dsir, NgramLm, QualityModel}
+import graft.sources.Tables
+
+/** Spark job counts of the eager model fits and of the CCNet pipeline,
+  * on sf0.001 `documents` with AQE on (each shuffle stage then runs as a
+  * job of its own). A fit that gains a job, or a pipeline that goes back
+  * to one job chain per model, fails here. A change that moves a count on
+  * purpose updates the pin and says why.
+  */
+class FitJobsSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private val SfDir = "/root/testdata/sf0.001"
+
+  // job counts depend on these; other suites in the same JVM change them
+  private val Confs = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.autoBroadcastJoinThreshold" -> "10485760")
+
+  private def jobs[T](body: => T): (T, Int) = {
+    val prev = Confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    Confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try SparkJobs.during(spark.sparkContext)(body)
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  // read outside the counted block: the parquet schema read is a job
+  private lazy val docs = Tables(spark, SfDir, "documents")
+
+  test("td_pipeline_ccnet: one fused fit pass, build plus collect") {
+    val (df, build) = jobs(SparkEntry.queries("td_pipeline_ccnet")(spark, SfDir))
+    val (rows, run) = jobs(df.collect())
+    assert(rows.nonEmpty)
+    // build: the parquet schema read; the fused count pass (the shuffle
+    // stages of its two aggregates and the checkpoint); the bounded
+    // collect (the profile window's shuffle stage and the result). It was
+    // 14 with one job chain per model.
+    assert(build == 6, "schema read + count pass 3 + collect 2")
+    // run: the LM's per-document scores joined to one projection of
+    // language ID and the quality keep. It was 12 with a join per model.
+    assert(run == 9)
+  }
+
+  test("NgramLm.fit: one checkpointed count pass and the token total") {
+    docs
+    val (lm, n) = jobs(
+      NgramLm.fit(docs.filter(col("lang") === "en").select("text"), "text"))
+    assert(lm.totalTokens > 0)
+    // was 6: two checkpoints and a separate sum
+    assert(n == 3, "count pass 2 (shuffle stage + checkpoint) + token total 1")
+  }
+
+  test("QualityModel.fitLogOddsMicro: one aggregate over both labels") {
+    docs
+    val (w, n) = jobs(QualityModel.fitLogOddsMicro(
+      docs.filter(col("lang") === "en").select("text"),
+      docs.filter(col("lang") =!= "en").select("text"), "text",
+      nBuckets = 1024))
+    assert(w.length == 1024)
+    // was 4: one aggregate and one collect per label
+    assert(n == 2, "shuffle stage + collect")
+  }
+
+  test("Dsir.importanceWeights: one aggregate over target and raw") {
+    docs
+    val (_, n) = jobs(Dsir.importanceWeights(docs.select("doc_id", "text"),
+      docs.filter(col("lang") === "en").select("doc_id", "text"),
+      "doc_id", "text", nBuckets = 1024))
+    // was 4: one aggregate and one collect per corpus
+    assert(n == 2, "shuffle stage + collect")
+  }
+}

@@ -785,4 +785,153 @@ class KernelEquivalenceSpec extends AnyFunSuite {
       exists(col("v"), x => x =!= lit(0.0f)),
       LshVec.any_nonzero(col("v")))
   }
+
+  // ---- the eager model fits before the tagged count pass, kept verbatim
+  // as references (the private tokenizer spelled as the kernel it calls)
+
+  private def r20FitProfiles(df: DataFrame, langCol: String, textCol: String,
+      n: Int = 3, k: Int = 40): Seq[graft.functions.LangIdNgram.ProfileEntry] = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.LangIdNgram.{ProfileEntry, charGrams}
+    val counts = df
+      .select(col(langCol).as("__lang"),
+        explode(charGrams(col(textCol), n)).as("__g"))
+      .groupBy("__lang", "__g").agg(count(lit(1)).as("__c"))
+    counts
+      .withColumn("__r", row_number().over(
+        Window.partitionBy("__lang").orderBy(col("__c").desc, col("__g"))))
+      .filter(col("__r") <= k)
+      .collect()
+      .map(r => ProfileEntry(r.getString(0), r.getString(1), r.getInt(3)))
+      .toSeq
+  }
+
+  private def r20LmFit(target: DataFrame,
+      textCol: String): graft.functions.NgramLm.Model = {
+    val toks = target.select(TextGrams.ws_tokens(col(textCol)).as("__tk"))
+    val uni = toks.select(explode(col("__tk")).as("__w"))
+      .groupBy("__w").agg(count(lit(1)).as("__c1"))
+      .localCheckpoint()
+    val bi = toks
+      .select(graft.functions.expressions.Opaque.opaque(
+        graft.functions.expressions.TextGrams.bigram_pairs(col("__tk")))
+        .as("__bp"))
+      .select(explode(col("__bp")).as("__b"))
+      .select(col("__b.__w1").as("__w1"), col("__b.__w2").as("__w2"))
+      .groupBy("__w1", "__w2").agg(count(lit(1)).as("__c12"))
+      .localCheckpoint()
+    val n = uni.agg(sum("__c1")).head.getLong(0)
+    graft.functions.NgramLm.Model(uni, bi, n)
+  }
+
+  private def r20BucketCounts(df: DataFrame, textCol: String,
+      nBuckets: Int): Array[Long] = {
+    import graft.functions.Dsir.{gramBucket, grams}
+    val rows = df.select(explode(grams(col(textCol))).as("__g"))
+      .select(gramBucket(col("__g"), nBuckets).as("__b"))
+      .groupBy("__b").agg(count(lit(1)).as("__c"))
+      .collect()
+    val arr = new Array[Long](nBuckets)
+    rows.foreach(r => arr(r.getInt(0)) = r.getLong(1))
+    arr
+  }
+
+  private def r20FitLogOddsMicro(pos: DataFrame, neg: DataFrame,
+      textCol: String, nBuckets: Int = 8192): Array[Long] =
+    graft.functions.Dsir.logRatioMicro(
+      r20BucketCounts(pos, textCol, nBuckets),
+      r20BucketCounts(neg, textCol, nBuckets))
+
+  private def r20ImportanceWeights(raw: DataFrame, target: DataFrame,
+      idCol: String, textCol: String, nBuckets: Int = 8192): DataFrame = {
+    import graft.functions.Dsir.{grams, logRatioMicro}
+    val spark = raw.sparkSession
+    import spark.implicits._
+    val lrm = logRatioMicro(
+      r20BucketCounts(target, textCol, nBuckets),
+      r20BucketCounts(raw, textCol, nBuckets))
+    val lrRow = broadcast(Seq(Tuple1(lrm.toSeq)).toDF("__lrm"))
+    raw.crossJoin(lrRow)
+      .select(col(idCol), grams(col(textCol)).as("__gs"), col("__lrm"))
+      .select(col(idCol),
+        size(col("__gs")).cast("long").as("n_grams"),
+        GramBuckets.bucket_weight_sum(col("__gs"), col("__lrm"), nBuckets)
+          .as("weight_micro"))
+  }
+
+  /** sf0.001 documents, an adversarial corpus (NULL text, NULL language,
+    * CJK, empty and whitespace-only documents) and that corpus without
+    * its en rows. */
+  private def fitCorpora: Seq[(String, DataFrame)] = {
+    import spark.implicits._
+    val langs = Seq(Some("en"), Some("zh"), None, Some("fr"))
+    val adversarial = (texts.collect().map(r => Option(r.getString(0))) ++
+        Seq(Some(" \t\n "), Some("   "), Some("中文数据 表 查询 中文数据"),
+          Some("the data table the data"), None))
+      .zipWithIndex.map { case (t, i) => (i.toLong, langs(i % 4), t) }
+      .toSeq.toDF("doc_id", "lang", "text")
+    Seq(
+      "documents" -> graft.sources.Tables(spark, "/root/testdata/sf0.001",
+        "documents").select("doc_id", "lang", "text"),
+      "adversarial" -> adversarial,
+      "no-en" -> adversarial.filter(coalesce(col("lang") =!= "en", lit(true))))
+  }
+
+  private def profileSet(ps: Seq[graft.functions.LangIdNgram.ProfileEntry]) =
+    ps.map(p => (p.lang, p.gram, p.rank)).sortBy(p => (String.valueOf(p._1), p._2))
+
+  private def lmTables(m: graft.functions.NgramLm.Model) = (
+    m.uni.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted,
+    m.bi.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      .toSeq.sorted,
+    m.totalTokens)
+
+  test("tagged count fits == r20 per-model fits (profiles, LM tables, weights)") {
+    import graft.functions.{CcNet, Dsir, LangIdNgram, NgramLm, QualityModel}
+    for ((name, df) <- fitCorpora) {
+      val en = df.filter(col("lang") === "en").select("text")
+      val rest = df.filter(col("lang") =!= "en").select("text")
+      val hasNullLang = df.filter(col("lang").isNull).count() > 0
+      val hasEn = en.count() > 0
+      // the one allowed profile difference: the old fit built a profile
+      // for the NULL label, which classify then rejected
+      def oldProfiles(n: Int, k: Int) = {
+        val old = profileSet(r20FitProfiles(df, "lang", "text", n, k))
+        assert(old.exists(_._1 == null) == hasNullLang, s"$name n=$n k=$k")
+        old.filter(_._1 != null)
+      }
+      // the one allowed LM difference: the old fit threw on a target
+      // without tokens; the new one has totalTokens 0 and empty tables
+      val oldLm =
+        if (hasEn) lmTables(r20LmFit(en, "text"))
+        else {
+          intercept[Exception](r20LmFit(en, "text"))
+          (Nil, Nil, 0L)
+        }
+      for ((n, k) <- Seq(3 -> 40, 1 -> 5))
+        assert(profileSet(LangIdNgram.fitProfiles(df, "lang", "text", n, k)) ==
+          oldProfiles(n, k), s"$name profiles n=$n k=$k")
+      assert(lmTables(NgramLm.fit(en, "text")) == oldLm, s"$name LM")
+      for (nb <- Seq(64, 1024))
+        assert(QualityModel.fitLogOddsMicro(en, rest, "text", nb).toSeq ==
+          r20FitLogOddsMicro(en, rest, "text", nb).toSeq, s"$name weights $nb")
+      // the fused fit: all three from one count pass
+      for ((n, k, nb) <- Seq((3, 40, 1024), (1, 5, 64))) {
+        val fused = CcNet.fit(df, "lang", "text", "en", n, k, nb)
+        assert(profileSet(fused.profiles) == oldProfiles(n, k),
+          s"$name fused profiles n=$n k=$k")
+        assert(lmTables(fused.lm) == oldLm, s"$name fused LM")
+        assert(fused.weightsMicro.toSeq ==
+          r20FitLogOddsMicro(en, rest, "text", nb).toSeq,
+          s"$name fused weights $nb")
+      }
+      val raw = df.select("doc_id", "text")
+      val target = df.filter(col("lang") === "en").select("doc_id", "text")
+      def weighted(w: DataFrame) = w.collect().map(r =>
+        (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSeq.sortBy(_._1)
+      assert(weighted(Dsir.importanceWeights(raw, target, "doc_id", "text",
+        1024)) == weighted(r20ImportanceWeights(raw, target, "doc_id", "text",
+        1024)), s"$name importance weights")
+    }
+  }
 }

@@ -104,4 +104,23 @@ class LangIdNgramSpec extends AnyFunSuite {
     assert(got.sorted.toSeq == Seq((1L, Some("en")), (1L, Some("fr")),
       (2L, None), (3L, Some("de"))))
   }
+
+  test("unlabeled (NULL-language) rows build no profile; classify still runs") {
+    import spark.implicits._
+    val withUnlabeled = labeled.unionByName(Seq(
+        (Option.empty[String], "zzz unlabeled text qqq"),
+        (Option.empty[String], "the cat and the dog"))
+      .toDF("lang", "text"))
+    val profiles = LangIdNgram.fitProfiles(withUnlabeled, "lang", "text",
+      n = 3, k = 30)
+    assert(profiles.map(_.lang).distinct.sorted == Seq("de", "en", "fr"))
+    // the labeled profiles are exactly the fit without the unlabeled rows
+    assert(profiles.sortBy(p => (p.lang, p.rank)) == LangIdNgram.fitProfiles(
+      labeled, "lang", "text", n = 3, k = 30).sortBy(p => (p.lang, p.rank)))
+    val out = LangIdNgram.classify(
+        Seq((1L, "the bird sat with the dog")).toDF("doc_id", "text"),
+        "doc_id", "text", profiles, n = 3, k = 30)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(out == Map(1L -> "en"))
+  }
 }

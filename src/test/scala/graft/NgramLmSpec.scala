@@ -84,4 +84,27 @@ class NgramLmSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(1), r.getLong(2))).head
     assert(whole == ((3L, parts(1L) + parts(2L) + parts(3L))))
   }
+
+  test("a target with no tokens fits totalTokens 0; every transition scores at the OOV floor") {
+    import spark.implicits._
+    // empty, whitespace-only and NULL targets: a sum over zero rows is
+    // NULL, which the fit must not read as a count
+    val targets = Seq(
+      Seq.empty[String].toDF("text"),
+      Seq(" \t\n ", "   ").toDF("text"),
+      Seq(Option.empty[String]).toDF("text"))
+    val docs = Seq((1L, "a b"), (2L, "a b c"), (3L, "a")).toDF("doc_id", "text")
+    // OOV floor with N = 0: P = 0.4 / 1 → floor(1e6·ln 0.4 + 0.5)
+    val floor = -916291L
+    for (t <- targets) {
+      val lm = NgramLm.fit(t, "text")
+      assert(lm.totalTokens == 0L)
+      assert(lm.uni.count() == 0 && lm.bi.count() == 0)
+      val out = NgramLm.score(docs, "doc_id", "text", lm)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
+          if (r.isNullAt(3)) None else Some(r.getLong(3))))).toMap
+      assert(out == Map(1L -> ((1L, floor, Some(floor))),
+        2L -> ((2L, 2 * floor, Some(floor))), 3L -> ((0L, 0L, None))))
+    }
+  }
 }

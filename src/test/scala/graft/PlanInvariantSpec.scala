@@ -1,15 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.expressions.{BigramPairs, LangIdOopExpr, LshPostingsExpr, MinHashBandsExpr, Shingles}
+import graft.functions.{CcNet, NgramLm}
+import graft.functions.expressions.{BigramPairs, BucketWeightSum, LangIdOopExpr, LshPostingsExpr, MinHashBandsExpr, Shingles}
+import graft.sources.Tables
 
-/** Plan invariants of the training-data queries, pinned on the no-AQE
-  * physical plan at sf0.001 (with AQE off, exchange reuse is decided at
-  * planning time and shows as ReusedExchange).
+/** Plan invariants of the training-data queries and of the eager fits'
+  * count passes, pinned on the no-AQE physical plan at sf0.001 (with AQE
+  * off, exchange reuse is decided at planning time and shows as
+  * ReusedExchange). A count pass is materialized before any query plan
+  * reads it, so its own plan is pinned separately.
   *
   * Per query: the count of each operator below, and how many times each
   * compiled kernel occurs in the plan's expressions. A kernel that shows
@@ -39,27 +44,61 @@ class PlanInvariantSpec extends AnyFunSuite {
     "minhashbandsexpr" -> { case _: MinHashBandsExpr => () },
     "bigrampairs" -> { case _: BigramPairs => () },
     "lshpostingsexpr" -> { case _: LshPostingsExpr => () },
-    "shingles" -> { case _: Shingles => () })
+    "shingles" -> { case _: Shingles => () },
+    "bucketweightsum" -> { case _: BucketWeightSum => () })
 
-  /** query → (operator counts in `Operators` order, kernel → count; an
+  private def query(name: String): SparkSession => DataFrame =
+    spark => SparkEntry.queries(name)(spark, SfDir)
+
+  private def documents(spark: SparkSession): DataFrame =
+    Tables(spark, SfDir, "documents")
+
+  /** plan → (operator counts in `Operators` order, kernel → count; an
     * unlisted kernel must not occur). */
-  private val Expected: Seq[(String, Seq[Int], Map[String, Int])] = Seq(
+  private val Expected: Seq[(String, SparkSession => DataFrame, Seq[Int],
+      Map[String, Int])] = Seq(
     // classification is a per-row map: only the final orderBy shuffles
-    ("td_quality_langid_ngram", Seq(1, 0, 0, 0, 0, 0),
-      Map("langidoopexpr" -> 1)),
-    ("td_pipeline_ccnet", Seq(4, 0, 2, 4, 1, 0),
-      Map("langidoopexpr" -> 1, "bigrampairs" -> 1)),
+    ("td_quality_langid_ngram", query("td_quality_langid_ngram"),
+      Seq(1, 0, 0, 0, 0, 0), Map("langidoopexpr" -> 1)),
+    // language ID and the quality keep are one projection over the
+    // documents, so the broadcast join that put them side by side is gone
+    // (BroadcastHashJoin 4 → 3). That projection has one row per document,
+    // so the LM's per-document scores join it directly, not through a
+    // join back onto the document ids first (Exchange 4 → 3,
+    // SortMergeJoin 2 → 1). The unigram table's broadcast is reused by
+    // its second join (ReusedExchange 0 → 1)
+    ("td_pipeline_ccnet", query("td_pipeline_ccnet"),
+      Seq(3, 1, 1, 3, 1, 0),
+      Map("langidoopexpr" -> 1, "bigrampairs" -> 1, "bucketweightsum" -> 1)),
     // shingles: once under the signature kernel, once for verification
-    ("td_dedup_near", Seq(6, 2, 3, 0, 0, 0),
+    ("td_dedup_near", query("td_dedup_near"), Seq(6, 2, 3, 0, 0, 0),
       Map("minhashbandsexpr" -> 1, "shingles" -> 2)),
-    ("td_quality_ppl", Seq(3, 0, 1, 3, 0, 0), Map("bigrampairs" -> 1)),
-    ("td_sim_topk", Seq(2, 0, 0, 0, 1, 1), Map.empty),
+    // uni and bi are tag-filtered views of one materialized count table
+    ("td_quality_ppl", query("td_quality_ppl"), Seq(3, 0, 1, 3, 0, 0),
+      Map("bigrampairs" -> 1)),
+    // the weight fold is one projection over the weight broadcast; only
+    // the final orderBy shuffles
+    ("td_quality_model", query("td_quality_model"), Seq(1, 0, 0, 0, 1, 0),
+      Map("bucketweightsum" -> 1)),
+    ("td_sim_topk", query("td_sim_topk"), Seq(2, 0, 0, 0, 1, 1), Map.empty),
     // postings once per side: the broadcast queries and the corpus
-    ("td_sim_ann", Seq(3, 0, 0, 1, 0, 1), Map("lshpostingsexpr" -> 2)),
+    ("td_sim_ann", query("td_sim_ann"), Seq(3, 0, 0, 1, 0, 1),
+      Map("lshpostingsexpr" -> 2)),
     // the shingle sets are recomputed per consuming subtree, not
     // materialized (a checkpoint there benched slower)
-    ("td_dedup_ngram", Seq(5, 3, 0, 4, 0, 2), Map("shingles" -> 3)),
-    ("td_dedup_embed", Seq(3, 1, 1, 0, 0, 0), Map("lshpostingsexpr" -> 1)))
+    ("td_dedup_ngram", query("td_dedup_ngram"), Seq(5, 3, 0, 4, 0, 2),
+      Map("shingles" -> 3)),
+    ("td_dedup_embed", query("td_dedup_embed"), Seq(3, 1, 1, 0, 0, 0),
+      Map("lshpostingsexpr" -> 1)),
+    // the count passes, materialized before any query reads them. Opaque
+    // keeps the bigram kernel to one evaluation per row
+    ("NgramLm.fit count pass", spark => NgramLm.counts(
+        documents(spark).filter(col("lang") === "en").select("text"), "text"),
+      Seq(1, 0, 0, 0, 0, 0), Map("bigrampairs" -> 1)),
+    // two aggregates: the language-ID rows, and the LM and quality rows
+    ("CcNet.fit count pass", spark => CcNet.counts(documents(spark), "lang",
+        "text", "en", n = 3, nBuckets = 1024),
+      Seq(2, 0, 0, 0, 0, 0), Map("bigrampairs" -> 1)))
 
   private def operatorCounts(plan: SparkPlan): Seq[Int] = {
     val names = plan.collectWithSubqueries { case p => p.nodeName }
@@ -83,10 +122,9 @@ class PlanInvariantSpec extends AnyFunSuite {
     }
   }
 
-  for ((query, ops, kernels) <- Expected)
-    test(s"$query: pinned operator and kernel counts") {
-      val plan = withConfs(
-        SparkEntry.queries(query)(spark, SfDir).queryExecution.executedPlan)
+  for ((name, build, ops, kernels) <- Expected)
+    test(s"$name: pinned operator and kernel counts") {
+      val plan = withConfs(build(spark).queryExecution.executedPlan)
       assert(operatorCounts(plan) == ops && kernelCounts(plan) == kernels,
         s"observed ${Operators.zip(operatorCounts(plan)).mkString(" ")} " +
           s"kernels ${kernelCounts(plan)}\n$plan")
