@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Document deduplication for large-scale text corpora.
@@ -64,7 +65,8 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash LSH band hashes per doc: (id, __bands: array<bigint>).
+  /** MinHash LSH band hashes per doc, one row per band:
+    * (__id, __band_idx, __band_hash).
     *
     * Each shingle string is hashed ONCE; the k per-permutation hashes are
     * xxhash64 over that fixed-width long (a few ns each, vs k full string
@@ -80,7 +82,7 @@ object Dedup {
     * signature set); r18's single fused kernel call has neither the
     * method-size blowup nor the Exchange.
     */
-  private def signatures(df: DataFrame, idCol: String, textCol: String,
+  private[graft] def signatures(df: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int): DataFrame =
     // fused compiled kernel ([[graft.functions.expressions.MinHashBands]])
     // since r18: same per-permutation minima and band hashes, term for
@@ -88,17 +90,10 @@ object Dedup {
     // with k min-aggregates shape this replaces paid k agg-buffer
     // updates per shingle AND one Exchange of the |docs|·k signature
     // columns; the kernel removes that Exchange outright (guide §2.4).
-    // Opaque-wrapped since r19: the posexplode consumer above makes
-    // InferFiltersFromGenerate add `size(__bands) > 0 AND isnotnull`,
-    // and predicate pushdown substituted the alias — the FULL signature
-    // kernel ran once in the Filter condition and again in this Project
-    // (r18 after-plans, both banded-join sides). The barrier keeps the
-    // guard on the cheap attribute, so the kernel runs once per row
-    // (guide §4.4).
     df.select(col(idCol).as("__id"),
-      graft.functions.expressions.Opaque.opaque(
-        graft.functions.expressions.MinHashBands.minhash_bands(
-          shingleCol(col(textCol), n), bands, rowsPerBand)).as("__bands"))
+      posexplode(graft.functions.expressions.MinHashBands.minhash_bands(
+        shingleCol(col(textCol), n), bands, rowsPerBand))
+        .as(Seq("__band_idx", "__band_hash")))
 
   /** Near-duplicate pairs with exact Jaccard >= threshold, found via
     * MinHash-LSH candidate generation then exact verification.
@@ -163,9 +158,7 @@ object Dedup {
     val (repRows, starBase) = collapseByKey(hashed, "__ch")
     val star = starBase.withColumn("jaccard", lit(1.0))
     val reps = repRows.select(col("__id").as(idCol), col("__t").as(textCol))
-    val sig = signatures(reps, idCol, textCol, n, bands, rowsPerBand)
-    val buckets = sig.select(col("__id"),
-      posexplode(col("__bands")).as(Seq("__band_idx", "__band_hash")))
+    val buckets = signatures(reps, idCol, textCol, n, bands, rowsPerBand)
     val cands = buckets.as("a").join(buckets.as("b"),
         col("a.__band_idx") === col("b.__band_idx") &&
           col("a.__band_hash") === col("b.__band_hash") &&
@@ -276,22 +269,12 @@ object Dedup {
   def ngramJaccardPairs(df0: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3): DataFrame = {
     val df = widen(df0)
-    // Opaque since r19: the explicit size guard (plus the explode's
-    // inferred one) was pushed through this projection, so the shingle
-    // kernel ran TWICE per row in each of the four consuming subtrees
-    // (r18 plan: `size(shingles(...)) >= 1` in the Filter condition AND
-    // `shingles(...)` in the Project output, ×4 scans) — the barrier
-    // keeps the guards on the attribute (guide §4.4)
-    // NOT materialized, by measurement: sets feeds four subtrees (the
-    // explode twice, both verify broadcast sides), but a localCheckpoint
-    // here benched SLOWER (r19: 2.50 vs 2.21 norm) — the compiled
-    // shingle recompute is cheaper than writing/reading the gram arrays
-    val sets = df.select(col(idCol).as("__id"),
-        graft.functions.expressions.Opaque.opaque(
-          shingleCol(col(textCol), n)).as("__sh"))
-      .filter(size(col("__sh")) >= 1)
-    val ex = sets.select(col("__id"), size(col("__sh")).as("__sz"),
-      explode(col("__sh")).as("__g"))
+    // the shingle arrays are NOT materialized, by measurement: they feed
+    // the explode and both verify broadcast sides, but a localCheckpoint
+    // benched SLOWER (r19: 2.50 vs 2.21 norm) — the compiled shingle
+    // recompute is cheaper than writing/reading the gram arrays
+    val ex = df.select(col(idCol).as("__id"),
+      explode(shingleCol(col(textCol), n)).as("__g"))
     val dfreq = ex.groupBy("__g").agg(count(lit(1)).as("__df"))
     // rare-first global order; (__df, __g) ties broken lexically => total.
     // FP guard: t*|S| can land one ulp ABOVE its exact integral value
@@ -300,10 +283,14 @@ object Dedup {
     // rounding below is therefore nudged down by eps — erring toward MORE
     // candidates, which the exact verification then filters.
     val eps = 1e-9
+    // shingles are distinct per doc, so the row count of a doc's window
+    // partition IS its set size; both columns share one Window operator
+    val byDoc = Window.partitionBy("__id").orderBy(col("__df"), col("__g"))
     val ranked = ex.join(dfreq, "__g")
-      .withColumn("__rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("__id").orderBy(col("__df"), col("__g"))))
+      .select(col("__g"), col("__id"),
+        row_number().over(byDoc).as("__rk"),
+        count(lit(1)).over(byDoc.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as("__sz"))
     val prefixes = ranked
       .filter(col("__rk") <=
         col("__sz") - ceil(lit(threshold) * col("__sz") - eps) + 1)
@@ -323,7 +310,9 @@ object Dedup {
           (least(col("a.__sz") - col("a.__rk"), col("b.__sz") - col("b.__rk")) + 1) >= alpha)
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
       .distinct()
-    verifyPairs(cands, sets.withColumnRenamed("__sh", "__shingles"), threshold)
+    // candidate ids have at least one shingle, so the sets need no guard
+    verifyPairs(cands, df.select(col(idCol).as("__id"),
+      shingleCol(col(textCol), n).as("__shingles")), threshold)
   }
 
   /** Benchmark decontamination: (corpus doc, eval doc) pairs sharing at
@@ -427,12 +416,8 @@ object Dedup {
       .select(col(idCol).as("__id"), col(vecCol).as("__v"))
     val (repRows, starBase) = collapseByKey(rows, "__v")
     val star = starBase.withColumn("cosine", lit(1.0))
-    // postings in their own Opaque-guarded projection below the explode
-    // (same §4.4 guard-duplication fix as the MinHash signature stage)
     val posts = repRows.select(col("__id"), col("__v"),
-        graft.functions.expressions.Opaque.opaque(
-          Similarity.lshPostings(col("__v"), bits, tables)).as("__posts"))
-      .select(col("__id"), col("__v"), explode(col("__posts")).as("__p"))
+      explode(Similarity.lshPostings(col("__v"), bits, tables)).as("__p"))
     posts.as("a").join(posts.as("b"),
         col("a.__p") === col("b.__p") && col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
@@ -669,7 +654,6 @@ object Dedup {
   private[functions] def firstOccurrenceDedup(df: DataFrame, idCol: String,
       textCol: String, n: Int, delim: String,
       nName: String, dupName: String, rmName: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val units = df.select(col(idCol).as("__id"),
       split(col(textCol), delim).as("__us"))
     val wins = units.select(col("__id"),

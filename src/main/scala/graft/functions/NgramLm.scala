@@ -53,26 +53,22 @@ object NgramLm {
 
   /** Count rows of the LM fit: one [[UniTag]] row per token (`a` = w),
     * one [[BiTag]] row per token transition (`a` = w1, `b` = w2) and one
-    * [[TokTag]] row per document that has tokens, weighted by its token
-    * count, so the summed [[TokTag]] row is the total token count. */
+    * [[TokTag]] row per document, weighted by its token count (0 for a
+    * NULL text), so the summed [[TokTag]] row is the total token count. */
   private[functions] def countRows(target: DataFrame,
       textCol: String): Seq[DataFrame] = {
-    // Opaque: the explode's inferred guard and the token-count filter
-    // read the attribute instead of re-running the tokenizer
-    val toks = target.select(graft.functions.expressions.Opaque.opaque(
-      tokens(col(textCol))).as("__tk"))
-    val uni = toks.select(explode(col("__tk")).as("__w"))
+    val uni = target.select(explode(tokens(col(textCol))).as("__w"))
     // compiled transition kernel ([[expressions.TextGrams.bigram_pairs]]):
     // its empty-array result for < 2 tokens subsumes a size filter row for
-    // row. Opaque keeps the Generate's inferred size-guard on the
-    // attribute (guide §4.4), so the kernel runs once per row.
-    val bi = toks
-      .select(graft.functions.expressions.Opaque.opaque(
-        graft.functions.expressions.TextGrams.bigram_pairs(col("__tk")))
-        .as("__bp"))
-      .select(explode(col("__bp")).as("__b"))
-    val nTok = toks.select(size(col("__tk")).as("__n"))
-      .filter(col("__n") > 0)
+    // row
+    val bi = target.select(explode(
+      graft.functions.expressions.TextGrams.bigram_pairs(
+        tokens(col(textCol)))).as("__b"))
+    // no `> 0` filter: it would evaluate the tokenizer a second time, and
+    // a zero-weight row adds nothing to the sum. A NULL text weighs 0,
+    // whatever size(NULL) is under the session's ANSI mode
+    val nTok = target.select(when(col(textCol).isNotNull,
+      size(tokens(col(textCol)))).otherwise(0).as("__n"))
     Seq(
       TaggedCounts.rows(uni, UniTag, col("__w"), lit(null)),
       TaggedCounts.rows(bi, BiTag, col("__b.__w1"), col("__b.__w2")),
@@ -82,8 +78,8 @@ object NgramLm {
   /** The model over a (checkpointed) count table that holds [[countRows]]'s
     * rows, with the [[TokTag]] rows of its bounded state. The count tables
     * stay distributed, as tag-filtered views of `counts`. A target with no
-    * tokens has no [[TokTag]] row: totalTokens is 0 and every transition
-    * scores at the OOV floor. */
+    * tokens has no [[TokTag]] row or one of weight 0: totalTokens is 0 and
+    * every transition scores at the OOV floor. */
   private[functions] def model(counts: DataFrame, state: Seq[Row]): Model =
     Model(
       counts.filter(col(TaggedCounts.Tag) === UniTag)
@@ -149,14 +145,11 @@ object NgramLm {
     // compiled transition kernel — identical pair stream to the old
     // `when(size >= 2, transform(...)).otherwise(empty)` (the kernel's
     // empty-array result covers both the < 2-token and NULL-token-array
-    // branches); Opaque keeps the explode's inferred guard on the
-    // attribute so the tokenize+pair pass runs once per row (guide §4.4)
+    // branches)
     val trans = df
-      .select(col(idCol).as("__id"),
-        graft.functions.expressions.Opaque.opaque(
-          graft.functions.expressions.TextGrams.bigram_pairs(
-            tokens(col(textCol)))).as("__bp"))
-      .select(col("__id"), explode(col("__bp")).as("__b"))
+      .select(col(idCol).as("__id"), explode(
+        graft.functions.expressions.TextGrams.bigram_pairs(
+          tokens(col(textCol)))).as("__b"))
       .select(col("__id"), col("__b.__w1").as("__w1"),
         col("__b.__w2").as("__w2"))
     trans

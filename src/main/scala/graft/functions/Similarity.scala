@@ -461,15 +461,9 @@ object Similarity {
   def annTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       bits: Int = 4, tables: Int = 16): DataFrame = {
-    // postings materialize in their own Opaque-guarded projection below
-    // the explode so the Generate's inferred `size > 0` guard evaluates
-    // the attribute, not a second kernel run (guide §4.4); the corpus
-    // side is the one that matters at scale, the query side is bounded
     def postings(df: DataFrame, outId: String, outVec: String): DataFrame =
       df.select(col(idCol).as(outId), col(vecCol).as(outVec),
-          graft.functions.expressions.Opaque.opaque(
-            lshPostings(col(vecCol), bits, tables)).as("__posts"))
-        .select(col(outId), col(outVec), explode(col("__posts")).as("__p"))
+        explode(lshPostings(col(vecCol), bits, tables)).as("__p"))
     val q = broadcast(postings(queries, "query_id", "__qv"))
     val c = postings(corpus, "neighbor_id", "__cv")
     val cand = q.join(c, Seq("__p"))

@@ -212,6 +212,10 @@ case class VecResidual(left: Expression, right: Expression)
   * element was NULL, else FALSE; NULL array → NULL. */
 case class AnyNonZero(child: Expression) extends UnaryExpression {
   override def dataType: DataType = BooleanType
+  // NULL also when only NULL elements remain, so even a non-nullable
+  // child (an array under `isnotnull` in a Filter) gives a nullable
+  // result, and the generated code keeps an assignable null flag
+  override def nullable: Boolean = true
 
   private lazy val elemFloat = ArrayFold.isFloatElem(child)
 

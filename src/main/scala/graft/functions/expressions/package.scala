@@ -1,0 +1,13 @@
+package graft.functions
+
+/** Compiled Catalyst kernels for the row-pipeline hot paths.
+  *
+  * A kernel that feeds a generator is written inside it, in one `select`:
+  * `explode(kernel(...))`, never a projection of the kernel followed by an
+  * `explode` of its alias. `InferFiltersFromGenerate` guards only attribute
+  * inputs; over an alias, its inferred `size(x) > 0 AND isnotnull(x)` is
+  * pushed through the projection with the whole kernel substituted, which
+  * runs the kernel once in the Filter and again in the Project. For the
+  * same reason, filter on what the kernel reads, not on its result.
+  */
+package object expressions

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.write.ParquetTarget
+
 /** Parquet table loader for the TPC-H-ish testdata layout: one parquet file
   * (or directory of files) per table under a scale-factor directory.
   *
@@ -16,8 +18,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The table, read with its footer schema: no schema-inference job. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = ParquetTarget(spark, s"$sfDir/$name.parquet").read
     if (name == "events") normalizeEvents(df) else df
   }
 

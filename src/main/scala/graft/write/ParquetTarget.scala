@@ -7,6 +7,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** A file-backed target table (parquet directory).
@@ -22,8 +23,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * The table's state is read from its data files' footers on the driver,
   * without a Spark job: whether it holds any data file ([[exists]]), its
   * row count ([[rowCount]], the reference's row counter after a load), and
-  * the Spark schema Spark's own writer stores in every footer, which
-  * [[read]] hands the reader so it skips its schema-inference job.
+  * its schema, which [[read]] hands the reader so it skips its
+  * schema-inference job. [[read]] serves any parquet path this way, also
+  * files another writer produced ([[graft.sources.Tables]]).
   */
 final case class ParquetTarget(spark: SparkSession, path: String) {
 
@@ -67,22 +69,27 @@ final case class ParquetTarget(spark: SparkSession, path: String) {
   def rowCount: Long = dataFiles._1.iterator
     .map(f => footer(f).getBlocks.asScala.iterator.map(_.getRowCount).sum).sum
 
-  /** The target as a DataFrame. A flat directory whose first data file's
-    * footer carries Spark's row schema is read with that schema, which is
-    * the schema Spark would infer from the same footer; a Hive-partitioned
-    * directory, a footer without the key or a session that merges parquet
+  /** The target as a DataFrame. A flat directory or a file is read with
+    * the schema Spark infers from its first data file's footer, taken
+    * from that footer as Spark takes it: the row schema Spark's writer
+    * stores there, else the parquet schema converted under the session's
+    * conf. A Hive-partitioned directory or a session that merges parquet
     * schemas takes Spark's own inference. */
   def read: DataFrame = footerSchema.fold(spark.read.parquet(path))(
     spark.read.schema(_).parquet(path))
 
   private def footerSchema: Option[StructType] = {
     val (files, nested) = dataFiles
-    if (nested || files.isEmpty || spark.conf.get(
-        "spark.sql.parquet.mergeSchema", "false").toBoolean) None
-    else Option(footer(files.head).getFileMetaData.getKeyValueMetaData
-      .get(ParquetTarget.SparkRowMetadata))
-      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
-      .collect { case s: StructType => s }
+    val sqlConf = spark.sessionState.conf
+    if (nested || files.isEmpty || sqlConf.isParquetSchemaMergingEnabled) None
+    else {
+      val meta = footer(files.head).getFileMetaData
+      Some(Option(meta.getKeyValueMetaData.get(ParquetTarget.SparkRowMetadata))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+        .getOrElse(new ParquetToSparkSchemaConverter(sqlConf)
+          .convert(meta.getSchema)))
+    }
   }
 
   def overwrite(df: DataFrame): Unit =

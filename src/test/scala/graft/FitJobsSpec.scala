@@ -40,25 +40,25 @@ class FitJobsSpec extends AnyFunSuite {
     }
   }
 
-  // read outside the counted block: the parquet schema read is a job
-  private lazy val docs = Tables(spark, SfDir, "documents")
+  // built inside each counted block: the read takes its schema from the
+  // parquet footer, which is no job
+  private def docs = Tables(spark, SfDir, "documents")
 
   test("td_pipeline_ccnet: one fused fit pass, build plus collect") {
     val (df, build) = jobs(SparkEntry.queries("td_pipeline_ccnet")(spark, SfDir))
     val (rows, run) = jobs(df.collect())
     assert(rows.nonEmpty)
-    // build: the parquet schema read; the fused count pass (the shuffle
-    // stages of its two aggregates and the checkpoint); the bounded
-    // collect (the profile window's shuffle stage and the result). It was
-    // 14 with one job chain per model.
-    assert(build == 6, "schema read + count pass 3 + collect 2")
+    // build: the fused count pass (the shuffle stages of its two
+    // aggregates and the checkpoint); the bounded collect (the profile
+    // window's shuffle stage and the result). It was 14 with one job chain
+    // per model, and 6 while reading the table inferred its schema in a job.
+    assert(build == 5, "count pass 3 + collect 2")
     // run: the LM's per-document scores joined to one projection of
     // language ID and the quality keep. It was 12 with a join per model.
     assert(run == 9)
   }
 
   test("NgramLm.fit: one checkpointed count pass and the token total") {
-    docs
     val (lm, n) = jobs(
       NgramLm.fit(docs.filter(col("lang") === "en").select("text"), "text"))
     assert(lm.totalTokens > 0)
@@ -67,7 +67,6 @@ class FitJobsSpec extends AnyFunSuite {
   }
 
   test("QualityModel.fitLogOddsMicro: one aggregate over both labels") {
-    docs
     val (w, n) = jobs(QualityModel.fitLogOddsMicro(
       docs.filter(col("lang") === "en").select("text"),
       docs.filter(col("lang") =!= "en").select("text"), "text",
@@ -78,7 +77,6 @@ class FitJobsSpec extends AnyFunSuite {
   }
 
   test("Dsir.importanceWeights: one aggregate over target and raw") {
-    docs
     val (_, n) = jobs(Dsir.importanceWeights(docs.select("doc_id", "text"),
       docs.filter(col("lang") === "en").select("doc_id", "text"),
       "doc_id", "text", nBuckets = 1024))

@@ -598,25 +598,89 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     }
   }
 
-  test("opaque is a value-level identity (deterministic child, any consumer shape)") {
+  /** [[texts]] with whitespace-only rows added and a stable long id. */
+  private def idTexts: DataFrame = {
     import spark.implicits._
-    import graft.functions.expressions.{MinHashBands, Opaque, TextGrams}
-    // raw values pass through unchanged
-    assertSame(texts,
-      MinHashBands.minhash_bands(TextGrams.shingles(col("text"), 3), 16, 4),
-      Opaque.opaque(
-        MinHashBands.minhash_bands(TextGrams.shingles(col("text"), 3), 16, 4)))
-    // and through the filter + explode pipeline shape the query paths
-    // use (the optimizer treats the wrapped field as nondeterministic,
-    // which must not change WHAT is computed)
-    def pipeline(wrap: Column => Column) =
-      texts.withColumn("__id", monotonically_increasing_id())
+    (texts.collect().map(r => Option(r.getString(0))).toSeq ++
+      Seq(Some("   "), Some(" \t\n ")))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+  }
+
+  private def multiset(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  // A kernel written inside the explode that consumes it must emit the
+  // rows of the older shape: the kernel aliased in one projection, its
+  // alias exploded in the next.
+
+  test("minhash bands: posexplode(kernel) == posexplode of a projected alias") {
+    import graft.functions.Dedup
+    import graft.functions.expressions.MinHashBands
+    val old = idTexts.select(col("id").as("__id"),
+        MinHashBands.minhash_bands(Dedup.shingleCol(col("text"), 3), 16, 4)
+          .as("__bands"))
+      .select(col("__id"),
+        posexplode(col("__bands")).as(Seq("__band_idx", "__band_hash")))
+    val direct = Dedup.signatures(idTexts, "id", "text", 3, 16, 4)
+    assert(multiset(direct) == multiset(old))
+  }
+
+  test("lsh postings: explode(kernel) == explode of a projected alias") {
+    import spark.implicits._
+    import graft.functions.Similarity
+    val vecs = Seq(
+      Some(Seq(1.0f, -2.0f, 3.5f, 0.25f)), Some(Seq(0.0f, 0.0f, 0.0f, 0.0f)),
+      Some(Seq(-1.5f, -0.5f)), Some(Seq(Float.NaN, 1.0f)),
+      Some(Seq.empty[Float]), None)
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+    for ((bits, tables) <- Seq((4, 8), (1, 1))) {
+      val old = vecs.select(col("id"), col("v"),
+          Similarity.lshPostings(col("v"), bits, tables).as("__posts"))
+        .select(col("id"), col("v"), explode(col("__posts")).as("__p"))
+      val direct = vecs.select(col("id"), col("v"),
+        explode(Similarity.lshPostings(col("v"), bits, tables)).as("__p"))
+      assert(multiset(direct) == multiset(old))
+    }
+  }
+
+  test("bigram transitions and tokens: explode(kernel) == explode of a projected alias") {
+    val toks = TextGrams.ws_tokens(col("text"))
+    val oldTok = idTexts.select(col("id"), toks.as("__tk"))
+    assert(multiset(idTexts.select(col("id"), explode(toks).as("__w"))) ==
+      multiset(oldTok.select(col("id"), explode(col("__tk")).as("__w"))))
+    val old = oldTok
+      .select(col("id"), TextGrams.bigram_pairs(col("__tk")).as("__bp"))
+      .select(col("id"), explode(col("__bp")).as("__b"))
+    val direct = idTexts.select(col("id"),
+      explode(TextGrams.bigram_pairs(toks)).as("__b"))
+    assert(multiset(direct) == multiset(old))
+    // the token total without the old `> 0` filter: zero-weight rows for
+    // NULL and token-less texts leave the sum unchanged
+    val oldTotal = oldTok.select(size(col("__tk")).as("__n"))
+      .filter(col("__n") > 0).agg(sum("__n")).head.getLong(0)
+    val total = idTexts.select(when(col("text").isNotNull, size(toks))
+      .otherwise(0).as("__n")).agg(sum("__n")).head.getLong(0)
+    assert(total == oldTotal && total > 0)
+  }
+
+  test("shingles: explode(kernel) with a window count == the size-guarded alias") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.Dedup
+    for (n <- Seq(1, 3)) {
+      val sets = idTexts.select(col("id").as("__id"),
+          Dedup.shingleCol(col("text"), n).as("__sh"))
+        .filter(size(col("__sh")) >= 1)
+      val old = sets.select(col("__id"), size(col("__sh")).as("__sz"),
+        explode(col("__sh")).as("__g"))
+      val byDoc = Window.partitionBy("__id").orderBy(col("__g"))
+      val direct = idTexts.select(col("id").as("__id"),
+          explode(Dedup.shingleCol(col("text"), n)).as("__g"))
         .select(col("__id"),
-          wrap(MinHashBands.minhash_bands(
-            TextGrams.shingles(col("text"), 3), 16, 4)).as("__bands"))
-        .select(col("__id"), posexplode(col("__bands")))
-        .collect().map(_.toString).sorted.toSeq
-    assert(pipeline(identity) == pipeline(Opaque.opaque))
+          count(lit(1)).over(byDoc.rowsBetween(Window.unboundedPreceding,
+            Window.unboundedFollowing)).cast("int").as("__sz"),
+          col("__g"))
+      assert(multiset(direct) == multiset(old))
+    }
   }
 
   /** castTo's timestamp and date branches before the layout-cascade
@@ -813,8 +877,7 @@ class KernelEquivalenceSpec extends AnyFunSuite {
       .groupBy("__w").agg(count(lit(1)).as("__c1"))
       .localCheckpoint()
     val bi = toks
-      .select(graft.functions.expressions.Opaque.opaque(
-        graft.functions.expressions.TextGrams.bigram_pairs(col("__tk")))
+      .select(graft.functions.expressions.TextGrams.bigram_pairs(col("__tk"))
         .as("__bp"))
       .select(explode(col("__bp")).as("__b"))
       .select(col("__b.__w1").as("__w1"), col("__b.__w2").as("__w2"))

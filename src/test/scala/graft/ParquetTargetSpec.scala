@@ -77,6 +77,23 @@ class ParquetTargetSpec extends AnyFunSuite {
     assert(t.rowCount == 90 && t.read.count() == 90)
   }
 
+  test("parquet written elsewhere: footer schema == Spark's inference, no job") {
+    import graft.sources.Tables
+    val sfDir = "/root/testdata/sf0.001"
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    try for (nanosAsLong <- Seq("true", "false"); name <- Tables.names) {
+      spark.conf.set(key, nanosAsLong)
+      val clue = s"$name, nanosAsLong=$nanosAsLong"
+      val t = ParquetTarget(spark, s"$sfDir/$name.parquet")
+      val (schema, jobs) = SparkJobs.during(spark.sparkContext)(t.read.schema)
+      assert(schema == spark.read.parquet(t.path).schema, clue)
+      assert(jobs == 0, clue)
+      assert(SparkJobs.during(spark.sparkContext)(Tables(spark, sfDir, name))._2 == 0,
+        clue)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   private def csv(name: String, body: String): Path = {
     val dir = root.resolve(name)
     Files.createDirectories(dir)

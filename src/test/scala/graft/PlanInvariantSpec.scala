@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{CcNet, NgramLm}
-import graft.functions.expressions.{BigramPairs, BucketWeightSum, LangIdOopExpr, LshPostingsExpr, MinHashBandsExpr, Shingles}
+import graft.functions.expressions.{BigramPairs, BucketWeightSum, LangIdOopExpr, LshPostingsExpr, MinHashBandsExpr, Shingles, WsTokens}
 import graft.sources.Tables
 
 /** Plan invariants of the training-data queries and of the eager fits'
@@ -20,6 +20,10 @@ import graft.sources.Tables
   * compiled kernel occurs in the plan's expressions. A kernel that shows
   * up twice is evaluated twice per row; an extra Exchange is an extra
   * corpus shuffle.
+  *
+  * Every pinned plan is also executed into a no-op sink with codegen
+  * fallback off, so a kernel whose generated Java does not compile fails
+  * here instead of silently dropping its stage to interpreted eval.
   */
 class PlanInvariantSpec extends AnyFunSuite {
 
@@ -31,10 +35,12 @@ class PlanInvariantSpec extends AnyFunSuite {
 
   private val SfDir = "/root/testdata/sf0.001"
 
-  // plan shape depends on these; other suites in the same JVM change them
+  // plan shape depends on these; other suites in the same JVM change them.
+  // With fallback off, a whole-stage codegen compile error throws.
   private val Confs = Map(
     "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.autoBroadcastJoinThreshold" -> "10485760")
+    "spark.sql.autoBroadcastJoinThreshold" -> "10485760",
+    "spark.sql.codegen.fallback" -> "false")
 
   private val Operators = Seq("Exchange", "ReusedExchange", "SortMergeJoin",
     "BroadcastHashJoin", "BroadcastNestedLoopJoin", "Window")
@@ -45,7 +51,8 @@ class PlanInvariantSpec extends AnyFunSuite {
     "bigrampairs" -> { case _: BigramPairs => () },
     "lshpostingsexpr" -> { case _: LshPostingsExpr => () },
     "shingles" -> { case _: Shingles => () },
-    "bucketweightsum" -> { case _: BucketWeightSum => () })
+    "bucketweightsum" -> { case _: BucketWeightSum => () },
+    "wstokens" -> { case _: WsTokens => () })
 
   private def query(name: String): SparkSession => DataFrame =
     spark => SparkEntry.queries(name)(spark, SfDir)
@@ -69,17 +76,18 @@ class PlanInvariantSpec extends AnyFunSuite {
     // its second join (ReusedExchange 0 → 1)
     ("td_pipeline_ccnet", query("td_pipeline_ccnet"),
       Seq(3, 1, 1, 3, 1, 0),
-      Map("langidoopexpr" -> 1, "bigrampairs" -> 1, "bucketweightsum" -> 1)),
+      Map("langidoopexpr" -> 1, "bigrampairs" -> 1, "bucketweightsum" -> 1,
+        "wstokens" -> 2)),
     // shingles: once under the signature kernel, once for verification
     ("td_dedup_near", query("td_dedup_near"), Seq(6, 2, 3, 0, 0, 0),
       Map("minhashbandsexpr" -> 1, "shingles" -> 2)),
     // uni and bi are tag-filtered views of one materialized count table
     ("td_quality_ppl", query("td_quality_ppl"), Seq(3, 0, 1, 3, 0, 0),
-      Map("bigrampairs" -> 1)),
+      Map("bigrampairs" -> 1, "wstokens" -> 1)),
     // the weight fold is one projection over the weight broadcast; only
     // the final orderBy shuffles
     ("td_quality_model", query("td_quality_model"), Seq(1, 0, 0, 0, 1, 0),
-      Map("bucketweightsum" -> 1)),
+      Map("bucketweightsum" -> 1, "wstokens" -> 1)),
     ("td_sim_topk", query("td_sim_topk"), Seq(2, 0, 0, 0, 1, 1), Map.empty),
     // postings once per side: the broadcast queries and the corpus
     ("td_sim_ann", query("td_sim_ann"), Seq(3, 0, 0, 1, 0, 1),
@@ -90,15 +98,17 @@ class PlanInvariantSpec extends AnyFunSuite {
       Map("shingles" -> 3)),
     ("td_dedup_embed", query("td_dedup_embed"), Seq(3, 1, 1, 0, 0, 0),
       Map("lshpostingsexpr" -> 1)),
-    // the count passes, materialized before any query reads them. Opaque
-    // keeps the bigram kernel to one evaluation per row
+    // the count passes, materialized before any query reads them. Each
+    // kernel sits inside the explode that consumes it, so no inferred
+    // guard re-runs it; the tokenizer runs once per union branch (uni, bi
+    // and the token weight)
     ("NgramLm.fit count pass", spark => NgramLm.counts(
         documents(spark).filter(col("lang") === "en").select("text"), "text"),
-      Seq(1, 0, 0, 0, 0, 0), Map("bigrampairs" -> 1)),
+      Seq(1, 0, 0, 0, 0, 0), Map("bigrampairs" -> 1, "wstokens" -> 3)),
     // two aggregates: the language-ID rows, and the LM and quality rows
     ("CcNet.fit count pass", spark => CcNet.counts(documents(spark), "lang",
         "text", "en", n = 3, nBuckets = 1024),
-      Seq(2, 0, 0, 0, 0, 0), Map("bigrampairs" -> 1)))
+      Seq(2, 0, 0, 0, 0, 0), Map("bigrampairs" -> 1, "wstokens" -> 5)))
 
   private def operatorCounts(plan: SparkPlan): Seq[Int] = {
     val names = plan.collectWithSubqueries { case p => p.nodeName }
@@ -124,7 +134,11 @@ class PlanInvariantSpec extends AnyFunSuite {
 
   for ((name, build, ops, kernels) <- Expected)
     test(s"$name: pinned operator and kernel counts") {
-      val plan = withConfs(build(spark).queryExecution.executedPlan)
+      val plan = withConfs {
+        val df = build(spark)
+        df.write.format("noop").mode("overwrite").save()
+        df.queryExecution.executedPlan
+      }
       assert(operatorCounts(plan) == ops && kernelCounts(plan) == kernels,
         s"observed ${Operators.zip(operatorCounts(plan)).mkString(" ")} " +
           s"kernels ${kernelCounts(plan)}\n$plan")
