@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -28,24 +28,6 @@ object ScaleGen {
 
   private val vowelish = "aeiounsrtl" // 10 letters → 10 distinct rotations
 
-  /** Long-document corpus (VERDICT r9 item 4): `count` docs of `tokens`
-    * words each from a 997-word per-doc-seeded vocabulary — the regime
-    * where the Gopher expression form's per-row O(distinct·total) is
-    * intractable and [[graft.functions.TextAnalysis.gopherAuto]] must
-    * dispatch to the aggregation plan. Fully codegen (no UDF): token i of
-    * doc d is `w((i*2654435761 + d) % 997)`.
-    */
-  def longDocs(spark: SparkSession, nDocs: Int, tokens: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.range(1, nDocs + 1L).toDF("doc_id")
-      .repartition(math.min(nDocs, 32))
-      .select(col("doc_id"), array_join(
-        transform(sequence(lit(0), lit(tokens - 1)),
-          i => concat(lit("w"),
-            pmod(i.cast("long") * lit(2654435761L) + col("doc_id"), lit(997)))),
-        " ").as("text"))
-  }
-
   private def rot(i: Int): String = {
     val k = i % vowelish.length
     vowelish.drop(k) + vowelish.take(k)
@@ -62,13 +44,7 @@ object ScaleGen {
       s"replicas=$replicas > ${vowelish.length}: vowel rotation would repeat " +
         "and plant cross-replica duplicate documents")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def tbl(name: String): DataFrame = Tables(spark, srcDir, name)
@@ -130,10 +106,6 @@ object ScaleGen {
           else d.withColumn("text", translate(col("text"), vowelish, rot(i)))))
     val nEmbeddings = write("embeddings",
       replicate(tbl("embeddings"), Map("vec_id" -> vecStride)))
-    // long-doc corpus scales with replicas: 20 docs x 50k tokens per
-    // replica (the Gopher agg-form stress shape)
-    val nDocsLong = write("documents_long",
-      longDocs(spark, 20 * replicas, 50000))
 
     // FK sanity: no orphan lineitems/orders after offsetting
     val orphanLi = spark.read.parquet(s"$outDir/lineitem.parquet")
@@ -149,7 +121,7 @@ object ScaleGen {
       s""""rows":{"region":$nRegion,"nation":$nNation,"customer":$nCustomer,""" +
       s""""supplier":$nSupplier,"part":$nPart,"orders":$nOrders,""" +
       s""""lineitem":$nLineitem,"events":$nEvents,"documents":$nDocuments,""" +
-      s""""embeddings":$nEmbeddings,"documents_long":$nDocsLong},"orphans":0}""")
+      s""""embeddings":$nEmbeddings},"orphans":0}""")
     spark.stop()
   }
 }

@@ -9,6 +9,8 @@ object Scratch {
   def tag(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_").stripSuffix("_")
 
+  /** Under `target/graft-scratch` of the working directory. */
   def dir(name: String, sfDir: String): String =
-    s"/root/repo/target/graft-scratch/${name}_${tag(sfDir)}"
+    new java.io.File(s"target/graft-scratch/${name}_${tag(sfDir)}")
+      .getAbsolutePath
 }

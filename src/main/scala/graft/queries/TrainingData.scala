@@ -2239,13 +2239,11 @@ object TrainingData {
         FROM c ORDER BY doc_id"""))
   )
 
-  /** The td_pipeline_refinedweb FIXTURE, shared with
-    * [[graft.tools.RwProfile]] — one definition so the stage profiler
-    * can never silently measure a different corpus than the gated row
-    * prices. Plants URL threats/variant groups, non-en marker prefixes,
-    * repetition spam, lorem-ipsum, exact+near duplicate families, and a
-    * cross-document verbatim sentence, keyed on doc_id mods. */
-  private[graft] def refinedWebFixture(documents: DataFrame): DataFrame = {
+  /** The td_pipeline_refinedweb fixture. Plants URL threats/variant
+    * groups, non-en marker prefixes, repetition spam, lorem-ipsum,
+    * exact+near duplicate families, and a cross-document verbatim
+    * sentence, keyed on doc_id mods. */
+  private def refinedWebFixture(documents: DataFrame): DataFrame = {
     val id = col("doc_id")
     val constA = "nearly identical mirrored article body token01 " +
       "token02 token03 token04 token05 token06 token07 token08 " +
@@ -2283,57 +2281,45 @@ object TrainingData {
   }
 
   /** The eight-stage RefinedWeb composition over a (doc_id, url, txt)
-    * frame, shared with [[graft.tools.RwProfile]]. `tap` wraps each
-    * named stage's construction — the gated row uses the identity
-    * pass-through; the profiler times/materializes there. Every stage
-    * output is localCheckpoint-materialized: each feeds 2-3 downstream
-    * subtrees (the next stage plus the final membership flags), and a
-    * real curation run persists stage outputs between passes too —
-    * without the cut, the audit row's plan re-derived the whole
-    * upstream funnel once per consumer (53 corpus scans at the first
-    * uncut EXPLAIN). */
-  private[graft] def refinedWebPipeline(docs: DataFrame,
-      tap: (String, () => DataFrame) => DataFrame =
-        (_, f) => f()): DataFrame = {
+    * frame. Every stage output is localCheckpoint-materialized: each
+    * feeds 2-3 downstream subtrees (the next stage plus the final
+    * membership flags), and a real curation run persists stage outputs
+    * between passes too — without the cut, the audit row's plan
+    * re-derived the whole upstream funnel once per consumer (53 corpus
+    * scans at the first uncut EXPLAIN). */
+  private def refinedWebPipeline(docs: DataFrame): DataFrame = {
     import graft.functions.Urls
-    val enriched = tap("enrich", () =>
-      Urls.urlFilter(docs, "url",
-          blockedDomains = Seq("tracker.net"),
-          scoredWords = Seq(("casino", 30), ("free", 25)), maxScore = 50)
-        .withColumn("pred_lang", TA.langId(col("txt")))
-        .withColumn("qual_ok",
-          TA.topNgramFraction(col("txt"), 2) < 0.18 &&
-            TA.dupNgramFraction(col("txt"), 3) < 0.30 &&
-            TA.c4DocKeep(col("txt")))
-        .localCheckpoint())
-    val s2 = tap("url_dedup", () =>
-      Urls.dedupByUrl(enriched.filter(col("url_keep")), "doc_id", "url")
-        .filter(col("canonical_id") === col("doc_id"))
-        .localCheckpoint())
+    val enriched = Urls.urlFilter(docs, "url",
+        blockedDomains = Seq("tracker.net"),
+        scoredWords = Seq(("casino", 30), ("free", 25)), maxScore = 50)
+      .withColumn("pred_lang", TA.langId(col("txt")))
+      .withColumn("qual_ok",
+        TA.topNgramFraction(col("txt"), 2) < 0.18 &&
+          TA.dupNgramFraction(col("txt"), 3) < 0.30 &&
+          TA.c4DocKeep(col("txt")))
+      .localCheckpoint()
+    val s2 = Urls.dedupByUrl(enriched.filter(col("url_keep")), "doc_id", "url")
+      .filter(col("canonical_id") === col("doc_id"))
+      .localCheckpoint()
     val s4 = s2.filter(col("pred_lang") === "en" && col("qual_ok"))
-    val pairs = tap("near_dup", () =>
-      Dedup.nearDupPairs(s4.select(col("doc_id"), col("txt")),
-        "doc_id", "txt", threshold = 0.8, bands = 32))
-    val s5 = tap("drop_pairs", () =>
-      s4.join(pairs.select(col("id_b").as("doc_id")).distinct(),
+    val pairs = Dedup.nearDupPairs(s4.select(col("doc_id"), col("txt")),
+      "doc_id", "txt", threshold = 0.8, bands = 32)
+    val s5 = s4.join(pairs.select(col("id_b").as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
-        .localCheckpoint())
-    val sub = tap("substr", () =>
-      Dedup.exactSubstrDedup(s5.select(col("doc_id"), col("txt")),
-          "doc_id", "txt", w = 8)
-        .select(col("doc_id"), col("dup_windows"), col("removed_tokens"),
-          when(col("kept_text") === "", lit(0))
-            .otherwise(size(split(col("kept_text"), " ")))
-            .cast("int").as("n_tokens"))
-        .localCheckpoint())
-    val s7 = tap("cap", () =>
-      Sampling.capPerKey(
+      .localCheckpoint()
+    val sub = Dedup.exactSubstrDedup(s5.select(col("doc_id"), col("txt")),
+        "doc_id", "txt", w = 8)
+      .select(col("doc_id"), col("dup_windows"), col("removed_tokens"),
+        when(col("kept_text") === "", lit(0))
+          .otherwise(size(split(col("kept_text"), " ")))
+          .cast("int").as("n_tokens"))
+      .localCheckpoint()
+    val s7 = Sampling.capPerKey(
         s5.select("doc_id", "url_host").join(sub, "doc_id"),
         "doc_id", "url_host", cap = 8)
-        .localCheckpoint())
-    val s8 = tap("budget", () =>
-      Sampling.budgetSelect(s7.select(col("doc_id"), col("n_tokens")),
-        "doc_id", "n_tokens", budgetTokens = 5000L))
+      .localCheckpoint()
+    val s8 = Sampling.budgetSelect(s7.select(col("doc_id"), col("n_tokens")),
+      "doc_id", "n_tokens", budgetTokens = 5000L)
     // Final membership assembly, restructured in r19 (guide §2.4 — fewer
     // shuffles): the old shape LEFT-JOINED enriched against five
     // doc-keyed frames (four membership flags + the substr columns) —

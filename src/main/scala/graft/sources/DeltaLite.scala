@@ -621,11 +621,10 @@ object DeltaLite {
         reader.schema(toPhysicalSchema(dropPart(logical.get))).parquet(paths: _*)
       case Some("id") =>
         // resolve by parquet field id: the requested schema already uses
-        // logical names, so no rename pass is needed afterwards. The conf
-        // only affects reads whose requested schema carries field-id
-        // metadata, so leaving it enabled is safe for unrelated scans.
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        reader.schema(toIdSchema(dropPart(logical.get))).parquet(paths: _*)
+        // logical names, so no rename pass is needed afterwards
+        PathNorm.byFieldId(spark)(s =>
+          (if (needPv) s.read else s.read.option("basePath", table))
+            .schema(toIdSchema(dropPart(logical.get))).parquet(paths: _*))
       case Some(other) =>
         sys.error(s"unsupported delta.columnMapping.mode $other")
     }

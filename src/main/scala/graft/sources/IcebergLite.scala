@@ -578,10 +578,9 @@ object IcebergLite {
       case Some(sch) =>
         // resolve columns by parquet field id under the CURRENT schema's
         // names — renamed columns read correctly from files written under
-        // the old name (the conf only affects reads whose requested schema
-        // carries field-id metadata)
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        reader.schema(sch).parquet(files.data.map(f => stripScheme(f.path)): _*)
+        // the old name
+        PathNorm.byFieldId(spark)(_.read.option("basePath", table)
+          .schema(sch).parquet(files.data.map(f => stripScheme(f.path)): _*))
       case None =>
         reader.parquet(files.data.map(f => stripScheme(f.path)): _*)
     }
@@ -662,9 +661,9 @@ object IcebergLite {
     val filtered = where
       .map(c => result.filter(org.apache.spark.sql.functions.expr(c)))
       .getOrElse(result)
-    // don't leak parquet.field.id metadata to callers (fieldId.read stays
-    // set session-wide; a caller re-using this schema against id-less
-    // files would otherwise fail resolution) — identity for plain reads
+    // don't leak parquet.field.id metadata to callers (a caller re-using
+    // this schema against id-less files with fieldId.read enabled would
+    // otherwise fail resolution) — identity for plain reads
     PathNorm.stripFieldIds(filtered)
   }
 

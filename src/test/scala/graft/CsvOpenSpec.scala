@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.TypeInference
 import graft.sources.FileSources
 import graft.sources.FileSources.CsvOpts
+import graft.tools.SparkJobs
 
 /** The one-job CSV open against the open it replaced: the quote-parity
   * sniff, Spark's own header job and `limit(sampleSize).collect()`. Parser

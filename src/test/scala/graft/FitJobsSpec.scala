@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Dsir, NgramLm, QualityModel}
 import graft.sources.Tables
+import graft.tools.{Profile, SparkJobs}
 
-/** Spark job counts of the eager model fits and of the CCNet pipeline,
-  * on sf0.001 `documents` with AQE on (each shuffle stage then runs as a
-  * job of its own). A fit that gains a job, or a pipeline that goes back
+/** Spark job counts of the eager model fits and of the CCNet and
+  * RefinedWeb pipelines, on sf0.001 `documents` with AQE on (each shuffle
+  * stage then runs as a job of its own). A fit that gains a job, or a pipeline that goes back
   * to one job chain per model, fails here. A change that moves a count on
   * purpose updates the pin and says why.
   */
@@ -30,15 +31,18 @@ class FitJobsSpec extends AnyFunSuite {
     "spark.sql.shuffle.partitions" -> "4",
     "spark.sql.autoBroadcastJoinThreshold" -> "10485760")
 
-  private def jobs[T](body: => T): (T, Int) = {
+  private def withConfs[T](body: => T): T = {
     val prev = Confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
     Confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try SparkJobs.during(spark.sparkContext)(body)
+    try body
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  private def jobs[T](body: => T): (T, Int) =
+    withConfs(SparkJobs.during(spark.sparkContext)(body))
 
   // built inside each counted block: the read takes its schema from the
   // parquet footer, which is no job
@@ -56,6 +60,25 @@ class FitJobsSpec extends AnyFunSuite {
     // run: the LM's per-document scores joined to one projection of
     // language ID and the quality keep. It was 12 with a join per model.
     assert(run == 9)
+  }
+
+  test("Profile reports td_pipeline_ccnet's pinned jobs, each with its call site") {
+    val m = withConfs(Profile.measure(spark, SfDir, "td_pipeline_ccnet"))
+    assert(m.buildJobs.size == 5 && m.runJobs.size == 9 &&
+      (m.buildJobs ++ m.runJobs).forall(_.contains(".scala:")),
+      s"build ${m.buildJobs} run ${m.runJobs}")
+  }
+
+  test("td_pipeline_refinedweb: build plus collect") {
+    val (df, build) = jobs(SparkEntry.queries("td_pipeline_refinedweb")(spark, SfDir))
+    val (rows, run) = jobs(df.collect())
+    assert(rows.nonEmpty)
+    // build: the stage checkpoints and each stage's own jobs. The cap
+    // stage's checkpoint runs 9 or 10 jobs from one build to the next
+    // with the same data, so the total is 34 or 35.
+    assert(build == 34 || build == 35, s"build $build")
+    // run: the membership fold over the checkpointed stages
+    assert(run == 6)
   }
 
   test("NgramLm.fit: one checkpointed count pass and the token total") {

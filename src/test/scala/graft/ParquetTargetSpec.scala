@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.repl.TaskConfig
+import graft.tools.SparkJobs
 import graft.write.{Modes, ParquetTarget}
 
 /** `ParquetTarget` reads its state from the footers of its data files:

@@ -98,6 +98,10 @@ class PlanInvariantSpec extends AnyFunSuite {
       Map("shingles" -> 3)),
     ("td_dedup_embed", query("td_dedup_embed"), Seq(3, 1, 1, 0, 0, 0),
       Map("lshpostingsexpr" -> 1)),
+    // the stages are checkpointed in the build, so the final plan is the
+    // membership fold over their outputs and runs no kernel
+    ("td_pipeline_refinedweb", query("td_pipeline_refinedweb"),
+      Seq(3, 0, 1, 0, 0, 0), Map.empty),
     // the count passes, materialized before any query reads them. Each
     // kernel sits inside the explode that consumes it, so no inferred
     // guard re-runs it; the tokenizer runs once per union branch (uni, bi

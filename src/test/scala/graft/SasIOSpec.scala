@@ -32,7 +32,8 @@ class SasIOSpec extends AnyFunSuite {
       .select(col("k"), col("name"), when(isnan(col("v")), lit(null)).otherwise(col("v")).as("v"))
   }
 
-  private def scratch(n: String) = s"/root/repo/target/graft-scratch/sas_$n"
+  private def scratch(n: String) =
+    new java.io.File(s"target/graft-scratch/sas_$n").getAbsolutePath
 
   test("write -> read roundtrip, 32-bit uncompressed") {
     val p = scratch("rt32") + "/t.sas7bdat"
