@@ -1,8 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.expressions.{MinHashBands, MinHashBandsExpr, Shingles}
 
 /** Document deduplication for large-scale text corpora.
   *
@@ -10,21 +17,20 @@ import org.apache.spark.sql.functions._
   * api/spec.go:344-346). All are designed around shuffles that stay
   * proportional to candidate pairs, not O(n²):
   *   - exact: one hash-groupBy;
-  *   - MinHash+LSH: signature agg → band explode → bucket self-join (only
-  *     docs sharing a band collide) → exact-Jaccard verification of the
-  *     candidates. At 100 TB the bucket join is the only shuffle and AQE
-  *     splits skewed buckets.
+  *   - MinHash+LSH ([[nearDupPairs]]): an identical-text window over one
+  *     md5 shuffle, then one shuffle of the band rows; candidates are
+  *     verified inside each sorted band run, so there is no pair join.
   */
 object Dedup {
 
-  /** Widen under-parallel inputs before per-row-heavy work (shingling,
-    * signatures): a corpus arriving as one small file plans as ONE input
+  /** The partition count to widen an under-parallel input to, if it is
+    * one: a corpus arriving as one small file plans as ONE input
     * partition, serializing everything up to the first shuffle. Only
-    * widens when the scan's parallelism is below the session default —
-    * at real scale (many files/splits) this is a no-op, so no shuffle of
+    * under-parallel scans (below the session default parallelism) widen —
+    * at real scale (many files/splits) this is None, so no shuffle of
     * the full corpus is ever added where it wasn't needed.
     */
-  private def widen(df: DataFrame): DataFrame = {
+  private def widenTarget(df: DataFrame): Option[Int] = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     // Estimate the scan's parallelism from logical-plan statistics (file
@@ -45,8 +51,12 @@ object Dedup {
     val estParts =
       if (statsUnknown) df.rdd.getNumPartitions.toLong
       else (sizeBytes / maxPartBytes).toLong + 1
-    if (estParts < target) df.repartition(target) else df
+    Option.when(estParts < target)(target)
   }
+
+  /** [[widenTarget]] as a round-robin repartition. */
+  private[graft] def widen(df: DataFrame): DataFrame =
+    widenTarget(df).fold(df)(df.repartition(_))
 
   /** Distinct token n-gram shingles of a whitespace-tokenized text column.
     * Compiled single-pass kernel ([[graft.functions.expressions.TextGrams
@@ -65,71 +75,17 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash LSH band hashes per doc, one row per band:
-    * (__id, __band_idx, __band_hash).
-    *
-    * Each shingle string is hashed ONCE; the k per-permutation hashes are
-    * xxhash64 over that fixed-width long (a few ns each, vs k full string
-    * hashes).
-    *
-    * Measured history of this stage's shape: r15 tried k separate
-    * `array_min(transform(__hs, h => xxhash64(h, i)))` projection columns
-    * — 1.7x SLOWER at sf0.1 (6.6s vs 3.8s) because 64 array-loop
-    * expressions in one operator overflow the codegen method-size limit
-    * and the stage fell back to interpreted eval; r15-r17 shipped
-    * explode → groupBy(id) with k min-aggregates (codegen'd, but k
-    * agg-buffer updates per shingle + one Exchange of the k-column
-    * signature set); r18's single fused kernel call has neither the
-    * method-size blowup nor the Exchange.
-    */
-  private[graft] def signatures(df: DataFrame, idCol: String, textCol: String,
-      n: Int, bands: Int, rowsPerBand: Int): DataFrame =
-    // fused compiled kernel ([[graft.functions.expressions.MinHashBands]])
-    // since r18: same per-permutation minima and band hashes, term for
-    // term, computed in ONE projection — the explode → groupBy(__id)
-    // with k min-aggregates shape this replaces paid k agg-buffer
-    // updates per shingle AND one Exchange of the |docs|·k signature
-    // columns; the kernel removes that Exchange outright (guide §2.4).
-    df.select(col(idCol).as("__id"),
-      posexplode(graft.functions.expressions.MinHashBands.minhash_bands(
-        shingleCol(col(textCol), n), bands, rowsPerBand))
-        .as(Seq("__band_idx", "__band_hash")))
-
-  /** Near-duplicate pairs with exact Jaccard >= threshold, found via
-    * MinHash-LSH candidate generation then exact verification.
-    *
-    * EXACT-duplicate texts (same md5) collapse to their min-id
-    * representative BEFORE signatures: web corpora carry huge
-    * identical-text groups (boilerplate pages), and every member of such
-    * a group collides in every LSH band — C(N,2) candidate and output
-    * pairs for one group of N. Each group instead emits N−1 star edges
-    * (rep, member, 1.0) and only representatives are signed, banded, and
-    * verified — candidate and output rows linear in group size, the
-    * per-group signature work paid once, and connected components over
-    * the edge list (the keep/drop decision) unchanged: the star spans
-    * what the clique spanned and the rep carries the group's cross-group
-    * edges. NULL texts form one identical group like any other (the
-    * collapse join is null-safe, so they star-collapse instead of
-    * silently vanishing); their representative carries no shingles and
-    * never matches real text. CAVEAT for crawl corpora with many failed
-    * extractions: those star edges carry jaccard = 1.0 BY FIAT (two
-    * null-text documents are "identical"), so downstream connected
-    * components will keep one failed extraction and drop the rest — run
-    * an emptiness/length gate ahead of this operator if that is not the
-    * intent ([[embedNearDupPairs]] instead EXCLUDES degenerate vectors,
-    * because cosine is undefined for them; null TEXT equality is
-    * well-defined, hence the asymmetry — see README "Pair-list
-    * contract"). Output: (id_a, id_b, jaccard), id_a < id_b.
-    */
-  /** Generic identical-key representative collapse shared by the
-    * near-dup family: group `rows` (which must carry an `__id` column)
+  /** Generic identical-key representative collapse for the embedding and
+    * multimodal near-dup operators ([[embedNearDupPairs]],
+    * [[Multimodal]]): group `rows` (which must carry an `__id` column)
     * by `keyCol` NULL-SAFELY (a null key is one group like any other —
     * an equi-join would silently drop those rows from the pair
     * universe), take the min-id representative per group, and return
     * (reps, star): the representative rows (full original columns) and
     * the (id_a = rep, id_b = member) edges for collapsed members. The
     * collapse join is localCheckpoint-materialized because every caller
-    * feeds it to 2-3 plan subtrees. */
+    * feeds it to 2-3 plan subtrees. [[nearDupPairs]] collapses with one
+    * window instead, because its single band pass is the only consumer. */
   private[graft] def collapseByKey(rows: DataFrame,
       keyCol: String): (DataFrame, DataFrame) = {
     // rename the aggregated key: groupBy preserves the grouping
@@ -146,28 +102,162 @@ object Dedup {
     (reps, star)
   }
 
-  /** Default banding (16x4) targets high-margin corpora: recall ~1-1.5e-7 at
+  /** Near-duplicate pairs with exact Jaccard >= threshold over distinct
+    * token `n`-gram shingles, found by MinHash-LSH candidate generation
+    * and exact verification. Output: (id_a, id_b, jaccard), id_a < id_b.
+    * Ids must be unique and non-NULL; a row with a NULL id takes no part.
+    *
+    * EXACT-duplicate texts (same md5) collapse to their min-id
+    * representative BEFORE banding: web corpora carry huge
+    * identical-text groups (boilerplate pages), and every member of such
+    * a group collides in every LSH band — C(N,2) candidate and output
+    * pairs for one group of N. Each group instead emits N−1 star edges
+    * (rep, member, 1.0) and only representatives are signed, banded, and
+    * verified — candidate and output rows linear in group size, the
+    * per-group signature work paid once, and connected components over
+    * the edge list (the keep/drop decision) unchanged: the star spans
+    * what the clique spanned and the rep carries the group's cross-group
+    * edges. NULL texts form one identical group like any other (a window
+    * partition on a NULL md5 is one group, so they star-collapse instead
+    * of silently vanishing); their representative's only shingle is NULL
+    * and never matches real text. CAVEAT for crawl corpora with many failed
+    * extractions: those star edges carry jaccard = 1.0 BY FIAT (two
+    * null-text documents are "identical"), so downstream connected
+    * components will keep one failed extraction and drop the rest — run
+    * an emptiness/length gate ahead of this operator if that is not the
+    * intent ([[embedNearDupPairs]] instead EXCLUDES degenerate vectors,
+    * because cosine is undefined for them; null TEXT equality is
+    * well-defined, hence the asymmetry — see README "Pair-list
+    * contract").
+    *
+    * Plan: two shuffles and no join, and building it runs no Spark job.
+    *   1. `min(id) OVER (PARTITION BY md5(text))` names each row's
+    *      representative. An under-parallel input is widened by a
+    *      repartition on the md5, which is then also the window's shuffle.
+    *   2. Each representative emits one row per band,
+    *      (band_idx, band_hash, id, text); each collapsed member emits one
+    *      row with band_idx -1 that carries its representative. The rows
+    *      are hash-partitioned by (band_idx, band_hash) and sorted by
+    *      (band_hash, band_idx, id) within each partition (the band hash
+    *      first, so the sort's prefix tells almost all rows apart).
+    *   3. One pass per partition walks the runs of equal
+    *      (band_idx, band_hash) ([[verifyRuns]]): every pair of a run is a
+    *      candidate, verified by exact Jaccard and emitted only from the
+    *      FIRST band in which the two signatures agree, so no `distinct`
+    *      is needed. Member rows pass through as star edges.
+    *
+    * Bucket bound: the pass holds one run (one bucket) in memory at a
+    * time and verifies all of its pairs, O(run²) work, as the per-bucket
+    * work of a band self-join was. Identical texts are collapsed first, so
+    * a large run is a large family of near-identical but distinct texts.
+    *
+    * Bytes trade: every band row carries its document's text, so the band
+    * shuffle writes about bands × text bytes per representative (32 bands
+    * for RefinedWeb). That replaces the band rows, the `distinct` and the
+    * two verify joins onto the shingle sets of a join plan. On short
+    * documents the bytes are about equal: 6.25 MB against 6.15 MB for the
+    * join plan on 5000 documents of ~300 bytes (`td_dedup_near` at
+    * sf0.1). They grow with text length × bands.
+    *
+    * Default banding (16x4) targets high-margin corpora: recall ~1-1.5e-7 at
     * J=0.89 while J<=0.1 background yields ~0 candidates per pair; raise
     * bands/rows for thresholds close to the background similarity.
     */
   def nearDupPairs(df0: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3, bands: Int = 16, rowsPerBand: Int = 4): DataFrame = {
-    val df = widen(df0)
-    val hashed = df.select(col(idCol).as("__id"), col(textCol).as("__t"),
-      md5(col(textCol)).as("__ch"))
-    val (repRows, starBase) = collapseByKey(hashed, "__ch")
-    val star = starBase.withColumn("jaccard", lit(1.0))
-    val reps = repRows.select(col("__id").as(idCol), col("__t").as(textCol))
-    val buckets = signatures(reps, idCol, textCol, n, bands, rowsPerBand)
-    val cands = buckets.as("a").join(buckets.as("b"),
-        col("a.__band_idx") === col("b.__band_idx") &&
-          col("a.__band_hash") === col("b.__band_hash") &&
-          col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .distinct()
-    val sets = reps.select(col(idCol).as("__id"),
-      shingleCol(col(textCol), n).as("__shingles"))
-    verifyPairs(cands, sets, threshold).unionByName(star)
+    // min(id) skips NULL ids, so dropping them first names the same reps
+    val hashed = df0.select(col(idCol).as("__id"), col(textCol).as("__t"),
+        md5(col(textCol)).as("__ch"))
+      .filter(col("__id").isNotNull)
+    // an under-parallel input gets an explicit width in both shuffles:
+    // AQE would coalesce these small shuffles into one task, and the
+    // kernels and the verify pass would then run on one core
+    val width = widenTarget(df0)
+    val keyed = width.fold(hashed)(hashed.repartition(_, col("__ch")))
+    val isRep = col("__id") === col("__rep")
+    val rows = keyed
+      .withColumn("__rep", min("__id").over(Window.partitionBy("__ch")))
+      .select(col("__id"), col("__rep"), when(isRep, col("__t")).as("__t"),
+        posexplode(when(isRep, MinHashBands.minhash_bands(
+            shingleCol(col("__t"), n), bands, rowsPerBand))
+          .otherwise(array(xxhash64(col("__id")))))
+          .as(Seq("__bi", "__bh")))
+      .select(when(isRep, col("__bi")).otherwise(lit(-1)).as("__bi"),
+        col("__bh"), col("__id"), col("__rep"), col("__t"))
+    val idType = hashed.schema("__id").dataType
+    val out = StructType(Seq(StructField("id_a", idType),
+      StructField("id_b", idType), StructField("jaccard", DoubleType)))
+    val bandKey = Seq(col("__bi"), col("__bh"))
+    width.fold(rows.repartition(bandKey: _*))(rows.repartition(_, bandKey: _*))
+      .sortWithinPartitions("__bh", "__bi", "__id")
+      .mapPartitions(verifyRuns(_, threshold, n, bands, rowsPerBand))(
+        Encoders.row(out))
+  }
+
+  /** The per-partition pass of [[nearDupPairs]] over rows
+    * (band_idx, band_hash, id, rep, text) sorted so that rows of equal
+    * (band_idx, band_hash) form one run, in id order. A band_idx -1 row is
+    * a collapsed member: (rep, id, 1.0). Within a run, each pair with
+    * id_a < id_b is kept when its Jaccard, computed as
+    * `size(array_intersect) / size(array_union)` over the [[Shingles]]
+    * kernel's sets (a NULL element equals a NULL element), reaches
+    * `threshold`, and this band is the first in which the two
+    * [[MinHashBandsExpr]] band hashes agree. The band hashes are
+    * recomputed for those pairs only, in band order and only up to the
+    * first agreeing band. */
+  private def verifyRuns(rows: Iterator[Row], threshold: Double, n: Int,
+      bands: Int, rowsPerBand: Int): Iterator[Row] = {
+    val shingles = Shingles(Literal(null, StringType), n)
+    val bander = MinHashBandsExpr(Literal(null, ArrayType(StringType)),
+      bands, rowsPerBand)
+    def pairs(run: ArrayBuffer[Row], band: Int): Iterator[Row] = {
+      val grams = run.map(r => shingles.compute(UTF8String.fromString(r.getString(4))))
+      val sets = grams.map { g =>
+        val s = new java.util.HashSet[UTF8String](g.numElements() * 2)
+        for (k <- 0 until g.numElements()) s.add(g.getUTF8String(k))
+        s
+      }
+      def jaccard(i: Int, j: Int): Double = {
+        val (small, large) =
+          if (sets(i).size <= sets(j).size) (sets(i), sets(j)) else (sets(j), sets(i))
+        var inter = 0
+        small.forEach(g => if (large.contains(g)) inter += 1)
+        inter.toDouble / (sets(i).size + sets(j).size - inter)
+      }
+      // each member's band hashes, computed in band order only as far as
+      // a check needs them: most pairs agree in band 0 or 1
+      val bases = new Array[Array[Long]](run.size)
+      val known = new Array[Int](run.size)
+      val hashes = Array.ofDim[Long](run.size, bands)
+      def bandOf(i: Int, c: Int): Long = {
+        if (bases(i) == null) bases(i) = bander.bases(grams(i))
+        while (known(i) <= c) {
+          hashes(i)(known(i)) = bander.bandHash(bases(i), known(i))
+          known(i) += 1
+        }
+        hashes(i)(c)
+      }
+      def firstCommonBand(i: Int, j: Int): Int =
+        (0 to band).indexWhere(c => bandOf(i, c) == bandOf(j, c))
+      val id = run.map(_.get(2))
+      for {
+        i <- run.indices.iterator
+        j <- (i + 1 until run.size).iterator if id(i) != id(j)
+        sim = jaccard(i, j) if sim >= threshold && firstCommonBand(i, j) == band
+      } yield Row(id(i), id(j), sim)
+    }
+    val in = rows.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val head = in.next()
+      val (band, hash) = (head.getInt(0), head.getLong(1))
+      if (band < 0) Iterator.single(Row(head.get(3), head.get(2), 1.0))
+      else {
+        val run = ArrayBuffer(head)
+        while (in.hasNext && in.head.getInt(0) == band && in.head.getLong(1) == hash)
+          run += in.next()
+        if (run.size < 2) Iterator.empty else pairs(run, band)
+      }
+    }
   }
 
   /** Paragraph-granularity fuzzy dedup (RefinedWeb §3.2 / Dolma run
@@ -190,8 +280,8 @@ object Dedup {
     * whichever row wins — uniqueness is the corpus contract, not
     * re-checked per operator). Scale shape is
     * [[nearDupPairs]] on the paragraph multiset: corpus-linear explode,
-    * one collapse groupBy (which absorbs the web's giant repeated-
-    * boilerplate groups as stars), banded join over representatives.
+    * one collapse window (which absorbs the web's giant repeated-
+    * boilerplate groups as stars), one band pass over representatives.
     *
     * NULL-text documents are DROPPED silently (split(NULL) yields a NULL
     * array, so posexplode emits no paragraph rows): unlike
@@ -216,8 +306,8 @@ object Dedup {
     val units = paras.select(
       // NULL guard too: a NULL id (or a non-numeric string id nulled by
       // the long cast) would make the range condition NULL, skip the
-      // raise, and pack every paragraph under a NULL pid — which the
-      // collapse's non-null-safe rep filter then silently drops,
+      // raise, and pack every paragraph under a NULL pid — which
+      // nearDupPairs then silently drops (a NULL id takes no part),
       // reporting an empty pair list instead of failing loudly
       when(col("__doc").isNull || col("__doc") < 0 ||
           col("__doc") >= (1L << 43) || col("__pidx") >= (1 << 20),
@@ -238,8 +328,8 @@ object Dedup {
   }
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against the
-    * full shingle sets — shared by the LSH and prefix-filter generators. */
-  private def verifyPairs(cands: DataFrame, sets: DataFrame,
+    * full shingle sets of the prefix-filter generator. */
+  private[graft] def verifyPairs(cands: DataFrame, sets: DataFrame,
       threshold: Double): DataFrame =
     cands
       .join(sets.select(col("__id").as("id_a"), col("__shingles").as("__sh_a")), "id_a")

@@ -2,7 +2,7 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -51,39 +51,59 @@ case class MinHashBandsExpr(child: Expression, bands: Int, rowsPerBand: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
-  def compute(arr: ArrayData): ArrayData = {
+  /** Per shingle, the base its permutation hashes chain from:
+    * xxhash64(xxhash64(shingle)). */
+  def bases(arr: ArrayData): Array[Long] = {
     val n = arr.numElements()
-    if (n == 0) return null
-    val k = bands * rowsPerBand
-    val mins = new Array[Long](k)
-    java.util.Arrays.fill(mins, Long.MaxValue)
+    val out = new Array[Long](n)
     var si = 0
     while (si < n) {
-      // __h = xxhash64(shingle): seed 42, null element leaves the seed
+      // __h = xxhash64(shingle): seed 42 over the UTF-8 bytes (binary
+      // collation), null element leaves the seed. XXH64 is called
+      // directly: the generic XxHash64Function.hash boxes its value and
+      // walks the data type for collations on every call
       val h =
         if (arr.isNullAt(si)) 42L
-        else XxHash64Function.hash(arr.getUTF8String(si), StringType, 42L)
+        else {
+          val s = arr.getUTF8String(si)
+          XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
+        }
       // xxhash64(__h, i) = hashInt(i, hashLong(__h, 42))
-      val base = XxHash64Function.hash(h, LongType, 42L)
-      var i = 0
-      while (i < k) {
-        val v = XxHash64Function.hash(i, IntegerType, base)
-        if (v < mins(i)) mins(i) = v
-        i += 1
-      }
+      out(si) = XXH64.hashLong(h, 42L)
       si += 1
     }
+    out
+  }
+
+  /** Band `b`'s hash over a document's [[bases]]: xxhash64(m_0, …,
+    * m_{r-1}), a hashLong chain from seed 42 over the minima of its
+    * `rowsPerBand` permutations. A band can be computed without the
+    * others, so a caller that needs only the first few pays for those. */
+  def bandHash(bases: Array[Long], b: Int): Long = {
+    var hb = 42L
+    var j = 0
+    while (j < rowsPerBand) {
+      val i = b * rowsPerBand + j
+      var m = Long.MaxValue
+      var si = 0
+      while (si < bases.length) {
+        val v = XXH64.hashInt(i, bases(si))
+        if (v < m) m = v
+        si += 1
+      }
+      hb = XXH64.hashLong(m, hb)
+      j += 1
+    }
+    hb
+  }
+
+  def compute(arr: ArrayData): ArrayData = {
+    if (arr.numElements() == 0) return null
+    val bs = bases(arr)
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
-      // xxhash64(m_0, …, m_{r-1}): hashLong chain from seed 42
-      var hb = 42L
-      var j = 0
-      while (j < rowsPerBand) {
-        hb = XxHash64Function.hash(mins(b * rowsPerBand + j), LongType, hb)
-        j += 1
-      }
-      out(b) = hb
+      out(b) = bandHash(bs, b)
       b += 1
     }
     new GenericArrayData(out)

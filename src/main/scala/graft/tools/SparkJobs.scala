@@ -5,12 +5,13 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The Spark jobs a block of code starts, each named by its call site, e.g.
-  * `localCheckpoint at TrainingData.scala:2306`. A job of a SQL execution
+  * `localCheckpoint at TrainingData.scala:2306`, and the shuffle bytes
+  * their stages write (the stage task metrics). A job of a SQL execution
   * takes the call site of the action that started the execution: adaptive
   * execution submits its stage jobs from a thread pool, where the stack
   * shows no user code. Any other job takes the name of its result stage.
@@ -24,17 +25,21 @@ object SparkJobs {
   // Description, which is package-private
   private val Description = "spark.job.description"
 
+  /** The call site of each job a block started, in start order, and the
+    * shuffle bytes written by the stages that completed. */
+  final case class Activity(callSites: Seq[String], shuffleWriteBytes: Long)
+
   /** The block's result and the number of jobs it started. */
   def during[T](sc: SparkContext)(body: => T): (T, Int) = {
-    val (out, sites) = callSites(sc)(body)
-    (out, sites.size)
+    val (out, a) = activity(sc)(body)
+    (out, a.callSites.size)
   }
 
-  /** The block's result and the call site of each job it started, in
-    * start order. */
-  def callSites[T](sc: SparkContext)(body: => T): (T, Seq[String]) = {
-    // (description, call site) per started job
-    val seen = new LinkedBlockingQueue[(String, String)]()
+  /** The block's result and what its jobs did. */
+  def activity[T](sc: SparkContext)(body: => T): (T, Activity) = {
+    // Left(description, call site) per started job, Right(shuffle bytes)
+    // per completed stage, in bus order
+    val seen = new LinkedBlockingQueue[Either[(String, String), Long]]()
     val listener = new SparkListener {
       // execution id → the call site of its root execution; the bus calls
       // a listener from one thread
@@ -55,8 +60,12 @@ object SparkJobs {
           // the result stage is created after its parents, so it has the
           // highest id among the job's stages
           .getOrElse(e.stageInfos.maxBy(_.stageId).name)
-        seen.add((property(Description).getOrElse(""), site))
+        seen.add(Left((property(Description).getOrElse(""), site)))
       }
+
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        seen.add(Right(Option(e.stageInfo.taskMetrics)
+          .fold(0L)(_.shuffleWriteMetrics.bytesWritten)))
     }
     def marker(): Unit = {
       val prev = sc.getLocalProperty(Description)
@@ -64,15 +73,18 @@ object SparkJobs {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setJobDescription(prev)
     }
-    def awaitMarker(): Seq[String] = {
-      val before = Seq.newBuilder[String]
-      var job = seen.poll(60, TimeUnit.SECONDS)
-      while (job == null || job._1 != Marker) {
-        require(job != null, "the listener bus did not deliver the marker job")
-        before += job._2
-        job = seen.poll(60, TimeUnit.SECONDS)
+    def awaitMarker(): Activity = {
+      val sites = Seq.newBuilder[String]
+      var bytes = 0L
+      var done = false
+      while (!done) seen.poll(60, TimeUnit.SECONDS) match {
+        case null => throw new IllegalStateException(
+          "the listener bus did not deliver the marker job")
+        case Left((Marker, _)) => done = true
+        case Left((_, site)) => sites += site
+        case Right(written) => bytes += written
       }
-      before.result()
+      Activity(sites.result(), bytes)
     }
     sc.addSparkListener(listener)
     try {

@@ -621,7 +621,7 @@ class KernelEquivalenceSpec extends AnyFunSuite {
           .as("__bands"))
       .select(col("__id"),
         posexplode(col("__bands")).as(Seq("__band_idx", "__band_hash")))
-    val direct = Dedup.signatures(idTexts, "id", "text", 3, 16, 4)
+    val direct = refSignatures(idTexts, "id", "text", 3, 16, 4)
     assert(multiset(direct) == multiset(old))
   }
 
@@ -996,5 +996,144 @@ class KernelEquivalenceSpec extends AnyFunSuite {
         1024)) == weighted(r20ImportanceWeights(raw, target, "doc_id", "text",
         1024)), s"$name importance weights")
     }
+  }
+
+  // The near-dup join plan that the banded pass replaced, verbatim: an md5
+  // collapse (groupBy, join back, checkpoint), a band self-join, distinct,
+  // and two verify joins onto the shingle sets.
+
+  private def refSignatures(df: DataFrame, idCol: String, textCol: String,
+      n: Int, bands: Int, rowsPerBand: Int): DataFrame =
+    df.select(col(idCol).as("__id"),
+      posexplode(graft.functions.expressions.MinHashBands.minhash_bands(
+        graft.functions.Dedup.shingleCol(col(textCol), n), bands, rowsPerBand))
+        .as(Seq("__band_idx", "__band_hash")))
+
+  private def refNearDupPairs(df0: DataFrame, idCol: String, textCol: String,
+      threshold: Double, n: Int = 3, bands: Int = 16,
+      rowsPerBand: Int = 4): DataFrame = {
+    import graft.functions.Dedup.{collapseByKey, shingleCol, verifyPairs, widen}
+    val df = widen(df0)
+    val hashed = df.select(col(idCol).as("__id"), col(textCol).as("__t"),
+      md5(col(textCol)).as("__ch"))
+    val (repRows, starBase) = collapseByKey(hashed, "__ch")
+    val star = starBase.withColumn("jaccard", lit(1.0))
+    val reps = repRows.select(col("__id").as(idCol), col("__t").as(textCol))
+    val buckets = refSignatures(reps, idCol, textCol, n, bands, rowsPerBand)
+    val cands = buckets.as("a").join(buckets.as("b"),
+        col("a.__band_idx") === col("b.__band_idx") &&
+          col("a.__band_hash") === col("b.__band_hash") &&
+          col("a.__id") < col("b.__id"))
+      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
+      .distinct()
+    val sets = reps.select(col(idCol).as("__id"),
+      shingleCol(col(textCol), n).as("__shingles"))
+    verifyPairs(cands, sets, threshold).unionByName(star)
+  }
+
+  private def bandArray(text: String): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.ArrayType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.expressions.{MinHashBandsExpr, Shingles}
+    val grams = Shingles(Literal(null, StringType), 3)
+      .compute(UTF8String.fromString(text))
+    MinHashBandsExpr(Literal(null, ArrayType(StringType)), 16, 4)
+      .compute(grams).toLongArray().toSeq
+  }
+
+  private def commonBands(a: String, b: String): Seq[Int] =
+    bandArray(a).zip(bandArray(b)).zipWithIndex
+      .collect { case ((x, y), i) if x == y => i }
+
+  /** Ids 1.. over NULL, empty, short and double-spaced texts, a 200-member
+    * identical group, a pair with equal shingle sets (every band
+    * collides), a pair that collides in the last band only, a 500-member
+    * family with equal shingle sets (one 500-member run per band) and a
+    * 60-member family of one long text plus a distinct last token each. */
+  private def nearDupCorpus: DataFrame = {
+    import spark.implicits._
+    val words = (1 to 30).map(i => s"q$i")
+    val base = words.mkString(" ")
+    // replace three words, chosen by seed, until the pair shares band 15 only
+    val lastBandOnly = Iterator.from(1).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val swap = Seq.fill(3)(rnd.nextInt(words.size)).toSet
+      words.zipWithIndex.map { case (w, i) => if (swap(i)) s"r$seed" + w else w }
+        .mkString(" ")
+    }.find(commonBands(base, _) == Seq(15)).get
+    val cycle = (1 to 20).map(i => s"c$i")
+    val cyclic = (22 until 522).map(len =>
+      Iterator.continually(cycle).flatten.take(len).mkString(" "))
+    val long = (1 to 200).map(i => s"f$i").mkString(" ")
+    val texts: Seq[Option[String]] =
+      Seq(None, None, None, Some(""), Some(""), Some("a"), Some("a b"),
+        Some("x y"), Some("a  b  c d"), Some("a  b  c d e"), Some("  "),
+        Some("a b c a b c"), Some("a b c a b c a b c"),
+        Some(base), Some(lastBandOnly)) ++
+      Seq.fill(200)(Some("identical group text one two three four")) ++
+      cyclic.map(Some(_)) ++
+      (1 to 60).map(i => Some(s"$long u$i"))
+    texts.zipWithIndex.map { case (t, i) => (i + 1L, t) }.toDF("doc_id", "text")
+  }
+
+  private def assertSamePairs(name: String, got: DataFrame, ref: DataFrame): Unit = {
+    val (g, r) = (multiset(got), multiset(ref))
+    val same = g == r
+    assert(same, s"$name: ${g.size} rows vs ${r.size} in the reference; " +
+      s"only new ${g.diff(r).take(5)} only reference ${r.diff(g).take(5)}")
+  }
+
+  test("nearDupPairs == the join plan on sf0.001 documents (16 and 32 bands)") {
+    val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001", "documents")
+    for (bands <- Seq(16, 32))
+      assertSamePairs(s"bands $bands",
+        graft.functions.Dedup.nearDupPairs(docs, "doc_id", "text", 0.8, bands = bands),
+        refNearDupPairs(docs, "doc_id", "text", 0.8, bands = bands))
+  }
+
+  test("nearDupPairs == the join plan on an adversarial corpus") {
+    import graft.functions.Dedup
+    assert(commonBands("a b c a b c", "a b c a b c a b c") == (0 until 16))
+    val docs = nearDupCorpus.cache()
+    val runs = docs.select(posexplode(
+        graft.functions.expressions.MinHashBands.minhash_bands(
+          Dedup.shingleCol(col("text"), 3), 16, 4)).as(Seq("b", "h")))
+      .groupBy("b", "h").count()
+    assert(runs.agg(max("count")).head().getLong(0) >= 500)
+    for ((t, bands) <- Seq((0.8, 16), (0.3, 16), (0.8, 32))) {
+      val got = Dedup.nearDupPairs(docs, "doc_id", "text", t, bands = bands)
+      assertSamePairs(s"threshold $t bands $bands", got,
+        refNearDupPairs(docs, "doc_id", "text", t, bands = bands))
+      if (t == 0.3 && bands == 16)
+        // the pair that shares only its last band is found from that band
+        assert(got.filter(col("id_a") === 14 && col("id_b") === 15).count() == 1)
+    }
+    docs.unpersist()
+  }
+
+  test("paraNearDupPairs == the join plan over repeated boilerplate paragraphs") {
+    import spark.implicits._
+    val boiler = "boilerplate footer all rights reserved contact us"
+    // per doc: the footer twice, an own paragraph (empty for every 11th
+    // doc) and one of eight variants of a shared paragraph
+    val docs = (0L until 300L).map { d =>
+      val own = if (d % 11 == 0) "" else (1 to 12).map(i => s"d${d}w$i").mkString(" ")
+      val near = "shared paragraph with a tail " + (1 to 10).mkString(" ") +
+        (if (d % 3 == 0) "" else s" t${d % 7}")
+      (d, Seq(boiler, own, near, boiler).mkString("\n"))
+    }.toDF("doc_id", "text")
+    val units = docs.select(col("doc_id").as("__doc"),
+        posexplode(split(col("text"), "\n")).as(Seq("__pidx", "__p")))
+      .filter(col("__p") =!= "")
+      .select((shiftleft(col("__doc"), 20) + col("__pidx")).as("__pid"), col("__p"))
+    val ref = refNearDupPairs(units, "__pid", "__p", 0.8)
+      .select(shiftright(col("id_a"), 20).as("doc_a"),
+        col("id_a").bitwiseAND(lit((1L << 20) - 1)).cast("int").as("para_a"),
+        shiftright(col("id_b"), 20).as("doc_b"),
+        col("id_b").bitwiseAND(lit((1L << 20) - 1)).cast("int").as("para_b"),
+        col("jaccard"))
+    assertSamePairs("paragraphs",
+      graft.functions.Dedup.paraNearDupPairs(docs, "doc_id", "text", 0.8), ref)
   }
 }

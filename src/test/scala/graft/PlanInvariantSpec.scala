@@ -78,9 +78,16 @@ class PlanInvariantSpec extends AnyFunSuite {
       Seq(3, 1, 1, 3, 1, 0),
       Map("langidoopexpr" -> 1, "bigrampairs" -> 1, "bucketweightsum" -> 1,
         "wstokens" -> 2)),
-    // shingles: once under the signature kernel, once for verification
-    ("td_dedup_near", query("td_dedup_near"), Seq(6, 2, 3, 0, 0, 0),
-      Map("minhashbandsexpr" -> 1, "shingles" -> 2)),
+    // one banded pass: the md5 shuffle under the collapse window, the
+    // band shuffle and the final orderBy (Exchange 6 → 3). Candidates are
+    // verified inside each band run, so the band self-join and the two
+    // verify joins are gone (SortMergeJoin 3 → 0, ReusedExchange 2 → 0)
+    // and the shingles run once, under the signature kernel (2 → 1)
+    ("td_dedup_near", query("td_dedup_near"), Seq(3, 0, 0, 0, 0, 1),
+      Map("minhashbandsexpr" -> 1, "shingles" -> 1)),
+    // the same pass over paragraph units
+    ("td_dedup_para", query("td_dedup_para"), Seq(3, 0, 0, 0, 0, 1),
+      Map("minhashbandsexpr" -> 1, "shingles" -> 1)),
     // uni and bi are tag-filtered views of one materialized count table
     ("td_quality_ppl", query("td_quality_ppl"), Seq(3, 0, 1, 3, 0, 0),
       Map("bigrampairs" -> 1, "wstokens" -> 1)),
