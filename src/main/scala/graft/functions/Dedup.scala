@@ -77,25 +77,18 @@ object Dedup {
 
   /** Generic identical-key representative collapse for the embedding and
     * multimodal near-dup operators ([[embedNearDupPairs]],
-    * [[Multimodal]]): group `rows` (which must carry an `__id` column)
-    * by `keyCol` NULL-SAFELY (a null key is one group like any other —
-    * an equi-join would silently drop those rows from the pair
-    * universe), take the min-id representative per group, and return
-    * (reps, star): the representative rows (full original columns) and
-    * the (id_a = rep, id_b = member) edges for collapsed members. The
-    * collapse join is localCheckpoint-materialized because every caller
-    * feeds it to 2-3 plan subtrees. [[nearDupPairs]] collapses with one
-    * window instead, because its single band pass is the only consumer. */
+    * [[Multimodal]]): `min(__id) OVER (PARTITION BY keyCol)` names each
+    * row's representative (`rows` must carry an `__id` column). A NULL
+    * key is one window partition like any other, so those rows stay in
+    * the pair universe. Returns (reps, star): the representative rows
+    * (full original columns) and the (id_a = rep, id_b = member) edges
+    * for collapsed members. Nothing is materialized here: a caller that
+    * feeds the result to several plan subtrees checkpoints its own
+    * input or output. */
   private[graft] def collapseByKey(rows: DataFrame,
       keyCol: String): (DataFrame, DataFrame) = {
-    // rename the aggregated key: groupBy preserves the grouping
-    // attribute, so joining rows to its own aggregate on the same name
-    // would be an ambiguous self-join reference
-    val groups = rows.groupBy(keyCol).agg(min("__id").as("__rep"))
-      .withColumnRenamed(keyCol, "__gk")
-    val tagged = rows.join(groups, col(keyCol) <=> col("__gk"))
-      .drop("__gk")
-      .localCheckpoint()
+    val tagged = rows.withColumn("__rep",
+      min("__id").over(Window.partitionBy(col(keyCol))))
     val reps = tagged.filter(col("__id") === col("__rep")).drop("__rep")
     val star = tagged.filter(col("__id") =!= col("__rep"))
       .select(col("__rep").as("id_a"), col("__id").as("id_b"))
@@ -506,8 +499,12 @@ object Dedup {
       .select(col(idCol).as("__id"), col(vecCol).as("__v"))
     val (repRows, starBase) = collapseByKey(rows, "__v")
     val star = starBase.withColumn("cosine", lit(1.0))
+    // the postings feed both sides of the self-join: materialize them
+    // once, so the kernel runs once per representative (left to the
+    // planner, one side is broadcast and each side runs it)
     val posts = repRows.select(col("__id"), col("__v"),
       explode(Similarity.lshPostings(col("__v"), bits, tables)).as("__p"))
+      .localCheckpoint()
     posts.as("a").join(posts.as("b"),
         col("a.__p") === col("b.__p") && col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -577,10 +578,10 @@ object Multimodal {
 
   /** Shared tail of the single-hash near-dup operators (aHash, pHash,
     * audio fingerprint): materialize the (id, hash) frame ONCE (the
-    * decode lineage otherwise re-runs on both sides of the collapse
-    * join and again in the band join), collapse identical hashes to
-    * min-id representatives, banded-join the representatives, and
-    * re-attach the star edges. One implementation so a checkpoint or
+    * decode lineage otherwise re-runs under the representatives, the
+    * star edges and both sides of the band join), collapse identical
+    * hashes to min-id representatives, banded-join the representatives,
+    * and re-attach the star edges. One implementation so a checkpoint or
     * band-policy fix can never land in one matcher and miss another. */
   private def collapsedHashPairs(hashedWithNulls: DataFrame, idCol: String,
       hashCol: String, maxHamming: Int, nBands: Int): DataFrame = {
@@ -629,8 +630,8 @@ object Multimodal {
     * their min-`__id` representative ([[Dedup.collapseByKey]] — the one
     * shared collapse implementation). Returns (reps, star): one
     * representative row per distinct hash, plus (id_a=rep, id_b=member,
-    * hamming=0) star edges for the collapsed members. One hash-keyed
-    * groupBy + one hash-keyed join — linear in rows, never pairwise. */
+    * hamming=0) star edges for the collapsed members. One window on the
+    * hash — one shuffle, linear in rows, never pairwise. */
   private[graft] def hashCollapse(hashed: DataFrame): (DataFrame, DataFrame) = {
     val (repRows, starBase) = Dedup.collapseByKey(hashed, "__hash")
     (repRows.select("__id", "__hash"),
@@ -773,9 +774,8 @@ object Multimodal {
     val sigs = hashed.groupBy("__id").agg(
       sort_array(collect_list(struct(col("__fi"), col("__hash")))).as("__seq"),
       count(lit(1)).as("__nf"))
-    val groups = sigs.groupBy("__seq").agg(min("__id").as("__rep"))
-    val tagged = sigs.join(groups, "__seq")
-      .select(col("__id"), col("__nf"), col("__rep"))
+    val tagged = sigs.select(col("__id"), col("__nf"),
+      min("__id").over(Window.partitionBy(col("__seq"))).as("__rep"))
     val starBase = tagged.filter(col("__id") =!= col("__rep"))
       .select(col("__rep").as("id_a"), col("__id").as("id_b"), col("__nf"))
     val counts = tagged.filter(col("__id") === col("__rep"))

@@ -96,59 +96,43 @@ object Sampling {
     * and uncorrelated with crawl order (which would bias toward a
     * site's oldest pages).
     *
-    * Scale shape: one map-side-combinable count aggregate, one keyed
-    * count-attach join, and ONE window pass over a SYNTHETIC partition
-    * key — over-cap keys window on the real key, under-cap rows window
-    * on their own id (a unique partition each, so they rank 1 and pass
-    * untouched). The corpus is scanned twice (the aggregate and the
-    * join probe) and shuffled twice (count key, window key); the window
-    * never builds a per-key sort for the overwhelming majority of
-    * domains, only for genuinely over-cap keys. A pathological
-    * single-domain crawl still funnels that one domain through one
-    * window partition — the exact-k-smallest contract needs a per-key
-    * total order somewhere; cap the damage upstream with a rate-based
-    * [[sampleKeep]] pre-pass if one domain is a meaningful fraction of
-    * the corpus.
+    * Scale shape: one `row_number()` window on `keyCol` itself, ordered
+    * by (md5 prefix, id) and filtered to `<= cap`. Spark pushes that
+    * filter below the window exchange as a Partial `WindowGroupLimit`,
+    * so each map task ships at most `cap` rows per key: the shuffle is
+    * bounded by keys × tasks × cap, not by the corpus. `key_docs` comes
+    * from a map-side-combinable count aggregate and is joined onto the
+    * survivors only. The corpus is scanned twice (the count and the
+    * window). A single-domain crawl still funnels that domain's
+    * per-task top-`cap` rows through one window partition; cap it
+    * upstream with a rate-based [[sampleKeep]] pre-pass if one domain
+    * is a meaningful fraction of the corpus.
     *
     * Output: the input columns + `key_docs` (the key's total document
     * count); over-cap keys keep exactly `cap` rows.
     *
-    * NULL handling: NULL keys form one group like any other (their own
-    * `n:` window namespace — a real key whose string value collides
-    * with any sentinel still gets a distinct partition). Rows with a
-    * NULL id route through their KEY's window rather than a synthetic
-    * per-id partition (concat with a NULL id would merge every such row
-    * into one shared partition and silently over-drop); within an
-    * over-cap key, NULL ids sort first (md5 of NULL is NULL) and ties
-    * among multiple NULL-id rows are arbitrary — ids are the
-    * determinism contract, so give documents ids.
+    * NULL handling: NULL keys form one group like any other (one window
+    * partition, and a null-safe join for `key_docs`). Rows with a NULL
+    * id stay in their key's group; within an over-cap key they sort
+    * first (md5 of NULL is NULL) and ties among multiple NULL-id rows are
+    * arbitrary — ids are the determinism contract, so give documents
+    * ids.
     */
   def capPerKey(df: DataFrame, idCol: String, keyCol: String,
       cap: Int): DataFrame = {
     require(cap > 0, s"cap must be positive, got $cap")
-    val clash = df.columns.toSet.intersect(Set("key_docs", "__k", "__wk", "__rk"))
+    val clash = df.columns.toSet.intersect(Set("key_docs", "__k", "__rk"))
     require(clash.isEmpty,
-      s"capPerKey appends key_docs (and uses __k/__wk/__rk internally); " +
+      s"capPerKey appends key_docs (and uses __k/__rk internally); " +
         s"the input already carries ${clash.mkString(", ")} — rename first")
     import org.apache.spark.sql.expressions.Window
     val counts = df.groupBy(col(keyCol).as("__k"))
       .agg(count(lit(1)).as("key_docs"))
-    df.join(counts, col(keyCol) <=> col("__k")).drop("__k")
-      // disjoint namespaces: over-cap keys window on "k:"+key, NULL keys
-      // on their own "n:" (never a "k:" collision with a real key), and
-      // under-cap non-null-id rows on "u:"+id (unique partition each —
-      // rank 1, pass untouched). NULL-id rows always take the key
-      // window: their key partition holds at most key_docs rows, so for
-      // an under-cap key they all rank <= key_docs <= cap and pass.
-      .withColumn("__wk",
-        when(col("key_docs") > cap || col(idCol).isNull,
-          when(col(keyCol).isNull, lit("n:"))
-            .otherwise(concat(lit("k:"), col(keyCol).cast("string"))))
-          .otherwise(concat(lit("u:"), col(idCol).cast("string"))))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("__wk"))
+    df.withColumn("__rk", row_number().over(
+        Window.partitionBy(col(keyCol))
           .orderBy(uniformHex(col(idCol)), col(idCol))))
-      .filter(col("__rk") <= cap).drop("__wk", "__rk")
+      .filter(col("__rk") <= cap).drop("__rk")
+      .join(counts, col(keyCol) <=> col("__k")).drop("__k")
   }
 
   /** Deterministic split assignment by cumulative rate bands, e.g.

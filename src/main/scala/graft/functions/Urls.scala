@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** URL-level deduplication — the stage every crawl pipeline runs BEFORE
@@ -128,10 +129,11 @@ object Urls {
   /** Exact dedup keyed on the NORMALIZED URL: every row gets its
     * group's canonical (min-id) row and the group size. Output: the
     * input columns + (url_norm, canonical_id, n_copies); a row is the
-    * keeper iff idCol == canonical_id. One groupBy + one equi-join,
-    * both keyed on url_norm — corpus-linear, no pairwise work. NULL
-    * urls form one group like any other (null-safe join), matching
-    * [[Dedup.collapseByKey]]'s policy.
+    * keeper iff idCol == canonical_id. One window partitioned by
+    * url_norm — one shuffle, corpus-linear, no pairwise work. NULL urls
+    * form one group like any other (a window partition on a NULL key is
+    * one group), matching [[Dedup.collapseByKey]]'s policy; `min` skips
+    * NULL ids, so a group of only NULL ids has a NULL canonical_id.
     */
   def dedupByUrl(df: DataFrame, idCol: String, urlCol: String): DataFrame = {
     val clash = df.columns.toSet
@@ -140,10 +142,9 @@ object Urls {
       s"dedupByUrl appends url_norm/canonical_id/n_copies; the input " +
         s"already carries ${clash.mkString(", ")} — rename before deduping " +
         "(silently overwriting a prior stage's columns hides real data)")
-    val withNorm = df.withColumn("url_norm", normalizeUrl(col(urlCol)))
-    val groups = withNorm
-      .groupBy(col("url_norm").as("__gk"))
-      .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
-    withNorm.join(groups, col("url_norm") <=> col("__gk")).drop("__gk")
+    val group = Window.partitionBy(col("url_norm"))
+    df.withColumn("url_norm", normalizeUrl(col(urlCol)))
+      .withColumn("canonical_id", min(col(idCol)).over(group))
+      .withColumn("n_copies", count(lit(1)).over(group))
   }
 }

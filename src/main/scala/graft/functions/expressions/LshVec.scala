@@ -3,7 +3,7 @@ package graft.functions.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -83,7 +83,7 @@ case class LshPostingsExpr(child: Expression, bits: Int, tables: Int)
     val s = new Array[Long](k)
     var j = 0
     while (j < k) {
-      s(j) = XxHash64Function.hash(j, IntegerType, 42L)
+      s(j) = XXH64.hashInt(j, 42L)
       j += 1
     }
     s
@@ -106,8 +106,7 @@ case class LshPostingsExpr(child: Expression, bits: Int, tables: Int)
             if (elemFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
           var j = 0
           while (j < k) {
-            accs(j) += x * (XxHash64Function.hash(i, IntegerType, seeds(j))
-              .toDouble / lMaxD)
+            accs(j) += x * (XXH64.hashInt(i, seeds(j)).toDouble / lMaxD)
             j += 1
           }
         }

@@ -3,7 +3,7 @@ package graft.functions.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -238,8 +238,7 @@ case class SlidingJoinHash(child: Expression, n: Int, sep: String)
         }
         j += 1
       }
-      out(w) = XxHash64Function.hash(
-        UTF8String.fromBytes(buf, 0, pos), StringType, 42L)
+      out(w) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, pos, 42L)
       w += 1
     }
     new GenericArrayData(out)

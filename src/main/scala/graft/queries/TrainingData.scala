@@ -1764,12 +1764,12 @@ object TrainingData {
         FROM sc ORDER BY doc_id""")),
 
     // Deterministic per-domain document cap (C4's anti-domination
-    // stage): solo-{id} keys (one doc each, always under cap) bypass
-    // via the count semi-path; 'big.com' carries 3/4 of the corpus and
-    // keeps exactly its 10 smallest-md5(id) docs through the window
-    // path. The oracle replays the count, the md5 order, the id
-    // tie-break, and both paths — a wrong order, an off-by-one cap, or
-    // a lost under-cap row all hash-mismatch.
+    // stage): solo-{id} keys (one doc each, always under cap) rank 1 in
+    // their own window partition and pass; 'big.com' carries 3/4 of the
+    // corpus and keeps exactly its 10 smallest-md5(id) docs. The oracle
+    // replays the count, the md5 order and the id tie-break — a wrong
+    // order, an off-by-one cap, or a lost under-cap row all
+    // hash-mismatch.
     Q("td_sample_domain_cap",
       (s, dir) => {
         val docs = Tables(s, dir, "documents").select(col("doc_id"),

@@ -8,12 +8,12 @@ import graft.functions.{Dsir, NgramLm, QualityModel}
 import graft.sources.Tables
 import graft.tools.{Profile, SparkJobs}
 
-/** Spark job counts of the eager model fits, of the near-dup queries and
-  * of the CCNet and RefinedWeb pipelines, on sf0.001 `documents` with AQE
-  * on (each shuffle stage then runs as a job of its own). A fit that gains
-  * a job, or a pipeline that goes back to one job chain per model, fails
-  * here. A change that moves a count on
-  * purpose updates the pin and says why.
+/** Spark job counts of the eager model fits, of the near-dup and per-key
+  * dedup queries and of the CCNet and RefinedWeb pipelines, on sf0.001
+  * `documents` with AQE on (each shuffle stage then runs as a job of its
+  * own). A fit that gains a job, or a pipeline that goes back to one job
+  * chain per model, fails here. A change that moves a count on purpose
+  * updates the pin and says why.
   */
 class FitJobsSpec extends AnyFunSuite {
 
@@ -88,15 +88,34 @@ class FitJobsSpec extends AnyFunSuite {
     val (df, build) = jobs(SparkEntry.queries("td_pipeline_refinedweb")(spark, SfDir))
     val (rows, run) = jobs(df.collect())
     assert(rows.nonEmpty)
-    // build: the stage checkpoints and each stage's own jobs. The cap
-    // stage's checkpoint runs 9 or 10 jobs from one build to the next
-    // with the same data, so the total is 27 or 28. It was 34 or 35 while
-    // the near-dup collapse ran its own checkpoint (4 jobs) and drop_pairs'
-    // checkpoint ran the pair joins (9 jobs, now 6).
-    assert(build == 27 || build == 28, s"build $build")
+    // build: the stage checkpoints and each stage's own jobs. With the
+    // per-key values from a window on the key, not a groupBy joined back,
+    // Profile at sf0.1 shows per stage: url_dedup 2 jobs (was 3),
+    // drop_pairs 5 (6), substr 4 (5) and cap 6. The cap ran 9 or 10 jobs
+    // from one build to the next while it windowed on a synthetic key, so
+    // the pin was 27 or 28; eight repeated builds in one JVM now all run
+    // 21.
+    assert(build == 21, s"build $build")
     // run: the membership fold over the checkpointed stages
     assert(run == 6)
   }
+
+  // per-key values come from one window on the key (each was a groupBy
+  // joined back onto its input). td_dedup_url: no build, and the run is
+  // the window's shuffle plus the orderBy. td_dedup_embed: the build
+  // checkpoints the postings of the collapsed representatives (it was 3,
+  // the collapse's own checkpoint). td_mm_imagedup: the build is the hash
+  // checkpoint only (it was 4). td_mm_videodup: the sequence collapse is
+  // a window (the run was 13)
+  for ((name, build0, run0) <- Seq(("td_dedup_url", 0, 4),
+      ("td_dedup_embed", 2, 6), ("td_mm_imagedup", 1, 6),
+      ("td_mm_videodup", 1, 11)))
+    test(s"$name: per-key values from one window") {
+      val (df, build) = jobs(SparkEntry.queries(name)(spark, SfDir))
+      val (rows, run) = jobs(df.collect())
+      assert(rows.nonEmpty)
+      assert(build == build0 && run == run0, s"build $build run $run")
+    }
 
   test("NgramLm.fit: one checkpointed count pass and the token total") {
     val (lm, n) = jobs(

@@ -998,6 +998,151 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     }
   }
 
+  // The per-key bodies that one window on the key replaced, verbatim: a
+  // groupBy on the key joined back null-safely onto the input, and for
+  // the cap a count join plus a window over a synthetic key.
+
+  private def refCapPerKey(df: DataFrame, idCol: String, keyCol: String,
+      cap: Int): DataFrame = {
+    import graft.functions.Sampling.uniformHex
+    import org.apache.spark.sql.expressions.Window
+    val counts = df.groupBy(col(keyCol).as("__k"))
+      .agg(count(lit(1)).as("key_docs"))
+    df.join(counts, col(keyCol) <=> col("__k")).drop("__k")
+      .withColumn("__wk",
+        when(col("key_docs") > cap || col(idCol).isNull,
+          when(col(keyCol).isNull, lit("n:"))
+            .otherwise(concat(lit("k:"), col(keyCol).cast("string"))))
+          .otherwise(concat(lit("u:"), col(idCol).cast("string"))))
+      .withColumn("__rk", row_number().over(
+        Window.partitionBy(col("__wk"))
+          .orderBy(uniformHex(col(idCol)), col(idCol))))
+      .filter(col("__rk") <= cap).drop("__wk", "__rk")
+  }
+
+  private def refDedupByUrl(df: DataFrame, idCol: String,
+      urlCol: String): DataFrame = {
+    val withNorm = df.withColumn("url_norm",
+      graft.functions.Urls.normalizeUrl(col(urlCol)))
+    val groups = withNorm
+      .groupBy(col("url_norm").as("__gk"))
+      .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
+    withNorm.join(groups, col("url_norm") <=> col("__gk")).drop("__gk")
+  }
+
+  private def refCollapseByKey(rows: DataFrame,
+      keyCol: String): (DataFrame, DataFrame) = {
+    val groups = rows.groupBy(keyCol).agg(min("__id").as("__rep"))
+      .withColumnRenamed(keyCol, "__gk")
+    val tagged = rows.join(groups, col(keyCol) <=> col("__gk"))
+      .drop("__gk")
+      .localCheckpoint()
+    val reps = tagged.filter(col("__id") === col("__rep")).drop("__rep")
+    val star = tagged.filter(col("__id") =!= col("__rep"))
+      .select(col("__rep").as("id_a"), col("__id").as("id_b"))
+    (reps, star)
+  }
+
+  /** Exact multiset equality, and the same columns in the same order. */
+  private def assertSameRows(name: String, got: DataFrame, ref: DataFrame): Unit = {
+    assert(got.columns.toSeq == ref.columns.toSeq,
+      s"$name: columns ${got.columns.mkString(",")} vs ${ref.columns.mkString(",")}")
+    assertSamePairs(name, got, ref)
+  }
+
+  private def sfDocuments: DataFrame =
+    graft.sources.Tables(spark, "/root/testdata/sf0.001", "documents")
+
+  /** (doc_id, host) rows: NULL keys, the ' ' and '' keys, keys spelled
+    * like the old synthetic-key namespaces, NULL ids in under-cap and
+    * over-cap keys (more of them than the smaller caps, so identical
+    * rows stand in for the arbitrary NULL-id order), and in key "tie"
+    * two ids whose md5 prefixes are equal (7b763dcb), between two
+    * smaller and two larger prefixes, so cap 3 splits the tie by id. */
+  private def capCorpus: DataFrame = {
+    import spark.implicits._
+    def rows(host: Option[String], ids: Option[Long]*) = ids.map((_, host))
+    val ids = (r: Seq[Long]) => r.map(Option(_))
+    (rows(Some("tie"), ids(Seq(6L, 9L, 25302L, 82945L, 7L, 1L)): _*) ++
+      rows(None, ids(100L to 107L) ++ Seq(None, None): _*) ++
+      rows(Some(" "), Some(200L), Some(201L)) ++
+      rows(Some(""), Some(300L)) ++
+      rows(Some("under"), Some(400L), None, None) ++
+      rows(Some("over"), Seq(None, None, None) ++ ids(500L to 510L): _*) ++
+      rows(Some("n:"), Some(600L), Some(601L)) ++
+      rows(Some("u:700"), Some(700L)) ++
+      rows(Some("k:over"), Some(800L)))
+      .toDF("doc_id", "host")
+  }
+
+  test("capPerKey == the count join + synthetic-key window") {
+    import graft.functions.Sampling
+    val tie = spark.range(1).select(Sampling.uniformHex(lit(25302L)),
+      Sampling.uniformHex(lit(82945L))).head()
+    assert(tie.getString(0) == tie.getString(1))
+    val adversarial = capCorpus.cache()
+    for (cap <- Seq(1, 2, 3, 4, 10))
+      assertSameRows(s"adversarial cap $cap",
+        Sampling.capPerKey(adversarial, "doc_id", "host", cap),
+        refCapPerKey(adversarial, "doc_id", "host", cap))
+    val docs = sfDocuments.select("doc_id", "lang", "source")
+    for (key <- Seq("lang", "source"); cap <- Seq(1, 10, 100))
+      assertSameRows(s"documents by $key cap $cap",
+        Sampling.capPerKey(docs, "doc_id", key, cap),
+        refCapPerKey(docs, "doc_id", key, cap))
+    adversarial.unpersist()
+  }
+
+  test("dedupByUrl == the groupBy + null-safe join back") {
+    import spark.implicits._
+    import graft.functions.Urls
+    val adversarial = Seq[(Option[Long], Option[String])](
+      (Some(1L), None), (Some(2L), None), (None, None),
+      (Some(3L), Some("https://Example.COM/p")),
+      (Some(4L), Some("https://www.example.com/p/")),
+      (None, Some("https://example.com:443/p#x")),
+      (None, Some("https://z.com/only-null-ids")),
+      (None, Some("HTTPS://z.com/only-null-ids")),
+      (Some(5L), Some(" ")), (Some(6L), Some(" ")), (Some(7L), Some("")),
+      (Some(8L), Some("not a url")), (Some(9L), Some("not a url")))
+      .toDF("doc_id", "url")
+    assertSameRows("adversarial",
+      Urls.dedupByUrl(adversarial, "doc_id", "url"),
+      refDedupByUrl(adversarial, "doc_id", "url"))
+    val url = when(pmod(col("doc_id"), lit(11)) === 0, lit(null).cast("string"))
+      .otherwise(concat(
+        when(pmod(col("doc_id"), lit(2)) === 0, lit("https://www.Example.com/p"))
+          .otherwise(lit("http://example.com:80/p")),
+        pmod(col("doc_id"), lit(37)).cast("string"),
+        when(pmod(col("doc_id"), lit(3)) === 0, lit("/#x")).otherwise(lit(""))))
+    val docs = sfDocuments.select(col("doc_id"), url.as("url"))
+    assertSameRows("documents",
+      Urls.dedupByUrl(docs, "doc_id", "url"),
+      refDedupByUrl(docs, "doc_id", "url"))
+  }
+
+  test("collapseByKey == the groupBy + null-safe join back") {
+    import spark.implicits._
+    import graft.functions.Dedup
+    val adversarial = Seq[(Option[Long], Option[String], String)](
+      (Some(3L), None, "a"), (Some(1L), None, "b"), (None, None, "c"),
+      (Some(5L), Some(" "), "d"), (Some(6L), Some(""), "e"),
+      (Some(2L), Some(""), "f"), (None, Some("nulls"), "g"),
+      (None, Some("nulls"), "h"), (Some(7L), Some("dup"), "i"),
+      (Some(7L), Some("dup"), "j"), (Some(8L), Some("dup"), "k"),
+      (None, Some("dup"), "l"), (Some(9L), Some("solo"), "m"))
+      .toDF("__id", "key", "payload")
+    val docs = sfDocuments.select(col("doc_id").as("__id"), col("lang"),
+      col("source"), md5(col("text")).as("__ch"))
+    for ((name, rows, key) <- Seq(("adversarial", adversarial, "key"),
+        ("documents by lang", docs, "lang"), ("documents by md5", docs, "__ch"))) {
+      val (reps, star) = Dedup.collapseByKey(rows, key)
+      val (refReps, refStar) = refCollapseByKey(rows, key)
+      assertSameRows(s"$name reps", reps, refReps)
+      assertSameRows(s"$name star", star, refStar)
+    }
+  }
+
   // The near-dup join plan that the banded pass replaced, verbatim: an md5
   // collapse (groupBy, join back, checkpoint), a band self-join, distinct,
   // and two verify joins onto the shingle sets.
@@ -1012,11 +1157,11 @@ class KernelEquivalenceSpec extends AnyFunSuite {
   private def refNearDupPairs(df0: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3, bands: Int = 16,
       rowsPerBand: Int = 4): DataFrame = {
-    import graft.functions.Dedup.{collapseByKey, shingleCol, verifyPairs, widen}
+    import graft.functions.Dedup.{shingleCol, verifyPairs, widen}
     val df = widen(df0)
     val hashed = df.select(col(idCol).as("__id"), col(textCol).as("__t"),
       md5(col(textCol)).as("__ch"))
-    val (repRows, starBase) = collapseByKey(hashed, "__ch")
+    val (repRows, starBase) = refCollapseByKey(hashed, "__ch")
     val star = starBase.withColumn("jaccard", lit(1.0))
     val reps = repRows.select(col("__id").as(idCol), col("__t").as(textCol))
     val buckets = refSignatures(reps, idCol, textCol, n, bands, rowsPerBand)

@@ -286,7 +286,7 @@ class OperatorSpec extends AnyFunSuite {
 
   test("near-dup null texts star-collapse instead of vanishing; degenerate vectors are excluded") {
     import spark.implicits._
-    // null texts are one identical group (null-safe collapse join) —
+    // null texts are one identical group (one collapse-window partition) —
     // an equi-join would silently drop them from the pair universe
     val docs = Seq((1L, null: String), (2L, null: String),
       (3L, null: String), (9L, "w1 w2 w3 w4 w5 w6")).toDF("doc_id", "text")

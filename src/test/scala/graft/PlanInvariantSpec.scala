@@ -103,8 +103,28 @@ class PlanInvariantSpec extends AnyFunSuite {
     // materialized (a checkpoint there benched slower)
     ("td_dedup_ngram", query("td_dedup_ngram"), Seq(5, 3, 0, 4, 0, 2),
       Map("shingles" -> 3)),
-    ("td_dedup_embed", query("td_dedup_embed"), Seq(3, 1, 1, 0, 0, 0),
-      Map("lshpostingsexpr" -> 1)),
+    // the postings of the collapsed representatives are checkpointed in
+    // the build, so the kernel runs there once per representative and not
+    // in this plan (lshpostingsexpr 1 → 0). The posting self-join
+    // broadcasts the materialized side (SortMergeJoin 1 → 0,
+    // BroadcastHashJoin 0 → 1); the collapse is a window whose star edges
+    // read the vectors again (Window 0 → 1, ReusedExchange 1 → 0)
+    ("td_dedup_embed", query("td_dedup_embed"), Seq(3, 0, 0, 1, 0, 1),
+      Map.empty),
+    // canonical id and group size come from one window on url_norm, not
+    // a groupBy joined back (BroadcastHashJoin 1 → 0, Window 0 → 1); the
+    // window's shuffle and the orderBy are the two Exchanges
+    ("td_dedup_url", query("td_dedup_url"), Seq(2, 0, 0, 0, 0, 1), Map.empty),
+    // one row_number window on the key with its limit pushed map-side;
+    // the key counts join the survivors by broadcast
+    ("td_sample_domain_cap", query("td_sample_domain_cap"),
+      Seq(3, 0, 0, 1, 0, 1), Map.empty),
+    // the identical-sequence collapse is a window on the sequence, not a
+    // groupBy joined back (BroadcastHashJoin 8 → 5, ReusedExchange 5 → 3).
+    // Its three readers each run the window: the representative ids under
+    // the band join, the frame counts and the star edges (Window 0 → 3)
+    ("td_mm_videodup", query("td_mm_videodup"), Seq(7, 3, 0, 5, 0, 3),
+      Map.empty),
     // the stages are checkpointed in the build, so the final plan is the
     // membership fold over their outputs and runs no kernel
     ("td_pipeline_refinedweb", query("td_pipeline_refinedweb"),

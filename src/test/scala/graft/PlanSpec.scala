@@ -155,11 +155,11 @@ class PlanSpec extends AnyFunSuite {
       graft.functions.Sampling.capPerKey(docs, "doc_id", "host", 10))
     // the per-key top-k must truncate MAP-SIDE before the window
     // exchange: a Partial WindowGroupLimit caps every task's output at
-    // `cap` rows per synthetic key, so a mega-domain ships `cap` rows
+    // `cap` rows per key, so a mega-domain ships `cap` rows
     // per map task, not its whole partition
     assert(plan.contains("WindowGroupLimit"), plan)
     assert(plan.contains("Partial"), plan)
-    // exactly one Window pass over ONE synthetic key — the pre-r16
+    // exactly one Window pass, on the key itself — the pre-r16
     // two-branch shape unioned an under-cap scan with an over-cap
     // window and read the corpus four times
     assert(!plan.contains("Union"), plan)
@@ -168,7 +168,7 @@ class PlanSpec extends AnyFunSuite {
     // "(N) Scan parquet" appears once per node, in the details only
     val scans = "\\(\\d+\\) Scan parquet".r.findAllIn(plan).length
     assert(scans == 2,
-      s"capPerKey reads the corpus twice (count agg + probe), got $scans:\n$plan")
+      s"capPerKey reads the corpus twice (count agg + window), got $scans:\n$plan")
   }
 
   test("ivf plan size stays flat as nlist grows (broadcast centroids, " +

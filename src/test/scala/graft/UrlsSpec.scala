@@ -112,18 +112,25 @@ class UrlsSpec extends AnyFunSuite {
 
   test("dedupByUrl groups all spellings of one page; min-id canonical") {
     import spark.implicits._
-    val rows = Seq(
-      (1L, "https://Example.COM/p"),
-      (2L, "https://www.example.com/p/"),
-      (3L, "https://example.com:443/p#x"),
-      (4L, "https://example.com/q?b=2&a=1"),
-      (5L, "https://example.com/q?a=1&b=2"),
-      (6L, "https://other.com/p")).toDF("doc_id", "url")
+    val rows = Seq[(Option[Long], Option[String])](
+      (Some(1L), Some("https://Example.COM/p")),
+      (Some(2L), Some("https://www.example.com/p/")),
+      (Some(3L), Some("https://example.com:443/p#x")),
+      (Some(4L), Some("https://example.com/q?b=2&a=1")),
+      (Some(5L), Some("https://example.com/q?a=1&b=2")),
+      (Some(6L), Some("https://other.com/p")),
+      // NULL urls form one group; a NULL id joins its group, never
+      // becomes its canonical id
+      (Some(8L), None), (Some(7L), None),
+      (None, Some("https://example.com/p"))).toDF("doc_id", "url")
     val out = Urls.dedupByUrl(rows, "doc_id", "url")
       .select("doc_id", "canonical_id", "n_copies")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(out(1L) == ((1L, 3L)) && out(2L) == ((1L, 3L)) && out(3L) == ((1L, 3L)))
-    assert(out(4L) == ((4L, 2L)) && out(5L) == ((4L, 2L)))
-    assert(out(6L) == ((6L, 1L)))
+      .collect().map(r => Option(r.get(0)) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(out.size == 9)
+    for (id <- Seq(1L, 2L, 3L)) assert(out(Some(id)) == ((1L, 4L)))
+    assert(out(None) == ((1L, 4L)))
+    assert(out(Some(4L)) == ((4L, 2L)) && out(Some(5L)) == ((4L, 2L)))
+    assert(out(Some(6L)) == ((6L, 1L)))
+    assert(out(Some(7L)) == ((7L, 2L)) && out(Some(8L)) == ((7L, 2L)))
   }
 }
