@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+
+import graft.functions.TaggedCounts.{Docs, Emit}
 
 /** The three models of the CCNet gate (Wenzek et al. 2019) fit together
   * over one labeled corpus: rank-order language-ID profiles
@@ -10,13 +11,16 @@ import org.apache.spark.sql.functions._
   * keep language against every other labeled document
   * ([[QualityModel.fitLogOddsMicro]]).
   *
-  * Scale shape: the three fits' count rows go through two
-  * [[TaggedCounts]] aggregates (the language-ID rows, and the rest) whose
-  * shuffle stages run side by side, materialized together once. One collect returns the
-  * bounded state (the top-k profile per language, both bucket-count
-  * arrays and the LM's token total); the LM's `uni`/`bi` tables stay
-  * distributed as tag-filtered views of the same materialized table. The
-  * results equal the three separate fits' exactly.
+  * Scale shape: one [[TaggedCounts.count]] pass reads the corpus once. Each
+  * labeled document gives its profile rows; a keep-language document also
+  * gives the LM's rows and the positive bucket rows, any other labeled one
+  * the negative bucket rows, all from one tokenization. Each task sums its
+  * rows in a hash map of at most [[TaggedCounts.MaxEntries]] keys, and one
+  * aggregate merges the tasks' sums; the table is materialized once. One
+  * collect returns the bounded state (the top-k profile per language, both
+  * bucket-count arrays and the LM's token total); the LM's `uni`/`bi`
+  * tables stay distributed as tag-filtered views of the same materialized
+  * table. The results equal the three separate fits' exactly.
   */
 object CcNet {
 
@@ -26,16 +30,12 @@ object CcNet {
   /** The fused count pass over `docs`, before it is materialized. */
   private[graft] def counts(docs: DataFrame, langCol: String, textCol: String,
       keepLang: String, n: Int, nBuckets: Int): DataFrame = {
-    val keep = docs.filter(col(langCol) === keepLang)
-    val rest = docs.filter(col(langCol) =!= keepLang)
-    // two aggregates, not one: the char-gram rows outnumber all the others
-    // several times over, and in an aggregate of their own the partial
-    // aggregation runs in their generator's codegen stage instead of
-    // reading them row by row out of a Union (measured ~25% less
-    // wall time per ccnet pass on 4 cores)
-    TaggedCounts.count(Seq(LangIdNgram.profileRows(docs, langCol, textCol, n)))
-      .unionByName(TaggedCounts.count(NgramLm.countRows(keep, textCol) ++
-        QualityModel.countRows(keep, rest, textCol, nBuckets)))
+    val keep = Emit(profile = true, lm = true, buckets = Some(QualityModel.PosTag))
+    val rest = Emit(profile = true, buckets = Some(QualityModel.NegTag))
+    val unlabeled = Emit()
+    TaggedCounts.count(Seq(Docs(docs, textCol, Some(langCol), lang =>
+        if (lang == null) unlabeled else if (lang == keepLang) keep else rest)),
+      n, nBuckets)
   }
 
   def fit(docs: DataFrame, langCol: String, textCol: String,

@@ -25,12 +25,13 @@ import org.apache.spark.sql.functions._
   *     inject the computed tables when bit-exact replay on another
   *     engine matters.
   *
-  * Scale shape: one fit aggregate over both corpora's tagged bucket rows
-  * ([[TaggedCounts]]: groupBy (corpus, bucket), map-side combinable,
-  * output bounded by 2·`nBuckets` rows — THAT is what gets collected,
-  * never the corpus), a driver-computed log-ratio table broadcast as one
-  * row, and a ZERO-SHUFFLE scoring pass: each document folds its own gram
-  * array against the broadcast table inside one projection.
+  * Scale shape: one [[TaggedCounts.count]] pass per corpus, whose tasks
+  * sum their bucket rows in a bounded hash map, and one fit aggregate over
+  * both (groupBy (corpus, bucket), output bounded by 2·`nBuckets` rows —
+  * THAT is what gets collected, never the corpus), a driver-computed
+  * log-ratio table broadcast as one row, and a ZERO-SHUFFLE scoring pass:
+  * each document folds its own gram array against the broadcast table
+  * inside one projection.
   */
 object Dsir {
 
@@ -92,14 +93,6 @@ object Dsir {
     // (pmod(conv(substring(md5(g),1,4),16,10),n)) is unchanged and stays
     // the cross-engine contract (guide §4)
     graft.functions.expressions.GramBuckets.gram_bucket(gram, nBuckets)
-
-  /** Count rows of a bucket fit under `tag`: one per gram OCCURRENCE in
-    * `df`'s text column, `a` = its bucket id. The aggregate over them is
-    * bounded by `nBuckets` per tag (never by the corpus). */
-  private[functions] def bucketRows(df: DataFrame, textCol: String,
-      nBuckets: Int, tag: String): DataFrame =
-    TaggedCounts.rows(df.select(explode(grams(col(textCol))).as("__g")),
-      tag, gramBucket(col("__g"), nBuckets), lit(null))
 
   /** The per-bucket counts under `tag` in a collected count state, as an
     * array indexed by bucket id. */
@@ -180,9 +173,11 @@ object Dsir {
     val spark = raw.sparkSession
     import spark.implicits._
     // both distributions from one aggregate and one collect
-    val state = TaggedCounts.collect(TaggedCounts.count(Seq(
-      bucketRows(target, textCol, nBuckets, "target"),
-      bucketRows(raw, textCol, nBuckets, "raw"))),
+    val state = TaggedCounts.collect(TaggedCounts.count(
+      Seq("target" -> target, "raw" -> raw).map { case (tag, df) =>
+        TaggedCounts.Docs(df, textCol, None,
+          _ => TaggedCounts.Emit(buckets = Some(tag)))
+      }, nBuckets = nBuckets),
       None, Seq("target", "raw"))
     val lrm = logRatioMicro(bucketArray(state, "target", nBuckets),
       bucketArray(state, "raw", nBuckets))

@@ -22,12 +22,13 @@ import graft.functions.expressions.LangIdOop
   * integer sum — no floats anywhere, so identical ranking and argmin in
   * any engine.
   *
-  * Scale shape: the FIT aggregates per-language gram counts (map-side
-  * combinable; output bounded by k·|langs| after the rank filter — only
-  * THAT is collected). CLASSIFICATION is a per-row map: one compiled
-  * kernel ([[LangIdOop]]) counts, ranks and scores each document's own
-  * grams against the k·|langs|-entry profile held as a constant — no
-  * shuffle, no join, no corpus-scale collect.
+  * Scale shape: the FIT is one [[TaggedCounts.count]] pass of per-language
+  * gram counts, summed per task and merged by one aggregate (output
+  * bounded by k·|langs| after the rank filter — only THAT is collected).
+  * CLASSIFICATION is a per-row map: one compiled kernel ([[LangIdOop]])
+  * counts, ranks and scores each document's own grams against the
+  * k·|langs|-entry profile held as a constant — no shuffle, no join, no
+  * corpus-scale collect.
   */
 object LangIdNgram {
 
@@ -45,16 +46,6 @@ object LangIdNgram {
 
   private[functions] val ProfileTag = "lid"
 
-  /** Count rows of the profile fit (tag [[ProfileTag]]): one per
-    * character n-gram occurrence, `a` = language, `b` = gram. Unlabeled
-    * (NULL-language) rows build no profile. */
-  private[functions] def profileRows(df: DataFrame, langCol: String,
-      textCol: String, n: Int): DataFrame =
-    TaggedCounts.rows(df.filter(col(langCol).isNotNull)
-        .select(col(langCol).as("__l"),
-          explode(charGrams(col(textCol), n)).as("__g")),
-      ProfileTag, col("__l"), col("__g"))
-
   /** The profiles in a [[TaggedCounts.collect]] result ranked on
     * [[ProfileTag]]. */
   private[functions] def profiles(state: Seq[Row]): Seq[ProfileEntry] =
@@ -68,7 +59,8 @@ object LangIdNgram {
   def fitProfiles(df: DataFrame, langCol: String, textCol: String,
       n: Int = 3, k: Int = 40): Seq[ProfileEntry] =
     profiles(TaggedCounts.collect(
-      TaggedCounts.count(Seq(profileRows(df, langCol, textCol, n))),
+      TaggedCounts.count(Seq(TaggedCounts.Docs(df, textCol, Some(langCol),
+        _ => TaggedCounts.Emit(profile = true))), n = n),
       Some(ProfileTag -> k), Nil))
 
   /** Classify each document against the fitted profiles, one row out

@@ -24,11 +24,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape — deliberately DIFFERENT from [[QualityModel]]: an LM
   * vocabulary is corpus-sized, so the count tables are NOT collected
-  * or broadcast. The fit is ONE map-side-combinable groupBy over tagged
-  * unigram, bigram and token-total rows ([[TaggedCounts]]), materialized
-  * once; `uni` and `bi` STAY distributed as tag-filtered views of that
-  * table, and only the one-row token total reaches the driver. The same
-  * rows go through [[CcNet.fit]]'s count pass with the language-ID and
+  * or broadcast. The fit is ONE [[TaggedCounts.count]] pass: each document
+  * is tokenized once, its unigram, bigram and token-total rows are summed
+  * in a per-task hash map of at most [[TaggedCounts.MaxEntries]] keys, and
+  * one groupBy merges the tasks' sums; the table is materialized once.
+  * `uni` and `bi` STAY distributed as tag-filtered views of that table,
+  * and only the one-row token total reaches the driver. The same rows come
+  * out of [[CcNet.fit]]'s count pass with the language-ID and
   * quality-model rows. Scoring explodes the corpus into token
   * transitions and attaches c(w1 w2), c(w1), c(w2) via three keyed
   * equi-joins (AQE picks broadcast automatically when a fitted table
@@ -51,35 +53,12 @@ object NgramLm {
   private[functions] val BiTag = "bi"
   private[functions] val TokTag = "tok"
 
-  /** Count rows of the LM fit: one [[UniTag]] row per token (`a` = w),
-    * one [[BiTag]] row per token transition (`a` = w1, `b` = w2) and one
-    * [[TokTag]] row per document, weighted by its token count (0 for a
-    * NULL text), so the summed [[TokTag]] row is the total token count. */
-  private[functions] def countRows(target: DataFrame,
-      textCol: String): Seq[DataFrame] = {
-    val uni = target.select(explode(tokens(col(textCol))).as("__w"))
-    // compiled transition kernel ([[expressions.TextGrams.bigram_pairs]]):
-    // its empty-array result for < 2 tokens subsumes a size filter row for
-    // row
-    val bi = target.select(explode(
-      graft.functions.expressions.TextGrams.bigram_pairs(
-        tokens(col(textCol)))).as("__b"))
-    // no `> 0` filter: it would evaluate the tokenizer a second time, and
-    // a zero-weight row adds nothing to the sum. A NULL text weighs 0,
-    // whatever size(NULL) is under the session's ANSI mode
-    val nTok = target.select(when(col(textCol).isNotNull,
-      size(tokens(col(textCol)))).otherwise(0).as("__n"))
-    Seq(
-      TaggedCounts.rows(uni, UniTag, col("__w"), lit(null)),
-      TaggedCounts.rows(bi, BiTag, col("__b.__w1"), col("__b.__w2")),
-      TaggedCounts.rows(nTok, TokTag, lit(null), lit(null), col("__n")))
-  }
-
-  /** The model over a (checkpointed) count table that holds [[countRows]]'s
-    * rows, with the [[TokTag]] rows of its bounded state. The count tables
-    * stay distributed, as tag-filtered views of `counts`. A target with no
-    * tokens has no [[TokTag]] row or one of weight 0: totalTokens is 0 and
-    * every transition scores at the OOV floor. */
+  /** The model over a (checkpointed) count table that holds the LM's
+    * [[TaggedCounts.count]] rows, with the [[TokTag]] rows of its bounded
+    * state. The count tables stay distributed, as tag-filtered views of
+    * `counts`. A target with no tokens has no [[TokTag]] row or one of
+    * weight 0: totalTokens is 0 and every transition scores at the OOV
+    * floor. */
   private[functions] def model(counts: DataFrame, state: Seq[Row]): Model =
     Model(
       counts.filter(col(TaggedCounts.Tag) === UniTag)
@@ -91,13 +70,15 @@ object NgramLm {
 
   /** The fit's count pass over `target`, before it is materialized. */
   private[graft] def counts(target: DataFrame, textCol: String): DataFrame =
-    TaggedCounts.count(countRows(target, textCol))
+    TaggedCounts.count(Seq(TaggedCounts.Docs(target, textCol, None,
+      _ => TaggedCounts.Emit(lm = true))))
 
   /** Fit the LM on a target corpus (the curated side — e.g. the same
-    * labeled sample the [[QualityModel]] fit uses). One aggregate counts
-    * unigrams, bigrams and tokens together; it is materialized once
-    * (`localCheckpoint`), because every [[score]] call joins it three
-    * times, and the total is read from it by one more job. For cross-job
+    * labeled sample the [[QualityModel]] fit uses). One pass tokenizes each
+    * document once and one aggregate counts unigrams, bigrams and tokens
+    * together; it is materialized once (`localCheckpoint`), because every
+    * [[score]] call joins it three times, and the total is read from it by
+    * one more job. For cross-job
     * reuse at scale, persist the tables bucketed by gram instead (see
     * [[Model]]). */
   def fit(target: DataFrame, textCol: String): Model = {
@@ -137,9 +118,7 @@ object NgramLm {
           .as("avg_logprob_micro"))
 
   /** [[score]]'s (idCol, n_scored, logprob_micro) for the documents that
-    * have at least one token transition, one row per distinct id. A
-    * caller that already holds one row per document joins this directly
-    * instead of [[score]]'s join back onto `df`. */
+    * have at least one token transition, one row per distinct id. */
   private[graft] def transitionScores(df: DataFrame, idCol: String,
       textCol: String, model: Model): DataFrame = {
     // compiled transition kernel — identical pair stream to the old
@@ -152,19 +131,26 @@ object NgramLm {
           tokens(col(textCol)))).as("__b"))
       .select(col("__id"), col("__b.__w1").as("__w1"),
         col("__b.__w2").as("__w2"))
+    withLogProb(trans, model)
+      .groupBy("__id")
+      .agg(count(lit(1)).as("n_scored"), sum("__lp").as("logprob_micro"))
+      .withColumnRenamed("__id", idCol)
+  }
+
+  /** `trans`, which holds token transitions (`__w1`, `__w2`), with the
+    * three counts attached by left equi-joins and `__lp`, the
+    * transition's integer-micro log-prob. A row whose `__w1` is NULL is no
+    * transition (a document without any, kept by an outer explode) and
+    * has a NULL `__lp`. */
+  private[graft] def withLogProb(trans: DataFrame, model: Model): DataFrame =
     trans
       .join(model.bi, Seq("__w1", "__w2"), "left")
       .join(model.uni.select(col("__w").as("__w1"), col("__c1")),
         Seq("__w1"), "left")
       .join(model.uni.select(col("__w").as("__w2"), col("__c1").as("__c2")),
         Seq("__w2"), "left")
-      .select(col("__id"),
-        logPMicro(col("__c12"), col("__c1"), col("__c2"),
-          model.totalTokens).as("__lp"))
-      .groupBy("__id")
-      .agg(count(lit(1)).as("n_scored"), sum("__lp").as("logprob_micro"))
-      .withColumnRenamed("__id", idCol)
-  }
+      .withColumn("__lp", when(col("__w1").isNotNull,
+        logPMicro(col("__c12"), col("__c1"), col("__c2"), model.totalTokens)))
 
   /** avg_logprob_micro from [[transitionScores]]' columns: floor(sum/n),
     * NULL without transitions (n 0 or NULL). */

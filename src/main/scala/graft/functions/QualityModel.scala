@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Hashed bag-of-grams linear quality classifier — the fastText-shaped
@@ -20,14 +20,16 @@ import org.apache.spark.sql.functions._
   * scores (sums of 64-bit micro-units, so partial-aggregation order and
   * engine cannot change a keep/drop decision).
   *
-  * Scale shape: the FIT is ONE bounded aggregate over both classes'
-  * tagged bucket rows ([[TaggedCounts]]: groupBy (class, bucket), output
-  * ≤ 2·nBuckets rows, one collect — the sample is small by contract, the
-  * 100 TB corpus never enters the fit; in [[CcNet.fit]] the same rows
-  * share the language-ID and LM count pass). SCORING is a zero-shuffle
-  * fold of each document's own gram array against the broadcast weight
-  * table, linear in corpus bytes, in one projection that other per-row
-  * columns can ride ([[withScore]]).
+  * Scale shape: the FIT is one [[TaggedCounts.count]] pass per class
+  * sample: each document's bucket rows, summed in a per-task hash map of at
+  * most [[TaggedCounts.MaxEntries]] keys, then ONE bounded aggregate over
+  * both classes (groupBy (class, bucket), output ≤ 2·nBuckets rows, one
+  * collect — the sample is small by contract, the 100 TB corpus never
+  * enters the fit; in [[CcNet.fit]] the same rows come out of the one
+  * language-ID and LM count pass, from the same tokenization). SCORING is
+  * a zero-shuffle fold of each document's own gram array against the
+  * broadcast weight table, linear in corpus bytes, in one projection that
+  * other per-row columns can ride ([[withScore]]).
   */
 object QualityModel {
 
@@ -38,19 +40,15 @@ object QualityModel {
   def fitLogOddsMicro(pos: DataFrame, neg: DataFrame, textCol: String,
       nBuckets: Int = 8192): Array[Long] =
     weights(TaggedCounts.collect(
-      TaggedCounts.count(countRows(pos, neg, textCol, nBuckets)),
+      TaggedCounts.count(Seq(PosTag -> pos, NegTag -> neg).map {
+        case (tag, df) => TaggedCounts.Docs(df, textCol, None,
+          _ => TaggedCounts.Emit(buckets = Some(tag)))
+      }, nBuckets = nBuckets),
       None, Tags), nBuckets)
 
   private[functions] val PosTag = "pos"
   private[functions] val NegTag = "neg"
   private[functions] val Tags = Seq(PosTag, NegTag)
-
-  /** Count rows of the fit: the bucket of every gram occurrence, tagged
-    * by class. */
-  private[functions] def countRows(pos: DataFrame, neg: DataFrame,
-      textCol: String, nBuckets: Int): Seq[DataFrame] =
-    Seq(Dsir.bucketRows(pos, textCol, nBuckets, PosTag),
-      Dsir.bucketRows(neg, textCol, nBuckets, NegTag))
 
   /** The weights from a collected count state holding the [[Tags]] rows. */
   private[functions] def weights(state: Seq[Row],
@@ -78,14 +76,17 @@ object QualityModel {
   def score(df: DataFrame, idCol: String, textCol: String,
       weightsMicro: Array[Long], nBuckets: Int,
       thresholdMicroPerGram: Long = 0L): DataFrame =
-    withScore(df.select(col(idCol), col(textCol)), textCol, weightsMicro,
-        nBuckets, thresholdMicroPerGram)
+    withScore(df.select(col(idCol), col(textCol)), Dsir.tokens(col(textCol)),
+        weightsMicro, nBuckets, thresholdMicroPerGram)
       .select(idCol, "n_grams", "score_micro", "keep")
 
   /** [[score]]'s (n_grams, score_micro, keep) appended to every column of
     * `df`, in the same projection pass, so other per-row columns computed
-    * over `df` share it instead of a join by id. */
-  private[graft] def withScore(df: DataFrame, textCol: String,
+    * over `df` share it instead of a join by id. `tokens` is the document's
+    * token array ([[Dsir.tokens]] of its text) over `df`'s columns; a caller
+    * that needs the tokens for more than the score passes a column of `df`
+    * that holds them, so the text is tokenized once. */
+  private[graft] def withScore(df: DataFrame, tokens: Column,
       weightsMicro: Array[Long], nBuckets: Int,
       thresholdMicroPerGram: Long = 0L): DataFrame = {
     require(weightsMicro.length == nBuckets,
@@ -95,7 +96,8 @@ object QualityModel {
     val wRow = broadcast(Seq(Tuple1(weightsMicro.toSeq)).toDF("__w"))
     val cols = df.columns.toSeq.map(c => col(s"`$c`"))
     df.crossJoin(wRow)
-      .select(cols :+ Dsir.grams(col(textCol)).as("__gs") :+ col("__w"): _*)
+      .select(cols :+ graft.functions.expressions.TextGrams
+        .unigrams_bigrams(tokens).as("__gs") :+ col("__w"): _*)
       .select(cols ++ Seq(
         coalesce(size(col("__gs")).cast("long"), lit(0L)).as("n_grams"),
         // compiled md5-bucket weight fold (same kernel as

@@ -539,11 +539,13 @@ object TrainingData {
     // recall AND the collapse contract. This corpus has no exact-dup
     // texts (star is empty here; the collapse's star path is
     // fixture-exercised by td_mm_imagedup/audiodup/videodup, whose
-    // families ARE identical-hash groups).
+    // families ARE identical-hash groups). The pairs are ordered in one
+    // partition: they are far fewer than the documents, and an orderBy's
+    // range partitioner would run the verify pass once more for its sample.
     Q("td_dedup_near",
       (s, dir) => Dedup.nearDupPairs(Tables(s, dir, "documents"),
           "doc_id", "text", threshold = 0.8)
-        .orderBy("id_a", "id_b"),
+        .repartition(1).sortWithinPartitions("id_a", "id_b"),
       Some("""WITH grp AS (SELECT doc_id, text,
           min(doc_id) OVER (PARTITION BY md5(text)) AS rep FROM documents),
         toks AS (SELECT doc_id, string_split(text,' ') t FROM grp
@@ -588,8 +590,10 @@ object TrainingData {
           .otherwise(lit(null).cast("string"))
         val docs = Tables(s, dir, "documents")
           .select(id, concat_ws("\n", p0, gap, p1, planted).as("__t"))
+        // ordered in one partition, as td_dedup_near's pairs
         Dedup.paraNearDupPairs(docs, "doc_id", "__t", threshold = 0.8)
-          .orderBy("doc_a", "para_a", "doc_b", "para_b")
+          .repartition(1)
+          .sortWithinPartitions("doc_a", "para_a", "doc_b", "para_b")
       },
       Some("""WITH base AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         par AS (SELECT doc_id,
@@ -1888,34 +1892,7 @@ object TrainingData {
     // two-valued keep — so a stage contract change that breaks the
     // composition hash-mismatches even if each stage row stays green.
     Q("td_pipeline_ccnet",
-      (s, dir) => {
-        import graft.functions.{CcNet, NgramLm, QualityModel}
-        import graft.functions.expressions.LangIdOop
-        val docs = Tables(s, dir, "documents")
-        // the three fits share one count pass and one collect
-        val fit = CcNet.fit(docs, "lang", "text", keepLang = "en",
-          n = 3, k = 40, nBuckets = 1024)
-        // language ID and the quality keep are per-row maps over the same
-        // documents: one projection pass, one row per document, so only
-        // the LM's per-document transition scores join onto it
-        val lidQm = QualityModel.withScore(
-            docs.select(col("doc_id"), col("text"),
-              LangIdOop.lang_id_oop(col("text"), fit.profiles, 3, 40)
-                .getField("pred_lang").as("pred_lang")),
-            "text", fit.weightsMicro, nBuckets = 1024)
-          .select("doc_id", "pred_lang", "keep")
-        val lm = NgramLm.transitionScores(docs.select("doc_id", "text"),
-          "doc_id", "text", fit.lm)
-        lidQm.join(lm, Seq("doc_id"), "left")
-          .withColumn("ppl_bucket", NgramLm.pplBucket(
-            NgramLm.avgLogProbMicro(col("n_scored"), col("logprob_micro")),
-            -3400000L, -3600000L))
-          .select(col("doc_id"), col("pred_lang"), col("ppl_bucket"),
-            col("keep"),
-            (coalesce(col("pred_lang") === "en", lit(false)) &&
-              col("ppl_bucket") =!= "tail" && col("keep")).as("keep_final"))
-          .orderBy("doc_id")
-      },
+      (s, dir) => ccnetPipeline(Tables(s, dir, "documents")).orderBy("doc_id"),
       Some("""WITH l_g0 AS (SELECT doc_id, lang, unnest(
             [substr(text, i, 3) for i in range(1, length(text) - 1)]) AS g
           FROM documents),
@@ -2278,6 +2255,47 @@ object TrainingData {
         lit(" shared verbatim boilerplate sentence spanning twelve whole tokens for substring dedup"))
         .otherwise(lit("")))
     documents.select(id, url.as("url"), txt.as("txt"))
+  }
+
+  /** The CCNet gate over a (doc_id, lang, text) frame, one row per
+    * document id: (doc_id, pred_lang, ppl_bucket, keep, keep_final). Each
+    * phase reads `docs` once. The fit is one count pass ([[CcNet.fit]]).
+    * Scoring is one projection that tokenizes each document once and
+    * yields its predicted language, its quality keep and, by an outer
+    * explode, its LM transitions; the LM's count joins follow and one
+    * aggregate per (id, language, keep) sums the transitions' log-probs.
+    *
+    * Ids are unique in the documents contract. Documents that repeat an id
+    * (NULL included) and agree on pred_lang and keep give ONE row, their
+    * transitions scored together; each distinct (pred_lang, keep) among
+    * them gives its own row. */
+  private[graft] def ccnetPipeline(docs: DataFrame): DataFrame = {
+    import graft.functions.{CcNet, NgramLm, QualityModel}
+    import graft.functions.expressions.{LangIdOop, TextGrams}
+    val fit = CcNet.fit(docs, "lang", "text", keepLang = "en",
+      n = 3, k = 40, nBuckets = 1024)
+    val trans = QualityModel.withScore(
+        docs.select(col("doc_id"),
+          LangIdOop.lang_id_oop(col("text"), fit.profiles, 3, 40)
+            .getField("pred_lang").as("pred_lang"),
+          TextGrams.ws_tokens(col("text")).as("__tk")),
+        col("__tk"), fit.weightsMicro, nBuckets = 1024)
+      .select(col("doc_id"), col("pred_lang"), col("keep"),
+        explode_outer(TextGrams.bigram_pairs(col("__tk"))).as("__b"))
+      .select(col("doc_id"), col("pred_lang"), col("keep"),
+        col("__b.__w1").as("__w1"), col("__b.__w2").as("__w2"))
+    // the per-document columns are grouping keys, not first(): an
+    // aggregate buffer of a string makes the aggregate sort-based
+    NgramLm.withLogProb(trans, fit.lm)
+      .groupBy("doc_id", "pred_lang", "keep")
+      .agg(count(col("__lp")).as("n_scored"), sum("__lp").as("logprob_micro"))
+      .withColumn("ppl_bucket", NgramLm.pplBucket(
+        NgramLm.avgLogProbMicro(col("n_scored"), col("logprob_micro")),
+        -3400000L, -3600000L))
+      .select(col("doc_id"), col("pred_lang"), col("ppl_bucket"),
+        col("keep"),
+        (coalesce(col("pred_lang") === "en", lit(false)) &&
+          col("ppl_bucket") =!= "tail" && col("keep")).as("keep_final"))
   }
 
   /** The eight-stage RefinedWeb composition over a (doc_id, url, txt)

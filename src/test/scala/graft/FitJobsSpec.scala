@@ -53,35 +53,46 @@ class FitJobsSpec extends AnyFunSuite {
     val (df, build) = jobs(SparkEntry.queries("td_pipeline_ccnet")(spark, SfDir))
     val (rows, run) = jobs(df.collect())
     assert(rows.nonEmpty)
-    // build: the fused count pass (the shuffle stages of its two
-    // aggregates and the checkpoint); the bounded collect (the profile
+    // build: the one-scan count pass (the shuffle stage of its one
+    // aggregate and the checkpoint); the bounded collect (the profile
     // window's shuffle stage and the result). It was 14 with one job chain
-    // per model, and 6 while reading the table inferred its schema in a job.
-    assert(build == 5, "count pass 3 + collect 2")
-    // run: the LM's per-document scores joined to one projection of
-    // language ID and the quality keep. It was 12 with a join per model.
-    assert(run == 9)
+    // per model, 6 while reading the table inferred its schema in a job,
+    // and 5 while the count pass had two aggregates.
+    assert(build == 4, "count pass 2 + collect 2")
+    // run: one projection of language ID, the quality keep and the LM
+    // transitions, the LM's broadcast joins and one aggregate per document.
+    // It was 12 with a join per model, and 9 while a second read of the
+    // documents was joined to the projection on doc_id.
+    assert(run == 7)
   }
 
   test("Profile reports td_pipeline_ccnet's pinned jobs, each with its call site") {
     val m = withConfs(Profile.measure(spark, SfDir, "td_pipeline_ccnet"))
-    assert(m.buildJobs.size == 5 && m.runJobs.size == 9 &&
-      (m.buildJobs ++ m.runJobs).forall(_.contains(".scala:")),
-      s"build ${m.buildJobs} run ${m.runJobs}")
-    // both phases shuffle, so both report written bytes
-    assert(m.buildShuffleMb > 0 && m.runShuffleMb > 0, m.toString)
+    assert(m.build.jobs.size == 4 && m.run.jobs.size == 7 &&
+      (m.build.jobs ++ m.run.jobs).forall(_.contains(".scala:")),
+      s"build ${m.build.jobs} run ${m.run.jobs}")
+    for (p <- Seq(m.build, m.run)) {
+      // both phases shuffle, so both report written bytes
+      assert(p.shuffleMb > 0, m.toString)
+      // every job runs at least one task, and the driver-only share of a
+      // phase lies within its wall time
+      assert(p.tasks >= p.jobs.size && p.driverOnlyS >= 0 &&
+        p.driverOnlyS <= p.s, m.toString)
+    }
   }
 
   // build: none, the identical-text collapse is a window (it was 4: the
   // collapse's groupBy stage, its join and its checkpoint). run: the md5
-  // shuffle, the band shuffle, and the orderBy's sample, shuffle and
-  // result (it was 8: the band self-join, distinct and verify joins)
+  // shuffle, the band shuffle, the shuffle into one partition that orders
+  // the pairs and the result (it was 8 with the band self-join, distinct
+  // and verify joins, and 5 while a global orderBy's range partitioner
+  // sampled the verify pass in a job of its own)
   for (name <- Seq("td_dedup_near", "td_dedup_para"))
     test(s"$name: no job in the build, one banded pass in the run") {
       val (df, build) = jobs(SparkEntry.queries(name)(spark, SfDir))
       val (rows, run) = jobs(df.collect())
       assert(rows.nonEmpty)
-      assert(build == 0 && run == 5, s"build $build run $run")
+      assert(build == 0 && run == 4, s"build $build run $run")
     }
 
   test("td_pipeline_refinedweb: build plus collect") {

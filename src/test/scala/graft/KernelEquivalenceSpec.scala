@@ -998,6 +998,180 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     }
   }
 
+  // ---- the count rows each fit built before the one-pass count, and the
+  // fused pass's two aggregates, kept verbatim as references (the tags
+  // spelled out, the private tokenizer spelled as the kernel it calls)
+
+  private def refRows(df: DataFrame, tag: String, a: Column, b: Column,
+      n: Column = lit(1L)): DataFrame = {
+    import graft.functions.TaggedCounts.{A, B, N, Tag}
+    df.select(lit(tag).as(Tag), a.cast("string").as(A),
+      b.cast("string").as(B), n.cast("long").as(N))
+  }
+
+  private def refCount(parts: Seq[DataFrame]): DataFrame = {
+    import graft.functions.TaggedCounts.{A, B, N, Tag}
+    parts.reduce(_ unionByName _).groupBy(Tag, A, B).agg(sum(N).as(N))
+  }
+
+  private def refProfileRows(df: DataFrame, langCol: String,
+      textCol: String, n: Int): DataFrame =
+    refRows(df.filter(col(langCol).isNotNull)
+        .select(col(langCol).as("__l"),
+          explode(graft.functions.LangIdNgram.charGrams(col(textCol), n))
+            .as("__g")),
+      "lid", col("__l"), col("__g"))
+
+  private def refLmCountRows(target: DataFrame,
+      textCol: String): Seq[DataFrame] = {
+    def tokens(text: Column) = TextGrams.ws_tokens(text)
+    val uni = target.select(explode(tokens(col(textCol))).as("__w"))
+    val bi = target.select(explode(
+      graft.functions.expressions.TextGrams.bigram_pairs(
+        tokens(col(textCol)))).as("__b"))
+    val nTok = target.select(when(col(textCol).isNotNull,
+      size(tokens(col(textCol)))).otherwise(0).as("__n"))
+    Seq(
+      refRows(uni, "uni", col("__w"), lit(null)),
+      refRows(bi, "bi", col("__b.__w1"), col("__b.__w2")),
+      refRows(nTok, "tok", lit(null), lit(null), col("__n")))
+  }
+
+  private def refBucketRows(df: DataFrame, textCol: String,
+      nBuckets: Int, tag: String): DataFrame = {
+    import graft.functions.Dsir.{gramBucket, grams}
+    refRows(df.select(explode(grams(col(textCol))).as("__g")),
+      tag, gramBucket(col("__g"), nBuckets), lit(null))
+  }
+
+  private def refQmCountRows(pos: DataFrame, neg: DataFrame,
+      textCol: String, nBuckets: Int): Seq[DataFrame] =
+    Seq(refBucketRows(pos, textCol, nBuckets, "pos"),
+      refBucketRows(neg, textCol, nBuckets, "neg"))
+
+  private def refCcNetCounts(docs: DataFrame, langCol: String, textCol: String,
+      keepLang: String, n: Int, nBuckets: Int): DataFrame = {
+    val keep = docs.filter(col(langCol) === keepLang)
+    val rest = docs.filter(col(langCol) =!= keepLang)
+    refCount(Seq(refProfileRows(docs, langCol, textCol, n)))
+      .unionByName(refCount(refLmCountRows(keep, textCol) ++
+        refQmCountRows(keep, rest, textCol, nBuckets)))
+  }
+
+  /** Five en documents in ONE partition, each the same 30000 distinct
+    * tokens in its own order: more distinct (tag, a, b) keys than the
+    * per-task combine holds, so it emits partial sums more than once and
+    * the aggregate merges the same keys across those emissions. */
+  private def flushCorpus: DataFrame = {
+    import spark.implicits._
+    val m = 30000
+    (0 until 5).map { d =>
+      val step = Seq(1, 7, 11, 13, 17)(d)
+      (d.toLong, "en", (0 until m).map(i => s"t${(i * step) % m}").mkString(" "))
+    }.toDF("doc_id", "lang", "text").coalesce(1)
+  }
+
+  /** An integer language column: 1 is the keep language, 7 another, and
+    * one NULL language. */
+  private def intLangCorpus: DataFrame = {
+    import spark.implicits._
+    Seq((0L, Option(1), "the data table the data"), (1L, Option(7), "le flux des données"),
+      (2L, Option(1), "data"), (3L, None, "the table"), (4L, Option(7), "中文 数据"))
+      .toDF("doc_id", "lang", "text")
+  }
+
+  /** CJK without spaces, one-token en documents (no transitions) and texts
+    * shorter than n characters. */
+  private def edgeCorpus: DataFrame = {
+    import spark.implicits._
+    Seq((0L, "zh", "中文数据表查询中文"), (1L, "en", "hello"), (2L, "en", "ab"),
+      (3L, "fr", "ab"), (4L, "zh", "字"), (5L, "en", "the data the"),
+      (6L, "fr", "x y"), (7L, "en", "中"))
+      .toDF("doc_id", "lang", "text")
+  }
+
+  private def countCorpora: Seq[(String, DataFrame, String)] =
+    fitCorpora.map { case (name, df) => (name, df, "en") } ++ Seq(
+      ("flush", flushCorpus, "en"), ("int lang", intLangCorpus, "1"),
+      ("edge", edgeCorpus, "en"))
+
+  test("one-pass count == the per-fit row builders and their aggregates") {
+    import graft.functions.{CcNet, NgramLm, TaggedCounts}
+    for ((name, df, keep) <- countCorpora) {
+      for ((n, nb) <- Seq(3 -> 1024, 1 -> 64))
+        assertSameRows(s"$name CcNet n=$n nb=$nb",
+          CcNet.counts(df, "lang", "text", keep, n, nb),
+          refCcNetCounts(df, "lang", "text", keep, n, nb))
+      val target = df.filter(col("lang") === keep).select("text")
+      assertSameRows(s"$name LM", NgramLm.counts(target, "text"),
+        refCount(refLmCountRows(target, "text")))
+    }
+    assert(flushCorpus.rdd.getNumPartitions == 1)
+    assert(refCcNetCounts(flushCorpus, "lang", "text", "en", 3, 1024).count() >
+      TaggedCounts.MaxEntries)
+  }
+
+  test("standalone fits == the per-model reference fits past the combine bound and on edge texts") {
+    import graft.functions.{Dsir, LangIdNgram, NgramLm, QualityModel}
+    for ((name, df) <- Seq("flush" -> flushCorpus, "edge" -> edgeCorpus)) {
+      val en = df.filter(col("lang") === "en").select("text")
+      val rest = df.filter(col("lang") =!= "en").select("text")
+      for ((n, k) <- Seq(3 -> 40, 1 -> 5))
+        assert(profileSet(LangIdNgram.fitProfiles(df, "lang", "text", n, k)) ==
+          profileSet(r20FitProfiles(df, "lang", "text", n, k)),
+          s"$name profiles n=$n k=$k")
+      assert(lmTables(NgramLm.fit(en, "text")) == lmTables(r20LmFit(en, "text")),
+        s"$name LM")
+      assert(QualityModel.fitLogOddsMicro(en, rest, "text", 1024).toSeq ==
+        r20FitLogOddsMicro(en, rest, "text", 1024).toSeq, s"$name weights")
+      val raw = df.select("doc_id", "text")
+      val target = df.filter(col("lang") === "en").select("doc_id", "text")
+      assertSameRows(s"$name importance weights",
+        Dsir.importanceWeights(raw, target, "doc_id", "text", 1024),
+        r20ImportanceWeights(raw, target, "doc_id", "text", 1024))
+    }
+  }
+
+  /** The td_pipeline_ccnet body before scoring read the documents once,
+    * verbatim (the tokenizer that withScore now takes spelled as the
+    * kernel, as above): a second read of the documents scored by the LM
+    * and joined on doc_id. */
+  private def refCcnetPipeline(docs: DataFrame): DataFrame = {
+    import graft.functions.{CcNet, NgramLm, QualityModel}
+    import graft.functions.expressions.LangIdOop
+    // the three fits share one count pass and one collect
+    val fit = CcNet.fit(docs, "lang", "text", keepLang = "en",
+      n = 3, k = 40, nBuckets = 1024)
+    // language ID and the quality keep are per-row maps over the same
+    // documents: one projection pass, one row per document, so only
+    // the LM's per-document transition scores join onto it
+    val lidQm = QualityModel.withScore(
+        docs.select(col("doc_id"), col("text"),
+          LangIdOop.lang_id_oop(col("text"), fit.profiles, 3, 40)
+            .getField("pred_lang").as("pred_lang")),
+        TextGrams.ws_tokens(col("text")), fit.weightsMicro, nBuckets = 1024)
+      .select("doc_id", "pred_lang", "keep")
+    val lm = NgramLm.transitionScores(docs.select("doc_id", "text"),
+      "doc_id", "text", fit.lm)
+    lidQm.join(lm, Seq("doc_id"), "left")
+      .withColumn("ppl_bucket", NgramLm.pplBucket(
+        NgramLm.avgLogProbMicro(col("n_scored"), col("logprob_micro")),
+        -3400000L, -3600000L))
+      .select(col("doc_id"), col("pred_lang"), col("ppl_bucket"),
+        col("keep"),
+        (coalesce(col("pred_lang") === "en", lit(false)) &&
+          col("ppl_bucket") =!= "tail" && col("keep")).as("keep_final"))
+      .orderBy("doc_id")
+  }
+
+  test("td_pipeline_ccnet body == the second read joined on doc_id") {
+    // sf0.001 documents; NULL and whitespace-only texts, NULL languages
+    // and documents without transitions; the same without en documents
+    for ((name, df) <- fitCorpora)
+      assertSameRows(name, graft.queries.TrainingData.ccnetPipeline(df),
+        refCcnetPipeline(df))
+  }
+
   // The per-key bodies that one window on the key replaced, verbatim: a
   // groupBy on the key joined back null-safely onto the input, and for
   // the cap a count join plus a window over a synthetic key.

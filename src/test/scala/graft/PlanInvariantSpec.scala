@@ -67,22 +67,24 @@ class PlanInvariantSpec extends AnyFunSuite {
     // classification is a per-row map: only the final orderBy shuffles
     ("td_quality_langid_ngram", query("td_quality_langid_ngram"),
       Seq(1, 0, 0, 0, 0, 0), Map("langidoopexpr" -> 1)),
-    // language ID and the quality keep are one projection over the
-    // documents, so the broadcast join that put them side by side is gone
-    // (BroadcastHashJoin 4 → 3). That projection has one row per document,
-    // so the LM's per-document scores join it directly, not through a
-    // join back onto the document ids first (Exchange 4 → 3,
-    // SortMergeJoin 2 → 1). The unigram table's broadcast is reused by
-    // its second join (ReusedExchange 0 → 1)
+    // one projection over one read of the documents yields language ID,
+    // the quality keep and the LM transitions from one tokenization
+    // (wstokens 2 → 1); the LM's three count joins are broadcast and one
+    // aggregate per document follows, so the second read of the documents,
+    // its aggregate and the sort-merge join on doc_id are gone (Exchange
+    // 3 → 2: that aggregate and the orderBy; SortMergeJoin 1 → 0). The
+    // two unigram joins each broadcast their own copy of the table
+    // (ReusedExchange 1 → 0)
     ("td_pipeline_ccnet", query("td_pipeline_ccnet"),
-      Seq(3, 1, 1, 3, 1, 0),
+      Seq(2, 0, 0, 3, 1, 0),
       Map("langidoopexpr" -> 1, "bigrampairs" -> 1, "bucketweightsum" -> 1,
-        "wstokens" -> 2)),
+        "wstokens" -> 1)),
     // one banded pass: the md5 shuffle under the collapse window, the
-    // band shuffle and the final orderBy (Exchange 6 → 3). Candidates are
-    // verified inside each band run, so the band self-join and the two
-    // verify joins are gone (SortMergeJoin 3 → 0, ReusedExchange 2 → 0)
-    // and the shingles run once, under the signature kernel (2 → 1)
+    // band shuffle and the shuffle into the one partition that orders the
+    // pairs (Exchange 6 → 3). Candidates are verified inside each band
+    // run, so the band self-join and the two verify joins are gone
+    // (SortMergeJoin 3 → 0, ReusedExchange 2 → 0) and the shingles run
+    // once, under the signature kernel (2 → 1)
     ("td_dedup_near", query("td_dedup_near"), Seq(3, 0, 0, 0, 0, 1),
       Map("minhashbandsexpr" -> 1, "shingles" -> 1)),
     // the same pass over paragraph units
@@ -129,17 +131,18 @@ class PlanInvariantSpec extends AnyFunSuite {
     // membership fold over their outputs and runs no kernel
     ("td_pipeline_refinedweb", query("td_pipeline_refinedweb"),
       Seq(3, 0, 1, 0, 0, 0), Map.empty),
-    // the count passes, materialized before any query reads them. Each
-    // kernel sits inside the explode that consumes it, so no inferred
-    // guard re-runs it; the tokenizer runs once per union branch (uni, bi
-    // and the token weight)
+    // the count passes, materialized before any query reads them: one
+    // mapPartitions pass over one scan, whose per-task sums one aggregate
+    // merges (Exchange 1; the CCNet pass had 2 aggregates and a union).
+    // The kernels run inside that pass through their `compute` methods,
+    // once per document by construction, so none shows in the plan (the
+    // LM pass had run the tokenizer 3 times, the CCNet pass 5 times)
     ("NgramLm.fit count pass", spark => NgramLm.counts(
         documents(spark).filter(col("lang") === "en").select("text"), "text"),
-      Seq(1, 0, 0, 0, 0, 0), Map("bigrampairs" -> 1, "wstokens" -> 3)),
-    // two aggregates: the language-ID rows, and the LM and quality rows
+      Seq(1, 0, 0, 0, 0, 0), Map.empty),
     ("CcNet.fit count pass", spark => CcNet.counts(documents(spark), "lang",
         "text", "en", n = 3, nBuckets = 1024),
-      Seq(2, 0, 0, 0, 0, 0), Map("bigrampairs" -> 1, "wstokens" -> 5)))
+      Seq(1, 0, 0, 0, 0, 0), Map.empty))
 
   private def operatorCounts(plan: SparkPlan): Seq[Int] = {
     val names = plan.collectWithSubqueries { case p => p.nodeName }
