@@ -2,14 +2,15 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumnBridge, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.expressions.{MinHashBands, MinHashBandsExpr, Shingles}
+import graft.functions.expressions.{FoldDot, LshVec, MinHashBands, MinHashBandsExpr, Shingles}
 
 /** Document deduplication for large-scale text corpora.
   *
@@ -20,6 +21,12 @@ import graft.functions.expressions.{MinHashBands, MinHashBandsExpr, Shingles}
   *   - MinHash+LSH ([[nearDupPairs]]): an identical-text window over one
   *     md5 shuffle, then one shuffle of the band rows; candidates are
   *     verified inside each sorted band run, so there is no pair join.
+  *
+  * Every candidate-pair operator here ([[nearDupPairs]],
+  * [[embedNearDupPairs]], [[semDedup]] and [[Multimodal]]'s Hamming
+  * matchers) finds its pairs in one [[runPass]]: rows that share a key are
+  * shuffled together once and verified inside their sorted run, and a pair
+  * that shares several keys is emitted from the first of them only.
   */
 object Dedup {
 
@@ -30,7 +37,7 @@ object Dedup {
     * at real scale (many files/splits) this is None, so no shuffle of
     * the full corpus is ever added where it wasn't needed.
     */
-  private def widenTarget(df: DataFrame): Option[Int] = {
+  private[graft] def widenTarget(df: DataFrame): Option[Int] = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     // Estimate the scan's parallelism from logical-plan statistics (file
@@ -78,21 +85,86 @@ object Dedup {
   /** Generic identical-key representative collapse for the embedding and
     * multimodal near-dup operators ([[embedNearDupPairs]],
     * [[Multimodal]]): `min(__id) OVER (PARTITION BY keyCol)` names each
-    * row's representative (`rows` must carry an `__id` column). A NULL
-    * key is one window partition like any other, so those rows stay in
-    * the pair universe. Returns (reps, star): the representative rows
-    * (full original columns) and the (id_a = rep, id_b = member) edges
-    * for collapsed members. Nothing is materialized here: a caller that
-    * feeds the result to several plan subtrees checkpoints its own
-    * input or output. */
-  private[graft] def collapseByKey(rows: DataFrame,
-      keyCol: String): (DataFrame, DataFrame) = {
-    val tagged = rows.withColumn("__rep",
-      min("__id").over(Window.partitionBy(col(keyCol))))
-    val reps = tagged.filter(col("__id") === col("__rep")).drop("__rep")
-    val star = tagged.filter(col("__id") =!= col("__rep"))
-      .select(col("__rep").as("id_a"), col("__id").as("id_b"))
-    (reps, star)
+    * row's representative (`rows` must carry an `__id` column), returned
+    * as `rows` plus `__rep`. A row with `__id = __rep` is its key's
+    * representative; any other row is a collapsed member, which the
+    * caller's [[runPass]] emits as the star edge (id_a = rep, id_b =
+    * member). A NULL key is one window partition like any other, so those
+    * rows stay in the pair universe; a NULL `__id` is neither, and takes
+    * no part. */
+  private[graft] def collapseByKey(rows: DataFrame, keyCol: String): DataFrame =
+    rows.withColumn("__rep", min("__id").over(Window.partitionBy(col(keyCol))))
+
+  /** The [[runPass]] rows of a [[collapseByKey]]-tagged frame: `cols`,
+    * then (`__ki`, `__kv`): a representative emits one row per element of
+    * its `keys` array (its index and value), and a collapsed member one row
+    * (-1, xxhash64(`__id`)) that its engine emits as the star edge
+    * (rep, member). The members ride the same shuffle, so the collapse
+    * window has this one reader. */
+  private[graft] def keyRows(tagged: DataFrame, keys: Column,
+      cols: Column*): DataFrame = {
+    val isRep = col("__id") === col("__rep")
+    tagged.select(cols :+ posexplode(when(isRep, keys)
+        .otherwise(array(xxhash64(col("__id"))))).as(Seq("__ki", "__kv")): _*)
+      .withColumn("__ki", when(isRep, col("__ki")).otherwise(lit(-1)))
+  }
+
+  /** The one pairwise engine of this module and [[Multimodal]]. `rows` are
+    * hash-partitioned by the `key` columns (to `width` partitions when the
+    * input is under-parallel, see [[widenTarget]]; AQE would otherwise
+    * coalesce a small shuffle into one task and the pass would run on one
+    * core), sorted by `key` and then `order` within each partition, and
+    * one `mapPartitions` pass hands each run of rows with equal keys to
+    * `perRun`, whose rows it emits under the `out` schema. A NULL key
+    * value equals a NULL key value here, unlike in an equi-join, so a
+    * caller whose key can be NULL decides what such a run means.
+    *
+    * Bucket bound: the pass holds one run in memory at a time, and
+    * `perRun` typically verifies all of its pairs, O(run²) work: the same
+    * as the per-bucket work of a self-join on the key. Runs are produced
+    * lazily, so the pass streams past every other run. */
+  private[graft] def runPass(rows: DataFrame, width: Option[Int],
+      key: Seq[String], order: Seq[String], out: StructType)(
+      perRun: collection.IndexedSeq[Row] => Iterator[Row]): DataFrame = {
+    val at = key.map(rows.schema.fieldIndex).toArray
+    width.fold(rows.repartition(key.map(col): _*))(rows.repartition(_, key.map(col): _*))
+      .sortWithinPartitions((key ++ order).map(col): _*)
+      .mapPartitions { it =>
+        val in = it.buffered
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val run = ArrayBuffer(in.next())
+          while (in.hasNext && at.forall(k => in.head.get(k) == run(0).get(k)))
+            run += in.next()
+          perRun(run)
+        }
+      }(Encoders.row(out))
+  }
+
+  /** [[Similarity.cosine]] `>= threshold` outside a plan, for vectors of
+    * `df`'s `vecCol` and their norms, which the plan computes with
+    * [[Similarity.norm]]: the same [[FoldDot]] fold and division, NULL
+    * (never reaching the threshold) wherever the plan gives NULL, a zero
+    * divisor failing under ANSI as Spark's division does, and Spark's
+    * double order, so a NaN cosine reaches every threshold. */
+  private final class Cosine(df: DataFrame, vecCol: String) extends Serializable {
+    private val ansi = df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+    private val vecType = df.schema(vecCol).dataType
+    private val dot = FoldDot(Literal(null, vecType), Literal(null, vecType))
+
+    /** a vector as a [[Row]] holds it */
+    def data(v: Any): ArrayData =
+      if (v == null) null else new GenericArrayData(v.asInstanceOf[collection.Seq[Any]])
+
+    /** cosine(a, b) given norm(a) and norm(b) */
+    def apply(a: ArrayData, na: Any, b: ArrayData, nb: Any): java.lang.Double = {
+      val ab = if (na == null || nb == null) null else dot.compute(a, b)
+      val den = if (ab == null) 1.0 else na.asInstanceOf[Double] * nb.asInstanceOf[Double]
+      if (den == 0 && ansi) throw GraftColumnBridge.divideByZero()
+      if (ab == null || den == 0) null else ab / den
+    }
+
+    def atLeast(c: java.lang.Double, threshold: Double): Boolean =
+      c != null && SQLOrderingUtil.compareDoubles(c, threshold) >= 0
   }
 
   /** Near-duplicate pairs with exact Jaccard >= threshold over distinct
@@ -133,11 +205,11 @@ object Dedup {
     *      are hash-partitioned by (band_idx, band_hash) and sorted by
     *      (band_hash, band_idx, id) within each partition (the band hash
     *      first, so the sort's prefix tells almost all rows apart).
-    *   3. One pass per partition walks the runs of equal
-    *      (band_idx, band_hash) ([[verifyRuns]]): every pair of a run is a
-    *      candidate, verified by exact Jaccard and emitted only from the
-    *      FIRST band in which the two signatures agree, so no `distinct`
-    *      is needed. Member rows pass through as star edges.
+    *   3. [[runPass]] hands each run of equal (band_idx, band_hash) to
+    *      [[verifyRun]]: every pair of a run is a candidate, verified by
+    *      exact Jaccard and emitted only from the FIRST band in which the
+    *      two signatures agree, so no `distinct` is needed. Member rows
+    *      pass through as star edges.
     *
     * Bucket bound: the pass holds one run (one bucket) in memory at a
     * time and verifies all of its pairs, O(run²) work, as the per-bucket
@@ -166,91 +238,76 @@ object Dedup {
     // AQE would coalesce these small shuffles into one task, and the
     // kernels and the verify pass would then run on one core
     val width = widenTarget(df0)
-    val keyed = width.fold(hashed)(hashed.repartition(_, col("__ch")))
-    val isRep = col("__id") === col("__rep")
-    val rows = keyed
-      .withColumn("__rep", min("__id").over(Window.partitionBy("__ch")))
-      .select(col("__id"), col("__rep"), when(isRep, col("__t")).as("__t"),
-        posexplode(when(isRep, MinHashBands.minhash_bands(
-            shingleCol(col("__t"), n), bands, rowsPerBand))
-          .otherwise(array(xxhash64(col("__id")))))
-          .as(Seq("__bi", "__bh")))
-      .select(when(isRep, col("__bi")).otherwise(lit(-1)).as("__bi"),
-        col("__bh"), col("__id"), col("__rep"), col("__t"))
-    val idType = hashed.schema("__id").dataType
-    val out = StructType(Seq(StructField("id_a", idType),
-      StructField("id_b", idType), StructField("jaccard", DoubleType)))
-    val bandKey = Seq(col("__bi"), col("__bh"))
-    width.fold(rows.repartition(bandKey: _*))(rows.repartition(_, bandKey: _*))
-      .sortWithinPartitions("__bh", "__bi", "__id")
-      .mapPartitions(verifyRuns(_, threshold, n, bands, rowsPerBand))(
-        Encoders.row(out))
+    val tagged = collapseByKey(
+      width.fold(hashed)(hashed.repartition(_, col("__ch"))), "__ch")
+    val rows = keyRows(tagged, MinHashBands.minhash_bands(
+        shingleCol(col("__t"), n), bands, rowsPerBand),
+      col("__id"), col("__rep"), when(col("__id") === col("__rep"), col("__t")).as("__t"))
+    val shingles = Shingles(Literal(null, StringType), n)
+    val bander = MinHashBandsExpr(Literal(null, ArrayType(StringType)),
+      bands, rowsPerBand)
+    runPass(rows, width, Seq("__kv", "__ki"), Seq("__id"),
+        pairSchema(hashed, "jaccard", DoubleType)) { run =>
+      val band = run(0).getInt(3)
+      if (band < 0) run.iterator.map(r => Row(r.get(1), r.get(0), 1.0))
+      else if (run.size < 2) Iterator.empty
+      else verifyRun(run, band, threshold, shingles, bander)
+    }
   }
 
-  /** The per-partition pass of [[nearDupPairs]] over rows
-    * (band_idx, band_hash, id, rep, text) sorted so that rows of equal
-    * (band_idx, band_hash) form one run, in id order. A band_idx -1 row is
-    * a collapsed member: (rep, id, 1.0). Within a run, each pair with
-    * id_a < id_b is kept when its Jaccard, computed as
+  /** (id_a, id_b, `measure`) with the id type of `rows`' `__id`. */
+  private[graft] def pairSchema(rows: DataFrame, measure: String,
+      measureType: DataType): StructType = {
+    val id = rows.schema("__id")
+    StructType(Seq(id.copy(name = "id_a"), id.copy(name = "id_b"),
+      StructField(measure, measureType, nullable = false)))
+  }
+
+  /** [[nearDupPairs]]' verify of one run of rows
+    * (id, rep, text, band_idx, band_hash) of band `band`, in id order.
+    * Each pair with id_a < id_b is kept when its Jaccard, computed as
     * `size(array_intersect) / size(array_union)` over the [[Shingles]]
     * kernel's sets (a NULL element equals a NULL element), reaches
     * `threshold`, and this band is the first in which the two
     * [[MinHashBandsExpr]] band hashes agree. The band hashes are
     * recomputed for those pairs only, in band order and only up to the
     * first agreeing band. */
-  private def verifyRuns(rows: Iterator[Row], threshold: Double, n: Int,
-      bands: Int, rowsPerBand: Int): Iterator[Row] = {
-    val shingles = Shingles(Literal(null, StringType), n)
-    val bander = MinHashBandsExpr(Literal(null, ArrayType(StringType)),
-      bands, rowsPerBand)
-    def pairs(run: ArrayBuffer[Row], band: Int): Iterator[Row] = {
-      val grams = run.map(r => shingles.compute(UTF8String.fromString(r.getString(4))))
-      val sets = grams.map { g =>
-        val s = new java.util.HashSet[UTF8String](g.numElements() * 2)
-        for (k <- 0 until g.numElements()) s.add(g.getUTF8String(k))
-        s
-      }
-      def jaccard(i: Int, j: Int): Double = {
-        val (small, large) =
-          if (sets(i).size <= sets(j).size) (sets(i), sets(j)) else (sets(j), sets(i))
-        var inter = 0
-        small.forEach(g => if (large.contains(g)) inter += 1)
-        inter.toDouble / (sets(i).size + sets(j).size - inter)
-      }
-      // each member's band hashes, computed in band order only as far as
-      // a check needs them: most pairs agree in band 0 or 1
-      val bases = new Array[Array[Long]](run.size)
-      val known = new Array[Int](run.size)
-      val hashes = Array.ofDim[Long](run.size, bands)
-      def bandOf(i: Int, c: Int): Long = {
-        if (bases(i) == null) bases(i) = bander.bases(grams(i))
-        while (known(i) <= c) {
-          hashes(i)(known(i)) = bander.bandHash(bases(i), known(i))
-          known(i) += 1
-        }
-        hashes(i)(c)
-      }
-      def firstCommonBand(i: Int, j: Int): Int =
-        (0 to band).indexWhere(c => bandOf(i, c) == bandOf(j, c))
-      val id = run.map(_.get(2))
-      for {
-        i <- run.indices.iterator
-        j <- (i + 1 until run.size).iterator if id(i) != id(j)
-        sim = jaccard(i, j) if sim >= threshold && firstCommonBand(i, j) == band
-      } yield Row(id(i), id(j), sim)
+  private def verifyRun(run: collection.IndexedSeq[Row], band: Int, threshold: Double,
+      shingles: Shingles, bander: MinHashBandsExpr): Iterator[Row] = {
+    val grams = run.map(r => shingles.compute(UTF8String.fromString(r.getString(2))))
+    val sets = grams.map { g =>
+      val s = new java.util.HashSet[UTF8String](g.numElements() * 2)
+      for (k <- 0 until g.numElements()) s.add(g.getUTF8String(k))
+      s
     }
-    val in = rows.buffered
-    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
-      val head = in.next()
-      val (band, hash) = (head.getInt(0), head.getLong(1))
-      if (band < 0) Iterator.single(Row(head.get(3), head.get(2), 1.0))
-      else {
-        val run = ArrayBuffer(head)
-        while (in.hasNext && in.head.getInt(0) == band && in.head.getLong(1) == hash)
-          run += in.next()
-        if (run.size < 2) Iterator.empty else pairs(run, band)
-      }
+    def jaccard(i: Int, j: Int): Double = {
+      val (small, large) =
+        if (sets(i).size <= sets(j).size) (sets(i), sets(j)) else (sets(j), sets(i))
+      var inter = 0
+      small.forEach(g => if (large.contains(g)) inter += 1)
+      inter.toDouble / (sets(i).size + sets(j).size - inter)
     }
+    // each member's band hashes, computed in band order only as far as
+    // a check needs them: most pairs agree in band 0 or 1
+    val bases = new Array[Array[Long]](run.size)
+    val known = new Array[Int](run.size)
+    val hashes = Array.ofDim[Long](run.size, band + 1)
+    def bandOf(i: Int, c: Int): Long = {
+      if (bases(i) == null) bases(i) = bander.bases(grams(i))
+      while (known(i) <= c) {
+        hashes(i)(known(i)) = bander.bandHash(bases(i), known(i))
+        known(i) += 1
+      }
+      hashes(i)(c)
+    }
+    def firstCommonBand(i: Int, j: Int): Int =
+      (0 to band).indexWhere(c => bandOf(i, c) == bandOf(j, c))
+    val id = run.map(_.get(0))
+    for {
+      i <- run.indices.iterator
+      j <- (i + 1 until run.size).iterator if id(i) != id(j)
+      sim = jaccard(i, j) if sim >= threshold && firstCommonBand(i, j) == band
+    } yield Row(id(i), id(j), sim)
   }
 
   /** Paragraph-granularity fuzzy dedup (RefinedWeb §3.2 / Dolma run
@@ -467,19 +524,38 @@ object Dedup {
 
   /** Embedding-cosine near-duplicate pairs: sign-LSH candidate buckets
     * (pairs must share a (table, bucket) posting) + exact cosine verify.
-    * The bucket self-join is the only pairwise work — O(candidates), not
-    * O(n²); identical vectors always share every posting, so recall on
-    * true duplicates is 1.
+    * Identical vectors always share every posting, so recall on true
+    * duplicates is 1.
     *
     * BIT-IDENTICAL vectors collapse to their min-id representative
-    * before the posting join (same rationale as [[nearDupPairs]]'s
+    * ([[collapseByKey]]; same rationale as [[nearDupPairs]]'s
     * identical-text collapse: N re-ingested copies of one embedding
     * would fill every shared bucket and emit C(N,2) pairs). Each
     * identical group emits N−1 star edges at cosine 1.0; connected
     * components downstream is unchanged. Null and all-zero vectors are
     * excluded — cosine is undefined for them, so they can neither pair
-    * nor collapse (matching their pre-collapse NaN-drop behavior).
-    * Output: (id_a, id_b, cosine), id_a < id_b.
+    * nor collapse (matching their pre-collapse NaN-drop behavior). A
+    * NULL id takes no part. Output: (id_a, id_b, cosine), id_a < id_b.
+    *
+    * Scale shape: one collapse window, then one [[runPass]] ([[keyRows]]).
+    * Each representative emits one row per LSH table, keyed by its
+    * (table, bucket) and carrying its id, its vector, its norm and the
+    * buckets of all its tables, so `lsh_postings` runs once per
+    * representative; each member emits one star row. Within a run (one
+    * bucket), a pair is verified only if
+    * this table is the FIRST in which the two vectors' buckets agree, so
+    * a pair sharing several tables is verified and emitted once, with no
+    * `dropDuplicates`. Cosine is [[Similarity.cosine]] evaluated in the
+    * pass (the same [[FoldDot]] folds), bit for bit. The pass holds one
+    * bucket at a time and verifies its pairs, O(bucket²), as the
+    * per-bucket work of a posting self-join was; the shuffle carries
+    * tables × (vector + postings) bytes per representative, not a vector
+    * pair per candidate.
+    *
+    * Repeated ids: ids are unique by contract. Two rows with one id never
+    * pair with each other; with unequal vectors, each pairs with the
+    * others on its own, so a pair of ids can appear once per row (the
+    * self-join kept one arbitrary row of each pair of ids).
     */
   def embedNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bits: Int = 4, tables: Int = 8): DataFrame = {
@@ -488,32 +564,35 @@ object Dedup {
     // undefined for them, they matched nothing before the collapse
     // either (the NaN similarity failed every threshold), and
     // star-collapsing them would fabricate 1.0 similarities between
-    // unrelated documents and delete real data downstream
-    // compiled gate ([[expressions.LshVec.any_nonzero]]) since r19 — the
-    // `exists(vec, x =!= 0.0f)` HOF walked every vector interpreted;
-    // identical exists semantics (true on any non-zero incl. NaN, null
-    // if only nulls remain, -0.0 counts as zero) (guide §4)
-    val rows = df
-      .filter(col(vecCol).isNotNull &&
-        graft.functions.expressions.LshVec.any_nonzero(col(vecCol)))
-      .select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val (repRows, starBase) = collapseByKey(rows, "__v")
-    val star = starBase.withColumn("cosine", lit(1.0))
-    // the postings feed both sides of the self-join: materialize them
-    // once, so the kernel runs once per representative (left to the
-    // planner, one side is broadcast and each side runs it)
-    val posts = repRows.select(col("__id"), col("__v"),
-      explode(Similarity.lshPostings(col("__v"), bits, tables)).as("__p"))
-      .localCheckpoint()
-    posts.as("a").join(posts.as("b"),
-        col("a.__p") === col("b.__p") && col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
-        col("a.__v").as("__va"), col("b.__v").as("__vb"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("cosine", Similarity.cosine(col("__va"), col("__vb")))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-      .unionByName(star)
+    // unrelated documents and delete real data downstream.
+    // any_nonzero: true on any non-zero element incl. NaN, null if only
+    // nulls remain, -0.0 counts as zero
+    val vecs = df
+      .filter(col(idCol).isNotNull && col(vecCol).isNotNull && LshVec.any_nonzero(col(vecCol)))
+      .select(col(idCol).as("__id"), col(vecCol).as("__v"),
+        Similarity.norm(col(vecCol)).as("__n"))
+    // the bucket array is exploded through keyRows' CASE WHEN, not as a
+    // bare attribute, so the kernel runs once per row and rides along too
+    val rows = keyRows(collapseByKey(vecs, "__v").withColumn("__bs", transform(
+        Similarity.lshPostings(col("__v"), bits, tables), _.getField("b"))),
+      col("__bs"), col("__id"), col("__rep"), col("__v"), col("__n"), col("__bs"))
+    val cos = new Cosine(df, vecCol)
+    runPass(rows, widenTarget(df), Seq("__kv", "__ki"), Seq("__id"),
+        pairSchema(vecs, "cosine", DoubleType)) { run =>
+      val table = run(0).getInt(5)
+      if (table < 0) run.iterator.map(r => Row(r.get(1), r.get(0), 1.0))
+      else {
+        val id = run.map(_.get(0))
+        val vs = run.map(r => cos.data(r.get(2)))
+        val bs = run.map(_.getSeq[Long](4))
+        for {
+          i <- run.indices.iterator
+          j <- (i + 1 until run.size).iterator
+          if id(i) != id(j) && (0 until table).forall(t => bs(i)(t) != bs(j)(t))
+          c = cos(vs(i), run(i).get(3), vs(j), run(j).get(3)) if cos.atLeast(c, threshold)
+        } yield Row(id(i), id(j), c.doubleValue)
+      }
+    }
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -526,39 +605,50 @@ object Dedup {
     * one-survivor-per-group semantics.
     *
     * Scale shape: the clustering bounds ALL pairwise work to within-cell
-    * pairs — the self-join is equi-keyed on the cell id (a shuffle-hash
-    * join on cells, never a cartesian), so cost is Σ|cell|², not
-    * |corpus|². Centroids ride a 1-row broadcast ([[Similarity]]'s
-    * plan-size rationale) and assignment is a map-side argmax. At 100 TB
-    * nlist scales up to keep cells bounded (the paper's regime: tens of
-    * thousands of clusters), which only widens the same equi-join key
-    * space.
+    * pairs. One [[runPass]] keyed on the cell, rows in id order, decides
+    * every row of a cell from the rows before it and emits (id, kept) for
+    * each, so there is no self-join, no `distinct` of the dropped ids and
+    * no join back: cost is Σ|cell|² cosines, not |corpus|², and one cell
+    * is held in memory at a time. Cosine is [[Similarity.cosine]]
+    * evaluated in the pass, bit for bit, over every lower-id row of the
+    * cell as the self-join did. Centroids ride a 1-row broadcast
+    * ([[Similarity]]'s plan-size rationale) and assignment is a map-side
+    * argmax. At 100 TB nlist scales up to keep cells bounded (the paper's
+    * regime: tens of thousands of clusters), which only widens the key
+    * space of the same pass.
     *
     * Output: (idCol, kept) — kept = no lower-id in-cell neighbor at
-    * >= eps. Exact duplicates always land in the same cell (assignment is
-    * a deterministic function of the vector), so recall on true copies
-    * is 1 regardless of the clustering.
+    * >= eps; one row per input row. Exact duplicates always land in the
+    * same cell (assignment is a deterministic function of the vector), so
+    * recall on true copies is 1 regardless of the clustering. A row with
+    * a NULL id or a NULL cell is kept and drops nothing. Repeated ids:
+    * ids are unique by contract; each row with a repeated id is decided
+    * on its own and never by a row with the same id (the join back had
+    * given every row of the id `kept = false` when any of them dropped).
     */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
       eps: Double, nlist: Int = 16, kmeansIters: Int = 2): DataFrame = {
     val cents =
       Similarity.kmeansCentroids(df, idCol, vecCol, nlist, kmeansIters)
     val cRow = Similarity.centroidsRow(df.sparkSession, cents)
-    // the argmax assignment (O(|corpus|·nlist·dim)) feeds three plan
-    // subtrees (both self-join sides + the final keep/drop join) —
-    // materialize it once instead of re-deriving it per subtree
     val assigned = df.crossJoin(cRow)
       .select(col(idCol).as("__id"), col(vecCol).as("__v"),
+        Similarity.norm(col(vecCol)).as("__n"),
         Similarity.bestCellCol(col(vecCol)).cast("int").as("__cell"))
-      .localCheckpoint()
-    val dups = assigned.as("a").join(assigned.as("b"),
-        col("a.__cell") === col("b.__cell") && col("a.__id") < col("b.__id"))
-      .filter(Similarity.cosine(col("a.__v"), col("b.__v")) >= eps)
-      .select(col("b.__id").as("__id")).distinct()
-      .withColumn("__drop", lit(true))
-    assigned.join(dups, Seq("__id"), "left")
-      .select(col("__id").as(idCol),
-        coalesce(!col("__drop"), lit(true)).as("kept"))
+    val out = StructType(Seq(assigned.schema("__id").copy(name = idCol),
+      StructField("kept", BooleanType, nullable = false)))
+    val cos = new Cosine(df, vecCol)
+    runPass(assigned, widenTarget(df), Seq("__cell"), Seq("__id"), out) { run =>
+      val id = run.map(_.get(0))
+      val vs = run.map(r => cos.data(r.get(1)))
+      // every lower-id cosine is evaluated, as the self-join's filter did.
+      // A NULL cell holds NULL vectors only, whose cosines are NULL
+      run.indices.iterator.map { j =>
+        val drops = (0 until j).count(i => id(i) != null && id(j) != null &&
+          id(i) != id(j) && cos.atLeast(cos(vs(i), run(i).get(2), vs(j), run(j).get(2)), eps))
+        Row(id(j), drops == 0)
+      }
+    }
   }
 
   /** Incremental dedup of a new batch against a HISTORICAL corpus — the

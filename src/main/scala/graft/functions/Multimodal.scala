@@ -22,6 +22,16 @@ import org.apache.spark.sql.types._
   *     full raster decode, bilinear resample, GIF frame demux with
   *     compositing, all on the JDK's headless `javax.imageio` +
   *     `java.awt.image` — no external codec jars.
+  *
+  * The near-dup matchers (image aHash/pHash, audio, both video forms)
+  * share one shape: decode once, collapse identical hashes (or frame-hash
+  * sequences) to a min-id representative with one window, then one
+  * [[bandedHammingPairs]] run pass ([[Dedup.runPass]]) pairs the
+  * representatives inside their band buckets and passes the collapsed
+  * members through as star edges. No matcher self-joins or deduplicates
+  * its candidates; the pass holds one band bucket in memory at a time and
+  * checks its pairs, O(bucket²), the per-bucket work of the band
+  * self-join it replaced.
   */
 object Multimodal {
 
@@ -567,7 +577,7 @@ object Multimodal {
     }
 
   /** [[imageNearDupPairs]] with the DCT hash: same identical-hash
-    * representative collapse and banded-Hamming candidate join, keyed
+    * representative collapse and banded-Hamming run pass, keyed
     * on [[pHash64]] — catches brightness/gamma-shifted near-copies the
     * aHash matcher misses. Output: (id_a, id_b, hamming), id_a < id_b.
     */
@@ -577,20 +587,18 @@ object Multimodal {
       maxHamming, nBands)
 
   /** Shared tail of the single-hash near-dup operators (aHash, pHash,
-    * audio fingerprint): materialize the (id, hash) frame ONCE (the
-    * decode lineage otherwise re-runs under the representatives, the
-    * star edges and both sides of the band join), collapse identical
-    * hashes to min-id representatives, banded-join the representatives,
-    * and re-attach the star edges. One implementation so a checkpoint or
-    * band-policy fix can never land in one matcher and miss another. */
-  private def collapsedHashPairs(hashedWithNulls: DataFrame, idCol: String,
-      hashCol: String, maxHamming: Int, nBands: Int): DataFrame = {
-    val hashed = hashedWithNulls.filter(col(hashCol).isNotNull)
-      .select(col(idCol).as("__id"), col(hashCol).as("__hash"))
-      .localCheckpoint()
-    val (reps, star) = hashCollapse(hashed)
-    bandedHammingPairs(reps, maxHamming, nBands).unionByName(star)
-  }
+    * audio fingerprint): collapse identical hashes to min-id
+    * representatives ([[Dedup.collapseByKey]]) and hand the tagged rows to
+    * [[bandedHammingPairs]], which drops undecodable payloads (NULL
+    * hashes), pairs the representatives and emits the members' star
+    * edges. The decode has that one reader, so it runs once per payload
+    * without a checkpoint.
+    * One implementation so a band-policy fix can never land in one
+    * matcher and miss another. */
+  private def collapsedHashPairs(hashed: DataFrame, idCol: String,
+      hashCol: String, maxHamming: Int, nBands: Int): DataFrame =
+    bandedHammingPairs(Dedup.collapseByKey(hashed.select(col(idCol).as("__id"),
+      col(hashCol).as("__hash")), "__hash"), maxHamming, nBands)
 
   /** Append `ahash: long` (null for undecodable payloads) — partition-wise
     * map over the scan, no shuffle. */
@@ -601,7 +609,7 @@ object Multimodal {
     }
 
   /** Image near-duplicate pairs by perceptual hash: aHash per payload,
-    * the 64-bit hash split into `nBands` contiguous bands, a self-join
+    * the 64-bit hash split into `nBands` contiguous bands, one run pass
     * keyed on (band index, band value), and an exact Hamming filter.
     * Pigeonhole guarantee: any pair with Hamming distance < nBands
     * shares at least one untouched band, so recall on pairs within
@@ -609,12 +617,12 @@ object Multimodal {
     * band-bucket sizes, never all-pairs.
     *
     * Identical-hash groups are collapsed to their min-id REPRESENTATIVE
-    * before the banded join ([[hashCollapse]]): web-scale corpora carry
+    * before the band pass ([[Dedup.collapseByKey]]): web-scale corpora carry
     * huge exact-duplicate groups (every blank/solid-color image aHashes
     * to the same 64 bits), and emitting all C(N,2) intra-group pairs
     * would be quadratic OUTPUT — a million identical thumbnails is
     * 5·10¹¹ pairs. Instead each group emits N−1 star edges
-    * (rep, member, 0) and only representatives enter the pair join, so
+    * (rep, member, 0) and only representatives enter the band runs, so
     * both candidate and output rows are linear in group size while
     * connected components over the edge list — the downstream keep/drop
     * decision — is unchanged (a star spans exactly what the clique
@@ -626,29 +634,34 @@ object Multimodal {
     collapsedHashPairs(imageHash(df, binaryCol), idCol, "ahash",
       maxHamming, nBands)
 
-  /** Collapse identical `__hash` values of an (`__id`, `__hash`) frame to
-    * their min-`__id` representative ([[Dedup.collapseByKey]] — the one
-    * shared collapse implementation). Returns (reps, star): one
-    * representative row per distinct hash, plus (id_a=rep, id_b=member,
-    * hamming=0) star edges for the collapsed members. One window on the
-    * hash — one shuffle, linear in rows, never pairwise. */
-  private[graft] def hashCollapse(hashed: DataFrame): (DataFrame, DataFrame) = {
-    val (repRows, starBase) = Dedup.collapseByKey(hashed, "__hash")
-    (repRows.select("__id", "__hash"),
-      starBase.withColumn("hamming", lit(0)))
-  }
-
-  /** Shared banded-Hamming self-join over (`__id`, `__hash` [, align
-    * cols]) frames — the candidate engine behind [[imageNearDupPairs]],
-    * [[audioNearDupPairs]], and (per aligned frame)
-    * [[videoNearDupPairs]]. Pigeonhole: Hamming < nBands ⟹ at least
-    * one untouched band, so recall within `maxHamming` <= nBands−1 is
-    * complete; work is band-bucket-bounded. `alignCols` join as extra
-    * equi-keys and pass through from side a; `carryCols` pass through
-    * from BOTH sides (as `<c>_a`/`<c>_b`) without constraining the
-    * join — the offset-voting video matcher reads frame indices from
-    * them. */
-  private def bandedHammingPairs(hashed: DataFrame,
+  /** The banded-Hamming candidate engine behind [[imageNearDupPairs]],
+    * [[audioNearDupPairs]] and both video matchers, over
+    * [[Dedup.collapseByKey]]-tagged (`__id`, `__rep`, `__hash`
+    * [, align cols] [, carry cols]) rows. Pigeonhole: Hamming < nBands ⟹
+    * at least one untouched band, so recall within `maxHamming` <=
+    * nBands−1 is complete.
+    *
+    * One [[Dedup.runPass]]: each representative row emits one row per
+    * band, keyed on (band index, band value, `alignCols`), and each pair
+    * of rows of a run (two different ids) is kept when its Hamming
+    * distance is at most `maxHamming` and this band is the FIRST band the
+    * two hashes share, so a pair that shares several bands is emitted
+    * once, with no `dropDuplicates`. A member row (`__id <> __rep`)
+    * passes through as the star edge (rep, member, 0) with its own align
+    * and carry values on both sides. Rows with a NULL id, hash or align
+    * value take no part. The pass holds one band bucket at a time and
+    * checks all of its pairs, O(bucket²), as the per-bucket work of a
+    * band self-join was.
+    *
+    * Output: (id_a, id_b, hamming, align cols, `<c>_a`, `<c>_b` per carry
+    * col), id_a < id_b. `alignCols` come from side a (they are equal);
+    * `carryCols` come from both sides without constraining the key — the
+    * video matchers read frame indices and frame counts from them. Ids
+    * are unique by contract; two rows with one id never pair with each
+    * other, and a repeated id with unequal hashes pairs once per row (the
+    * self-join's `dropDuplicates` kept one arbitrary row of each pair of
+    * ids and align/carry values). */
+  private[graft] def bandedHammingPairs(tagged: DataFrame,
       maxHamming: Int, nBands: Int,
       alignCols: Seq[String] = Nil,
       carryCols: Seq[String] = Nil): DataFrame = {
@@ -657,27 +670,33 @@ object Multimodal {
       s"complete recall needs maxHamming < nBands ($maxHamming >= $nBands)")
     val width = 64 / nBands
     val mask = if (width == 64) -1L else (1L << width) - 1
-    val bands = hashed.select(
-      (Seq(col("__id"), col("__hash")) ++ (alignCols ++ carryCols).map(col) :+
-        explode(array((0 until nBands).map(k =>
-          struct(lit(k).as("k"),
-            (shiftrightunsigned(col("__hash"), k * width)
-              .bitwiseAND(lit(mask))).as("v"))): _*)).as("__b")): _*)
-    val joinCond = (Seq(col("a.__b") === col("b.__b"),
-        col("a.__id") < col("b.__id")) ++
-      alignCols.map(c => col(s"a.$c") === col(s"b.$c"))).reduce(_ && _)
-    bands.as("a").join(bands.as("b"), joinCond)
-      .select(col("a.__id").as("id_a") +: col("b.__id").as("id_b") +:
-        bit_count(col("a.__hash").bitwiseXOR(col("b.__hash"))).cast("int")
-          .as("hamming") +: (alignCols.map(c => col(s"a.$c")) ++
-        carryCols.flatMap(c =>
-          Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b")))): _*)
-      // hamming is deterministic per pair, so filtering BEFORE the
-      // dedup aggregate is identical — and the chance same-band pairs
-      // (the large majority) never reach the dropDuplicates shuffle
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("id_a" +: "id_b" +: (alignCols ++
-        carryCols.flatMap(c => Seq(s"${c}_a", s"${c}_b"))))
+    val rows = Dedup.keyRows(
+      tagged.filter((Seq("__id", "__hash") ++ alignCols).map(col(_).isNotNull).reduce(_ && _)),
+      array((0 until nBands).map(k =>
+        shiftrightunsigned(col("__hash"), k * width).bitwiseAND(lit(mask))): _*),
+      (Seq("__id", "__rep", "__hash") ++ alignCols ++ carryCols).map(col): _*)
+    // row layout: id, rep, hash, align..., carry..., band index, band value
+    val align = 3 until 3 + alignCols.size
+    val carry = align.end until align.end + carryCols.size
+    def band(h: Long, k: Int): Long = (h >>> (k * width)) & mask
+    def edge(a: Row, b: Row, idA: Any, idB: Any, hamming: Int): Row =
+      Row.fromSeq(Seq(idA, idB, hamming) ++ align.map(a.get) ++
+        carry.flatMap(c => Seq(a.get(c), b.get(c))))
+    val out = StructType(Dedup.pairSchema(tagged, "hamming", IntegerType).fields ++
+      alignCols.map(tagged.schema(_)) ++ carryCols.flatMap(c =>
+        Seq("_a", "_b").map(side => tagged.schema(c).copy(name = c + side))))
+    Dedup.runPass(rows, Dedup.widenTarget(tagged), "__kv" +: "__ki" +: alignCols,
+        Seq("__id"), out) { run =>
+      val k = run(0).getInt(carry.end)
+      if (k < 0) run.iterator.map(r => edge(r, r, r.get(1), r.get(0), 0))
+      else for {
+        i <- run.indices.iterator
+        j <- (i + 1 until run.size).iterator if run(i).get(0) != run(j).get(0)
+        (hi, hj) = (run(i).getLong(2), run(j).getLong(2))
+        hamming = java.lang.Long.bitCount(hi ^ hj)
+        if hamming <= maxHamming && (0 until k).forall(c => band(hi, c) != band(hj, c))
+      } yield edge(run(i), run(j), run(i).get(0), run(j).get(0), hamming)
+    }
   }
 
   /** Append `afp: long` (the energy-envelope fingerprint; null for
@@ -689,7 +708,7 @@ object Multimodal {
     }
 
   /** Audio near-duplicate pairs by envelope fingerprint — the audio
-    * member of the perceptual-dedup family, same banded self-join,
+    * member of the perceptual-dedup family, same banded run pass,
     * recall guarantee, and identical-hash representative collapse as
     * [[imageNearDupPairs]] (star edges at hamming 0, O(N) output per
     * identical group). Output: (id_a, id_b, hamming), id_a < id_b. */
@@ -700,17 +719,20 @@ object Multimodal {
 
   /** Video near-duplicate pairs: demux every `every`-th frame
     * ([[frameSample]]'s executor-side fan-out), aHash each frame, run
-    * the banded-Hamming self-join PER ALIGNED FRAME INDEX, and keep
+    * the banded-Hamming pass PER ALIGNED FRAME INDEX, and keep
     * video pairs where at least `minMatchFrac` of the smaller side's
     * sampled frames match. Frame-index alignment makes this robust to
     * re-encodes and palette shifts but not to trimming — the standard
     * fixed-stride video fingerprint. Every stage is partition-wise or
     * band-bucket-bounded; the per-pair aggregation is keyed on the
     * candidate pairs only. Videos with IDENTICAL frame-hash sequences
-    * collapse to a min-id representative before the join (star edges at
-    * full match — the video analogue of [[imageNearDupPairs]]'s
-    * identical-hash collapse), so N identical clips cost O(N) output
-    * rows, not C(N,2). Output:
+    * collapse to a min-id representative before the band pass
+    * ([[videoFrames]]; star edges at full match — the video analogue of
+    * [[imageNearDupPairs]]'s identical-hash collapse), so N identical
+    * clips cost O(N) output rows, not C(N,2). Every frame row carries its
+    * video's frame count, so `frames_a`/`frames_b` come out of the pass
+    * and a member's star frames count up to its full match in the same
+    * aggregate. Output:
     * (id_a, id_b, matched_frames, frames_a, frames_b), id_a < id_b.
     */
   def videoNearDupPairs(df: DataFrame, idCol: String, binaryCol: String,
@@ -718,45 +740,35 @@ object Multimodal {
       minMatchFrac: Double = 0.5): DataFrame = {
     require(minMatchFrac > 0 && minMatchFrac <= 1,
       s"minMatchFrac must be in (0, 1], got $minMatchFrac")
-    val (repFrames, counts, starBase) =
-      videoRepFrames(df, idCol, binaryCol, every)
-    // members match their rep on every frame (identical sequences), so
-    // the star edge is a full match at the group's frame count
-    val star = starBase.select(col("id_a"), col("id_b"),
-      col("__nf").as("matched_frames"), col("__nf").as("frames_a"),
-      col("__nf").as("frames_b"))
-    val matched = bandedHammingPairs(repFrames, maxHamming, nBands,
-        alignCols = Seq("__fi"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("matched_frames"))
-    matched
-      .join(counts.select(col("__id").as("id_a"), col("__nf").as("frames_a")),
-        Seq("id_a"))
-      .join(counts.select(col("__id").as("id_b"), col("__nf").as("frames_b")),
-        Seq("id_b"))
+    bandedHammingPairs(videoFrames(df, idCol, binaryCol, every), maxHamming,
+        nBands, alignCols = Seq("__fi"), carryCols = Seq("__nf"))
+      .groupBy("id_a", "id_b", "__nf_a", "__nf_b")
+      .agg(count(lit(1)).as("matched_frames"))
       .filter(col("matched_frames") >=
-        least(col("frames_a"), col("frames_b")) * lit(minMatchFrac))
-      .select("id_a", "id_b", "matched_frames", "frames_a", "frames_b")
-      .unionByName(star)
+        least(col("__nf_a"), col("__nf_b")) * lit(minMatchFrac))
+      .select(col("id_a"), col("id_b"), col("matched_frames"),
+        col("__nf_a").as("frames_a"), col("__nf_b").as("frames_b"))
   }
 
   /** Shared demux → per-frame aHash → identical-SEQUENCE collapse stage
-    * behind both video matchers (the video analogue of [[hashCollapse]]):
-    * videos whose full ordered frame-hash sequences are equal form one
-    * group with a min-id representative. Without it N identical clips
-    * put N copies of every frame hash in each band bucket — C(N,2)
-    * candidate AND output pairs; with it the group costs N−1 star rows
-    * and one representative in the join. The sequence key is frames·12
-    * bytes per video, shuffled once. Residual hazard (documented, not
-    * handled): videos sharing SOME frames — e.g. a common intro — still
-    * meet in those frames' buckets, which is the genuine candidate set,
-    * bounded per bucket.
+    * behind both video matchers (the video analogue of
+    * [[collapsedHashPairs]]): videos whose full ordered frame-hash
+    * sequences are equal form one group with a min-id representative.
+    * Without it N identical clips put N copies of every frame hash in each
+    * band bucket — C(N,2) candidate AND output pairs; with it only the
+    * representative's frames enter the band runs, and each member's
+    * frames pass through as its star edge. The sequence key is frames·12
+    * bytes per video, shuffled once; one aggregate builds it (its size is
+    * the frame count), and one window names the representative. Residual
+    * hazard (documented, not handled): videos sharing SOME frames — e.g. a
+    * common intro — still meet in those frames' buckets, which is the
+    * genuine candidate set, bounded per bucket.
     *
-    * Returns (repFrames, counts, starBase): per-frame (__id, __fi,
-    * __hash) rows of representatives only, (rep __id, __nf frame
-    * count), and (id_a=rep, id_b=member, __nf) rows for collapsed
-    * members. */
-  private def videoRepFrames(df: DataFrame, idCol: String,
-      binaryCol: String, every: Int): (DataFrame, DataFrame, DataFrame) = {
+    * Returns [[bandedHammingPairs]] input: per-frame (__id, __rep, __nf
+    * frame count, __fi, __hash) rows, read back out of the sequence, so
+    * the demux and hash run once with no checkpoint. */
+  private def videoFrames(df: DataFrame, idCol: String,
+      binaryCol: String, every: Int): DataFrame = {
     val frames = frameSample(df.select(col(idCol), col(binaryCol)),
       binaryCol, every)
       // drop the full video payload between the two opaque row-level
@@ -764,31 +776,19 @@ object Multimodal {
       // without this every per-frame row would carry the whole clip
       // through the hash stage
       .select(col(idCol), col("frame_idx"), col("frame"))
-    // the demux+hash lineage (ImageIO decode, compositing, PNG
-    // re-encode, aHash — the expensive part) feeds the collapse, the
-    // counts, and the pair join: materialize it once
-    val hashed = imageHash(frames, "frame").filter(col("ahash").isNotNull)
-      .select(col(idCol).as("__id"), col("frame_idx").as("__fi"),
-        col("ahash").as("__hash"))
-      .localCheckpoint()
-    val sigs = hashed.groupBy("__id").agg(
-      sort_array(collect_list(struct(col("__fi"), col("__hash")))).as("__seq"),
-      count(lit(1)).as("__nf"))
-    val tagged = sigs.select(col("__id"), col("__nf"),
-      min("__id").over(Window.partitionBy(col("__seq"))).as("__rep"))
-    val starBase = tagged.filter(col("__id") =!= col("__rep"))
-      .select(col("__rep").as("id_a"), col("__id").as("id_b"), col("__nf"))
-    val counts = tagged.filter(col("__id") === col("__rep"))
-      .select(col("__id"), col("__nf"))
-    val repFrames = hashed.join(counts.select("__id"), Seq("__id"), "left_semi")
-    (repFrames, counts, starBase)
+    val sigs = imageHash(frames, "frame").filter(col("ahash").isNotNull)
+      .groupBy(col(idCol).as("__id")).agg(
+        sort_array(collect_list(struct(col("frame_idx").as("__fi"),
+          col("ahash").as("__hash")))).as("__seq"))
+    Dedup.collapseByKey(sigs, "__seq").select(col("__id"), col("__rep"),
+      size(col("__seq")).cast("long").as("__nf"), inline(col("__seq")))
   }
 
   /** Trim-robust video near-duplicate pairs: the fixed-stride aligned
     * matcher ([[videoNearDupPairs]]) misses clips that were trimmed or
     * offset, because frame j is only compared to frame j. This variant
     * is OFFSET-INVARIANT: candidate frame pairs come from the same
-    * banded-Hamming join but WITHOUT the frame-index equi-key; each
+    * banded-Hamming pass but WITHOUT the frame-index key; each
     * matching frame pair (fa, fb) votes for offset fb−fa, the
     * best-supported offset wins per video pair (ties to the smallest
     * offset), and the pair is kept when the winning offset's vote count
@@ -803,39 +803,26 @@ object Multimodal {
     * stay bucket-bounded and the identical-sequence collapse still caps
     * exact-duplicate groups at O(N). Output: (id_a, id_b, best_offset,
     * matched_frames, frames_a, frames_b), id_a < id_b; collapsed
-    * members report offset 0 at full match.
+    * members report offset 0 at full match (each star frame votes 0).
     */
   def videoNearDupPairsOffset(df: DataFrame, idCol: String, binaryCol: String,
       every: Int = 1, maxHamming: Int = 3, nBands: Int = 4,
       minMatchFrac: Double = 0.5): DataFrame = {
     require(minMatchFrac > 0 && minMatchFrac <= 1,
       s"minMatchFrac must be in (0, 1], got $minMatchFrac")
-    val (repFrames, counts, starBase) =
-      videoRepFrames(df, idCol, binaryCol, every)
-    val star = starBase.select(col("id_a"), col("id_b"),
-      lit(0).as("best_offset"), col("__nf").as("matched_frames"),
-      col("__nf").as("frames_a"), col("__nf").as("frames_b"))
-    val votes = bandedHammingPairs(repFrames, maxHamming, nBands,
-        carryCols = Seq("__fi"))
-      .select(col("id_a"), col("id_b"),
-        (col("__fi_b") - col("__fi_a")).as("best_offset"))
-      .groupBy("id_a", "id_b", "best_offset")
+    val votes = bandedHammingPairs(videoFrames(df, idCol, binaryCol, every),
+        maxHamming, nBands, carryCols = Seq("__fi", "__nf"))
+      .groupBy(col("id_a"), col("id_b"),
+        (col("__fi_b") - col("__fi_a")).as("best_offset"),
+        col("__nf_a").as("frames_a"), col("__nf_b").as("frames_b"))
       .agg(count(lit(1)).as("matched_frames"))
-    val best = votes.withColumn("__rk",
-        row_number().over(org.apache.spark.sql.expressions.Window
+    votes.withColumn("__rk", row_number().over(Window
           .partitionBy("id_a", "id_b")
           .orderBy(col("matched_frames").desc, col("best_offset"))))
-      .filter(col("__rk") === 1).drop("__rk")
-    best
-      .join(counts.select(col("__id").as("id_a"), col("__nf").as("frames_a")),
-        Seq("id_a"))
-      .join(counts.select(col("__id").as("id_b"), col("__nf").as("frames_b")),
-        Seq("id_b"))
-      .filter(col("matched_frames") >=
+      .filter(col("__rk") === 1 && col("matched_frames") >=
         least(col("frames_a"), col("frames_b")) * lit(minMatchFrac))
       .select("id_a", "id_b", "best_offset", "matched_frames",
         "frames_a", "frames_b")
-      .unionByName(star)
   }
 
   /** Encode an 8×8 grayscale raster (row-major `values`, 0-255) as a

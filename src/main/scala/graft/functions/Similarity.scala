@@ -89,7 +89,7 @@ object Similarity {
     * the plan). Cross-joining this 1-row frame is a broadcast nested-loop
     * join of one row: effectively a map-side attach.
     */
-  private[functions] def centroidsRow(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def centroidsRow(spark: org.apache.spark.sql.SparkSession,
       cents: Seq[Seq[Double]]): DataFrame = {
     import spark.implicits._
     broadcast(cents.zipWithIndex
@@ -110,7 +110,7 @@ object Similarity {
   private def rankedCells(v: Column): Column =
     graft.functions.expressions.VectorCells.sorted_cells(v, col("__cents"))
 
-  private[functions] def bestCellCol(v: Column): Column =
+  private[graft] def bestCellCol(v: Column): Column =
     element_at(rankedCells(v), 1)
 
   /** First `n` vectors by id as driver-side doubles — the bounded sample

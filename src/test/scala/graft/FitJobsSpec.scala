@@ -113,15 +113,32 @@ class FitJobsSpec extends AnyFunSuite {
 
   // per-key values come from one window on the key (each was a groupBy
   // joined back onto its input). td_dedup_url: no build, and the run is
-  // the window's shuffle plus the orderBy. td_dedup_embed: the build
-  // checkpoints the postings of the collapsed representatives (it was 3,
-  // the collapse's own checkpoint). td_mm_imagedup: the build is the hash
-  // checkpoint only (it was 4). td_mm_videodup: the sequence collapse is
-  // a window (the run was 13)
+  // the window's shuffle plus the orderBy. The pair engines verify their
+  // candidates in one run pass over the collapse window, so nothing is
+  // checkpointed in the build: td_dedup_embed's postings have one reader
+  // (build 2 → 0, run 6 → 5: the posting self-join and its dropDuplicates
+  // are gone), td_mm_imagedup's decoded hashes too (build 1 → 0, run 6 →
+  // 5), and td_mm_videodup reads its frames back out of the one sequence
+  // aggregate, with no join onto the frame counts (build 1 → 0, run 11 →
+  // 7)
   for ((name, build0, run0) <- Seq(("td_dedup_url", 0, 4),
-      ("td_dedup_embed", 2, 6), ("td_mm_imagedup", 1, 6),
-      ("td_mm_videodup", 1, 11)))
+      ("td_dedup_embed", 0, 5), ("td_mm_imagedup", 0, 5),
+      ("td_mm_videodup", 0, 7)))
     test(s"$name: per-key values from one window") {
+      val (df, build) = jobs(SparkEntry.queries(name)(spark, SfDir))
+      val (rows, run) = jobs(df.collect())
+      assert(rows.nonEmpty)
+      assert(build == build0 && run == run0, s"build $build run $run")
+    }
+
+  // td_dedup_semantic: the build is the k-means fit (the initial sample
+  // and the Lloyd rounds); the cells are verified in the run pass, so the
+  // assignment is not checkpointed (build 12 → 9, run 7 → 6).
+  // td_mm_audiodup: the decode has one reader, the collapse window under
+  // the band pass, so nothing is checkpointed (build 1 → 0, run 6 → 5)
+  for ((name, build0, run0) <- Seq(("td_dedup_semantic", 9, 6),
+      ("td_mm_audiodup", 0, 5)))
+    test(s"$name: candidate pairs in one run pass") {
       val (df, build) = jobs(SparkEntry.queries(name)(spark, SfDir))
       val (rows, run) = jobs(df.collect())
       assert(rows.nonEmpty)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, StringType, StructField, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -1310,7 +1311,10 @@ class KernelEquivalenceSpec extends AnyFunSuite {
       col("source"), md5(col("text")).as("__ch"))
     for ((name, rows, key) <- Seq(("adversarial", adversarial, "key"),
         ("documents by lang", docs, "lang"), ("documents by md5", docs, "__ch"))) {
-      val (reps, star) = Dedup.collapseByKey(rows, key)
+      val tagged = Dedup.collapseByKey(rows, key)
+      val reps = tagged.filter(col("__id") === col("__rep")).drop("__rep")
+      val star = tagged.filter(col("__id") =!= col("__rep"))
+        .select(col("__rep").as("id_a"), col("__id").as("id_b"))
       val (refReps, refStar) = refCollapseByKey(rows, key)
       assertSameRows(s"$name reps", reps, refReps)
       assertSameRows(s"$name star", star, refStar)
@@ -1454,5 +1458,384 @@ class KernelEquivalenceSpec extends AnyFunSuite {
         col("jaccard"))
     assertSamePairs("paragraphs",
       graft.functions.Dedup.paraNearDupPairs(docs, "doc_id", "text", 0.8), ref)
+  }
+
+  // The pair engines that the run pass replaced, verbatim: the window
+  // collapse that returned (reps, star), the posting self-join of
+  // embedNearDupPairs, the band self-join of bandedHammingPairs, the cell
+  // self-join of semDedup, and the video matchers built on them. Each
+  // joined, then deduplicated its candidates, then verified.
+
+  private def refCollapseWindow(rows: DataFrame,
+      keyCol: String): (DataFrame, DataFrame) = {
+    val tagged = rows.withColumn("__rep",
+      min("__id").over(Window.partitionBy(col(keyCol))))
+    val reps = tagged.filter(col("__id") === col("__rep")).drop("__rep")
+    val star = tagged.filter(col("__id") =!= col("__rep"))
+      .select(col("__rep").as("id_a"), col("__id").as("id_b"))
+    (reps, star)
+  }
+
+  private def refEmbedNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, bits: Int = 4, tables: Int = 8): DataFrame = {
+    import graft.functions.Similarity
+    val rows = df
+      .filter(col(vecCol).isNotNull &&
+        graft.functions.expressions.LshVec.any_nonzero(col(vecCol)))
+      .select(col(idCol).as("__id"), col(vecCol).as("__v"))
+    val (repRows, starBase) = refCollapseWindow(rows, "__v")
+    val star = starBase.withColumn("cosine", lit(1.0))
+    val posts = repRows.select(col("__id"), col("__v"),
+      explode(Similarity.lshPostings(col("__v"), bits, tables)).as("__p"))
+      .localCheckpoint()
+    posts.as("a").join(posts.as("b"),
+        col("a.__p") === col("b.__p") && col("a.__id") < col("b.__id"))
+      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
+        col("a.__v").as("__va"), col("b.__v").as("__vb"))
+      .dropDuplicates("id_a", "id_b")
+      .withColumn("cosine", Similarity.cosine(col("__va"), col("__vb")))
+      .filter(col("cosine") >= threshold)
+      .select("id_a", "id_b", "cosine")
+      .unionByName(star)
+  }
+
+  private def refSemDedup(df: DataFrame, idCol: String, vecCol: String,
+      eps: Double, nlist: Int = 16, kmeansIters: Int = 2): DataFrame = {
+    import graft.functions.Similarity
+    val cents =
+      Similarity.kmeansCentroids(df, idCol, vecCol, nlist, kmeansIters)
+    val cRow = Similarity.centroidsRow(df.sparkSession, cents)
+    val assigned = df.crossJoin(cRow)
+      .select(col(idCol).as("__id"), col(vecCol).as("__v"),
+        Similarity.bestCellCol(col(vecCol)).cast("int").as("__cell"))
+      .localCheckpoint()
+    val dups = assigned.as("a").join(assigned.as("b"),
+        col("a.__cell") === col("b.__cell") && col("a.__id") < col("b.__id"))
+      .filter(Similarity.cosine(col("a.__v"), col("b.__v")) >= eps)
+      .select(col("b.__id").as("__id")).distinct()
+      .withColumn("__drop", lit(true))
+    assigned.join(dups, Seq("__id"), "left")
+      .select(col("__id").as(idCol),
+        coalesce(!col("__drop"), lit(true)).as("kept"))
+  }
+
+  private def refBandedHammingPairs(hashed: DataFrame,
+      maxHamming: Int, nBands: Int,
+      alignCols: Seq[String] = Nil,
+      carryCols: Seq[String] = Nil): DataFrame = {
+    require(nBands > 0 && 64 % nBands == 0, s"nBands must divide 64: $nBands")
+    require(maxHamming < nBands,
+      s"complete recall needs maxHamming < nBands ($maxHamming >= $nBands)")
+    val width = 64 / nBands
+    val mask = if (width == 64) -1L else (1L << width) - 1
+    val bands = hashed.select(
+      (Seq(col("__id"), col("__hash")) ++ (alignCols ++ carryCols).map(col) :+
+        explode(array((0 until nBands).map(k =>
+          struct(lit(k).as("k"),
+            (shiftrightunsigned(col("__hash"), k * width)
+              .bitwiseAND(lit(mask))).as("v"))): _*)).as("__b")): _*)
+    val joinCond = (Seq(col("a.__b") === col("b.__b"),
+        col("a.__id") < col("b.__id")) ++
+      alignCols.map(c => col(s"a.$c") === col(s"b.$c"))).reduce(_ && _)
+    bands.as("a").join(bands.as("b"), joinCond)
+      .select(col("a.__id").as("id_a") +: col("b.__id").as("id_b") +:
+        bit_count(col("a.__hash").bitwiseXOR(col("b.__hash"))).cast("int")
+          .as("hamming") +: (alignCols.map(c => col(s"a.$c")) ++
+        carryCols.flatMap(c =>
+          Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b")))): _*)
+      .filter(col("hamming") <= maxHamming)
+      .dropDuplicates("id_a" +: "id_b" +: (alignCols ++
+        carryCols.flatMap(c => Seq(s"${c}_a", s"${c}_b"))))
+  }
+
+  /** the single-hash matchers' tail: collapse, band join, star edges */
+  private def refCollapsedHashPairs(hashed: DataFrame, maxHamming: Int,
+      nBands: Int): DataFrame = {
+    val (repRows, starBase) = refCollapseWindow(hashed, "__hash")
+    refBandedHammingPairs(repRows.select("__id", "__hash"), maxHamming, nBands)
+      .unionByName(starBase.withColumn("hamming", lit(0)))
+  }
+
+  private def refVideoRepFrames(df: DataFrame, idCol: String,
+      binaryCol: String, every: Int): (DataFrame, DataFrame, DataFrame) = {
+    import graft.functions.Multimodal.{frameSample, imageHash}
+    val frames = frameSample(df.select(col(idCol), col(binaryCol)),
+      binaryCol, every)
+      .select(col(idCol), col("frame_idx"), col("frame"))
+    val hashed = imageHash(frames, "frame").filter(col("ahash").isNotNull)
+      .select(col(idCol).as("__id"), col("frame_idx").as("__fi"),
+        col("ahash").as("__hash"))
+      .localCheckpoint()
+    val sigs = hashed.groupBy("__id").agg(
+      sort_array(collect_list(struct(col("__fi"), col("__hash")))).as("__seq"),
+      count(lit(1)).as("__nf"))
+    val tagged = sigs.select(col("__id"), col("__nf"),
+      min("__id").over(Window.partitionBy(col("__seq"))).as("__rep"))
+    val starBase = tagged.filter(col("__id") =!= col("__rep"))
+      .select(col("__rep").as("id_a"), col("__id").as("id_b"), col("__nf"))
+    val counts = tagged.filter(col("__id") === col("__rep"))
+      .select(col("__id"), col("__nf"))
+    val repFrames = hashed.join(counts.select("__id"), Seq("__id"), "left_semi")
+    (repFrames, counts, starBase)
+  }
+
+  private def refVideoNearDupPairs(df: DataFrame, idCol: String,
+      binaryCol: String, every: Int = 1, maxHamming: Int = 3, nBands: Int = 4,
+      minMatchFrac: Double = 0.5): DataFrame = {
+    val (repFrames, counts, starBase) =
+      refVideoRepFrames(df, idCol, binaryCol, every)
+    val star = starBase.select(col("id_a"), col("id_b"),
+      col("__nf").as("matched_frames"), col("__nf").as("frames_a"),
+      col("__nf").as("frames_b"))
+    val matched = refBandedHammingPairs(repFrames, maxHamming, nBands,
+        alignCols = Seq("__fi"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("matched_frames"))
+    matched
+      .join(counts.select(col("__id").as("id_a"), col("__nf").as("frames_a")),
+        Seq("id_a"))
+      .join(counts.select(col("__id").as("id_b"), col("__nf").as("frames_b")),
+        Seq("id_b"))
+      .filter(col("matched_frames") >=
+        least(col("frames_a"), col("frames_b")) * lit(minMatchFrac))
+      .select("id_a", "id_b", "matched_frames", "frames_a", "frames_b")
+      .unionByName(star)
+  }
+
+  private def refVideoNearDupPairsOffset(df: DataFrame, idCol: String,
+      binaryCol: String, every: Int = 1, maxHamming: Int = 3, nBands: Int = 4,
+      minMatchFrac: Double = 0.5): DataFrame = {
+    val (repFrames, counts, starBase) =
+      refVideoRepFrames(df, idCol, binaryCol, every)
+    val star = starBase.select(col("id_a"), col("id_b"),
+      lit(0).as("best_offset"), col("__nf").as("matched_frames"),
+      col("__nf").as("frames_a"), col("__nf").as("frames_b"))
+    val votes = refBandedHammingPairs(repFrames, maxHamming, nBands,
+        carryCols = Seq("__fi"))
+      .select(col("id_a"), col("id_b"),
+        (col("__fi_b") - col("__fi_a")).as("best_offset"))
+      .groupBy("id_a", "id_b", "best_offset")
+      .agg(count(lit(1)).as("matched_frames"))
+    val best = votes.withColumn("__rk",
+        row_number().over(Window
+          .partitionBy("id_a", "id_b")
+          .orderBy(col("matched_frames").desc, col("best_offset"))))
+      .filter(col("__rk") === 1).drop("__rk")
+    best
+      .join(counts.select(col("__id").as("id_a"), col("__nf").as("frames_a")),
+        Seq("id_a"))
+      .join(counts.select(col("__id").as("id_b"), col("__nf").as("frames_b")),
+        Seq("id_b"))
+      .filter(col("matched_frames") >=
+        least(col("frames_a"), col("frames_b")) * lit(minMatchFrac))
+      .select("id_a", "id_b", "best_offset", "matched_frames",
+        "frames_a", "frames_b")
+      .unionByName(star)
+  }
+
+  private def sfEmbeddings: DataFrame =
+    graft.sources.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+      .select("vec_id", "embedding")
+
+  /** sf0.001 embeddings plus exact copies of the first 100 (ids + 10000)
+    * and scaled copies of the first 50 (ids + 20000, cosine about 1 but
+    * not bit-identical), as the td_dedup_embed corpus plants its copies */
+  private def plantedEmbeddings: DataFrame = {
+    val e = sfEmbeddings
+    e.unionByName(e.filter(col("vec_id") < 100)
+        .select((col("vec_id") + 10000).as("vec_id"), col("embedding")))
+      .unionByName(e.filter(col("vec_id") < 50)
+        .select((col("vec_id") + 20000).as("vec_id"),
+          transform(col("embedding"), x => x * lit(1.5f)).as("embedding")))
+  }
+
+  /** 4-dimensional vectors: an identical pair, a pair whose cosine sets
+    * the exact-threshold case, all-zero, NULL, NaN, NULL-element and
+    * short vectors, and NULL ids */
+  private def adversarialVectors: DataFrame = {
+    import spark.implicits._
+    val nan = Float.NaN
+    Seq[(Option[Long], Seq[java.lang.Float])](
+      (Some(1L), Seq(1f, 0.5f, -0.25f, 0.125f)),
+      (Some(2L), Seq(1f, 0.5f, -0.25f, 0.125f)),
+      (Some(3L), Seq(1f, 0.5f, -0.25f, 0.13f)),
+      (Some(4L), Seq(1f, 0.52f, -0.25f, 0.125f)),
+      (Some(5L), Seq(0.9f, 0.5f, -0.2f, 0.1f)),
+      (Some(6L), Seq(0f, 0f, 0f, 0f)),
+      (Some(7L), Seq(-0f, 0f, -0f, 0f)),
+      (Some(8L), null),
+      (Some(9L), Seq(nan, 1f, 1f, 1f)),
+      (Some(10L), Seq(nan, 1f, 1f, 2f)),
+      (Some(11L), Seq(1f, null, -0.25f, 0.125f)),
+      (Some(12L), Seq(1f, 0.5f, -0.25f)),
+      (Some(13L), Seq(-1f, -0.5f, 0.25f, -0.125f)),
+      (Some(14L), Seq(1f, 0.5f, 0.25f, 0.125f)),
+      (None, Seq(1f, 0.5f, -0.25f, 0.125f)),
+      (None, Seq(0.9f, 0.5f, -0.2f, 0.1f)))
+      .toDF("vec_id", "embedding")
+      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
+  }
+
+  /** Similarity.cosine of two vectors of `df`, as the plan computes it */
+  private def cosineOf(df: DataFrame, a: Long, b: Long): Double = {
+    import graft.functions.Similarity
+    df.as("a").crossJoin(df.as("b"))
+      .filter(col("a.vec_id") === a && col("b.vec_id") === b)
+      .select(Similarity.cosine(col("a.embedding"), col("b.embedding")))
+      .head().getDouble(0)
+  }
+
+  test("embedNearDupPairs == the posting self-join") {
+    import graft.functions.Dedup
+    val planted = plantedEmbeddings.cache()
+    val adversarial = adversarialVectors.cache()
+    val exact = cosineOf(adversarial, 1L, 4L)
+    val cases = Seq(("planted", planted, 0.95), ("planted", planted, 0.3),
+      ("adversarial", adversarial, 0.9), ("adversarial", adversarial, exact))
+    for ((name, df, t) <- cases) {
+      val got = Dedup.embedNearDupPairs(df, "vec_id", "embedding", t)
+      assertSameRows(s"$name at $t", got,
+        refEmbedNearDupPairs(df, "vec_id", "embedding", t))
+      if (t == exact) // the pair at exactly the threshold is kept
+        assert(got.filter(col("id_a") === 1 && col("id_b") === 4).count() == 1)
+    }
+    // the vectors of 1 and 3 share more than one table
+    val tables = planted.sparkSession.range(1).select(
+      graft.functions.Similarity.lshPostings(
+        typedLit(Seq(1f, 0.5f, -0.25f, 0.125f)), 4, 8).as("a"),
+      graft.functions.Similarity.lshPostings(
+        typedLit(Seq(1f, 0.5f, -0.25f, 0.13f)), 4, 8).as("b"))
+      .head()
+    assert(tables.getSeq[Row](0).zip(tables.getSeq[Row](1)).count(p => p._1 == p._2) > 1)
+    planted.unpersist()
+    adversarial.unpersist()
+  }
+
+  test("semDedup == the cell self-join") {
+    import spark.implicits._
+    import graft.functions.Dedup
+    val planted = plantedEmbeddings.cache()
+    // 3's only lower-id neighbour in its cell is 1, below eps; 4 repeats
+    // 1; NULL ids take no part
+    val cells = Seq[(Option[Long], Seq[Double])](
+      (Some(1L), Seq(1.0, 0.0)), (Some(2L), Seq(0.0, 1.0)),
+      (Some(3L), Seq(0.9, 0.3)), (Some(4L), Seq(1.0, 0.0)),
+      (Some(5L), Seq(0.1, 1.0)), (Some(6L), Seq(0.95, 0.05)),
+      (None, Seq(1.0, 0.0)), (None, Seq(0.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val exact = cosineOf(cells, 1L, 6L)
+    for ((name, df, eps, nlist) <- Seq(("planted", planted, 0.95, 8),
+        ("planted", planted, 0.3, 4), ("cells", cells, 0.99, 2),
+        ("cells", cells, exact, 2))) {
+      assertSameRows(s"$name at $eps", Dedup.semDedup(df, "vec_id", "embedding",
+          eps, nlist = nlist, kmeansIters = 2),
+        refSemDedup(df, "vec_id", "embedding", eps, nlist = nlist, kmeansIters = 2))
+    }
+    val got = Dedup.semDedup(cells, "vec_id", "embedding", 0.99, nlist = 2,
+        kmeansIters = 2)
+      .filter(col("vec_id").isNotNull).collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(got(3L) && !got(4L), got)
+    // an all-zero vector: its cosine divides by zero, which fails under
+    // ANSI and is NULL without it, in both forms
+    val zero = cells.unionByName(Seq((7L, Seq(0.0, 0.0))).toDF("vec_id", "embedding"))
+    def run(df: DataFrame) = scala.util.Try(df.collect().map(_.toString).sorted.toSeq)
+    for (ansi <- Seq("true", "false")) {
+      val prev = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val (g, r) = (run(Dedup.semDedup(zero, "vec_id", "embedding", 0.99, 2, 2)),
+          run(refSemDedup(zero, "vec_id", "embedding", 0.99, 2, 2)))
+        assert(g.isSuccess == r.isSuccess && g.toOption == r.toOption,
+          s"ansi $ansi: $g vs $r")
+        if (ansi == "true")
+          assert(g.failed.get.getMessage.contains("DIVIDE_BY_ZERO"), g)
+      } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    }
+    planted.unpersist()
+  }
+
+  /** (__id, __hash) rows around five random base hashes, 0 to 6 bits
+    * flipped (identical hashes among them), and around one more: an
+    * identical pair 300 and 301, 302 at Hamming exactly 3 from them and 303
+    * at 4 that still shares two of four bands, NULL ids and NULL hashes */
+  private def adversarialHashes: DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val bases = Seq.fill(5)(rnd.nextLong())
+    val near = (1L to 240L).map { id =>
+      val flips = Seq.fill(rnd.nextInt(7))(rnd.nextInt(64))
+      (Option(id), Option(flips.foldLeft(bases(rnd.nextInt(5)))((h, b) => h ^ (1L << b))))
+    }
+    val h0 = 0x0f0f0f0f0f0f0f0fL
+    (near ++ Seq[(Option[Long], Option[Long])](
+      (Some(300L), Some(h0)), (Some(301L), Some(h0)),
+      (Some(302L), Some(h0 ^ 0x7L)),
+      (Some(303L), Some(h0 ^ 0x3L ^ (0x3L << 16))),
+      (None, Some(h0)), (None, Some(h0 ^ 1L)),
+      (Some(304L), None), (Some(305L), None)))
+      .toDF("__id", "__hash")
+  }
+
+  test("bandedHammingPairs == the band self-join (collapse, align and carry forms)") {
+    import graft.functions.{Dedup, Multimodal}
+    val hashed = adversarialHashes.cache()
+    // per-frame rows: each id's hash at frame 0, shifted a bit at frame 1
+    // and 2, and a NULL frame index
+    val frames = hashed.select(col("__id"), lit(0).as("__fi"), col("__hash"))
+      .unionByName(hashed.select(col("__id"), lit(1).as("__fi"),
+        col("__hash").bitwiseXOR(col("__id") % 3).as("__hash")))
+      .unionByName(hashed.select(col("__id"),
+        when(col("__id") % 5 === 0, lit(null)).otherwise(lit(2)).as("__fi"),
+        col("__hash").bitwiseXOR(col("__id") % 4 * 256).as("__hash")))
+      .cache()
+    val allReps = frames.withColumn("__rep", col("__id"))
+    val hashedPlain = hashed.filter(col("__hash").isNotNull)
+    for ((maxH, nBands) <- Seq((3, 4), (1, 2), (7, 8))) {
+      assertSameRows(s"collapsed $maxH/$nBands",
+        Multimodal.bandedHammingPairs(Dedup.collapseByKey(hashedPlain, "__hash"),
+          maxH, nBands),
+        refCollapsedHashPairs(hashedPlain, maxH, nBands))
+      assertSameRows(s"align $maxH/$nBands",
+        Multimodal.bandedHammingPairs(allReps, maxH, nBands, alignCols = Seq("__fi")),
+        refBandedHammingPairs(frames, maxH, nBands, alignCols = Seq("__fi")))
+      assertSameRows(s"carry $maxH/$nBands",
+        Multimodal.bandedHammingPairs(allReps, maxH, nBands, carryCols = Seq("__fi")),
+        refBandedHammingPairs(frames, maxH, nBands, carryCols = Seq("__fi")))
+    }
+    // exactly at maxHamming is kept, one above is not
+    val pairs = Multimodal.bandedHammingPairs(
+        Dedup.collapseByKey(hashedPlain, "__hash"), 3, 4)
+      .filter(col("id_a") === 300).collect().map(r => r.getLong(1) -> r.getInt(2)).toMap
+    assert(pairs.get(302L).contains(3) && !pairs.contains(303L) &&
+      pairs.get(301L).contains(0), pairs)
+    hashed.unpersist()
+    frames.unpersist()
+  }
+
+  test("video matchers == the band self-join plans, trimmed and repeated clips") {
+    import spark.implicits._
+    import graft.functions.Multimodal
+    def f(p: Int) = (0 until 64).map(i => ((7 - i / 8 + p) % 8) * 30)
+    def g(p: Int) = (0 until 64).map(i => ((7 - i % 8 + p) % 8) * 30)
+    def gif(frames: Int => Seq[Int], ps: Int*) =
+      Multimodal.encodeAnimatedGifRasters(8, 8, ps.map(frames))
+    val vids = Seq[(Option[Long], Array[Byte])](
+      (Some(1L), gif(f, 0, 1, 2, 3)), (Some(2L), gif(f, 1, 2, 3)),
+      (Some(3L), gif(g, 0, 1, 2)), (Some(4L), gif(f, 0, 1, 2, 3)),
+      (Some(5L), gif(f, 0, 1, 2, 3)), (Some(6L), gif(f, 2, 3, 0, 1)),
+      (Some(7L), gif(f, 1)), (Some(8L), Array[Byte](9, 9, 9)),
+      (Some(9L), gif(f, 0, 0, 0)), (Some(10L), gif(f, 1, 2, 3)),
+      (None, gif(f, 0, 1, 2, 3)), (Some(11L), null))
+      .toDF("doc_id", "payload").cache()
+    for (frac <- Seq(0.5, 1.0)) {
+      assertSameRows(s"aligned $frac",
+        Multimodal.videoNearDupPairs(vids, "doc_id", "payload", minMatchFrac = frac),
+        refVideoNearDupPairs(vids, "doc_id", "payload", minMatchFrac = frac))
+      assertSameRows(s"offset $frac",
+        Multimodal.videoNearDupPairsOffset(vids, "doc_id", "payload",
+          minMatchFrac = frac),
+        refVideoNearDupPairsOffset(vids, "doc_id", "payload", minMatchFrac = frac))
+    }
+    vids.unpersist()
   }
 }

@@ -273,9 +273,9 @@ class OperatorSpec extends AnyFunSuite {
     val hashed = Multimodal.imageHash(rows, "payload")
       .filter(col("ahash").isNotNull)
       .select(col("doc_id").as("__id"), col("ahash").as("__hash"))
-    val (reps, star) = Multimodal.hashCollapse(hashed)
-    assert(reps.count() == 2)
-    assert(star.count() == n - 1)
+    val tagged = Dedup.collapseByKey(hashed, "__hash")
+    assert(tagged.filter(col("__id") === col("__rep")).count() == 2)
+    assert(tagged.filter(col("__id") =!= col("__rep")).count() == n - 1)
     // downstream keep/drop is unchanged: the star spans the clique
     val cc = Dedup.connectedComponents(
       Multimodal.imageNearDupPairs(rows, "doc_id", "payload"),
@@ -454,6 +454,12 @@ class OperatorSpec extends AnyFunSuite {
       eps = 0.999, nlist = 4, kmeansIters = 1)
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan)
+    // the cell pairs are verified in one run pass keyed on the cell: no
+    // self-join and no join back. The one nested-loop join attaches the
+    // one-row centroid broadcast
+    assert(Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+      .forall(j => !plan.contains(j)), plan)
+    assert("BroadcastNestedLoopJoin".r.findAllIn(plan).size == 1, plan)
     out.collect() // and it executes
   }
 

@@ -105,13 +105,19 @@ class PlanInvariantSpec extends AnyFunSuite {
     // materialized (a checkpoint there benched slower)
     ("td_dedup_ngram", query("td_dedup_ngram"), Seq(5, 3, 0, 4, 0, 2),
       Map("shingles" -> 3)),
-    // the postings of the collapsed representatives are checkpointed in
-    // the build, so the kernel runs there once per representative and not
-    // in this plan (lshpostingsexpr 1 → 0). The posting self-join
-    // broadcasts the materialized side (SortMergeJoin 1 → 0,
-    // BroadcastHashJoin 0 → 1); the collapse is a window whose star edges
-    // read the vectors again (Window 0 → 1, ReusedExchange 1 → 0)
-    ("td_dedup_embed", query("td_dedup_embed"), Seq(3, 0, 0, 1, 0, 1),
+    // one run pass over the collapse window: each representative's
+    // postings run once (lshpostingsexpr 0 → 1, no checkpoint in the
+    // build), and candidates are verified inside each bucket run from the
+    // first table they share, so the posting self-join and its
+    // dropDuplicates are gone (BroadcastHashJoin 1 → 0). Exchanges: the
+    // window, the run pass and the orderBy
+    ("td_dedup_embed", query("td_dedup_embed"), Seq(3, 0, 0, 0, 0, 1),
+      Map("lshpostingsexpr" -> 1)),
+    // one run pass keyed on the k-means cell emits (id, kept) per row: no
+    // cell self-join, distinct or join back. The nested-loop join attaches
+    // the one-row centroid broadcast. Exchanges: the centroid row's
+    // aggregate, the run pass and the orderBy
+    ("td_dedup_semantic", query("td_dedup_semantic"), Seq(3, 0, 0, 0, 1, 0),
       Map.empty),
     // canonical id and group size come from one window on url_norm, not
     // a groupBy joined back (BroadcastHashJoin 1 → 0, Window 0 → 1); the
@@ -121,11 +127,20 @@ class PlanInvariantSpec extends AnyFunSuite {
     // the key counts join the survivors by broadcast
     ("td_sample_domain_cap", query("td_sample_domain_cap"),
       Seq(3, 0, 0, 1, 0, 1), Map.empty),
-    // the identical-sequence collapse is a window on the sequence, not a
-    // groupBy joined back (BroadcastHashJoin 8 → 5, ReusedExchange 5 → 3).
-    // Its three readers each run the window: the representative ids under
-    // the band join, the frame counts and the star edges (Window 0 → 3)
-    ("td_mm_videodup", query("td_mm_videodup"), Seq(7, 3, 0, 5, 0, 3),
+    // one aggregate builds each video's frame sequence and frame count,
+    // one window on the sequence names its representative, and the frames
+    // are read back out of the sequence into one run pass, whose pairs
+    // carry both frame counts (Window 3 → 1: the rep ids, frame counts
+    // and star edges each ran their own; BroadcastHashJoin 5 → 0: the
+    // band self-join, the semi-join onto the representatives and the two
+    // frame-count joins; ReusedExchange 3 → 0). Exchanges: the sequence
+    // aggregate, the window, the run pass, the pair aggregate, the orderBy
+    ("td_mm_videodup", query("td_mm_videodup"), Seq(5, 0, 0, 0, 0, 1),
+      Map.empty),
+    // the hash collapse window feeds one run pass whose member rows pass
+    // through as star edges: no band self-join and no union of the star.
+    // Exchanges: the window, the run pass and the orderBy
+    ("td_mm_imagedup", query("td_mm_imagedup"), Seq(3, 0, 0, 0, 0, 1),
       Map.empty),
     // the stages are checkpointed in the build, so the final plan is the
     // membership fold over their outputs and runs no kernel
