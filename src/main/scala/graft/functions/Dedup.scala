@@ -621,7 +621,9 @@ object Dedup {
     * >= eps; one row per input row. Exact duplicates always land in the
     * same cell (assignment is a deterministic function of the vector), so
     * recall on true copies is 1 regardless of the clustering. A row with
-    * a NULL id or a NULL cell is kept and drops nothing. Repeated ids:
+    * a NULL id, a NULL cell or a NULL or all-zero vector is kept and drops
+    * nothing: cosine is undefined for such a vector, which
+    * [[embedNearDupPairs]] excludes likewise. Repeated ids:
     * ids are unique by contract; each row with a repeated id is decided
     * on its own and never by a row with the same id (the join back had
     * given every row of the id `kept = false` when any of them dropped).
@@ -641,10 +643,13 @@ object Dedup {
     runPass(assigned, widenTarget(df), Seq("__cell"), Seq("__id"), out) { run =>
       val id = run.map(_.get(0))
       val vs = run.map(r => cos.data(r.get(1)))
-      // every lower-id cosine is evaluated, as the self-join's filter did.
-      // A NULL cell holds NULL vectors only, whose cosines are NULL
+      // a NULL or all-zero vector (NULL or 0 norm) has no cosine: it is
+      // kept and drops nothing, as embedNearDupPairs excludes it. A NULL
+      // cell holds NULL vectors only
+      val live = run.map(r => r.get(0) != null && !r.isNullAt(2) && r.getDouble(2) != 0)
+      // every other lower-id cosine is evaluated, as the self-join's filter did
       run.indices.iterator.map { j =>
-        val drops = (0 until j).count(i => id(i) != null && id(j) != null &&
+        val drops = (0 until j).count(i => live(i) && live(j) &&
           id(i) != id(j) && cos.atLeast(cos(vs(i), run(i).get(2), vs(j), run(j).get(2)), eps))
         Row(id(j), drops == 0)
       }

@@ -3,18 +3,23 @@ package graft.repl
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, max}
 import org.yaml.snakeyaml.Yaml
 
 import graft.sources.Tables
-import graft.write.{Modes, ParquetTarget}
+import graft.write.ParquetTarget
 
 /** Replication engine: a YAML document describing many streams with
-  * defaults inheritance and wildcard expansion, compiled to per-stream
-  * tasks and run with bounded parallelism.
+  * defaults inheritance and wildcard expansion, run with bounded
+  * parallelism. Each stream compiles to a [[TaskConfig.Task]] and loads
+  * through [[TaskConfig.load]], so it takes the task's modes and their
+  * semantics; only the read (a catalog table, or a `{part_*}` mask's chunk
+  * URIs) and the scheduling are replication's own.
   *
   * Reference semantics: UnmarshalReplication (replication.go:1656-1826),
   * wildcard expansion over the source catalog (:293-517), defaults merge
-  * (SetStreamDefaults :1596-1654), SLING_THREADS parallel scheduling
+  * (SetStreamDefaults :1596-1654), stream → task compile
+  * (StreamToTaskConfig :1117-1355), SLING_THREADS parallel scheduling
   * (:2101-2175). Our "catalog" is the testdata table set; on a real
   * deployment it is the JDBC catalog / file listing.
   *
@@ -68,24 +73,15 @@ object Replication {
         Stream(n,
           merged.getOrElse("mode", "full-refresh").toString,
           merged.get("update_key").map(_.toString),
-          merged.get("primary_key").map {
-            case l: java.util.List[_] => l.asScala.map(_.toString).toSeq
-            case s => Seq(s.toString)
-          }.getOrElse(Seq.empty),
+          TaskConfig.strList(merged, "primary_key"),
           sourcePattern = pattern,
-          select = merged.get("select").map {
-            case l: java.util.List[_] => l.asScala.map(_.toString).toSeq
-            case s => Seq(s.toString)
-          }.getOrElse(Nil),
+          select = TaskConfig.strList(merged, "select"),
           where = merged.get("where").map(_.toString),
           transforms = merged.get("transforms").map(
             _.asInstanceOf[java.util.Map[String, Object]].asScala
               .map { case (k, v) => k -> v.toString }.toMap)
             .getOrElse(Map.empty),
-          dependsOn = merged.get("depends_on").map {
-            case l: java.util.List[_] => l.asScala.map(_.toString).toSeq
-            case s => Seq(s.toString)
-          }.getOrElse(Nil),
+          dependsOn = TaskConfig.strList(merged, "depends_on"),
           loadedAt = merged.get("loaded_at").map(_.toString),
           // per-stream declared types (replication.go stream `columns`),
           // insertion-ordered, same coercion grammar as the task runner
@@ -101,10 +97,7 @@ object Replication {
           },
           // stream tags (replication.go `tags:`) — the `--streams tag:x`
           // selection unit (suite.cli id=42)
-          tags = merged.get("tags").map {
-            case l: java.util.List[_] => l.asScala.map(_.toString).toSeq
-            case s => Seq(s.toString)
-          }.getOrElse(Nil))
+          tags = TaskConfig.strList(merged, "tags"))
       }
     }
     // a name matched by both an explicit entry and a wildcard: explicit wins
@@ -155,104 +148,86 @@ object Replication {
   def topoLevels(streams: Seq[Stream]): Seq[Seq[Stream]] =
     graft.util.Dag.topoLevels[Stream](streams, _.name, _.dependsOn, "depends_on")
 
-  /** Run every stream (source table → mode → parquet target under
+  /** The stream as a task (StreamToTaskConfig): the table source with its
+    * select/where/transforms rendered against `state` and its columns,
+    * `backfill: {start, end}` as the source range "start,end", and the
+    * target object under `targetRoot` (a `{part_*}` mask name sanitized to
+    * one directory) with the stream's mode and keys. */
+  private def toTask(st: Stream, targetRoot: String,
+      state: collection.Map[String, Any]): TaskConfig.Task = {
+    val dir = if (isFileMask(st)) st.name.replaceAll("[^A-Za-z0-9._-]+", "_") else st.name
+    val obj = s"$targetRoot/$dir"
+    val r = (tpl: String) => render(tpl, st.name, obj, state)
+    TaskConfig.Task(
+      TaskConfig.Source(st.name, select = st.select.map(r), where = st.where.map(r),
+        range = st.backfill.map { case (s0, e0) => s"$s0,$e0" }),
+      st.transforms.map { case (k, v) => k -> r(v) },
+      TaskConfig.Target(obj, mode = st.mode, primaryKey = st.pk,
+        updateKey = st.updateKey, loadedAt = st.loadedAt),
+      columns = st.columns)
+  }
+
+  private def isFileMask(st: Stream): Boolean = st.name.contains("{part_")
+
+  /** A `{part_*}` mask stream is a chunked FILE source: its backfill range
+    * expands to explicit chunk URIs (partition.go:600-648) and ONLY those
+    * directories are read — no full-tree listing. */
+  private def readChunks(spark: SparkSession, st: Stream): DataFrame = {
+    val (s0, e0) = st.backfill.getOrElse(throw new IllegalArgumentException(
+      s"file-mask stream ${st.name} needs backfill: {start, end}"))
+    def dt(x: String) =
+      if (x.length <= 10) java.time.LocalDate.parse(x).atStartOfDay
+      else java.time.LocalDateTime.parse(x.replace(' ', 'T'))
+    val uris = graft.write.PartitionedWriter.partURIsFromRange(st.name, dt(s0), dt(e0))
+    val fs = new org.apache.hadoop.fs.Path(st.name.takeWhile(_ != '{'))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val existing = uris.filter(u => fs.exists(new org.apache.hadoop.fs.Path(u)))
+    require(existing.nonEmpty, s"no chunk URIs exist for ${st.name} in [$s0, $e0]")
+    spark.read.parquet(existing: _*)
+  }
+
+  /** Run every stream (source table → its task → parquet target under
     * `targetRoot`) with at most `threads` concurrent streams. `depends_on`
     * streams wait for their upstreams (topo levels: levels sequential,
     * streams within a level concurrent), and their select/where/transforms
-    * render runtime state published by completed upstreams.
+    * render runtime state published by completed upstreams. A failed
+    * stream's error reaches the caller once the streams beside it have
+    * finished; the pool is shut down before the call returns either way.
     * Returns (stream, mode, rows_loaded) sorted by stream.
     */
   def run(spark: SparkSession, sfDir: String, compiled: Compiled,
       targetRoot: String, threads: Int = 4): Seq[(String, String, Long)] = {
     import java.util.concurrent.{Executors, TimeUnit}
     import scala.concurrent._
-    import scala.concurrent.duration._
-    val pool = Executors.newFixedThreadPool(threads)
+    import scala.concurrent.duration.Duration
+    val pool = Executors.newFixedThreadPool(threads, (r: Runnable) =>
+      new Thread(r, "graft-replication-stream"))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val state = scala.collection.concurrent.TrieMap[String, Any]()
     val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    topoLevels(compiled.streams).foreach { level =>
+    try topoLevels(compiled.streams).foreach { level =>
       val futures = level.map { st =>
+        val task = toTask(st, targetRoot, state)
         Future {
-          // per-stream select/where/transforms run through the same pipeline
-          // stage the single-task interpreter uses, after state templating.
-          // A {part_*} mask stream is a chunked FILE source: the backfill
-          // range expands to explicit chunk URIs (partition.go:600-648) and
-          // ONLY those directories are read — no full-tree listing.
-          val isFileMask = st.name.contains("{part_")
-          val safeName =
-            if (isFileMask) st.name.replaceAll("[^A-Za-z0-9._-]+", "_")
-            else st.name
-          val tgtObj = s"$targetRoot/$safeName"
-          val r = (tpl: String) => render(tpl, st.name, tgtObj, state)
-          val raw =
-            if (isFileMask) {
-              val (s0, e0) = st.backfill.getOrElse(
-                throw new IllegalArgumentException(
-                  s"file-mask stream ${st.name} needs backfill: {start, end}"))
-              def dt(x: String) =
-                if (x.length <= 10) java.time.LocalDate.parse(x).atStartOfDay
-                else java.time.LocalDateTime.parse(x.replace(' ', 'T'))
-              val uris = graft.write.PartitionedWriter
-                .partURIsFromRange(st.name, dt(s0), dt(e0))
-              val fs = new org.apache.hadoop.fs.Path(st.name.takeWhile(_ != '{'))
-                .getFileSystem(spark.sparkContext.hadoopConfiguration)
-              val existing = uris.filter(u =>
-                fs.exists(new org.apache.hadoop.fs.Path(u)))
-              require(existing.nonEmpty,
-                s"no chunk URIs exist for ${st.name} in [$s0, $e0]")
-              spark.read.parquet(existing: _*)
-            } else Tables(spark, sfDir, st.name)
-          val src = TaskConfig.applyPipeline(raw, TaskConfig.Task(
-            TaskConfig.Source(st.name, select = st.select.map(r),
-              where = st.where.map(r)),
-            st.transforms.map { case (k, v) => k -> r(v) },
-            TaskConfig.Target(tgtObj, mode = st.mode),
-            columns = st.columns))
-          val tgt = ParquetTarget(spark, tgtObj)
-          st.mode match {
-            case "full-refresh" | "truncate" => Modes.fullRefresh(tgt, src)
-            case "incremental" if st.pk.nonEmpty => Modes.upsert(tgt, src, st.pk)
-            case "incremental" => Modes.incrementalAppend(tgt, src, st.updateKey.get)
-            // the real run timestamp, unless loaded_at: pins it for
-            // deterministic replay — a constant here would make every
-            // snapshot run indistinguishable by load time
-            case "snapshot" => Modes.snapshot(tgt, src,
-              st.loadedAt.map(java.sql.Timestamp.valueOf).getOrElse(
-                new java.sql.Timestamp(System.currentTimeMillis())))
-            case "backfill" =>
-              val k = st.updateKey.getOrElse(throw new IllegalArgumentException(
-                "backfill needs update_key"))
-              val (s0, e0) = st.backfill.getOrElse(
-                throw new IllegalArgumentException(
-                  "backfill needs backfill: {start, end}"))
-              val kt = src.schema(k).dataType
-              Modes.backfill(tgt, src, k,
-                org.apache.spark.sql.functions.lit(s0).cast(kt),
-                org.apache.spark.sql.functions.lit(e0).cast(kt))
-            case other => throw new IllegalArgumentException(s"mode $other")
-          }
-          (st, tgt.rowCount)
+          val raw = if (isFileMask(st)) readChunks(spark, st) else Tables(spark, sfDir, st.name)
+          (st, task, TaskConfig.load(spark, task, raw))
         }
       }
       // state publication stays on the driver thread, after the level barrier
-      Await.result(Future.sequence(futures), 10.minutes).foreach {
-        case (st, rows) =>
+      futures.map(Await.result(_, Duration.Inf)).foreach {
+        case (st, task, rows) =>
           state(s"${st.name}.rows") = rows
           st.updateKey.foreach { k =>
-            val dirName =
-              if (st.name.contains("{part_"))
-                st.name.replaceAll("[^A-Za-z0-9._-]+", "_")
-              else st.name
-            val mx = ParquetTarget(spark, s"$targetRoot/$dirName").read
-              .agg(org.apache.spark.sql.functions.max(
-                org.apache.spark.sql.functions.col(k))).head.get(0)
+            val mx = ParquetTarget(spark, task.target.obj).read
+              .agg(max(col(k))).head.get(0)
             if (mx != null) state(s"${st.name}.max") = mx
           }
           out += ((st.name, st.mode, rows))
       }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
     }
-    pool.shutdown(); pool.awaitTermination(1, TimeUnit.SECONDS)
     out.toSeq.sortBy(_._1)
   }
 }

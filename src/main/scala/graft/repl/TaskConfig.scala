@@ -2,7 +2,7 @@ package graft.repl
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.yaml.snakeyaml.Yaml
 
@@ -27,14 +27,18 @@ import graft.write.{Modes, ParquetTarget}
   *   object: /path/out           # table dir
   *   format: parquet             # parquet|csv|jsonl|delta
   *   mode: full-refresh          # full-refresh|truncate|snapshot|
-  *                               # incremental|upsert|delete-missing
+  *                               # incremental|upsert|backfill|
+  *                               # definition-only|cdc
   *   primary_key: [c_custkey]
   *   update_key: c_acctbal
+  *   options:
+  *     delete_missing: hard      # hard|soft, database targets
   * }}}
   *
   * Compiles to: source reader → select/where/limit → expression transforms
   * → mode writer. Every stage is the same engine code the individual
-  * operators expose; this file only routes.
+  * operators expose; this file only routes. A replication stream compiles
+  * to a [[Task]] too and runs through [[load]], the same post-read half.
   */
 object TaskConfig {
 
@@ -87,6 +91,13 @@ object TaskConfig {
 
   // ---- parse -------------------------------------------------------------
 
+  /** The YAML value at `k` as a string list: a list, or one scalar. */
+  private[repl] def strList(m: Map[String, Object], k: String): Seq[String] =
+    m.get(k).map {
+      case l: java.util.List[_] => l.asScala.map(_.toString).toSeq
+      case s => Seq(s.toString)
+    }.getOrElse(Nil)
+
   def parse(yamlText: String): Task = {
     val root = new Yaml().load[java.util.Map[String, Object]](yamlText)
       .asScala.toMap
@@ -94,11 +105,6 @@ object TaskConfig {
       Option(root.getOrElse(name, null))
         .map(_.asInstanceOf[java.util.Map[String, Object]].asScala.toMap)
         .getOrElse(Map.empty)
-    def strList(m: Map[String, Object], k: String): Seq[String] =
-      m.get(k).map {
-        case l: java.util.List[_] => l.asScala.map(_.toString).toSeq
-        case s => Seq(s.toString)
-      }.getOrElse(Nil)
 
     val s = section("source")
     val t = section("target")
@@ -464,9 +470,10 @@ object TaskConfig {
       stream = s.replace("{fields}", fields), select = Nil))
   }
 
-  /** backfill: restrict the stream to the requested update-key range
-    * (`range: "lo,hi"`, inclusive both ends — partition.go range chunking). */
-  private def backfillSlice(df: DataFrame, task: Task): DataFrame = {
+  /** backfill's update key and its requested range (`range: "lo,hi"`,
+    * inclusive both ends — partition.go range chunking), cast to the key's
+    * type in `df`. */
+  private def backfillRange(df: DataFrame, task: Task): (String, Column, Column) = {
     val uk = task.target.updateKey.getOrElse(
       throw new IllegalArgumentException("backfill needs update_key"))
     val r = task.source.range.getOrElse(
@@ -474,9 +481,27 @@ object TaskConfig {
     val parts = r.split(',').map(_.trim)
     require(parts.length == 2, s"backfill range must be lo,hi: $r")
     val kt = df.schema(uk).dataType
-    df.filter(col(s"`$uk`") >= lit(parts(0)).cast(kt) &&
-      col(s"`$uk`") <= lit(parts(1)).cast(kt))
+    (uk, lit(parts(0)).cast(kt), lit(parts(1)).cast(kt))
   }
+
+  /** backfill: restrict the stream to the requested update-key range. */
+  private def backfillSlice(df: DataFrame, task: Task): DataFrame = {
+    val (uk, lo, hi) = backfillRange(df, task)
+    df.filter(col(s"`$uk`") >= lo && col(s"`$uk`") <= hi)
+  }
+
+  /** backfill into a file target. With a primary key the range slice
+    * merges by key ([[Modes.upsert]]), the PK merge a database target
+    * gets too. Without one the target's rows in the range are replaced by
+    * the source's ([[Modes.backfill]]), so re-running a backfill over the
+    * same or a narrower range never duplicates rows. */
+  private def backfillFile(pt: ParquetTarget, df: DataFrame, task: Task): Unit =
+    if (task.target.primaryKey.nonEmpty)
+      Modes.upsert(pt, backfillSlice(df, task), task.target.primaryKey)
+    else {
+      val (uk, lo, hi) = backfillRange(df, task)
+      Modes.backfill(pt, df, uk, lo, hi)
+    }
 
   /** Wall-clock run ceiling (SLING_TIMEOUT, suite.cli id=232/233): a
     * watchdog cancels the run's Spark job group once the ceiling passes —
@@ -528,11 +553,46 @@ object TaskConfig {
   }
 
   private def runInner(spark: SparkSession, task0: Task, sfDir: String): Long = {
-    val hadCond = task0.source.stream.contains("{incremental_where_cond}")
     val task = pushWireIncremental(spark,
       substFields(substIncremental(spark, task0)))
-    val df0 = applyPipeline(
-      readSource(spark, task.source, sfDir, task.connections), task)
+    val source = readSource(spark, task.source, sfDir, task.connections)
+    // delete_missing compares the FULL source key set (not the
+    // incremental slice) against the target — a custom-SQL stream is
+    // re-read with the incremental condition disarmed so the key set
+    // really is the whole source (only pk columns are staged)
+    def fullKeys = Option.when(task0.source.stream.contains("{incremental_where_cond}"))(
+      applyPipeline(readSource(spark, task0.source.copy(
+        stream = task0.source.stream
+          .replace("{incremental_where_cond}", "1=1")
+          .replace("{incremental_value}", "null")),
+        sfDir, task0.connections), task0))
+    // file_max_rows splits output files on the parquet/delta path via the
+    // session conf, scoped to this run and restored after. It is set here,
+    // outside [[load]], because replication streams share the session and
+    // run concurrently
+    val prevMaxRec = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
+    task.target.options.fileMaxRows.foreach(n =>
+      spark.conf.set("spark.sql.files.maxRecordsPerFile", n.toString))
+    try load(spark, task, source, fullKeys)
+    finally {
+      if (task.target.options.fileMaxRows.isDefined) prevMaxRec match {
+        case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
+        case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+      }
+    }
+  }
+
+  /** Everything after the read: `source`, the task's source frame as read,
+    * runs the pipeline ([[applyPipeline]]), the column constraint checks,
+    * column casing and `max_decimals`, then loads the target through the
+    * database, protocol or file writers by the task's mode. Returns the
+    * rows the target holds after the load. `fullKeys` is the source key
+    * set a database `delete_missing` compares when it differs from the
+    * loaded frame. Writes no session conf: concurrent replication streams
+    * share the session. */
+  private[repl] def load(spark: SparkSession, task: Task, source: DataFrame,
+      fullKeys: => Option[DataFrame] = None): Long = {
+    val df0 = applyPipeline(source, task)
     val tgt = task.target
     // column constraints (`type | value <expr>`): ONE aggregate pass tallies
     // every check's failures (datatype.go:1138, stream_processor.go:1632);
@@ -688,20 +748,10 @@ object TaskConfig {
             graft.sources.Jdbc.write(df, spec.jdbcUrl, tgt.obj,
               batchSize = tgt.options.batchLimit, columnTypes = colDdl)
         }
-        // delete_missing compares the FULL source key set (not the
-        // incremental slice) against the target — a custom-SQL stream is
-        // re-read with the incremental condition disarmed so the key set
-        // really is the whole source (only pk columns are staged)
+        // delete_missing compares the FULL source key set against the target
         tgt.options.deleteMissing.foreach { dm =>
-          val fullKeys =
-            if (hadCond) applyPipeline(readSource(spark, task0.source.copy(
-              stream = task0.source.stream
-                .replace("{incremental_where_cond}", "1=1")
-                .replace("{incremental_value}", "null")),
-              sfDir, task0.connections), task0)
-            else df
-          graft.sources.Jdbc.deleteMissing(fullKeys, spec.jdbcUrl, tgt.obj,
-            tgt.primaryKey, soft = dm == "soft", columnTypes = colDdl)
+          graft.sources.Jdbc.deleteMissing(fullKeys.getOrElse(df), spec.jdbcUrl,
+            tgt.obj, tgt.primaryKey, soft = dm == "soft", columnTypes = colDdl)
         }
         tgt.options.postSql.foreach(graft.sources.Jdbc.executeAll(spec.jdbcUrl, _))
         return graft.sources.Jdbc.read(spark, spec.jdbcUrl, tgt.obj).count()
@@ -710,12 +760,7 @@ object TaskConfig {
     // existence guard (ignore_existing): leave a non-empty target untouched
     if (tgt.options.ignoreExisting && targetHasData(spark, tgt))
       return countTarget(spark, tgt)
-    // file_max_rows splits output files on the parquet/delta path via the
-    // session conf (scoped to this write, restored after)
-    val prevMaxRec = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
-    tgt.options.fileMaxRows.foreach(n =>
-      spark.conf.set("spark.sql.files.maxRecordsPerFile", n.toString))
-    try tgt.format match {
+    tgt.format match {
       // a docs.google.com target writes through the Sheets client
       // (WriteSheet); the URL fragment names the sheet
       // (".../edit#People"), defaulting to Sheet1
@@ -786,13 +831,7 @@ object TaskConfig {
           case "incremental" =>
             Modes.incrementalAppend(pt, df, tgt.updateKey.getOrElse(
               throw new IllegalArgumentException("incremental needs update_key")))
-          case "backfill" =>
-            // slice the declared update-key range, then upsert it by PK
-            // (falling back to append without one) — Replication's backfill
-            // path, reachable from single-task YAML via `range:`
-            val sliced = backfillSlice(df, task)
-            if (tgt.primaryKey.nonEmpty) Modes.upsert(pt, sliced, tgt.primaryKey)
-            else pt.append(sliced)
+          case "backfill" => backfillFile(pt, df, task)
           case "upsert" =>
             if (tgt.options.addNewColumns || tgt.options.adjustColumnType)
               Modes.upsertEvolve(pt, df, tgt.primaryKey,
@@ -850,11 +889,6 @@ object TaskConfig {
         }
         countTarget(spark, tgt)
       case other => throw new IllegalArgumentException(s"target format $other")
-    } finally {
-      if (tgt.options.fileMaxRows.isDefined) prevMaxRec match {
-        case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
-        case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-      }
     }
   }
 

@@ -6,7 +6,11 @@ for each query parquet in outDir, runs the matching oracle_sql.json entry in
 DuckDB (views over <sfDir>/*.parquet) and compares row count, schema (column
 names sorted), and values (columns sorted by name, exact equality).
 
-Usage: python3 tools/check_oracle.py <sfDir> <outDir>
+Usage: python3 tools/check_oracle.py <sfDir> <outDir> [query,query,...]
+
+The optional third argument is the comma-separated query filter given to
+graft.Verify: only those queries are compared, so a filtered Verify run
+reports no MISSING dump for the queries it did not run.
 """
 import json
 import sys
@@ -34,13 +38,16 @@ def canon(df):
     return df
 
 
-def main(sfdir, out):
+def main(sfdir, out, only=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     names = sorted(os.listdir(out))
+    if only is not None:
+        oracle = {k: v for k, v in oracle.items() if k in only}
+        names = [n for n in names if n in only]
     ok, bad, weak = [], [], []
     # a query that threw inside Verify writes no dump at all — surface it
     # as a failure instead of silently comparing only what's present
@@ -100,4 +107,5 @@ def main(sfdir, out):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    main(sys.argv[1], sys.argv[2],
+         set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None)
