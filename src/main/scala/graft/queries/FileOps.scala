@@ -64,8 +64,8 @@ object FileOps {
     Q("op_csv_zstd_roundtrip",
       (s, dir) => {
         val path = scratch("csv_zst", dir)
-        graft.sources.Compression.writeCsvZstd(
-          Tables(s, dir, "customer"), path)
+        graft.write.StagedWrite.replace(s, path)(
+          graft.sources.Compression.writeCsvZstd(Tables(s, dir, "customer"), _))
         FileSources.csv(s, path, overrides = Map(
           "c_custkey" -> LongType, "c_acctbal" -> DoubleType))
           .orderBy("c_custkey")

@@ -141,7 +141,8 @@ object Modes {
         val o = orders(s, dir)
         val t = ParquetTarget(s, scratch("delete_missing", dir))
         M.fullRefresh(t, o)
-        M.deleteMissing(t, o.filter(col("o_custkey") % 2 === 0), Seq("o_orderkey"))
+        M.deleteMissingScoped(t, o.filter(col("o_custkey") % 2 === 0), Seq("o_orderkey"),
+          None, None, soft = false)
         t.read.orderBy("o_orderkey")
       },
       Some(s"SELECT $oOrderCols FROM orders WHERE o_custkey % 2 = 0 ORDER BY o_orderkey")),
@@ -151,7 +152,8 @@ object Modes {
         val o = orders(s, dir)
         val t = ParquetTarget(s, scratch("delete_missing_soft", dir))
         M.fullRefresh(t, o)
-        M.deleteMissingSoft(t, o.filter(col("o_custkey") % 2 === 0), Seq("o_orderkey"))
+        M.deleteMissingScoped(t, o.filter(col("o_custkey") % 2 === 0), Seq("o_orderkey"),
+          None, None, soft = true)
         t.read.orderBy("o_orderkey")
       },
       Some(s"""SELECT $oOrderCols, o_custkey % 2 <> 0 AS _sling_deleted

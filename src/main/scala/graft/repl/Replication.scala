@@ -134,7 +134,8 @@ object Replication {
   /** Render `{stream_table}` / `{target_object}` / `{state.*}` variables in
     * a config string. State keys publish after each upstream stream
     * completes: `state.<stream>.rows` (rows loaded) and, when the stream has
-    * an update key, `state.<stream>.max` (its post-load high watermark).
+    * an update key and some stream's select, where or transforms reads it,
+    * `state.<stream>.max` (its post-load high watermark).
     */
   def render(tpl: String, streamName: String, targetObject: String,
       state: collection.Map[String, Any]): String =
@@ -204,6 +205,8 @@ object Replication {
       new Thread(r, "graft-replication-stream"))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val state = scala.collection.concurrent.TrieMap[String, Any]()
+    // `.max` reads the target back: publish it only where a template reads it
+    val templates = compiled.streams.flatMap(s => s.select ++ s.where ++ s.transforms.values)
     val out = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
     try topoLevels(compiled.streams).foreach { level =>
       val futures = level.map { st =>
@@ -217,7 +220,8 @@ object Replication {
       futures.map(Await.result(_, Duration.Inf)).foreach {
         case (st, task, rows) =>
           state(s"${st.name}.rows") = rows
-          st.updateKey.foreach { k =>
+          val readsMax = templates.exists(_.contains(s"{state.${st.name}.max}"))
+          st.updateKey.filter(_ => readsMax).foreach { k =>
             val mx = ParquetTarget(spark, task.target.obj).read
               .agg(max(col(k))).head.get(0)
             if (mx != null) state(s"${st.name}.max") = mx

@@ -8,7 +8,7 @@ import org.yaml.snakeyaml.Yaml
 
 import graft.sources.{ArrowIO, AvroIO, DeltaLite, ExcelIO, FileSources, IcebergLite, Tables}
 import graft.transform.{Select, Transforms}
-import graft.write.{Modes, ParquetTarget}
+import graft.write.{Modes, ParquetTarget, StagedWrite}
 
 /** Single-task YAML interpreter — the reference's primary surface
   * (`sling run` flags / config → one stream through the pipeline,
@@ -484,6 +484,16 @@ object TaskConfig {
     (uk, lit(parts(0)).cast(kt), lit(parts(1)).cast(kt))
   }
 
+  /** backfill's update key and its range's two ends as values of the
+    * key's type, cast on the driver: a projection of a local relation
+    * runs no Spark job. */
+  private def backfillBounds(spark: SparkSession, df: DataFrame,
+      task: Task): (String, Any, Any) = {
+    val (uk, lo, hi) = backfillRange(df, task)
+    val r = spark.createDataFrame(Seq(Tuple1(0))).select(lo, hi).collect().head
+    (uk, r.get(0), r.get(1))
+  }
+
   /** backfill: restrict the stream to the requested update-key range. */
   private def backfillSlice(df: DataFrame, task: Task): DataFrame = {
     val (uk, lo, hi) = backfillRange(df, task)
@@ -713,7 +723,13 @@ object TaskConfig {
             // destructive surprise for a requested merge; fail loudly
             throw new IllegalArgumentException(
               "mode upsert on a database target needs primary_key")
-          case "snapshot" | "incremental" | "backfill" =>
+          case "backfill" =>
+            // no key to merge by: the slice replaces the target's range in
+            // one transaction, so a re-run never duplicates it
+            val (uk, lo, hi) = backfillBounds(spark, df, task)
+            graft.sources.Jdbc.replaceRange(dfW, spec.jdbcUrl, tgt.obj, uk, lo, hi,
+              tableTmp = tgt.options.tableTmp, columnTypes = colDdl)
+          case "snapshot" | "incremental" =>
             // append semantics, like the parquet path — the overwrite
             // default would silently truncate the target's history
             graft.sources.Jdbc.write(dfW, spec.jdbcUrl, tgt.obj,
@@ -757,6 +773,11 @@ object TaskConfig {
         return graft.sources.Jdbc.read(spark, spec.jdbcUrl, tgt.obj).count()
       case _ => ()
     }
+    // a file target has no delete_missing: the database form stamps
+    // `_sling_deleted_at`, Modes' soft form `_sling_deleted`
+    if (tgt.options.deleteMissing.isDefined)
+      throw new IllegalArgumentException(
+        s"delete_missing is not supported on a ${tgt.format} file target")
     // existence guard (ignore_existing): leave a non-empty target untouched
     if (tgt.options.ignoreExisting && targetHasData(spark, tgt))
       return countTarget(spark, tgt)
@@ -797,6 +818,11 @@ object TaskConfig {
         ParquetTarget(spark, base).rowCount
       case "parquet" | "delta" =>
         val writeDelta = tgt.format == "delta"
+        // DeltaLite commits whole-table writes only; Modes' merges would
+        // read and rewrite the data files under its log
+        if (writeDelta && Seq("incremental", "upsert", "backfill", "cdc").contains(tgt.mode))
+          throw new IllegalArgumentException(
+            s"mode ${tgt.mode} is not supported for format delta targets")
         val pt = ParquetTarget(spark, tgt.obj)
         tgt.mode match {
           case "full-refresh" | "truncate" =>
@@ -821,10 +847,10 @@ object TaskConfig {
             // update_insert is the default; the others reuse the same
             // PK-join building blocks
             tgt.options.mergeStrategy.getOrElse("update_insert") match {
-              case "update_insert" => Modes.upsert(pt, df, tgt.primaryKey)
+              // delete_insert's final state is update_insert's
+              case "update_insert" | "delete_insert" => Modes.upsert(pt, df, tgt.primaryKey)
               case "insert" => Modes.insertMissing(pt, df, tgt.primaryKey)
               case "update" => Modes.updateOnly(pt, df, tgt.primaryKey)
-              case "delete_insert" => Modes.deleteInsert(pt, df, tgt.primaryKey)
               case other =>
                 throw new IllegalArgumentException(s"unknown merge_strategy $other")
             }
@@ -868,31 +894,26 @@ object TaskConfig {
         if (tgt.mode == "definition-only")
           throw new IllegalArgumentException(
             "mode definition-only is not supported for CSV file targets")
-        tgt.options.compression match {
-          case Some("zstd") | Some("zst") =>
-            graft.sources.Compression.writeCsvZstd(df, tgt.obj)
-          case Some(c) =>
-            df.write.mode("overwrite").option("header", "true")
-              .option("escape", "\"").option("compression", c).csv(tgt.obj)
-          case None =>
-            df.write.mode("overwrite").option("header", "true")
-              .option("escape", "\"").csv(tgt.obj)
-        }
+        StagedWrite.replace(spark, tgt.obj)(tgt.options.compression match {
+          case Some("zstd") | Some("zst") => graft.sources.Compression.writeCsvZstd(df, _)
+          case c =>
+            val w = df.write.option("header", "true").option("escape", "\"")
+            c.fold(w)(w.option("compression", _)).csv
+        })
         countTarget(spark, tgt)
       case "jsonl" =>
-        tgt.options.compression match {
-          case Some("zstd") | Some("zst") =>
-            graft.sources.Compression.writeJsonlZstd(df, tgt.obj)
-          case Some(c) =>
-            df.write.mode("overwrite").option("compression", c).json(tgt.obj)
-          case None => df.write.mode("overwrite").json(tgt.obj)
-        }
+        StagedWrite.replace(spark, tgt.obj)(tgt.options.compression match {
+          case Some("zstd") | Some("zst") => graft.sources.Compression.writeJsonlZstd(df, _)
+          case c => c.fold(df.write)(df.write.option("compression", _)).json
+        })
         countTarget(spark, tgt)
       case other => throw new IllegalArgumentException(s"target format $other")
     }
   }
 
   private def targetHasData(spark: SparkSession, tgt: Target): Boolean = {
+    // an interrupted swap may have left the table under its `__old` name
+    StagedWrite.settle(spark, tgt.obj)
     val p = new org.apache.hadoop.fs.Path(tgt.obj)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) &&

@@ -99,9 +99,10 @@ object Compression {
       }.toDS()
   }
 
-  /** Write a single-string-column DataFrame as .zst part files, one per
-    * partition, each optionally led by a header line (Spark's per-file
-    * header semantics).
+  /** Write a single-string-column DataFrame as .zst part files into `dir`,
+    * one per partition, each optionally led by a header line (Spark's
+    * per-file header semantics). `dir` is expected fresh: a file target
+    * hands in its staging directory ([[graft.write.StagedWrite.replace]]).
     */
   def writeZstdLines(lines: DataFrame, dir: String, header: Option[String],
       suffix: String = ".csv.zst"): Unit = {
@@ -111,7 +112,6 @@ object Compression {
     val spark = lines.sparkSession
     val outDir = new Path(dir)
     val fs = outDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(outDir, true)
     fs.mkdirs(outDir)
     val hdr = header
     val hconf = graft.util.HadoopConf(spark.sparkContext.hadoopConfiguration)

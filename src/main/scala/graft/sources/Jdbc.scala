@@ -191,8 +191,73 @@ object Jdbc {
       columnTypes: Map[String, String] = Map.empty,
       expectedRows: Option[Long] = None): Unit = {
     require(pk.nonEmpty, s"merge strategy $strategy needs primary_key")
-    // first load of an absent target: every strategy degenerates to a
-    // plain create-and-insert (task_run_write.go creates before merging)
+    if (!Seq("update_insert", "update", "insert", "delete_insert").contains(strategy))
+      throw new IllegalArgumentException(s"unknown merge_strategy $strategy")
+    applyStaged(df, url, table, tableTmp, columnTypes, expectedRows) { tmp =>
+      // scale rail (same as cdcApply): index the merge keys on both sides or
+      // the embedded engine nested-loops the MERGE/EXISTS quadratically
+      ensureIndex(url, table, pk)
+      ensureIndex(url, tmp, pk)
+      val cols = df.columns.toSeq
+      val onClause = pk.map(k => s"t.${q(k)} = s.${q(k)}").mkString(" AND ")
+      val nonKey = cols.filterNot(pk.contains)
+      val setClause = nonKey.map(c => s"t.${q(c)} = s.${q(c)}").mkString(", ")
+      val insertCols = cols.map(q).mkString(", ")
+      val insertVals = cols.map(c => s"s.${q(c)}").mkString(", ")
+      // a pure-keys table has nothing to UPDATE — an empty SET clause is a
+      // syntax error on every dialect, so reduce to insert-if-absent
+      val matched =
+        if (nonKey.isEmpty) "" else s"\nWHEN MATCHED THEN UPDATE SET $setClause"
+      strategy match {
+        case "update_insert" => Seq(
+          s"""MERGE INTO $table t USING $tmp s ON $onClause$matched
+             |WHEN NOT MATCHED THEN INSERT ($insertCols) VALUES ($insertVals)"""
+            .stripMargin)
+        case "update" =>
+          if (nonKey.isEmpty) Nil // nothing updatable
+          else Seq(
+            s"""MERGE INTO $table t USING $tmp s ON $onClause
+               |WHEN MATCHED THEN UPDATE SET $setClause""".stripMargin)
+        case "insert" => Seq(
+          s"""INSERT INTO $table ($insertCols)
+             |SELECT $insertVals FROM $tmp s WHERE NOT EXISTS (
+             |  SELECT 1 FROM $table t WHERE $onClause)""".stripMargin)
+        case "delete_insert" =>
+          val delExists = pk.map(k => s"s.${q(k)} = $table.${q(k)}")
+            .mkString(" AND ")
+          Seq(
+            s"""DELETE FROM $table WHERE EXISTS (
+               |  SELECT 1 FROM $tmp s WHERE $delExists)""".stripMargin,
+            insertFrom(df, table, tmp))
+      }
+    }
+  }
+
+  /** A backfill without a primary key: the target's rows whose `key` lies
+    * in `[lo, hi]` are replaced by `df`'s, staged like [[mergeStrategy]]
+    * and swapped in one transaction. Rows with a NULL key stay. */
+  def replaceRange(df: DataFrame, url: String, table: String, key: String,
+      lo: Any, hi: Any, tableTmp: Option[String] = None,
+      columnTypes: Map[String, String] = Map.empty): Unit =
+    applyStaged(df, url, table, tableTmp, columnTypes, None) { tmp => Seq(
+      s"DELETE FROM $table WHERE ${q(key)} BETWEEN ${sqlLiteral(lo)} AND ${sqlLiteral(hi)}",
+      insertFrom(df, table, tmp))
+    }
+
+  // Spark's JDBC writer creates columns as quoted (case-exact) identifiers;
+  // quote them here too or the DB folds references to uppercase
+  private def q(c: String) = "\"" + c + "\""
+
+  private def insertFrom(df: DataFrame, table: String, tmp: String): String =
+    s"INSERT INTO $table (${df.columns.map(q).mkString(", ")}) " +
+      s"SELECT ${df.columns.map(c => s"s.${q(c)}").mkString(", ")} FROM $tmp s"
+
+  /** Stage `df` into a temp table, then run the statements `stmts` builds
+    * from its name and drop it, in one transaction. An absent target is
+    * created from `df` directly (task_run_write.go creates before merging). */
+  private def applyStaged(df: DataFrame, url: String, table: String,
+      tableTmp: Option[String], columnTypes: Map[String, String],
+      expectedRows: Option[Long])(stmts: String => Seq[String]): Unit = {
     if (!tableExists(url, table)) {
       write(df, url, table, SaveMode.ErrorIfExists, columnTypes = columnTypes)
       return
@@ -226,53 +291,12 @@ object Jdbc {
             "aborting before merge (target untouched)")
       }
     }
-    // Spark's JDBC writer creates columns as quoted (case-exact) identifiers;
-    // quote them here too or the DB folds references to uppercase
-    def q(c: String) = "\"" + c + "\""
-    // scale rail (same as cdcApply): index the merge keys on both sides or
-    // the embedded engine nested-loops the MERGE/EXISTS quadratically
-    ensureIndex(url, table, pk)
-    ensureIndex(url, tmp, pk)
-    val cols = df.columns.toSeq
-    val onClause = pk.map(k => s"t.${q(k)} = s.${q(k)}").mkString(" AND ")
-    val nonKey = cols.filterNot(pk.contains)
-    val setClause = nonKey.map(c => s"t.${q(c)} = s.${q(c)}").mkString(", ")
-    val insertCols = cols.map(q).mkString(", ")
-    val insertVals = cols.map(c => s"s.${q(c)}").mkString(", ")
-    // a pure-keys table has nothing to UPDATE — an empty SET clause is a
-    // syntax error on every dialect, so reduce to insert-if-absent
-    val matched =
-      if (nonKey.isEmpty) "" else s"\nWHEN MATCHED THEN UPDATE SET $setClause"
-    val stmts: Seq[String] = strategy match {
-      case "update_insert" => Seq(
-        s"""MERGE INTO $table t USING $tmp s ON $onClause$matched
-           |WHEN NOT MATCHED THEN INSERT ($insertCols) VALUES ($insertVals)"""
-          .stripMargin)
-      case "update" =>
-        if (nonKey.isEmpty) Nil // nothing updatable
-        else Seq(
-          s"""MERGE INTO $table t USING $tmp s ON $onClause
-             |WHEN MATCHED THEN UPDATE SET $setClause""".stripMargin)
-      case "insert" => Seq(
-        s"""INSERT INTO $table ($insertCols)
-           |SELECT $insertVals FROM $tmp s WHERE NOT EXISTS (
-           |  SELECT 1 FROM $table t WHERE $onClause)""".stripMargin)
-      case "delete_insert" =>
-        val delExists = pk.map(k => s"s.${q(k)} = $table.${q(k)}")
-          .mkString(" AND ")
-        Seq(
-          s"""DELETE FROM $table WHERE EXISTS (
-             |  SELECT 1 FROM $tmp s WHERE $delExists)""".stripMargin,
-          s"INSERT INTO $table ($insertCols) SELECT $insertVals FROM $tmp s")
-      case other =>
-        throw new IllegalArgumentException(s"unknown merge_strategy $other")
-    }
     val conn = DriverManager.getConnection(url)
     try {
       conn.setAutoCommit(false)
       val st = conn.createStatement()
       try {
-        stmts.foreach(st.executeUpdate)
+        stmts(tmp).foreach(st.executeUpdate)
         st.executeUpdate(s"DROP TABLE $tmp")
         conn.commit()
       } catch {

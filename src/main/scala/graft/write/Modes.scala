@@ -29,22 +29,20 @@ object Modes {
     source
   }
 
-  /** `full-refresh`: drop + recreate (task_run_write.go:923-929). */
+  /** `full-refresh`: drop + recreate (task_run_write.go:923-929), as one
+    * staged replace: the old table stays until the new one is written. */
   def fullRefresh(target: ParquetTarget, source: DataFrame): Unit =
-    target.overwrite(source)
+    target.replaceWith(source)
 
   /** `truncate`: keep "DDL" (schema), replace rows (task_run_write.go:941-948).
     * On files this is a schema-aligned overwrite: the incoming frame is cast
     * to the existing target schema so a widened source can't silently change
     * the table's types.
     */
-  def truncate(target: ParquetTarget, source: DataFrame): Unit = {
-    if (target.exists) {
-      val schema = target.read.schema
-      val aligned = source.select(schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
-      target.replaceWith(aligned)
-    } else target.overwrite(source)
-  }
+  def truncate(target: ParquetTarget, source: DataFrame): Unit =
+    target.replaceWith(if (!target.exists) source
+      else source.select(target.read.schema.fields
+        .map(f => col(f.name).cast(f.dataType)).toSeq: _*))
 
   /** `snapshot`: append a full copy stamped with a load timestamp
     * (task_run_write.go:1003, metadata col `_sling_loaded_at`).
@@ -61,7 +59,7 @@ object Modes {
     * pushes into the scan (verified `PushedFilters` in .explain).
     */
   def incrementalAppend(target: ParquetTarget, source: DataFrame, updateKey: String): Unit = {
-    if (!target.exists) { target.overwrite(source); return }
+    if (!target.exists) { target.replaceWith(source); return }
     val wm = target.read.agg(max(col(updateKey))).head.get(0)
     val delta = if (wm == null) source else source.filter(col(updateKey) > lit(wm))
     target.append(delta)
@@ -69,24 +67,20 @@ object Modes {
 
   /** `incremental` with PK — strategy `update_insert` (ANSI MERGE,
     * templates/base.yaml:66-71): source rows win on PK match, non-matching
-    * target rows are kept, new source rows are inserted.
+    * target rows are kept, new source rows are inserted. Strategy
+    * `delete_insert` (templates/base.yaml:73-80: delete every target row
+    * whose PK appears in the source, then insert all source rows) reaches
+    * the same final state, so it runs here too.
     *
     * Scale: target-anti-join-source on PK; with AQE the (usually small) delta
     * side is broadcast. On Delta/Iceberg this maps 1:1 to `MERGE INTO`.
     */
   def upsert(target: ParquetTarget, source: DataFrame, pk: Seq[String]): Unit = {
-    if (!target.exists) { target.overwrite(source); return }
+    if (!target.exists) { target.replaceWith(source); return }
     val tgt = target.read
     val kept = tgt.join(source.select(pk.map(col).toSeq: _*), pk, "left_anti")
     target.replaceWith(kept.unionByName(source.select(tgt.columns.map(col).toSeq: _*)))
   }
-
-  /** Strategy `delete_insert` (templates/base.yaml:73-80): delete every target
-    * row whose PK appears in the source, then insert all source rows. Same
-    * final state as [[upsert]] but mirrors the reference's two-step template.
-    */
-  def deleteInsert(target: ParquetTarget, source: DataFrame, pk: Seq[String]): Unit =
-    upsert(target, source, pk)
 
   /** Strategy `update` (templates/base.yaml merge_update): source rows
     * replace matching target rows; non-matching source rows are DROPPED
@@ -139,7 +133,7 @@ object Modes {
 
   def upsertEvolve(target: ParquetTarget, source: DataFrame, pk: Seq[String],
       adjustTypes: Boolean = false): Unit = {
-    if (!target.exists) { target.overwrite(source); return }
+    if (!target.exists) { target.replaceWith(source); return }
     var tgt = target.read
     var src = source
     if (adjustTypes) {
@@ -170,7 +164,7 @@ object Modes {
     * insert source rows whose PK is NOT already in the target; never update.
     */
   def insertMissing(target: ParquetTarget, source: DataFrame, pk: Seq[String]): Unit = {
-    if (!target.exists) { target.overwrite(source); return }
+    if (!target.exists) { target.replaceWith(source); return }
     val tgt = target.read
     val fresh = source.join(tgt.select(pk.map(col).toSeq: _*), pk, "left_anti")
     target.append(fresh.select(tgt.columns.map(col).toSeq: _*))
@@ -186,12 +180,9 @@ object Modes {
       loadTs: java.sql.Timestamp): Unit = {
     val vf = "_sling_valid_from"
     val vt = "_sling_valid_to"
-    if (!target.exists) {
-      target.overwrite(source
-        .withColumn(vf, lit(loadTs))
-        .withColumn(vt, lit(null).cast("timestamp")))
-      return
-    }
+    def stamp(df: DataFrame) =
+      df.withColumn(vf, lit(loadTs)).withColumn(vt, lit(null).cast("timestamp"))
+    if (!target.exists) { target.replaceWith(stamp(source)); return }
     val tgt = target.read
     val dataCols = source.columns.toSeq.filterNot(pk.contains)
     def rowHash(df: DataFrame): Column =
@@ -210,37 +201,17 @@ object Modes {
       .unionByName(tgt.filter(col(vt).isNull).join(changedKeys, pk, "left_anti"))
     // new versions: changed PKs plus PKs never seen before
     val brandNew = src.join(cur.select(pk.map(col).toSeq: _*), pk, "left_anti")
-    val newVersions = src.join(changedKeys, pk, "left_semi")
-      .unionByName(brandNew)
-      .drop("__h")
-      .withColumn(vf, lit(loadTs))
-      .withColumn(vt, lit(null).cast("timestamp"))
+    val newVersions = stamp(src.join(changedKeys, pk, "left_semi")
+      .unionByName(brandNew).drop("__h"))
       .select(tgt.columns.map(col).toSeq: _*)
     target.replaceWith(untouched.unionByName(closed).unionByName(newVersions))
   }
 
-  /** `delete_missing` (hard): remove target rows whose PK is absent from the
-    * source (closed-source in the reference, semantics from
-    * templates/base.yaml:13-27 `delete_where_not_exist`).
-    */
-  def deleteMissing(target: ParquetTarget, source: DataFrame, pk: Seq[String]): Unit = {
-    val tgt = target.read
-    target.replaceWith(tgt.join(source.select(pk.map(col).toSeq: _*), pk, "left_semi"))
-  }
-
-  /** `delete_missing` (soft): flag instead of delete (`_sling_deleted`). */
-  def deleteMissingSoft(target: ParquetTarget, source: DataFrame, pk: Seq[String]): Unit = {
-    val tgt = target.read
-    val srcKeys = source.select(pk.map(col).toSeq: _*).distinct
-      .withColumn("__present", lit(1))
-    val flagged = tgt.join(srcKeys, pk, "left")
-      .withColumn("_sling_deleted", col("__present").isNull)
-      .drop("__present")
-    target.replaceWith(flagged)
-  }
-
-  /** Scoped `delete_missing` (`target_options.delete_missing.source_where/
-    * target_where`, tests/replications/r.104.delete_missing_where.yaml):
+  /** `delete_missing`: remove (hard) or flag with `_sling_deleted` (soft)
+    * target rows whose PK is absent from the source (closed-source in the
+    * reference, semantics from templates/base.yaml:13-27
+    * `delete_where_not_exist`). Scoped by `target_options.delete_missing.
+    * source_where/target_where` (tests/replications/r.104.delete_missing_where.yaml):
     * only target rows matching `targetWhere` are deletion-eligible, and
     * only source rows matching `sourceWhere` count as present — the
     * years-of-history table where deletes are detected in a recent window
@@ -268,7 +239,7 @@ object Modes {
       if (soft) joined
         .withColumn("_sling_deleted", when(eligible, missing).otherwise(prior))
         .drop("__present")
-      else joined.filter(!missing).drop("__present"))
+      else joined.filter(!missing).select(tgt.columns.map(col).toSeq: _*))
   }
 
   /** `backfill`: re-load an explicit `[lo, hi]` range of the update key
@@ -283,7 +254,7 @@ object Modes {
     // which a bare filter(!inRange) would DROP — silently deleting every
     // null-key target row outside the backfilled window
     val inRange = coalesce(col(key) >= lo && col(key) <= hi, lit(false))
-    if (!target.exists) { target.overwrite(source.filter(inRange)); return }
+    if (!target.exists) { target.replaceWith(source.filter(inRange)); return }
     val tgt = target.read
     val keep = tgt.filter(!inRange)
     target.replaceWith(keep.unionByName(

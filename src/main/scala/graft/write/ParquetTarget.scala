@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -19,6 +19,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * implement the merge strategies as set algebra + full rewrite — at cluster
   * scale the natural upgrade is Delta/Iceberg `MERGE INTO` (file-pruned),
   * which shares the exact logical semantics implemented in [[Modes]].
+  *
+  * Every write goes through [[StagedWrite]]: [[replaceWith]] stages the
+  * new table beside the live one and swaps it in with two renames,
+  * [[append]] stages its files and moves them in, and every read of the
+  * table's state settles what an interrupted write left first. So a failed
+  * or interrupted load leaves the old rows or the new ones, never neither
+  * and never a mix. Settle assumes one writer per target at a time, and no
+  * other process reading the target while it is written.
   *
   * The table's state is read from its data files' footers on the driver,
   * without a Spark job: whether it holds any data file ([[exists]]), its
@@ -35,15 +43,12 @@ final case class ParquetTarget(spark: SparkSession, path: String) {
     * (hidden `.`/`_` names skipped, partition directories descended), and
     * whether any lies in a subdirectory (a Hive-partitioned layout). */
   private def dataFiles: (Seq[FileStatus], Boolean) = {
+    StagedWrite.settle(spark, path)
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    def hidden(s: FileStatus): Boolean = {
-      val n = s.getPath.getName
-      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
-        n.endsWith("._COPYING_")
-    }
     def walk(dir: Path, nested: Boolean): Seq[(FileStatus, Boolean)] =
-      fs.listStatus(dir).toSeq.filterNot(hidden).sortBy(_.getPath.getName)
+      fs.listStatus(dir).toSeq.filterNot(s => StagedWrite.hidden(s.getPath.getName))
+        .sortBy(_.getPath.getName)
         .flatMap(s => if (s.isDirectory) walk(s.getPath, nested = true)
           else Seq(s -> nested))
     if (!fs.exists(root)) (Nil, false)
@@ -60,8 +65,9 @@ final case class ParquetTarget(spark: SparkSession, path: String) {
     try r.getFooter finally r.close()
   }
 
-  /** Holds at least one data file. A directory a failed overwrite left
-    * empty does not count, so the next run creates the table afresh. */
+  /** Holds at least one data file. An empty directory (made by hand, or
+    * by another tool) does not count, so the next run creates the table
+    * afresh. */
   def exists: Boolean = dataFiles._1.nonEmpty
 
   /** Rows in the target: the sum of the row counts in its data files'
@@ -92,36 +98,13 @@ final case class ParquetTarget(spark: SparkSession, path: String) {
     }
   }
 
-  def overwrite(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   def append(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
+    StagedWrite.append(spark, path)(df.write.parquet)
 
-  /** Replace target contents with `df`, where `df` may read from this target.
-    * Parquet can't overwrite a path that's an input of the same plan, so
-    * materialize to a sibling staging dir and swap — the file analogue of the
-    * reference's temp-table + transactional swap (task_run_write.go:434-478).
-    */
-  def replaceWith(df: DataFrame): Unit = {
-    val staging = path + "__staging"
-    val p = new Path(path)
-    val s = new Path(staging)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a failure while materializing the staging copy leaves the target
-    // untouched; clean the partial staging dir so reruns start fresh
-    // (task_run_write.go:313-331 temp cleanup)
-    try df.write.mode(SaveMode.Overwrite).parquet(staging)
-    catch {
-      case e: Throwable =>
-        try fs.delete(s, true) catch { case _: Exception => () }
-        throw e
-    }
-    if (fs.exists(p) && !fs.delete(p, true))
-      throw new java.io.IOException(s"failed to delete $p before swap")
-    if (!fs.rename(s, p))
-      throw new java.io.IOException(s"failed to rename $s to $p — data left in staging")
-  }
+  /** Replace target contents with `df`, which may read from this target:
+    * the live files stay in place until `df` is written in full. */
+  def replaceWith(df: DataFrame): Unit =
+    StagedWrite.replace(spark, path)(df.write.parquet)
 }
 
 object ParquetTarget {

@@ -22,16 +22,17 @@ object PartitionedWriter {
     case other => throw new IllegalArgumentException(s"unknown part field: $other")
   }
 
-  /** Write `df` under `path` partitioned by the mask fields derived from
-    * `timeKey` (e.g. Seq("part_year","part_month")).
+  /** Replace what is under `path` ([[StagedWrite.replace]]) with `df`
+    * partitioned by the mask fields derived from `timeKey`
+    * (e.g. Seq("part_year","part_month")).
     */
   def write(df: DataFrame, path: String, timeKey: String, fields: Seq[String],
       maxRecordsPerFile: Long = 0): Unit = {
     val withParts = fields.foldLeft(df)((d, f) =>
       d.withColumn(f, partField(f, col(timeKey))))
-    val w = withParts.write.mode("overwrite").partitionBy(fields: _*)
-    (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile)
-     else w).parquet(path)
+    val w = withParts.write.partitionBy(fields: _*)
+    StagedWrite.replace(df.sparkSession, path)((if (maxRecordsPerFile > 0)
+      w.option("maxRecordsPerFile", maxRecordsPerFile) else w).parquet)
   }
 
   /** Expand a `{part_*}` URI mask into the chunk URIs covering
@@ -45,28 +46,20 @@ object PartitionedWriter {
   def partURIsFromRange(mask: String, start: java.time.LocalDateTime,
       end: java.time.LocalDateTime): Seq[String] = {
     require(!end.isBefore(start), s"range end ($end) is before start ($start)")
-    // resolution rank, finest last
-    val ranked = Seq("part_year" -> 1, "part_month" -> 2, "part_day" -> 3,
-      "part_hour" -> 4, "part_minute" -> 5)
-    val present = ranked.filter { case (f, _) => mask.contains(s"{$f}") }
-    require(present.nonEmpty, s"no {part_*} field in mask: $mask")
-    val lowest = present.map(_._2).max
     import java.time.temporal.ChronoUnit._
-    def trunc(t: java.time.LocalDateTime) = lowest match {
-      case 1 => t.withDayOfYear(1).truncatedTo(DAYS)
-      case 2 => t.withDayOfMonth(1).truncatedTo(DAYS)
-      case 3 => t.truncatedTo(DAYS)
-      case 4 => t.truncatedTo(HOURS)
-      case _ => t.truncatedTo(MINUTES)
+    // the mask's finest field sets the chunk unit (fields listed coarse to fine)
+    val present = Seq("part_year" -> YEARS, "part_month" -> MONTHS, "part_day" -> DAYS,
+      "part_hour" -> HOURS, "part_minute" -> MINUTES)
+      .filter { case (f, _) => mask.contains(s"{$f}") }
+    require(present.nonEmpty, s"no {part_*} field in mask: $mask")
+    val unit = present.last._2
+    // years and months are not fixed durations: truncate by calendar field
+    val first = unit match {
+      case YEARS => start.withDayOfYear(1).truncatedTo(DAYS)
+      case MONTHS => start.withDayOfMonth(1).truncatedTo(DAYS)
+      case u => start.truncatedTo(u)
     }
-    def inc(t: java.time.LocalDateTime) = lowest match {
-      case 1 => t.plusYears(1)
-      case 2 => t.plusMonths(1) // months are not a fixed duration
-      case 3 => t.plusDays(1)
-      case 4 => t.plusHours(1)
-      case _ => t.plusMinutes(1)
-    }
-    Iterator.iterate(trunc(start))(inc).takeWhile(!_.isAfter(end)).map { t =>
+    Iterator.iterate(first)(_.plus(1, unit)).takeWhile(!_.isAfter(end)).map { t =>
       mask.replace("{part_year}", t.getYear.toString)
         .replace("{part_month}", t.getMonthValue.toString)
         .replace("{part_day}", t.getDayOfMonth.toString)

@@ -18,23 +18,20 @@ object StdoutWriter {
 
   /** Stream `df` as CSV lines to `out`; returns rows written. */
   def csv(df: DataFrame, out: OutputStream = System.out,
-      header: Boolean = true): Long = {
+      header: Boolean = true): Long =
     // RFC-4180 quote doubling, matching the readers' default dialect
-    val rendered = df.select(to_csv(struct(df.columns.map(col): _*),
-      java.util.Map.of("escape", "\"")).as("line"))
-    val w = new BufferedWriter(new OutputStreamWriter(out, UTF_8))
-    if (header) { w.write(df.columns.mkString(",")); w.newLine() }
-    var n = 0L
-    val it = rendered.toLocalIterator()
-    while (it.hasNext) { w.write(it.next().getString(0)); w.newLine(); n += 1 }
-    w.flush()
-    n
-  }
+    lines(df.select(to_csv(struct(df.columns.map(col): _*),
+      java.util.Map.of("escape", "\"")).as("line")), out,
+      Option.when(header)(df.columns.mkString(",")))
 
   /** Stream `df` as JSONL to `out`; returns rows written. */
-  def jsonl(df: DataFrame, out: OutputStream = System.out): Long = {
-    val rendered = df.select(to_json(struct(df.columns.map(col): _*)).as("line"))
+  def jsonl(df: DataFrame, out: OutputStream = System.out): Long =
+    lines(df.select(to_json(struct(df.columns.map(col): _*)).as("line")), out, None)
+
+  /** Relay the one-string-column `rendered` to `out`, led by `header`. */
+  private def lines(rendered: DataFrame, out: OutputStream, header: Option[String]): Long = {
     val w = new BufferedWriter(new OutputStreamWriter(out, UTF_8))
+    header.foreach { h => w.write(h); w.newLine() }
     var n = 0L
     val it = rendered.toLocalIterator()
     while (it.hasNext) { w.write(it.next().getString(0)); w.newLine(); n += 1 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Jdbc
-import graft.write.ParquetTarget
+import graft.write.{Modes, ParquetTarget}
 
 /** Failure-injection tests for the staged-load safety rails
   * (task_run_write.go:380-405 post-count abort, :434-478 transactional
@@ -107,11 +107,18 @@ class FailureRailSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     val t = ParquetTarget(spark, s"$root/t")
-    t.overwrite(Seq((1, "a"), (2, "b")).toDF("id", "v"))
-    intercept[Exception] { t.replaceWith(faultyAfter(1, 50)) }
-    assert(t.read.count() == 2L, "target parquet must survive a staging fault")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/t__staging")),
-      "partial staging dir must be removed")
+    def rows = t.read.collect().map(r => (r.getInt(0), r.getString(1))).sorted.toSeq
+    // (target rows, the failing write): a replace whose source dies at row
+    // 2, and a full refresh of 100 rows whose source dies at row 50
+    for ((seed, write) <- Seq(
+        Seq((1, "a"), (2, "b")) -> (() => t.replaceWith(faultyAfter(1, 50))),
+        (1 to 100).map(i => (i, s"v$i")) -> (() => Modes.fullRefresh(t, faultyAfter(49, 100))))) {
+      Modes.fullRefresh(t, seed.toDF("id", "v"))
+      intercept[Exception](write())
+      assert(rows == seed, "target parquet must survive a staging fault")
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/t__staging")),
+        "partial staging dir must be removed")
+    }
   }
 
   test("rewrite removes the previous write's extra part files") {
@@ -125,11 +132,11 @@ class FailureRailSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     val t = ParquetTarget(spark, s"$root/t")
-    t.overwrite((1 to 1000).toDF("id").repartition(4))
+    Modes.fullRefresh(t, (1 to 1000).toDF("id").repartition(4))
     def parts(): Int = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/t"))
       .count(_.getPath.getName.endsWith(".parquet"))
     assert(parts() == 4)
-    t.overwrite((1 to 10).toDF("id").coalesce(1))
+    Modes.fullRefresh(t, (1 to 10).toDF("id").coalesce(1))
     assert(parts() == 1, "stale part files survived the rewrite")
     assert(t.read.count() == 10)
     // same guarantee through the swap path (replaceWith reads the target)

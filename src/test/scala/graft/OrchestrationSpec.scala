@@ -293,6 +293,29 @@ class OrchestrationSpec extends AnyFunSuite {
     } finally c.close()
   }
 
+  test("task yaml: a db backfill without a primary key replaces its range") {
+    val yaml =
+      s"""source:
+         |  stream: nation
+         |  range: "0,9"
+         |connections:
+         |  DB:
+         |    type: derby
+         |    instance: "memory:taskbackfill"
+         |target:
+         |  conn: DB
+         |  object: NATION_BF
+         |  mode: backfill
+         |  update_key: n_nationkey
+         |""".stripMargin
+    val catalog = java.nio.file.Files.createTempDirectory("graft-backfill").toString
+    spark.range(25).selectExpr("id AS n_nationkey", "concat('n', id) AS n_name")
+      .write.parquet(s"$catalog/nation.parquet")
+    // the second run replaces the range its first run loaded
+    for (_ <- 1 to 2)
+      assert(graft.repl.TaskConfig.run(spark, yaml, catalog) == 10)
+  }
+
   test("task yaml: table_ddl creates the custom table, table_tmp names the stage") {
     val yaml =
       s"""source:

@@ -122,8 +122,9 @@ class ParquetTargetSpec extends AnyFunSuite {
     intercept[Exception](TaskConfig.run(spark,
       task(src, tgt, "full-refresh", Some("raise_error('boom')")), ""))
     val t = ParquetTarget(spark, tgt)
-    assert(Files.isDirectory(root.resolve("failed_tgt")), "the overwrite left its directory")
-    assert(!t.exists, "an empty directory holds no table")
+    assert(!Files.exists(root.resolve("failed_tgt")), "the staged write left no target")
+    assert(!Files.exists(root.resolve("failed_tgt__staging")), "nor its staging directory")
+    assert(!t.exists)
     assert(TaskConfig.run(spark, task(src, tgt, "incremental"), "") == 3)
     assert(spark.read.parquet(tgt).orderBy("id").collect().map(_.getString(1))
       .toSeq == Seq("a", "b", "c"))

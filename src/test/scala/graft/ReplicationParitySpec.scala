@@ -138,7 +138,9 @@ class ReplicationParitySpec extends AnyFunSuite {
   test("full-refresh and incremental-PK streams run the same Spark jobs through both") {
     val sc = spark.sparkContext
     for ((name, keys) <- Seq("full" -> Seq("mode: full-refresh"),
-        "merge" -> Seq("mode: incremental", "primary_key: [id]"))) {
+        "merge" -> Seq("mode: incremental", "primary_key: [id]"),
+        // no template reads this stream's state.src.max, so none is read back
+        "append" -> Seq("mode: incremental", "update_key: day"))) {
       val taskObj = root.resolve(s"jobs_task_$name").toString
       val replRoot = root.resolve(s"jobs_repl_$name").toString
       for (cat <- Seq(v1, v2)) {
@@ -149,6 +151,25 @@ class ReplicationParitySpec extends AnyFunSuite {
         assert(taskJobs == replJobs, s"$keys on $cat")
       }
     }
+  }
+
+  test("a depends_on stream's where reads its upstream's published max") {
+    val dir = catalog("dag", 0 until 100, 1)
+    spark.read.parquet(s"$dir/src.parquet").write.parquet(s"$dir/late.parquet")
+    val yaml =
+      """streams:
+        |  src:
+        |    mode: incremental
+        |    update_key: day
+        |    where: "id < 50"
+        |  late:
+        |    depends_on: [src]
+        |    where: "day >= '{state.src.max}'"
+        |""".stripMargin
+    val out = Replication.run(spark, dir, Replication.parse(yaml, Seq("src", "late")),
+      root.resolve("dag_out").toString)
+    // src loads ids 0-49, whose last day is 2024-01-10, the day of ids 45-49
+    assert(out == Seq(("late", "full-refresh", 55L), ("src", "incremental", 50L)))
   }
 
   test("a failing stream's error reaches the caller and no pool thread outlives the run") {
